@@ -2094,31 +2094,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).otherwise(F.lit("")),
             F.lit("</div>"),
         )
-        # r6: explode BEFORE canonicalizing. extract_links runs
-        # canonicalize_url (the regex-heavy step) inside an array
-        # ``transform`` lambda — higher-order functions evaluate
-        # interpreted, outside whole-stage codegen. Splitting the same
-        # primitives at the explode boundary (resolve+filter array-side,
-        # canonicalize per exploded ROW) keeps positions and values
-        # identical — the filtered resolved array IS extract_links'
-        # element order — while the expensive regexes compile into the
-        # codegen stage (guide §1.2: per-task work, after shape).
-        from amazonwebcrawler_spark.functions.urls import _resolve_href, canonicalize_url
-
-        base = F.lit("https://www.amazon.com")
-        resolved = F.filter(
-            F.transform(
-                F.regexp_extract_all(html, F.lit(r'href="([^"]*)"'), 1),
-                lambda h: _resolve_href(h, base),
-            ),
-            lambda u: u.isNotNull(),
-        )
-        return o.select(
-            "o_orderkey", F.posexplode(resolved).alias("link_pos", "_raw")
-        ).select(
-            "o_orderkey", "link_pos",
-            canonicalize_url(F.col("_raw")).alias("canonical_url"),
-        ).select(
+        links = extract_links(o, html, F.lit("https://www.amazon.com"), keep=["o_orderkey"])
+        return links.select(
             "o_orderkey", "link_pos", "canonical_url",
             url_host(F.col("canonical_url")).alias("host"),
         )

@@ -442,11 +442,12 @@ def registered_domain(df, suffixes, host_col: str = "host", max_labels: int = 3)
     )
 
 
-def extract_links(html: Column, base_scheme_host: Column) -> Column:
-    """Ordered hrefs of an HTML page, resolved and canonicalized — the
-    frontier-feeding link extraction step (reference getStockNumber.py:67
-    concatenates ``'https://www.amazon.com' + item.a['href']``; this is the
-    declarative form over a page-HTML column).
+def extract_links(df, html: Column, base_scheme_host: Column, keep=()):
+    """One row per href of each page's HTML, resolved and canonicalized —
+    the frontier-feeding link extraction step (reference
+    getStockNumber.py:67 concatenates ``'https://www.amazon.com' +
+    item.a['href']``; this is the declarative form over a page-HTML
+    column).
 
     * ``href="..."`` values are pulled with one vectorized
       ``regexp_extract_all`` — never an HTML parser in the hot path.
@@ -456,14 +457,22 @@ def extract_links(html: Column, base_scheme_host: Column) -> Column:
     * every survivor is canonicalized by :func:`canonicalize_url`, so the
       output is directly usable as the URL-seen / frontier key.
 
-    Returns an ``array<string>`` column (order = document order). Pure
-    column math — whole-stage codegen, no UDF; the DuckDB twin mirrors the
-    same regex + resolution rules 1:1.
+    Returns ``(*keep, link_pos, canonical_url)`` rows, ``link_pos`` the
+    0-based document-order position among the page's surviving links.
+    Explodes BEFORE canonicalizing, so the regex-heavy ``canonicalize_url``
+    compiles into the codegen stage instead of running interpreted inside
+    an array ``transform`` lambda. Pure column math, no UDF; the DuckDB
+    twin mirrors the same regex + resolution rules 1:1.
     """
-    hrefs = F.regexp_extract_all(html, F.lit(r'href="([^"]*)"'), 1)
-    resolved = F.transform(hrefs, lambda h: _resolve_href(h, base_scheme_host))
-    return F.transform(
-        F.filter(resolved, lambda u: u.isNotNull()), lambda u: canonicalize_url(u)
+    resolved = F.filter(
+        F.transform(
+            F.regexp_extract_all(html, F.lit(r'href="([^"]*)"'), 1),
+            lambda h: _resolve_href(h, base_scheme_host),
+        ),
+        lambda u: u.isNotNull(),
+    )
+    return df.select(*keep, F.posexplode(resolved).alias("link_pos", "_raw")).select(
+        *keep, "link_pos", canonicalize_url(F.col("_raw")).alias("canonical_url")
     )
 
 

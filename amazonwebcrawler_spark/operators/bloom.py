@@ -31,11 +31,12 @@ cogroup task that tests the bitset, which lets the crawler confirm new
 URLs with ZERO extra shuffles and no per-wave scan of the ``seen`` table
 (``CrawlConfig.exact_confirm='shard_sets'``). Cost: +8 B/URL of state
 (~80 GB at 10^10, ~20 MB/bucket at 4096 buckets — read/written per dirty
-bucket only, COW). Exactness is up to xxhash64 collisions (p ≈ n²/2^65 —
-~3e-9 even for a 10^10-URL crawl); the default ``'seen_table'`` mode keeps
-the md5-exact left_anti against the seen table, which is what the DuckDB
-oracle and byte-exact resume contract check. Both modes produce identical
-crawls (tested).
+bucket only, COW). Exactness is up to xxhash64 collisions on ``h1``: n
+URLs give ≈ n²/2^65 expected colliding pairs — ≈ 2.7 for a 10^10-URL
+crawl, which therefore silently drops about 3 new URLs. The default
+``'seen_table'`` mode keeps the md5-exact left_anti against the seen
+table, which is what the DuckDB oracle and byte-exact resume contract
+check. Both modes produce identical crawls (tested).
 """
 
 from __future__ import annotations

@@ -157,6 +157,8 @@ def lsh_topk(
     IEEE op order, so every sign bit and bucket id is identical);
     ``'auto'`` picks pandas when ``n_tables · n_planes > 16``.
     """
+    if n_planes > 31:  # bucket ids are int32: the pandas encode would wrap
+        raise ValueError(f"lsh_topk: n_planes must be <= 31 (int32 bucket ids), got {n_planes}")
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     if encode not in ("auto", "literal", "pandas"):

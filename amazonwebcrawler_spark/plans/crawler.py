@@ -28,11 +28,10 @@ local[32] produce byte-identical crawl orders (tests/test_equivalence.py).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,7 +46,7 @@ from amazonwebcrawler_spark.operators import bloom
 from amazonwebcrawler_spark.operators.politeness import assign_discovery_seq, select_wave_batch
 from amazonwebcrawler_spark.sources import synthetic_world as world
 from amazonwebcrawler_spark.sources.seeds import dims_df, seeds_df
-from amazonwebcrawler_spark.sources.state_store import StateStore, partitioned_counts
+from amazonwebcrawler_spark.sources.state_store import PARTITIONING, StateStore, partitioned_counts
 
 # ---------------------------------------------------------------- schemas
 FRONTIER_SCHEMA = T.StructType(
@@ -105,12 +104,6 @@ class CrawlConfig:
                                        # chains (seen/shards/seed_flags) as a
                                        # full base so per-wave reads stay
                                        # O(base + K deltas), not O(all waves)
-    pruned_dequeue: bool = True        # frontier snapshots partitioned by
-                                       # (depth, host_shard); the politeness
-                                       # dequeue reads ONLY the depth bands
-                                       # the budget can consume (exact — see
-                                       # _load_frontier) instead of sorting
-                                       # the whole 10^10-row frontier per wave
     exact_confirm: str = "seen_table"  # 'seen_table': bloom-positive rows
                                        # confirmed by left_anti vs the exact
                                        # seen table (md5-exact, the oracle
@@ -120,7 +113,8 @@ class CrawlConfig:
                                        # the per-bucket sorted key-hash sets
                                        # riding the SAME bloom cogroup probe
                                        # — zero extra shuffles, no seen scan
-                                       # (exact up to xxhash64 collisions;
+                                       # (exact up to xxhash64 h1 collisions,
+                                       # ≈2.7 new URLs dropped at 10^10;
                                        # identical crawls, tested)
     bloom: bloom.BloomConfig = field(default_factory=lambda: bloom.BloomConfig(n_buckets=16, m_bits=1 << 17))
 
@@ -224,6 +218,28 @@ def _robots_filter(df: DataFrame, robots: DataFrame) -> DataFrame:
     )
 
 
+def classify_serp_items(items: DataFrame) -> DataFrame:
+    """Own-product classification (J1/J2/P4-P6) + rank encode (W1-W3) of
+    SERP item rows (``title``, ``product_type``, ``layout``, ``page``,
+    ``pos``): adds ``clean_title``, ``is_ad``, ``match_title``,
+    ``size_attr``, ``is_own`` and ``rank``. First-match-wins
+    (getRank.py:229-236) as a literal-array projection — zero shuffles,
+    stays in the same map stage as the parse
+    (functions/rank.py:first_match_struct)."""
+    return (
+        items.withColumn("clean_title", strip_sponsored_tag(F.col("title")))
+        .withColumn("is_ad", is_sponsored(F.col("title")))
+        .withColumn(
+            "_m", first_match_struct(F.col("clean_title"), F.col("product_type"), world.DIMS)
+        )
+        .withColumn("match_title", F.col("_m.match_title"))
+        .withColumn("size_attr", F.col("_m.size_attr"))
+        .drop("_m")
+        .withColumn("is_own", F.col("match_title").isNotNull())
+        .withColumn("rank", rank_encode(F.col("layout"), F.col("page"), F.col("pos")))
+    )
+
+
 def _classify_kind(url: F.Column) -> F.Column:
     return (
         F.when(url.startswith(f"{world.HOST}/s?"), "serp")
@@ -264,10 +280,6 @@ class CrawlEngine:
         )
         return _with_host_shard(f, self.cfg).select([f.name for f in FRONTIER_SCHEMA.fields])
 
-    #: frontier snapshots are laid out for depth-pruned dequeue (Iceberg
-    #: partition spec); depth leads because it leads the priority order
-    FRONTIER_PARTITIONING: dict[str, tuple[str, ...]] = {"frontier": ("depth", "host_shard")}
-
     # ------------------------------------------------- pruned frontier load
     def _load_frontier(self):
         """Load the latest frontier snapshot as (hot, cold).
@@ -279,12 +291,13 @@ class CrawlEngine:
         all lie within the smallest depth prefix whose cumulative row count
         reaches the budget (D_s); reading depths ≤ max_s D_s can therefore
         never change a wave's batch. The per-(depth, shard) counts come from
-        parquet footers of the partitioned snapshot — driver-side, no Spark
-        job. At 10^10 rows this turns the per-wave dequeue sort from
-        O(frontier) into O(consumable head); the cold rows are rewritten
-        untouched here (snapshot model) and become a pure metadata carry on
-        real Iceberg. Falls back to (full, None) for unpartitioned layouts
-        (old snapshots) or when every depth is needed.
+        parquet footers of the snapshot the store partitions by (depth,
+        host_shard) — driver-side, no Spark job. At 10^10 rows this turns
+        the per-wave dequeue sort from O(frontier) into O(consumable head);
+        the cold rows are rewritten untouched here (snapshot model) and
+        become a pure metadata carry on real Iceberg. Falls back to (full,
+        None) for unpartitioned layouts (old snapshots) or when every depth
+        is needed.
         """
         cfg, store = self.cfg, self.store
         m = store.latest_manifest()
@@ -298,16 +311,12 @@ class CrawlEngine:
             # empty snapshot is a normal final-wave state, not an error
             return self.spark.createDataFrame([], FRONTIER_SCHEMA), None
         full = store.load_snapshot("frontier").select([f.name for f in FRONTIER_SCHEMA.fields])
-        if not cfg.pruned_dequeue:
-            return full, None
         per_shard: dict[int, dict[int, int]] = {}
         for parts, n in counts.items():
             kv = dict(p.split("=", 1) for p in parts)
             if "depth" not in kv or "host_shard" not in kv:
                 return full, None  # unpartitioned (pre-pruning) layout
             per_shard.setdefault(int(kv["host_shard"]), {})[int(kv["depth"])] = n
-        if not per_shard:
-            return full, None
         max_depth_present = max(d for ds in per_shard.values() for d in ds)
         bound = 0
         for ds in per_shard.values():
@@ -330,13 +339,9 @@ class CrawlEngine:
         cfg, spark, store = self.cfg, self.spark, self.store
 
         if resume and (m := store.latest_manifest()) is not None:
-            frontier, cold = self._load_frontier()
-            shards = store.load_shard_state()
             wave0 = m["wave"] + 1
             next_seq = m["counters"]["next_seq"]
             n_frontier = m["counters"].get("n_frontier")
-            if n_frontier is None:  # manifest predates the counter
-                n_frontier = frontier.count() + (cold.count() if cold is not None else 0)
         else:
             frontier = self._initial_frontier()
             shards = bloom.empty_shards(spark, cfg.bloom)
@@ -349,11 +354,12 @@ class CrawlEngine:
                 {"frontier": frontier, "shards": shards, "seen": frontier.select("canonical_url", "discovery_seq")},
                 {"next_seq": next_seq, "n_frontier": n_frontier},
                 bases={"seen", "shards"},  # the seed commit IS the full history
-                partition_cols=self.FRONTIER_PARTITIONING if cfg.pruned_dequeue else None,
             )
-            frontier, cold = self._load_frontier()
-            shards = store.load_shard_state()
             wave0 = 0
+        frontier, cold = self._load_frontier()
+        shards = store.load_shard_state()
+        if n_frontier is None:  # manifest predates the counter
+            n_frontier = frontier.count() + (cold.count() if cold is not None else 0)
 
         last_wave = wave0 - 1
         for wave in range(wave0, cfg.max_waves):
@@ -376,14 +382,7 @@ class CrawlEngine:
     ):
         import time as _time
 
-        _marks: list[tuple[str, float]] = []
-
-        def _mark(label: str) -> None:
-            if os.environ.get("AWC_DEBUG_TIMING"):
-                _marks.append((label, _time.time()))
-
         t_wave0 = _time.time()
-        _mark("start")
         cfg, spark, store = self.cfg, self.spark, self.store
 
         batch, deferred, _ranked = select_wave_batch(
@@ -422,7 +421,6 @@ class CrawlEngine:
         )
         dead = failed.filter(F.col("attempt") >= cfg.max_retries)
         ok = fetched.filter(F.col("status") == 200)
-        _mark("fetch_declared")
 
         # ---- parse per kind (P1-P13): from_json, fully declarative
         serp = ok.filter(F.col("kind") == "serp").withColumn("p", F.from_json("content", SERP_JSON))
@@ -447,24 +445,8 @@ class CrawlEngine:
             .drop("_i")
         )
 
-        # ---- classify own products (J1/J2/P4-P6) + rank encode (W1-W3)
-        items_nonnull = serp_items.filter(F.col("pos").isNotNull())
-        clean = items_nonnull.withColumn("clean_title", strip_sponsored_tag(F.col("title"))).withColumn(
-            "is_ad", is_sponsored(F.col("title"))
-        )
-        # first-match-wins classification (getRank.py:229-236) as a literal-
-        # array projection — zero shuffles, stays in the same map stage as
-        # the parse (functions/rank.py:first_match_struct)
-        matched = (
-            clean.withColumn(
-                "_m", first_match_struct(F.col("clean_title"), F.col("product_type"), world.DIMS)
-            )
-            .withColumn("match_title", F.col("_m.match_title"))
-            .withColumn("size_attr", F.col("_m.size_attr"))
-            .drop("_m")
-            .withColumn("is_own", F.col("match_title").isNotNull())
-            .withColumn("rank", rank_encode(F.col("layout"), F.col("page"), F.col("pos")))
-        )
+        # ---- classify own products + rank encode
+        matched = classify_serp_items(serp_items.filter(F.col("pos").isNotNull()))
 
         results_all = matched.select(
             F.lit(wave).alias("wave"), "seed_id", "keyword", "page", "pos", "layout",
@@ -687,9 +669,7 @@ class CrawlEngine:
             .select([f.name for f in FRONTIER_SCHEMA.fields] + ["h1", "h2", "bucket"])
             .persist()
         )
-        _mark("new_rows")
         next_seq += n_new
-        t_computed = _time.time()
 
         new_frontier = (
             deferred.select([f.name for f in FRONTIER_SCHEMA.fields])
@@ -722,12 +702,10 @@ class CrawlEngine:
         # writer does NOT deliver observed metrics for an empty frontier
         # (toPyRow assertion on the final wave — measured, not
         # hypothetical), and the footer count is just as free.
-        if cfg.pruned_dequeue:
-            # co-locate the (depth, host_shard) write partitions so the
-            # partitionBy writer emits one file per live combo instead of
-            # (in-memory partitions × combos) tiny files
-            new_frontier = new_frontier.repartition(cfg.n_shards, "depth", "host_shard")
-        _mark("frontier_count")
+        # co-locate the (depth, host_shard) write partitions so the
+        # partitionBy writer emits one file per live combo instead of
+        # (in-memory partitions × combos) tiny files
+        new_frontier = new_frontier.repartition(cfg.n_shards, *PARTITIONING["frontier"])
 
         # compaction cadence: every compact_every-th wave rewrites the hot
         # state chains (seen / shards / seed_flags) as a full base so the
@@ -836,30 +814,11 @@ class CrawlEngine:
             },
             {"next_seq": next_seq},
             bases=bases,
-            partition_cols=self.FRONTIER_PARTITIONING if cfg.pruned_dequeue else None,
         )
         fetched.unpersist()
         new_rows.unpersist()
         pre.unpersist()
         _ranked.unpersist()
         n_frontier = int(store.counter("n_frontier"))
-        _mark("commit")
         next_hot, next_cold = self._load_frontier()
-        out = (
-            next_hot,
-            next_cold,
-            store.load_shard_state(),
-            next_seq,
-            n_frontier,
-        )
-        if os.environ.get("AWC_DEBUG_TIMING"):
-            deltas = " ".join(
-                f"{label}={t - prev:.1f}s"
-                for (label, t), (_, prev) in zip(_marks[1:], _marks[:-1])
-            )
-            print(
-                f"[wave {wave}] compute={t_computed - t_wave0:.1f}s "
-                f"commit={_time.time() - t_computed:.1f}s n_new={n_new} | {deltas}",
-                flush=True,
-            )
-        return out
+        return next_hot, next_cold, store.load_shard_state(), next_seq, n_frontier

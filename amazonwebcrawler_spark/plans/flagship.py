@@ -9,25 +9,14 @@ the full stateful loop lives in plans/crawler.py.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from amazonwebcrawler_spark.functions.rank import (
-    first_match_struct,
-    is_sponsored,
-    rank_encode,
-    rank_string_synthesis,
-    strip_sponsored_tag,
-)
 from amazonwebcrawler_spark.functions.urls import canonicalize_url
+from amazonwebcrawler_spark.plans.crawler import SERP_JSON, classify_serp_items
+from amazonwebcrawler_spark.plans.reports import rank_strings
 from amazonwebcrawler_spark.sources import synthetic_world as world
-
-SERP_JSON = (
-    "kind string, keyword string, page int, layout string, has_next boolean, "
-    "items array<struct<pos:int,title:string,href:string,is_sponsored:boolean,has_title_node:boolean>>"
-)
 
 
 def _fetch(batches):
@@ -68,40 +57,8 @@ def rank_wave(spark: SparkSession, keywords: list[tuple[str, str]], pages: int =
         F.col("item.pos").alias("pos"),
         F.coalesce(F.col("item.title"), F.lit("Amazon recommendation")).alias("title"),
     )
-    clean = items.withColumn("clean_title", strip_sponsored_tag(F.col("title"))).withColumn(
-        "is_ad", is_sponsored(F.col("title"))
-    )
-    matched = (
-        clean.withColumn(
-            "_m", first_match_struct(F.col("clean_title"), F.col("product_type"), world.DIMS)
-        )
-        .withColumn("match_title", F.col("_m.match_title"))
-        .withColumn("size_attr", F.col("_m.size_attr"))
-        .drop("_m")
-        .withColumn("is_own", F.col("match_title").isNotNull())
-        .withColumn("rank", rank_encode(F.col("layout"), F.col("page"), F.col("pos")))
-    )
     # W3 quarantine semantics: unknown-layout pages never contribute ranks
     # (getRank.py:317-328 parks 'Other mode' pages) — same routing as the
     # stateful engine's quarantine table
-    own = matched.filter(F.col("is_own") & (F.col("rank") != "Other mode"))
-    w = Window.partitionBy("seed_id", "is_ad").orderBy(F.col("page").asc(), F.col("pos").asc())
-    firsts = own.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-    ad = firsts.filter(F.col("is_ad")).select(
-        "seed_id", F.col("rank").alias("ad_rank"), F.col("size_attr").alias("ad_attr")
-    )
-    nat = firsts.filter(~F.col("is_ad")).select(
-        "seed_id", F.col("rank").alias("nat_rank"), F.col("size_attr").alias("nat_attr")
-    )
-    kws = seeds.select("seed_id", "keyword").distinct()
-    return (
-        kws.join(ad, "seed_id", "left")
-        .join(nat, "seed_id", "left")
-        .select(
-            "seed_id", "keyword",
-            rank_string_synthesis(
-                F.col("ad_rank"), F.col("ad_attr"), F.col("nat_rank"), F.col("nat_attr")
-            ).alias("rank_string"),
-        )
-        .orderBy("seed_id")
-    )
+    results = classify_serp_items(items).filter(F.col("rank") != "Other mode")
+    return rank_strings(results, seeds.select("seed_id", "keyword").distinct())

@@ -24,8 +24,16 @@ from amazonwebcrawler_spark.sources.state_store import StateStore
 
 
 def rank_report(store: StateStore, seeds: DataFrame) -> DataFrame:
-    """A2 (first-per-group window) + A5 (string synthesis) over serp results."""
-    results = store.load_deltas("results")
+    """Rank strings of the keyword seeds over the committed serp results."""
+    kw_seeds = seeds.filter(F.col("kind") == "keyword").select("seed_id", "keyword")
+    return rank_strings(store.load_deltas("results"), kw_seeds)
+
+
+def rank_strings(results: DataFrame, keywords: DataFrame) -> DataFrame:
+    """A2 (first-per-group window) + A5 (string synthesis): per
+    ``keywords`` row (``seed_id``, ``keyword``), the first sponsored and
+    first natural own hit of classified ``results`` in (page, pos) order,
+    as the golden rank string. Rows are ordered by ``seed_id``."""
     own = results.filter(F.col("is_own"))
     w = Window.partitionBy("seed_id", "is_ad").orderBy(
         F.col("page").asc(), F.col("pos").asc()
@@ -41,9 +49,8 @@ def rank_report(store: StateStore, seeds: DataFrame) -> DataFrame:
     nat = firsts.filter(~F.col("is_ad")).select(
         "seed_id", F.col("rank").alias("nat_rank"), F.col("size_attr").alias("nat_attr")
     )
-    kw_seeds = seeds.filter(F.col("kind") == "keyword").select("seed_id", "keyword")
     return (
-        kw_seeds.join(ad, "seed_id", "left")
+        keywords.join(ad, "seed_id", "left")
         .join(nat, "seed_id", "left")
         .select(
             "seed_id",

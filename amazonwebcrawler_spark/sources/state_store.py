@@ -5,24 +5,35 @@ crash (getRank.py:479, 426-430; getStockNumber.py:151-153) — bounded loss,
 but no way to resume mid-run. Here every wave commits an **atomic snapshot**
 in the Iceberg style: data files first, then a single manifest JSON whose
 rename is the commit point. A crash loses at most the in-flight wave;
-``latest_manifest`` + ``load`` give exact resume (tested in
-tests/test_resume.py).
+``latest_manifest`` + the loaders give exact resume (tests/test_crawler.py).
 
-Layout under ``root``::
+Layout under ``root``, one ``<table>/wave=<n>/`` directory per table a wave
+writes::
 
-    frontier/wave=<n>/   full frontier snapshot at end of wave n
-    shards/wave=<n>/     full Bloom shard snapshot
-    seen/wave=<n>/       seen-set DELTA appended by wave n
-    results/wave=<n>/    parsed result DELTA
-    images/wave=<n>/     image+caption DELTA (input_hint schema)
-    metrics/wave=<n>/    per-(wave, host_shard) fetch/parse metrics
-    lineage/wave=<n>/    per-partition lineage rows
+    frontier/        full frontier snapshot, partitioned (depth, host_shard)
+    shards/          Bloom shard buckets, copy-on-write (dirty buckets only)
+    seen/            seen-set delta
+    seed_flags/      per-seed early-stop flags delta
+    results/         parsed SERP result delta
+    quarantine/      unknown-layout SERP rows (rank 'Other mode')
+    detail_results/  detail-page (BSR) delta
+    cart_results/    cart-probe (inventory) delta
+    images/          image+caption delta (input_hint schema)
+    metrics/         per-(wave, host_shard) fetch metrics and wave timings
+    page_metrics/    per-SERP-page shape flags
+    lineage/         per-fetch lineage rows
+    dead_letter/     fetches that exhausted their retries
     _manifests/manifest-<n>.json   the commit records
 
-Full-snapshot tables (frontier, shards) are read from the latest wave only;
-delta tables are read as the union of all committed waves. At 10^10 scale
-the shard snapshot would become per-bucket copy-on-write (only dirty buckets
-rewritten) — same manifest mechanics, noted here for the scale path.
+**The chain rule** (one walk, ``_chain``, serves every loader and
+``expire_snapshots``): a table as of wave ``w`` is the union of its
+versions at waves ≤ ``w``, walking back to and including the most recent
+*base*. A base is a wave whose manifest lists the table in ``bases`` (a
+compaction rewrote its full history) or any write of a full-snapshot table
+(``SNAPSHOT_TABLES``). So the frontier reads one version, ``seen`` /
+``shards`` / ``seed_flags`` read back to their last compaction, and tables
+that never compact read every wave. At 10^10 scale the shard state would
+become manifest-pruned per bucket — same manifest mechanics.
 """
 
 from __future__ import annotations
@@ -66,12 +77,16 @@ def partitioned_counts(path: str) -> dict[tuple[str, ...], int]:
     return out
 
 
-SNAPSHOT_TABLES = ("frontier",)          # full snapshot, latest wave wins
-COW_TABLES = ("shards",)                 # per-bucket copy-on-write versions
+SNAPSHOT_TABLES = ("frontier",)          # full snapshot: every write is a base
 DELTA_TABLES = (
     "seen", "results", "quarantine", "seed_flags", "detail_results",
     "cart_results", "images", "metrics", "page_metrics", "lineage", "dead_letter",
 )
+#: write-time partition spec (Iceberg partition spec): the frontier is laid
+#: out by (depth, host_shard) so the politeness dequeue can prune depth
+#: bands from file paths alone; depth leads because it leads the priority
+#: order
+PARTITIONING: dict[str, tuple[str, ...]] = {"frontier": ("depth", "host_shard")}
 
 
 class StateStore:
@@ -87,18 +102,20 @@ class StateStore:
         tables: dict[str, DataFrame | None],
         counters: dict[str, int],
         bases: frozenset[str] | set[str] = frozenset(),
-        partition_cols: dict[str, tuple[str, ...]] | None = None,
     ) -> None:
         """Write all wave outputs, then atomically publish the manifest.
 
         The per-table writes are independent Spark jobs — submitting them
         from a thread pool overlaps their scheduling/IO latency (the wave
         loop's dominant fixed cost; each wave commits ~8 small tables).
+        Tables in ``PARTITIONING`` are written under their partition spec.
 
         The frontier row count is recorded in the manifest counters from
         the written parquet FOOTERS (driver-side pyarrow, no Spark job) —
         it is the loop's stop condition, and a count() job per wave just
-        for it was one of the larger per-wave fixed costs.
+        for it was one of the larger per-wave fixed costs. ``started_at``
+        is stamped before the writes and ``committed_at`` after them, just
+        before the rename, so consecutive stamps time whole waves.
         """
         from concurrent.futures import ThreadPoolExecutor
 
@@ -110,16 +127,15 @@ class StateStore:
             # rewrite (delta-chain checkpoint) — loaders read from the most
             # recent base forward instead of the whole wave history
             "bases": sorted(bases),
-            "committed_at": time.time(),
+            "started_at": time.time(),
         }
 
         def write(item: tuple[str, DataFrame]) -> tuple[str, str]:
             name, df = item
             path = os.path.join(self.root, name, f"wave={wave}")
             w = df.write.mode("overwrite")
-            pcols = (partition_cols or {}).get(name)
-            if pcols:
-                w = w.partitionBy(*pcols)
+            if name in PARTITIONING:
+                w = w.partitionBy(*PARTITIONING[name])
             w.parquet(path)
             return name, path
 
@@ -131,6 +147,7 @@ class StateStore:
             entry["counters"]["n_frontier"] = parquet_num_rows(entry["tables"]["frontier"])
         tmp = os.path.join(self.root, "_manifests", f".manifest-{wave}.tmp")
         final = os.path.join(self.root, "_manifests", f"manifest-{wave}.json")
+        entry["committed_at"] = time.time()
         with open(tmp, "w") as f:
             json.dump(entry, f)
         os.rename(tmp, final)  # the commit point
@@ -152,44 +169,56 @@ class StateStore:
         waves = self.committed_waves()
         if not waves:
             return None
-        with open(os.path.join(self.root, "_manifests", f"manifest-{waves[-1]}.json")) as f:
-            return json.load(f)
+        return self._manifest(waves[-1])
 
-    def _waves_as_of(self, as_of_wave: int | None) -> list[int]:
-        waves = self.committed_waves()
-        if as_of_wave is None:
-            return waves
-        return [w for w in waves if w <= as_of_wave]
+    def _chain(self, name: str, as_of_wave: int | None, live: bool = True) -> list[tuple[int, str]]:
+        """``(wave, path)`` versions of ``name`` that make up the table as of
+        ``as_of_wave`` (None = latest), oldest first: walk back from it to
+        and including the most recent base (the module docstring's chain
+        rule). ``live`` raises when the walk reaches an expired version."""
+        expired = self._expired_paths() if live else set()
+        chain: list[tuple[int, str]] = []
+        for w in reversed(self.committed_waves()):
+            if as_of_wave is not None and w > as_of_wave:
+                continue
+            m = self._manifest(w)
+            path = m["tables"].get(name)
+            if path is None:
+                continue
+            if path in expired:
+                raise ValueError(
+                    f"snapshot expired: {path} was removed by expire_snapshots(); "
+                    "time travel older than the retention horizon is gone"
+                )
+            chain.append((w, path))
+            if name in SNAPSHOT_TABLES or name in m.get("bases", ()):
+                break
+        chain.reverse()
+        return chain
+
+    def _read(self, name: str, as_of_wave: int | None) -> DataFrame | None:
+        paths = [p for _w, p in self._chain(name, as_of_wave)]
+        return self.spark.read.parquet(*paths) if paths else None
 
     def load_snapshot(self, name: str, as_of_wave: int | None = None) -> DataFrame | None:
-        """Committed full snapshot of ``name`` (frontier / shards) as of the
-        given wave (Iceberg-style time travel; None = latest)."""
-        for wave in reversed(self._waves_as_of(as_of_wave)):
-            m = self._manifest(wave)
-            if name in m["tables"]:
-                return self.spark.read.parquet(self._check_live(m["tables"][name]))
-        return None
+        """Committed full snapshot of ``name`` (frontier) as of the given
+        wave (Iceberg-style time travel; None = latest)."""
+        return self._read(name, as_of_wave)
 
     def load_shard_state(self, as_of_wave: int | None = None) -> DataFrame | None:
         """Copy-on-write Bloom shard state: each wave writes ONLY its dirty
         buckets (operators/bloom.py merge_into_shards dirty_only=True); the
-        live state is the latest version of every bucket across waves. At
-        Iceberg scale this is manifest-pruned to one file read per bucket;
-        here it is a tiny union + max_by (n_buckets × waves short rows).
-        ``as_of_wave`` time-travels to the state as committed at that wave."""
+        live state is the latest version of every bucket across the chain.
+        At Iceberg scale this is manifest-pruned to one file read per
+        bucket; here it is a tiny union + max_by (n_buckets × waves short
+        rows). ``as_of_wave`` time-travels to the state as committed at
+        that wave."""
         from pyspark.sql import functions as F
 
-        versioned: list[tuple[int, str]] = []
-        for w in reversed(self._waves_as_of(as_of_wave)):
-            m = self._manifest(w)
-            if "shards" not in m["tables"]:
-                continue
-            versioned.append((w, self._check_live(m["tables"]["shards"])))
-            if "shards" in m.get("bases", ()):
-                break  # a base wave wrote every bucket — stop descending
-        versioned.reverse()
-        if not versioned:
+        chain = self._chain("shards", as_of_wave)
+        if not chain:
             return None
+
         def _read(path: str) -> DataFrame:
             df = self.spark.read.parquet(path)
             if "keys" not in df.columns:
@@ -200,7 +229,7 @@ class StateStore:
                 df = df.withColumn("keys", F.lit(b""))
             return df
 
-        dfs = [_read(path).withColumn("_v", F.lit(w)) for w, path in versioned]
+        dfs = [_read(path).withColumn("_v", F.lit(w)) for w, path in chain]
         u = dfs[0]
         for d in dfs[1:]:
             u = u.unionByName(d)
@@ -218,17 +247,7 @@ class StateStore:
         ``as_of_wave`` reads the table exactly as it stood after that wave's
         commit (snapshot time travel — by determinism, identical to what an
         interrupted run stopped at that wave would hold; tested)."""
-        paths: list[str] = []
-        for w in reversed(self._waves_as_of(as_of_wave)):
-            m = self._manifest(w)
-            if name not in m["tables"]:
-                continue
-            paths.append(self._check_live(m["tables"][name]))
-            if name in m.get("bases", ()):
-                break
-        if not paths:
-            return None
-        return self.spark.read.parquet(*reversed(paths))
+        return self._read(name, as_of_wave)
 
     def _manifest(self, wave: int) -> dict:
         with open(os.path.join(self.root, "_manifests", f"manifest-{wave}.json")) as f:
@@ -242,28 +261,15 @@ class StateStore:
         with open(p) as f:
             return set(json.load(f)["paths"])
 
-    def _check_live(self, path: str) -> str:
-        if path in self._expired_paths():
-            raise ValueError(
-                f"snapshot expired: {path} was removed by expire_snapshots(); "
-                "time travel older than the retention horizon is gone"
-            )
-        return path
-
     def expire_snapshots(self, keep_last: int) -> dict:
         """Iceberg-style snapshot expiration: delete wave directories no
-        longer REACHABLE from the last ``keep_last`` committed waves, by
-        simulating exactly the loaders' path selection:
-
-        * full-snapshot tables (frontier): each retained wave reads only
-          its latest version — every older full rewrite is garbage. This
-          is where a per-wave-rewritten 10^10-row frontier grows O(waves)
-          disk without expiration.
-        * COW / delta tables: chains stop at the most recent compaction
-          base, so pre-base deltas of ``seen``/``shards``/``seed_flags``
-          expire once a base is inside the retention window. Tables that
-          never compact (results, images, metrics, lineage — their union
-          IS the live table) keep every wave reachable and lose nothing.
+        longer REACHABLE from the last ``keep_last`` committed waves — on
+        no retained wave's chain (``_chain``, the walk the loaders use).
+        Superseded frontier rewrites are garbage (this is where a
+        per-wave-rewritten 10^10-row frontier grows O(waves) disk without
+        expiration), as are pre-base versions of compacted tables once a
+        base is retained; tables that never compact, and tables of any
+        other name, keep every version and lose nothing.
 
         Manifests are kept (delta unions still need them); expired paths
         are tombstoned in ``_manifests/expired.json`` and any later time
@@ -282,40 +288,21 @@ class StateStore:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         waves = self.committed_waves()
         retained = waves[-keep_last:]
-        referenced: set[str] = set()
-        all_paths: dict[str, tuple[str, int]] = {}
-        for w in waves:
-            m = self._manifest(w)
-            for name, path in m["tables"].items():
-                all_paths[path] = (name, w)
-        for name in SNAPSHOT_TABLES:
-            for r in retained:
-                for w in reversed([x for x in waves if x <= r]):
-                    m = self._manifest(w)
-                    if name in m["tables"]:
-                        referenced.add(m["tables"][name])
-                        break
-        for name in COW_TABLES + DELTA_TABLES:
-            for r in retained:
-                for w in reversed([x for x in waves if x <= r]):
-                    m = self._manifest(w)
-                    if name not in m["tables"]:
-                        continue
-                    referenced.add(m["tables"][name])
-                    if name in m.get("bases", ()):
-                        break
+        all_paths = {
+            path: (name, w)
+            for w in waves
+            for name, path in self._manifest(w)["tables"].items()
+        }
+        referenced = {
+            path
+            for name in {name for name, _w in all_paths.values()}
+            for r in retained
+            for _w, path in self._chain(name, r, live=False)
+        }
         deleted: list[tuple[str, int]] = []
         bytes_reclaimed = 0
         expired = self._expired_paths()
-        # conservative never-delete default: reachability above is computed
-        # ONLY for table names in the three known lists — a table committed
-        # under any other name (a future commit_wave addition, an external
-        # caller) has no loader chain here, so treating it as unreferenced
-        # would delete live data. Skip it instead.
-        known = set(SNAPSHOT_TABLES) | set(COW_TABLES) | set(DELTA_TABLES)
         for path, (name, w) in sorted(all_paths.items()):
-            if name not in known:
-                continue
             if path in referenced or path in expired or not os.path.isdir(path):
                 continue
             bytes_reclaimed += sum(

@@ -294,22 +294,41 @@ class TestCompaction:
 
 
 class TestPrunedDequeue:
-    def test_pruned_equals_unpruned(self, spark):
-        """The depth-pruned dequeue is a pure read optimization: seen set,
-        per-wave fetch ordering, and discovery sequences must be
-        byte-identical with pruning on vs off."""
-        res = {}
-        for prune in (True, False):
-            tmp = f"/tmp/crawl_prunecmp_{prune}"
-            shutil.rmtree(tmp, ignore_errors=True)
-            cfg = _cfg(tmp, tokens_per_shard=4, pruned_dequeue=prune)
-            st = CrawlEngine(spark, cfg, seeds=seeds_df(spark, SEED_ROWS)).run()["store"]
-            res[prune] = (
-                sorted((r.canonical_url, r.discovery_seq) for r in st.load_deltas("seen").collect()),
-                sorted((r.wave, r.canonical_url) for r in st.load_deltas("lineage").collect()),
-            )
-        assert res[True] == res[False]
-        assert len(res[True][0]) > 50  # non-vacuous crawl
+    def test_pruned_crawl_matches_oracle(self, spark):
+        """The depth-pruned dequeue is a pure read optimization: with a
+        budget small enough that whole depth bands are left unread (64
+        one-page keyword seeds, 2 tokens per shard), the crawl's per-wave
+        fetch order and seen set must still equal the pure-Python oracle's,
+        which ranks the whole frontier every wave. Non-vacuous: some wave
+        must really have been dequeued from a pruned (hot, cold) split."""
+        import tests.oracle as oracle_mod
+
+        tmp = "/tmp/crawl_prune_oracle"
+        shutil.rmtree(tmp, ignore_errors=True)
+        rows = [
+            (i, "keyword", f"kw {i} synth", world.serp_url(f"kw {i} synth", 1), "yogamat", 1)
+            for i in range(64)
+        ]
+        eng = CrawlEngine(
+            spark, _cfg(tmp, max_waves=4, tokens_per_shard=2), seeds=seeds_df(spark, rows)
+        )
+        pruned = []
+        load = eng._load_frontier
+
+        def spy():
+            hot, cold = load()
+            pruned.append(cold is not None)
+            return hot, cold
+
+        eng._load_frontier = spy
+        store = eng.run()["store"]
+        assert any(pruned), f"no wave was pruned: {pruned}"
+        o = oracle_mod.crawl_oracle(
+            rows, n_shards=8, salt_bits=2, tokens_per_shard=2, max_waves=4
+        )
+        lineage = store.load_deltas("lineage").select("wave", "canonical_url").collect()
+        assert sorted((r.wave, r.canonical_url) for r in lineage) == sorted(o.fetch_order)
+        assert {r.canonical_url for r in store.load_deltas("seen").collect()} == o.seen
 
     def test_exact_confirm_modes_identical(self, spark):
         """'shard_sets' (exact membership riding the bloom cogroup — no
@@ -427,10 +446,7 @@ class TestPrunedDequeue:
             for i in range(3)
         ]
         frontier = spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        eng.store.commit_wave(
-            0, {"frontier": frontier}, {"next_seq": 0},
-            partition_cols=CrawlEngine.FRONTIER_PARTITIONING,
-        )
+        eng.store.commit_wave(0, {"frontier": frontier}, {"next_seq": 0})
         hot, cold = eng._load_frontier()
         assert cold is not None
         assert hot.count() == 12 and cold.count() == 24
@@ -664,18 +680,18 @@ class TestExpiration:
             store.expire_snapshots(keep_last=0)
 
     def test_unknown_table_never_deleted(self, spark):
-        """ADVICE r4: reachability is computed only for the known table
-        lists — a table committed under any OTHER name (a future
-        commit_wave addition, an external caller) has no loader chain, so
-        expiration must skip it (conservative never-delete), not treat it
-        as unreachable garbage."""
+        """ADVICE r4: a table committed under a name outside the store's
+        table lists (a future commit_wave addition, an external caller) is
+        never compacted, so every version of it stays on the chain of the
+        latest wave — expiration must keep it, not treat it as
+        unreachable garbage."""
         import json
         import os
 
         store = self._run(spark, "/tmp/crawl_expire_unknown", max_waves=6)
         waves = store.committed_waves()
         old = waves[0]
-        # plant a table name outside SNAPSHOT/COW/DELTA_TABLES in an OLD
+        # plant a table name outside the store's table lists in an OLD
         # wave's manifest, pointing at a real directory with a real file
         side_dir = os.path.join(store.root, "side_metrics", f"wave={old}")
         os.makedirs(side_dir, exist_ok=True)
@@ -693,6 +709,56 @@ class TestExpiration:
         assert "side_metrics" not in {t for t, _ in out["deleted"]}
         # the known garbage is still reclaimed
         assert "frontier" in {t for t, _ in out["deleted"]}
+
+
+    def test_retained_waves_stay_readable(self, spark):
+        """The guarantee of the one chain walk the loaders and expiration
+        share: after expire_snapshots(keep_last=2), every loader reads
+        every table as of each retained wave — no 'snapshot expired', and
+        the same rows as before expiration."""
+        from amazonwebcrawler_spark.sources.state_store import DELTA_TABLES
+
+        tmp = "/tmp/crawl_expire_reads"
+        shutil.rmtree(tmp, ignore_errors=True)
+        # a small budget keeps the frontier non-empty through the last wave
+        store = CrawlEngine(
+            spark,
+            _cfg(tmp, max_waves=6, tokens_per_shard=4, compact_every=2),
+            seeds=seeds_df(spark, SEED_ROWS),
+        ).run()["store"]
+
+        def read_all(wave):
+            out = {n: _table_rows(store.load_deltas(n, as_of_wave=wave)) for n in DELTA_TABLES}
+            out["frontier"] = _table_rows(store.load_snapshot("frontier", as_of_wave=wave))
+            out["shards"] = _table_rows(store.load_shard_state(as_of_wave=wave))
+            return out
+
+        retained = store.committed_waves()[-2:]
+        before = {w: read_all(w) for w in retained}
+        assert before[retained[-1]]["frontier"], "frontier emptied: reads are vacuous"
+        out = store.expire_snapshots(keep_last=2)
+        assert out["retained_waves"] == retained
+        # compaction bases inside the window make pre-base versions garbage
+        assert {t for t, _ in out["deleted"]} >= {"frontier", "seen", "shards"}
+        for w in retained:
+            assert read_all(w) == before[w], f"as_of_wave={w} changed by expiration"
+
+
+class TestManifestStamps:
+    def test_committed_at_follows_the_wave_files(self, spark, crawl):
+        """started_at is stamped before a wave's writes and committed_at
+        after them: no file a manifest names is newer than its
+        committed_at, so consecutive stamps time whole waves."""
+        for w in crawl.committed_waves():
+            m = crawl._manifest(w)
+            newest = max(
+                os.path.getmtime(os.path.join(dp, f))
+                for path in m["tables"].values()
+                for dp, _dns, fns in os.walk(path)
+                for f in fns
+            )
+            assert m["started_at"] <= m["committed_at"]
+            assert m["committed_at"] >= newest, (w, m["committed_at"], newest)
 
 
 class TestOrphans:

@@ -222,6 +222,20 @@ class TestLSHEncodePaths:
         rows_pan = sorted((r.query_id, r.neighbor_id, r.rank, r.cos_sim_micro) for r in pan.collect())
         assert rows_lit == rows_pan
 
+    def test_n_planes_over_int32_raises(self, spark, sf_dir):
+        """Bucket ids are int32: 32 sign bits would wrap in the pandas
+        encode and fail the literal path's cast under ANSI, so lsh_topk
+        rejects n_planes > 31 up front, in both encode modes; 31 is the
+        largest accepted value."""
+        import pytest
+
+        e = _emb(spark, sf_dir)
+        for encode in ("literal", "pandas"):
+            with pytest.raises(ValueError, match="n_planes"):
+                similarity.lsh_topk(e, e, "vec_id", "embedding", dim=64, n_planes=32, encode=encode)
+        # 31 planes still plans (building the plan runs no job)
+        similarity.lsh_topk(e, e, "vec_id", "embedding", dim=64, n_planes=31, n_tables=1)
+
 
 class TestSimhashPlanHygiene:
     def test_simhash_plan_has_no_python_eval(self, spark, sf_dir):

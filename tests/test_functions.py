@@ -176,10 +176,12 @@ class TestExtractLinks:
             '<a href="javascript:void(0)">j</a>'
             '<a href="/s?k=yoga+mat&ref=nb#frag">s</a>'
         )
-        d = spark.createDataFrame([(html,)], "html string")
-        got = d.select(
-            extract_links(F.col("html"), F.lit("https://www.amazon.com")).alias("links")
-        ).collect()[0].links
+        d = spark.createDataFrame([(7, html)], "page long, html string")
+        rows = extract_links(
+            d, F.col("html"), F.lit("https://www.amazon.com"), keep=["page"]
+        ).collect()
+        assert [(r.page, r.link_pos) for r in rows] == [(7, 0), (7, 1), (7, 2)]
+        got = [r.canonical_url for r in sorted(rows, key=lambda r: r.link_pos)]
         assert got == [
             "https://www.amazon.com/dp/B1?p=3",
             "https://www.amazon.com/gp/x?b=2",
@@ -192,10 +194,8 @@ class TestExtractLinks:
         from amazonwebcrawler_spark.functions.urls import extract_links
 
         d = spark.createDataFrame([("<p>no anchors</p>",), ("",)], "html string")
-        rows = d.select(
-            extract_links(F.col("html"), F.lit("https://www.amazon.com")).alias("links")
-        ).collect()
-        assert all(r.links == [] for r in rows)
+        rows = extract_links(d, F.col("html"), F.lit("https://www.amazon.com")).collect()
+        assert rows == []
 
 
 class TestParseSitemap:
