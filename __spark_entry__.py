@@ -1031,15 +1031,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ----------------------------------------------------- robots filter (C7)
     def q_robots_filter(spark, sf):
-        """C7 robots.txt disallow filter through the crawler's REAL
-        `_robots_filter` (broadcast rules + exists() prefix match) over a
-        deterministic URL mix built from orders: /gp/private and
-        /exec/obidos rows (the planted disallow prefixes,
-        synthetic_world.ROBOTS) must drop, everything else passes. The
+        """C7 robots.txt disallow filter through the crawl's REAL robots
+        step (functions/robots.keep_allowed, robots_match's decision over
+        the crawler's grouped `_robots_rules`, one Disallow rule per
+        synthetic_world.ROBOTS prefix) over a deterministic URL mix built
+        from orders: /gp/private and /exec/obidos rows (the planted
+        disallow prefixes) must drop, everything else passes. The
         reference ignores robots entirely (SURVEY.md C7 ⊕); the DuckDB twin
         re-derives the rules-table semantics (path extraction + per-rule
         prefix test), not just the expected output."""
-        from amazonwebcrawler_spark.plans.crawler import _robots_df, _robots_filter
+        from amazonwebcrawler_spark.functions.robots import keep_allowed
+        from amazonwebcrawler_spark.plans.crawler import _robots_rules
 
         o = _t(spark, sf, "orders")
         k = F.col("o_orderkey")
@@ -1056,7 +1058,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).withColumn(
             "host", F.lower(F.regexp_extract(F.col("canonical_url"), r"^https?://([^/]+)", 1))
         )
-        kept = _robots_filter(cand, _robots_df(spark))
+        kept = keep_allowed(cand, _robots_rules(spark))
         return kept.select("o_orderkey", "canonical_url")
 
     # ----------------------------------------------------- dead letter (C3)
@@ -1093,18 +1095,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         dead = eng.store.load_deltas("dead_letter")
         return dead.select("seed_id", "canonical_url", F.col("attempt").cast("int").alias("attempt"))
 
-    # ----------------------------------------------------- shard_sets confirm (P15+/C6)
+    # ----------------------------------------------------- seen confirm (P15+/C6)
     def q_crawl_shard_sets(spark, sf):
-        """Zero-shuffle exact-confirm path (`exact_confirm='shard_sets'`)
-        value-checked through the REAL engine: a 1-wave crawl over 400
-        page-1 keyword seeds plus 80 planted page-2 seeds (every 5th
-        keyword's page-2 URL is pre-seeded). Wave 0's pagination candidates
-        are the page-2 URLs of every successfully fetched page-1 seed; the
-        planted ones are ALREADY in the seen set, so admission depends
-        entirely on the per-bucket sorted key-hash sets answering exact
-        membership inside the bloom cogroup probe (operators/bloom.py
-        probe_shards(exact=True)) — both the drop branch (planted, seen)
-        and the admit branch (fresh) are exercised. Returned table: the
+        """The crawl's zero-shuffle seen confirm value-checked through the
+        REAL engine: a 1-wave crawl over 400 page-1 keyword seeds plus 80
+        planted page-2 seeds (every 5th keyword's page-2 URL is
+        pre-seeded). Wave 0's pagination candidates are the page-2 URLs of
+        every successfully fetched page-1 seed; the planted ones are
+        ALREADY in the seen set, so admission depends entirely on the
+        per-bucket sorted key-hash sets answering exact membership inside
+        the bloom cogroup probe (operators/bloom.py probe_shards'
+        ``exact_seen``) — both the drop branch (planted, seen) and the
+        admit branch (fresh) are exercised. Returned table: the
         full seen set with data-defined discovery_seq, which the DuckDB
         twin re-derives from the deterministic failure schedule + the
         enqueue-order seq contract (politeness.assign_discovery_seq)."""
@@ -1128,7 +1130,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             checkpoint_dir=ckpt, max_waves=1, max_retries=0,
             tokens_per_shard=512, n_shards=8, salt_bits=2,
             early_stop=False, follow_items=False, follow_skus=False,
-            probe_inventory=False, exact_confirm="shard_sets",
+            probe_inventory=False,
             bloom=bloom_ops.BloomConfig(n_buckets=8, m_bits=1 << 16),
         )
         eng = CrawlEngine(spark, cfg, seeds=seeds_df(spark, rows))
@@ -5003,7 +5005,7 @@ def oracle_sql() -> dict[str, str]:
   regexp_replace(regexp_replace(regexp_replace(_base, '^https?://[^/]*', ''), '/+$', ''), '/ref=[^/]*$', '') AS _path,
   COALESCE(array_to_string(
     list_sort(list_filter(string_split(_q, '&'),
-      x -> x <> '' AND NOT list_contains(['ref','qid','ie','sr','tag','psc','spIA','rnid'], string_split(x, '=')[1]))),
+      x -> x <> '' AND NOT list_contains(['ref','qid','ie','sr','tag','psc','spIA','rnid','keywords'], string_split(x, '=')[1]))),
     '&'), '') AS _qs,
   _sh || _path || CASE WHEN _qs = '' THEN '' ELSE '?' || _qs END AS {out}
 """
@@ -6182,7 +6184,7 @@ p AS (
     regexp_replace(regexp_replace(regexp_replace(base, '^https?://[^/]*', ''), '/+$', ''), '/ref=[^/]*$', '') AS path,
     array_to_string(
       list_sort(list_filter(string_split(q, '&'),
-        x -> x <> '' AND NOT list_contains(['ref','qid','ie','sr','tag','psc','spIA','rnid'], string_split(x, '=')[1]))),
+        x -> x <> '' AND NOT list_contains(['ref','qid','ie','sr','tag','psc','spIA','rnid','keywords'], string_split(x, '=')[1]))),
       '&') AS qs
   FROM sp
 ),
@@ -6230,7 +6232,7 @@ p AS (
     -- COALESCE: DuckDB's array_to_string([]) is NULL, Spark's array_join is ''
     COALESCE(array_to_string(
       list_sort(list_filter(string_split(q, '&'),
-        x -> x <> '' AND NOT list_contains(['ref','qid','ie','sr','tag','psc','spIA','rnid'], string_split(x, '=')[1]))),
+        x -> x <> '' AND NOT list_contains(['ref','qid','ie','sr','tag','psc','spIA','rnid','keywords'], string_split(x, '=')[1]))),
       '&'), '') AS qs
   FROM sp
 )
@@ -6359,7 +6361,7 @@ p AS (
     regexp_replace(regexp_replace(regexp_replace(base, '^https?://[^/]*', ''), '/+$', ''), '/ref=[^/]*$', '') AS path,
     array_to_string(
       list_sort(list_filter(string_split(q, '&'),
-        x -> x <> '' AND NOT list_contains(['ref','qid','ie','sr','tag','psc','spIA','rnid'], string_split(x, '=')[1]))),
+        x -> x <> '' AND NOT list_contains(['ref','qid','ie','sr','tag','psc','spIA','rnid','keywords'], string_split(x, '=')[1]))),
       '&') AS qs
   FROM sp
 )
@@ -7513,10 +7515,11 @@ ham AS (
 SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3
 """,
         "robots_filter": """
--- C7 twin: the SAME rules-table semantics as crawler._robots_filter —
--- strip scheme+host to get the path, left-join the rules by host, keep a
--- URL iff no disallow prefix matches (synthetic_world.ROBOTS plants
--- /gp/private and /exec/obidos for www.amazon.com)
+-- C7 twin of the crawl's robots step (robots_match over one Disallow rule
+-- per synthetic_world.ROBOTS prefix; wildcard-free patterns are plain
+-- prefixes): strip scheme+host to get the path, left-join the rules by
+-- host, keep a URL iff no disallow prefix matches (/gp/private and
+-- /exec/obidos for www.amazon.com)
 WITH u AS (
   SELECT o_orderkey,
     CASE o_orderkey % 5
@@ -7560,12 +7563,12 @@ WHERE CAST(('0x' || substr(md5('42' || chr(31) || 'flaky' || chr(31) || canonica
            AS UBIGINT) % 31 = 0
 """,
         "crawl_shard_sets": """
--- shard_sets twin: the engine's 1-wave crawl (400 page-1 seeds + 80
+-- seen-confirm twin: the engine's 1-wave crawl (400 page-1 seeds + 80
 -- planted page-2 seeds, early_stop off, pagination-only expansion) leaves
 -- seen = all 480 seed URLs (seq = seed_id, committed at wave -1) plus the
 -- page-2 URL of every OK page-1 seed that was NOT pre-seeded. Failure
 -- schedule: h64('flaky', url) % 31 == 0 (synthetic_world, md5-based).
--- Admission is exactly what probe_shards(exact=True) answers from the
+-- Admission is exactly what probe_shards' exact_seen answers from the
 -- per-bucket key sets; discovery_seq = next_seq + rank, next_seq =
 -- n_frontier(480) + 1000, rank = 1-based enqueue order over
 -- (parent_seq, parent_pos, canonical_url) = seed order here

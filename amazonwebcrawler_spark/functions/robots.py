@@ -1,12 +1,15 @@
 """RFC 9309 (Robots Exclusion Protocol) path matching as pure column math.
 
-The crawl engine's in-wave robots filter (plans/crawler._robots_filter)
-implements the synthetic world's prefix-only Disallow model — the shape the
-reference scraper respects implicitly by only fetching its own URL
-templates. Real crawl frontiers need the full REP: ``*`` wildcards, ``$``
+This is the crawl's one robots matcher: the wave loop
+(plans/crawler.admit_candidates, via :func:`keep_allowed`) and the
+``robots_filter``/``robots_rfc`` queries all decide through
+:func:`robots_match`. It implements the full REP: ``*`` wildcards, ``$``
 end anchors, Allow groups, and the longest-match precedence rule
 (RFC 9309 §2.2.2: the most specific match — most octets — wins; Google's
 documented tiebreak: the least restrictive rule, i.e. Allow, wins ties).
+The synthetic world's plain Disallow prefixes are the special case of
+rules without wildcards; ``synthetic_world.robots_allowed`` stays their
+pure-Python twin for the crawl oracle.
 
 Scale shape: the rules side of a robots decision is tiny (one robots.txt
 per host) while the URL side is the 10^10-row frontier — so the rules are
@@ -61,24 +64,32 @@ def url_path_query(url: Column) -> Column:
 
 def group_rules_by_host(rules: DataFrame) -> DataFrame:
     """(host, allow, pattern) rows → one row per host with a
-    deterministically ordered rule array ready to broadcast. Rules with an
-    empty pattern are dropped (RFC 9309: an empty pattern matches nothing
-    for Allow and means 'allow all' for Disallow — both reduce to no-op
-    here). The regex is precompiled per RULE (not per URL×rule)."""
-    return (
-        rules.filter(F.col("pattern") != "")
-        .select(
-            "host",
-            F.struct(
-                F.col("pattern"),
-                F.col("allow").cast("int").alias("allow"),
-                robots_pattern_regex(F.col("pattern")).alias("rx"),
-                F.length("pattern").cast("int").alias("plen"),
-            ).alias("rule"),
+    deterministically ordered rule array ready to broadcast
+    (:func:`compile_rules` over the per-host lists)."""
+    return compile_rules(
+        rules.groupBy("host").agg(
+            F.collect_list(F.struct("pattern", "allow")).alias("rules")
         )
-        .groupBy("host")
-        .agg(F.array_sort(F.collect_list("rule")).alias("rules"))
     )
+
+
+def compile_rules(per_host: DataFrame) -> DataFrame:
+    """(host, rules array<struct<pattern, allow>>), one row per host → the
+    broadcast form :func:`keep_allowed` takes. Rules with an empty pattern
+    are dropped (RFC 9309: an empty pattern matches nothing for Allow and
+    means 'allow all' for Disallow — both reduce to no-op here). The regex
+    is precompiled per RULE (not per URL×rule). A pure projection: no
+    aggregate, so no shuffle, whenever the rules are broadcast."""
+    compiled = F.transform(
+        F.filter("rules", lambda r: r["pattern"] != ""),
+        lambda r: F.struct(
+            r["pattern"].alias("pattern"),
+            r["allow"].cast("int").alias("allow"),
+            robots_pattern_regex(r["pattern"]).alias("rx"),
+            F.length(r["pattern"]).cast("int").alias("plen"),
+        ),
+    )
+    return per_host.select("host", F.array_sort(compiled).alias("rules"))
 
 
 def robots_match(
@@ -108,7 +119,12 @@ def robots_match(
     rule) — rules per host are O(10), so the work is ~10 regex probes per
     frontier row, all JVM-side.
     """
-    grouped = group_rules_by_host(rules)
+    return _decide(urls, group_rules_by_host(rules), url_col, host_col)
+
+
+def _decide(urls: DataFrame, grouped: DataFrame, url_col: str, host_col: str) -> DataFrame:
+    """:func:`robots_match` over rules already in
+    :func:`compile_rules` form."""
     path = url_path_query(F.col(url_col))
     matches = F.filter(
         F.col("_rules"), lambda r: F.regexp_like(F.col("_path"), r["rx"])
@@ -132,6 +148,20 @@ def robots_match(
             F.coalesce(F.col("_w.plen"), F.lit(0)).cast("int").alias("match_len"),
             F.coalesce(F.col("_w.pattern"), F.lit("")).alias("match_pattern"),
         )
+    )
+
+
+def keep_allowed(urls: DataFrame, grouped: DataFrame) -> DataFrame:
+    """The rows of ``urls`` (``canonical_url``, ``host``) that RFC 9309
+    allows, with the columns of ``urls`` only (C7: disallowed URLs never
+    enter the frontier). ``grouped`` is the output of
+    :func:`group_rules_by_host` or :func:`compile_rules`, so a caller that
+    decides batch after batch against the same rules groups them once, not
+    per batch."""
+    return (
+        _decide(urls, grouped, "canonical_url", "host")
+        .filter(F.col("allowed") == 1)
+        .select(*urls.columns)
     )
 
 

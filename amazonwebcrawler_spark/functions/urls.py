@@ -13,7 +13,9 @@ oracle SQL, so it must stay expressible in portable SQL built-ins):
 2. lowercase the ``scheme://host`` part (path and query stay case-sensitive)
 3. strip an Amazon-style ``/ref=...`` suffix from the path
 4. strip trailing ``/`` from the path
-5. drop tracking query params: ``ref qid ie sr tag psc spIA rnid``
+5. drop tracking query params: ``ref qid ie sr tag psc spIA rnid keywords``
+   (``keywords`` is the SERP query a ``/dp/`` link was listed under — one
+   product page under every keyword that lists it)
 6. sort surviving ``k=v`` query params lexicographically and rejoin
 
 Everything is built from `pyspark.sql.functions` column expressions —
@@ -26,7 +28,7 @@ from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 #: query parameters that never change page identity (P14)
-TRACKING_PARAMS = ("ref", "qid", "ie", "sr", "tag", "psc", "spIA", "rnid")
+TRACKING_PARAMS = ("ref", "qid", "ie", "sr", "tag", "psc", "spIA", "rnid", "keywords")
 
 
 def _strip_fragment(url: Column) -> Column:

@@ -13,30 +13,25 @@ seen set every wave — the Bloom filter is the scale path:
   the pandas kernels below only ever see int64s, all numpy-vectorized;
 * probe and merge are **cogrouped** ``applyInPandas`` over (candidates ⨝
   shards) grouped by bucket, so a shard's bytes are materialized once per
-  task, never duplicated per candidate row;
-* the filter admits false positives but never false negatives, so:
-  ``maybe_seen == False`` → definitely new (no exact check needed);
-  ``maybe_seen == True``  → confirmed against the exact ``seen`` table with
-  a ``left_anti`` join — which at scale only touches the tiny
-  TP+FP subset instead of the whole frontier.
+  task, never duplicated per candidate row.
+
+**Exact membership in the same task.** Every shard also carries ``keys`` —
+the bucket's SORTED uint64 array of ``h1`` key hashes. The probe kernel
+answers ``maybe_seen`` from the bitset (false positives, never false
+negatives) and ``exact_seen`` by searchsorted membership in the key set,
+both inside the one cogroup task per bucket: the crawler admits
+``~exact_seen`` with zero extra shuffles and never reads the ``seen``
+table (the membership-inside-the-vectorized-kernel shape of *Accelerating
+Python UDFs in Vectorized Query Execution*, CIDR 2022). Cost: +8 B/URL of
+state (~80 GB at 10^10, ~20 MB/bucket at 4096 buckets — read/written per
+dirty bucket only, COW). Exactness is up to xxhash64 collisions on ``h1``:
+n URLs give ≈ n²/2^65 expected colliding pairs — ≈ 2.7 for a 10^10-URL
+crawl, which therefore silently drops about 3 new URLs (the failure mode
+is pinned by tests/test_crawler.py against the md5-exact crawl oracle).
 
 Sizing: with the default ``bits_per_item=12, k=5`` the false-positive rate
 is ~0.3%; at 10^10 URLs that is 15 GB of filter split over shards
 (``n_buckets=4096`` → ~3.7 MB/shard), one shard per task.
-
-**Exact confirm, two modes.** Every shard also carries ``keys`` — the
-bucket's SORTED uint64 array of ``h1 = xxhash64(url)`` key hashes. The
-probe kernel answers ``exact_seen`` (searchsorted membership) in the same
-cogroup task that tests the bitset, which lets the crawler confirm new
-URLs with ZERO extra shuffles and no per-wave scan of the ``seen`` table
-(``CrawlConfig.exact_confirm='shard_sets'``). Cost: +8 B/URL of state
-(~80 GB at 10^10, ~20 MB/bucket at 4096 buckets — read/written per dirty
-bucket only, COW). Exactness is up to xxhash64 collisions on ``h1``: n
-URLs give ≈ n²/2^65 expected colliding pairs — ≈ 2.7 for a 10^10-URL
-crawl, which therefore silently drops about 3 new URLs. The default
-``'seen_table'`` mode keeps the md5-exact left_anti against the seen
-table, which is what the DuckDB oracle and byte-exact resume contract
-check. Both modes produce identical crawls (tested).
 """
 
 from __future__ import annotations
@@ -56,11 +51,6 @@ class BloomConfig:
     n_buckets: int = 64
     m_bits: int = 1 << 20  # bits per shard
     k: int = 5
-    #: accumulate the per-bucket sorted key-hash sets that back
-    #: ``probe_shards(exact=True)``. Costs +8 B/URL of shard state and a
-    #: per-dirty-bucket union+rewrite — CrawlConfig wires it OFF for the
-    #: default ``seen_table`` confirm mode, which never reads the sets.
-    track_keys: bool = True
 
     @classmethod
     def for_capacity(cls, n_items: int, bits_per_item: int = 12, n_buckets: int = 64) -> "BloomConfig":
@@ -127,20 +117,10 @@ def merge_into_shards(
     with COW a wave rewrites only the few MB it actually touched
     (StateStore.load_shard_state reconstructs latest-per-bucket).
 
-    Key-set accumulation is gated on ``cfg.track_keys``: with it off the
-    ``keys`` column is written empty (lean shard state for the seen_table
-    confirm mode, which never reads it). NOTE a merge with ``track_keys
-    False`` also drops any EXISTING key set on the buckets it touched —
-    switching a live store from shard_sets to seen_table mode and back
-    leaves the sets incomplete; use a fresh store when changing modes.
-    This is ENFORCED, not just documented: a ``track_keys=True`` merge
-    that meets a populated bucket with an empty stored key set raises —
-    unioning new keys onto that empty set would produce a non-empty but
-    INCOMPLETE set that passes probe_shards' emptiness guard and silently
-    answers ``exact_seen=False`` for every pre-switch URL (re-admitting
-    already-crawled pages).
+    Each emitted shard carries its bucket's sorted key-hash set, the old
+    set unioned with the new ``h1`` values.
     """
-    k, m, track = cfg.k, cfg.m_bits, cfg.track_keys
+    k, m = cfg.k, cfg.m_bits
 
     def merge(keys: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
         if keys.empty and dirty_only:
@@ -156,29 +136,15 @@ def merge_into_shards(
         else:
             bucket = int(shard["bucket"].iloc[0])
             bits, n_items = bytearray(shard["bits"].iloc[0]), int(shard["n_items"].iloc[0])
-            key_set = (
-                np.frombuffer(shard["keys"].iloc[0] or b"", dtype=np.uint64)
-                if track
-                else np.array([], dtype=np.uint64)
-            )
-            if track and n_items > 0 and not len(key_set):
-                raise ValueError(
-                    f"track_keys merge onto bucket {bucket} with {n_items} items "
-                    "but NO stored key set — this store was written with "
-                    "track_keys=False (seen_table mode); resuming it in "
-                    "shard_sets mode would build an incomplete key set that "
-                    "silently re-admits pre-switch URLs. Use a fresh store "
-                    "when changing confirm modes."
-                )
+            key_set = np.frombuffer(shard["keys"].iloc[0] or b"", dtype=np.uint64)
         if not keys.empty:
             h1 = keys["h1"].to_numpy()
             pos = _positions(h1, keys["h2"].to_numpy(), k, m)
             _set_bits(bits, pos)
             n_items += len(keys)
-            if track:
-                # sorted exact key set — a pure function of the key SET
-                # (np.union1d sorts + dedups), independent of arrival order
-                key_set = np.union1d(key_set, h1.astype(np.uint64))
+            # sorted exact key set — a pure function of the key SET
+            # (np.union1d sorts + dedups), independent of arrival order
+            key_set = np.union1d(key_set, h1.astype(np.uint64))
         return pd.DataFrame(
             [{"bucket": bucket, "bits": bytes(bits), "n_items": n_items, "m_bits": m,
               "k": k, "keys": key_set.tobytes()}]
@@ -192,59 +158,53 @@ def merge_into_shards(
     )
 
 
-def probe_shards(
-    candidates: DataFrame, shards: DataFrame, cfg: BloomConfig, exact: bool = False
-) -> DataFrame:
-    """candidates (+h1,h2,bucket) → same rows + ``maybe_seen:boolean``
-    (and, with ``exact=True``, ``exact_seen:boolean``).
+def probe_shards(candidates: DataFrame, shards: DataFrame, cfg: BloomConfig) -> DataFrame:
+    """candidates (+h1,h2,bucket) → same rows + ``maybe_seen:boolean`` and
+    ``exact_seen:boolean``.
 
     No false negatives: ``maybe_seen=false`` rows are guaranteed unseen.
     ``exact_seen`` is searchsorted membership in the shard's sorted key-hash
-    set — the zero-extra-shuffle confirm path (module docstring); exact up
-    to xxhash64 collisions.
+    set — the zero-extra-shuffle confirm (module docstring); exact up to
+    xxhash64 collisions. A populated shard without a key set (state written
+    before the sets existed) raises instead of answering.
     """
     k, m = cfg.k, cfg.m_bits
     from pyspark.sql import types as T
 
-    extra = [T.StructField("maybe_seen", T.BooleanType())]
-    if exact:
-        extra.append(T.StructField("exact_seen", T.BooleanType()))
+    extra = [
+        T.StructField("maybe_seen", T.BooleanType()),
+        T.StructField("exact_seen", T.BooleanType()),
+    ]
     out_schema = T.StructType(list(candidates.schema.fields) + extra)
     cols = [f.name for f in candidates.schema.fields]
-    extra_names = [f.name for f in extra]
 
     def probe(cand: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
         if cand.empty:
-            return pd.DataFrame(columns=[*cols, *extra_names])
-        if shard.empty:
-            cand = cand.copy()
-            cand["maybe_seen"] = False
-            if exact:
-                cand["exact_seen"] = False
-            return cand
-        pos = _positions(cand["h1"].to_numpy(), cand["h2"].to_numpy(), k, m)
+            return pd.DataFrame(columns=[*cols, "maybe_seen", "exact_seen"])
         cand = cand.copy()
+        if shard.empty:
+            cand["maybe_seen"] = False
+            cand["exact_seen"] = False
+            return cand
+        key_set = np.frombuffer(shard["keys"].iloc[0] or b"", dtype=np.uint64)
+        # a populated bucket with NO key set was written without key
+        # tracking — answering exact_seen=False for already-crawled URLs
+        # would silently re-admit them; fail loudly instead
+        if int(shard["n_items"].iloc[0]) > 0 and not len(key_set):
+            raise ValueError(
+                "exact probe on a shard with items but no key set — this "
+                "state was written without per-bucket key sets; start a "
+                "fresh store"
+            )
+        pos = _positions(cand["h1"].to_numpy(), cand["h2"].to_numpy(), k, m)
         cand["maybe_seen"] = _test_bits(shard["bits"].iloc[0], pos)
-        if exact:
-            key_set = np.frombuffer(shard["keys"].iloc[0] or b"", dtype=np.uint64)
-            # a populated bucket with NO key set means the state was written
-            # without key tracking (seen_table mode, or a pre-r3 checkpoint)
-            # — answering exact_seen=False for already-crawled URLs would
-            # silently re-admit them; fail loudly instead
-            if int(shard["n_items"].iloc[0]) > 0 and not len(key_set):
-                raise ValueError(
-                    "exact probe on a shard with items but no key set — this "
-                    "state was written without track_keys (seen_table mode or "
-                    "a pre-r3 checkpoint); resume shard_sets mode only from a "
-                    "store written with track_keys=True"
-                )
-            h1 = cand["h1"].to_numpy().astype(np.uint64)
-            if len(key_set):
-                idx = np.searchsorted(key_set, h1)
-                idx[idx >= len(key_set)] = len(key_set) - 1
-                cand["exact_seen"] = key_set[idx] == h1
-            else:
-                cand["exact_seen"] = False
+        h1 = cand["h1"].to_numpy().astype(np.uint64)
+        if len(key_set):
+            idx = np.searchsorted(key_set, h1)
+            idx[idx >= len(key_set)] = len(key_set) - 1
+            cand["exact_seen"] = key_set[idx] == h1
+        else:
+            cand["exact_seen"] = False
         return cand
 
     return (

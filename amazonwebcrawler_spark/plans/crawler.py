@@ -13,7 +13,7 @@ predicate (frontier emptiness + early-stop flags — tiny collects, C5/A3):
         images  |= decode/phash pandas-UDF over fetched bytes    (S12, input_hint)
         expand   = pagination + item/sku/cart fan-out            (J4, L1)
         new      = canonicalize → robots → in-wave dedup →
-                   bloom probe → exact anti-join confirm         (P14, C7, P15/J6)
+                   bloom probe + key-set confirm, one cogroup    (P14, C7, P15/J6)
         frontier = deferred ∪ retries ∪ new;  seen |= new        (C3)
         snapshot commit                                          (C6, S10)
 
@@ -41,6 +41,7 @@ from amazonwebcrawler_spark.functions.rank import (
     rank_encode,
     strip_sponsored_tag,
 )
+from amazonwebcrawler_spark.functions.robots import compile_rules, keep_allowed
 from amazonwebcrawler_spark.functions.urls import canonicalize_url, url_host
 from amazonwebcrawler_spark.operators import bloom
 from amazonwebcrawler_spark.operators.politeness import assign_discovery_seq, select_wave_batch
@@ -100,39 +101,13 @@ class CrawlConfig:
     early_stop: bool = True            # A3/L2: stop paging once first ad+natural
                                        # own hit found — the reference's core loop
                                        # semantics (getRank.py:208-209, 468-469)
-    compact_every: int = 16            # every K waves, rewrite the hot state
-                                       # chains (seen/shards/seed_flags) as a
-                                       # full base so per-wave reads stay
-                                       # O(base + K deltas), not O(all waves)
-    exact_confirm: str = "seen_table"  # 'seen_table': bloom-positive rows
-                                       # confirmed by left_anti vs the exact
-                                       # seen table (md5-exact, the oracle
-                                       # contract) — but the seen side is a
-                                       # full scan per wave at 10^10.
-                                       # 'shard_sets': exact membership from
-                                       # the per-bucket sorted key-hash sets
-                                       # riding the SAME bloom cogroup probe
-                                       # — zero extra shuffles, no seen scan
-                                       # (exact up to xxhash64 h1 collisions,
-                                       # ≈2.7 new URLs dropped at 10^10;
-                                       # identical crawls, tested)
+    compact_every: int = 16            # every K waves, rewrite the state
+                                       # chains the wave reads (shards,
+                                       # seed_flags) as a full base so those
+                                       # reads stay O(base + K deltas), not
+                                       # O(all waves); `seen` is never read
+                                       # by the loop and stays append-only
     bloom: bloom.BloomConfig = field(default_factory=lambda: bloom.BloomConfig(n_buckets=16, m_bits=1 << 17))
-
-    def __post_init__(self) -> None:
-        # a typo'd mode must error, not silently fall through to seen_table
-        if self.exact_confirm not in ("seen_table", "shard_sets"):
-            raise ValueError(
-                "exact_confirm must be 'seen_table' or 'shard_sets', "
-                f"got {self.exact_confirm!r}"
-            )
-        # wire key-set tracking to the confirm mode: seen_table keeps the
-        # lean shard state (no +8 B/URL sorted key sets), shard_sets needs
-        # the sets for its zero-shuffle exact membership probe
-        want_keys = self.exact_confirm == "shard_sets"
-        if self.bloom.track_keys != want_keys:
-            import dataclasses
-
-            self.bloom = dataclasses.replace(self.bloom, track_keys=want_keys)
 
 
 # ---------------------------------------------------------------- fetch UDF
@@ -200,21 +175,59 @@ def _with_host_shard(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
 
 
 def _robots_df(spark: SparkSession) -> DataFrame:
-    rows = [(h, d, cd) for h, (d, cd) in world.ROBOTS.items()]
-    return spark.createDataFrame(rows, "host string, disallow array<string>, crawl_delay double")
+    """``synthetic_world.ROBOTS`` crawl delays, for the dequeue."""
+    rows = [(h, cd) for h, (_disallow, cd) in world.ROBOTS.items()]
+    return spark.createDataFrame(rows, "host string, crawl_delay double")
 
 
-def _robots_filter(df: DataFrame, robots: DataFrame) -> DataFrame:
-    """C7: drop disallowed URLs before enqueue — broadcast join + exists()."""
-    path = F.regexp_replace(F.col("canonical_url"), r"^https?://[^/]*", "")
-    return (
-        df.withColumn("_path", path)
-        .join(F.broadcast(robots.select("host", "disallow")), "host", "left")
-        .filter(
-            F.col("disallow").isNull()
-            | ~F.exists("disallow", lambda d: F.col("_path").startswith(d))
+def _robots_rules(spark: SparkSession) -> DataFrame:
+    """``synthetic_world.ROBOTS`` Disallow prefixes as RFC 9309 rules, one
+    row per host (functions/robots.compile_rules). The dict is already
+    keyed by host, so this is a projection over the Python rows: a wave's
+    robots step broadcasts it without aggregating the constant rules."""
+    rows = [(h, [(p, False) for p in disallow]) for h, (disallow, _cd) in world.ROBOTS.items()]
+    return compile_rules(
+        spark.createDataFrame(rows, "host string, rules array<struct<pattern: string, allow: boolean>>")
+    )
+
+
+def admit_candidates(
+    candidates: DataFrame, rules: DataFrame, shards: DataFrame, cfg: bloom.BloomConfig
+) -> DataFrame:
+    """A wave's admission (C7/P15/J6): canonicalized candidates (with
+    ``host``, ``parent_seq``, ``parent_pos``) → the URLs never seen before,
+    one row each, with ``_indegree`` and the Bloom keys (h1, h2, bucket).
+
+    ``rules`` are robots rules already grouped per host (``_robots_rules``).
+    robots (a broadcast join, candidates never shuffle for it) → in-wave
+    dedup → one cogroup per Bloom bucket that tests the bitset and answers
+    exact membership from the bucket's key set. No step reads the ``seen``
+    table."""
+    candidates = keep_allowed(candidates, rules)
+    # in-wave dedup: first-discovered wins — one min_by aggregate with a
+    # map-side partial (one shuffle) instead of a row_number window. Its
+    # struct-of-strings buffer makes Spark plan it sort-based (a sort on
+    # each side of the exchange). (parent_seq, parent_pos) is unique per
+    # duplicate group member, so the pick is deterministic.
+    rest = [c for c in candidates.columns if c != "canonical_url"]
+    # the duplicate-group size doubles as the page-rank-like priority:
+    # in-wave in-degree (how many parent links discovered this URL) —
+    # rides the same aggregate, zero extra cost (north_star's
+    # "priority queue keyed by (depth, discovery-time, page-rank-like
+    # score)"; mirrored in tests/oracle.py)
+    deduped = (
+        candidates.groupBy("canonical_url")
+        .agg(
+            F.min_by(F.struct(*rest), F.struct("parent_seq", "parent_pos")).alias("_r"),
+            F.count("*").alias("_indegree"),
         )
-        .drop("_path", "disallow")
+        .select("canonical_url", "_indegree", "_r.*")
+    )
+    keyed = bloom.with_bloom_keys(deduped, "canonical_url", cfg)
+    return (
+        bloom.probe_shards(keyed, shards, cfg)
+        .filter(~F.col("exact_seen"))
+        .drop("maybe_seen", "exact_seen")
     )
 
 
@@ -258,7 +271,8 @@ class CrawlEngine:
         self.cfg = cfg
         self.seeds = seeds if seeds is not None else seeds_df(spark)
         self.dims = dims_df(spark)
-        self.robots = _robots_df(spark)
+        self.robots = _robots_df(spark)  # crawl delays, for the dequeue
+        self.robots_rules = _robots_rules(spark)
         self.store = StateStore(spark, cfg.checkpoint_dir)
 
     # ------------------------------------------------------------ init
@@ -295,16 +309,11 @@ class CrawlEngine:
         host_shard) — driver-side, no Spark job. At 10^10 rows this turns
         the per-wave dequeue sort from O(frontier) into O(consumable head);
         the cold rows are rewritten untouched here (snapshot model) and
-        become a pure metadata carry on real Iceberg. Falls back to (full,
-        None) for unpartitioned layouts (old snapshots) or when every depth
-        is needed.
+        become a pure metadata carry on real Iceberg. Returns (full, None)
+        when every depth is needed.
         """
         cfg, store = self.cfg, self.store
-        m = store.latest_manifest()
-        if m is None or "frontier" not in m["tables"]:
-            full = store.load_snapshot("frontier").select([f.name for f in FRONTIER_SCHEMA.fields])
-            return full, None
-        counts = partitioned_counts(m["tables"]["frontier"])
+        counts = partitioned_counts(store.latest_manifest()["tables"]["frontier"])
         if not counts:
             # the dynamic-partition writer emits NO files for an empty
             # frontier (a plain write leaves an empty-schema file) — an
@@ -314,8 +323,6 @@ class CrawlEngine:
         per_shard: dict[int, dict[int, int]] = {}
         for parts, n in counts.items():
             kv = dict(p.split("=", 1) for p in parts)
-            if "depth" not in kv or "host_shard" not in kv:
-                return full, None  # unpartitioned (pre-pruning) layout
             per_shard.setdefault(int(kv["host_shard"]), {})[int(kv["depth"])] = n
         max_depth_present = max(d for ds in per_shard.values() for d in ds)
         bound = 0
@@ -341,7 +348,7 @@ class CrawlEngine:
         if resume and (m := store.latest_manifest()) is not None:
             wave0 = m["wave"] + 1
             next_seq = m["counters"]["next_seq"]
-            n_frontier = m["counters"].get("n_frontier")
+            n_frontier = m["counters"]["n_frontier"]
         else:
             frontier = self._initial_frontier()
             shards = bloom.empty_shards(spark, cfg.bloom)
@@ -353,13 +360,10 @@ class CrawlEngine:
                 -1,
                 {"frontier": frontier, "shards": shards, "seen": frontier.select("canonical_url", "discovery_seq")},
                 {"next_seq": next_seq, "n_frontier": n_frontier},
-                bases={"seen", "shards"},  # the seed commit IS the full history
             )
             wave0 = 0
         frontier, cold = self._load_frontier()
         shards = store.load_shard_state()
-        if n_frontier is None:  # manifest predates the counter
-            n_frontier = frontier.count() + (cold.count() if cold is not None else 0)
 
         last_wave = wave0 - 1
         for wave in range(wave0, cfg.max_waves):
@@ -589,54 +593,14 @@ class CrawlEngine:
         for e in expansions[1:]:
             candidates = candidates.unionByName(e)
 
-        # ---- canonicalize → robots → in-wave dedup → seen dedup (P14/C7/P15/J6)
+        # ---- canonicalize → admission (P14/C7/P15/J6)
         candidates = (
             candidates.withColumn("canonical_url", canonicalize_url(F.col("raw_url")))
             .drop("raw_url")
             .withColumn("kind", _classify_kind(F.col("canonical_url")))
         )
         candidates = _with_host_shard(candidates, cfg)
-        candidates = _robots_filter(candidates, self.robots)
-        # in-wave dedup: first-discovered wins — min_by hash-aggregate (one
-        # shuffle with map-side combine) instead of a row_number window (two
-        # sort phases). (parent_seq, parent_pos) is unique per duplicate
-        # group member, so the pick is deterministic.
-        _c_rest = [c for c in candidates.columns if c != "canonical_url"]
-        # the duplicate-group size doubles as the page-rank-like priority:
-        # in-wave in-degree (how many parent links discovered this URL) —
-        # rides the same hash-aggregate, zero extra cost (north_star's
-        # "priority queue keyed by (depth, discovery-time, page-rank-like
-        # score)"; mirrored in tests/oracle.py)
-        candidates = (
-            candidates.groupBy("canonical_url")
-            .agg(
-                F.min_by(
-                    F.struct(*_c_rest), F.struct("parent_seq", "parent_pos")
-                ).alias("_r"),
-                F.count("*").alias("_indegree"),
-            )
-            .select("canonical_url", "_indegree", "_r.*")
-        )
-
-        keyed = bloom.with_bloom_keys(candidates, "canonical_url", cfg.bloom)
-        if cfg.exact_confirm == "shard_sets":
-            # exact membership answered inside the SAME cogroup task that
-            # probes the bitset — no seen-table scan, no anti-join shuffle
-            probed = bloom.probe_shards(keyed, shards, cfg.bloom, exact=True)
-            pre = probed.filter(~F.col("exact_seen")).drop("maybe_seen", "exact_seen").persist()
-        else:
-            probed = bloom.probe_shards(keyed, shards, cfg.bloom)
-            fresh_sure = probed.filter(~F.col("maybe_seen"))
-            # bloom-positive rows: confirm against the exact seen set (left_anti
-            # touches only this small subset — the scale path, SURVEY.md P15)
-            seen = self.store.load_deltas("seen")
-            maybe = probed.filter(F.col("maybe_seen"))
-            confirmed_new = (
-                maybe.join(seen.select("canonical_url"), "canonical_url", "left_anti")
-                if seen is not None
-                else maybe
-            )
-            pre = fresh_sure.unionByName(confirmed_new).drop("maybe_seen").persist()
+        pre = admit_candidates(candidates, self.robots_rules, shards, cfg.bloom).persist()
 
         # ---- data-defined discovery order (W4): seq from (parent, pos, url)
         # assigned WITHOUT a global single-task window — per-parent rank +
@@ -707,8 +671,8 @@ class CrawlEngine:
         # (in-memory partitions × combos) tiny files
         new_frontier = new_frontier.repartition(cfg.n_shards, *PARTITIONING["frontier"])
 
-        # compaction cadence: every compact_every-th wave rewrites the hot
-        # state chains (seen / shards / seed_flags) as a full base so the
+        # compaction cadence: every compact_every-th wave rewrites the
+        # chains the wave reads (shards / seed_flags) as a full base so the
         # per-wave reads stay O(base + K deltas) instead of O(all waves)
         compacting = bool(cfg.compact_every) and (wave + 1) % cfg.compact_every == 0
 
@@ -766,21 +730,15 @@ class CrawlEngine:
         def delta(df: DataFrame | None) -> DataFrame | None:
             return None if df is None else df.coalesce(n_out)
 
-        # compaction rewrites: on a compacting wave the hot state chains are
-        # written as full-history BASES (marked in the manifest; loaders stop
-        # descending the wave chain at a base)
+        # compaction rewrites: on a compacting wave the read state chains
+        # are written as full-history BASES (marked in the manifest; loaders
+        # stop descending the wave chain at a base). `seen` is the exact
+        # record of admitted URLs, appended every wave and never compacted.
         bases: set[str] = set()
-        seen_df = delta(new_rows.select("canonical_url", "discovery_seq"))
         shards_df = new_shards if n_new > 0 else None  # COW: no dirty buckets → no write
         flags_df = delta(wave_flags if has_serp else None)
         if compacting:
-            bases |= {"seen", "shards"}
-            prior_seen = store.load_deltas("seen")
-            seen_df = (
-                prior_seen.unionByName(new_rows.select("canonical_url", "discovery_seq"))
-                if prior_seen is not None
-                else new_rows.select("canonical_url", "discovery_seq")
-            )
+            bases.add("shards")
             shards_df = new_shards  # full bucket set (dirty_only was off above)
             if cfg.early_stop:
                 bases.add("seed_flags")
@@ -793,7 +751,7 @@ class CrawlEngine:
             {
                 "frontier": new_frontier,
                 "shards": shards_df,
-                "seen": seen_df,
+                "seen": delta(new_rows.select("canonical_url", "discovery_seq")),
                 "results": delta(results if has_serp else None),
                 "quarantine": delta(quarantine if has_serp else None),
                 "seed_flags": flags_df,

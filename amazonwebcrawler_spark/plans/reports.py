@@ -100,6 +100,10 @@ def inventory_report(store: StateStore) -> DataFrame:
 
     The join key is the asin (the probe URL embeds it); equi hash join —
     sort-merge at scale, broadcast-able when the category page is small.
+    Canonicalization strips a ``/dp/`` link's ``keywords=``, so each
+    product page is fetched once and yields one row per ASIN; its detail
+    and cart rows carry the first discovering seed's ``seed_id`` and
+    keyword, not one copy per keyword SERP that listed it.
     """
     details = store.load_deltas("detail_results")
     carts = store.load_deltas("cart_results")
@@ -118,7 +122,11 @@ def inventory_report(store: StateStore) -> DataFrame:
 
 
 def bsr_report(store: StateStore) -> DataFrame:
-    """W5/P13 per SKU page + A4 '|'-rollup ordered by discovery (getRank.py:412-414)."""
+    """W5/P13 per SKU page + A4 '|'-rollup ordered by discovery (getRank.py:412-414).
+
+    Each product page is fetched once (canonicalization strips the
+    ``keywords=`` of ``/dp/`` links), so its detail rows carry the first
+    discovering seed's keyword."""
     details = store.load_deltas("detail_results")
     # keep only SKU children — rows whose parent is itself a detail page
     # (getRank.py:360's per-sku loop), not detail pages reached from a SERP

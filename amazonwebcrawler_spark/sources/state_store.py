@@ -12,7 +12,8 @@ writes::
 
     frontier/        full frontier snapshot, partitioned (depth, host_shard)
     shards/          Bloom shard buckets, copy-on-write (dirty buckets only)
-    seen/            seen-set delta
+    seen/            seen-set delta (append-only log: the exact record of
+                     admitted URLs; the wave loop never reads it)
     seed_flags/      per-seed early-stop flags delta
     results/         parsed SERP result delta
     quarantine/      unknown-layout SERP rows (rank 'Other mode')
@@ -30,10 +31,11 @@ writes::
 versions at waves ≤ ``w``, walking back to and including the most recent
 *base*. A base is a wave whose manifest lists the table in ``bases`` (a
 compaction rewrote its full history) or any write of a full-snapshot table
-(``SNAPSHOT_TABLES``). So the frontier reads one version, ``seen`` /
-``shards`` / ``seed_flags`` read back to their last compaction, and tables
-that never compact read every wave. At 10^10 scale the shard state would
-become manifest-pruned per bucket — same manifest mechanics.
+(``SNAPSHOT_TABLES``). So the frontier reads one version, ``shards`` /
+``seed_flags`` read back to their last compaction, and tables that never
+compact (``seen`` and the other per-wave logs) read every wave. At 10^10
+scale the shard state would become manifest-pruned per bucket — same
+manifest mechanics.
 """
 
 from __future__ import annotations
@@ -218,18 +220,7 @@ class StateStore:
         chain = self._chain("shards", as_of_wave)
         if not chain:
             return None
-
-        def _read(path: str) -> DataFrame:
-            df = self.spark.read.parquet(path)
-            if "keys" not in df.columns:
-                # shard snapshots written before the exact-confirm key sets
-                # existed (pre-r3 stores) lack the column — default it so
-                # old checkpoints stay resumable (seen_table mode never
-                # reads it; shard_sets mode needs a fresh store anyway)
-                df = df.withColumn("keys", F.lit(b""))
-            return df
-
-        dfs = [_read(path).withColumn("_v", F.lit(w)) for w, path in chain]
+        dfs = [self.spark.read.parquet(path).withColumn("_v", F.lit(w)) for w, path in chain]
         u = dfs[0]
         for d in dfs[1:]:
             u = u.unionByName(d)

@@ -708,6 +708,51 @@ def check_no_global_window(spark) -> list[str]:
     return []
 
 
+def check_admission_chain(spark) -> list[str]:
+    """The wave's admission chain (plans/crawler.admit_candidates: the
+    robots step → in-wave min_by dedup → with_bloom_keys → probe_shards)
+    over synthetic candidates must hold exactly ONE
+    FlatMapCoGroupsInPandas — the per-bucket cogroup that tests the bitset
+    and answers exact membership — and join the robots rules by broadcast
+    (BuildRight: the candidate rows stream, never shuffle, for it). A
+    second confirm join (a seen-table anti-join) or a shuffled robots
+    join fails here."""
+    import re
+
+    from amazonwebcrawler_spark.operators import bloom
+    from amazonwebcrawler_spark.plans.crawler import (
+        CrawlConfig, _robots_rules, _with_host_shard, admit_candidates,
+    )
+
+    cfg = CrawlConfig(checkpoint_dir="/tmp/unused_explain")
+    path = F.when(F.col("id") % 4 == 0, F.lit("/gp/private/p")).otherwise(F.lit("/dp/B"))
+    cand = spark.range(0, 1000).select(
+        F.concat(F.lit("https://www.amazon.com"), path, F.col("id").cast("string")).alias("canonical_url"),
+        (F.col("id") % 37).alias("parent_seq"),
+        (F.col("id") % 11).cast("int").alias("parent_pos"),
+    )
+    cand = _with_host_shard(cand, cfg)
+    admitted = admit_candidates(
+        cand, _robots_rules(spark), bloom.empty_shards(spark, cfg.bloom), cfg.bloom
+    )
+    txt = plan_text(admitted)
+    bad = []
+    n_cogroups = len(re.findall(r"^\(\d+\) FlatMapCoGroupsInPandas", txt, re.M))
+    if n_cogroups != 1:
+        bad.append(f"{n_cogroups} FlatMapCoGroupsInPandas (want 1)")
+    joins = re.findall(r"^\(\d+\) (\w*Join)", txt, re.M)
+    if joins != ["BroadcastHashJoin"]:
+        bad.append(f"joins {joins} (want one BroadcastHashJoin)")
+    if "BuildRight" not in txt:
+        bad.append("robots join does not build the (rules) right side")
+    if bad:
+        print("FAIL admission_chain:", bad)
+        print(txt[:2500])
+        return ["admission_chain"]
+    print("ok   admission_chain: one bucket cogroup, robots rules broadcast")
+    return []
+
+
 def check_bucketed_join(spark, sf_dir: str) -> list[str]:
     """Co-located join via bucketing: write both join sides bucketed+sorted
     on the key, then assert the join plan has NO shuffle exchange on either
@@ -828,6 +873,7 @@ def main() -> int:
     qs = entrymod.queries()
     bad = []
     bad += check_no_global_window(spark)
+    bad += check_admission_chain(spark)
     bad += check_no_lambda_capture(spark, sf_dir, qs)
     bad += check_bucketed_join(spark, sf_dir)
     bad += check_pagerank_iteration(spark)

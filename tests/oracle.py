@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from amazonwebcrawler_spark.functions.rank import GRID_LAYOUTS, LIST_LAYOUTS
 from amazonwebcrawler_spark.sources import synthetic_world as world
 
-TRACKING = ("ref", "qid", "ie", "sr", "tag", "psc", "spIA", "rnid")
+TRACKING = ("ref", "qid", "ie", "sr", "tag", "psc", "spIA", "rnid", "keywords")
 
 KNOWN_LAYOUTS = set(GRID_LAYOUTS) | set(LIST_LAYOUTS)
 

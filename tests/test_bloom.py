@@ -36,8 +36,8 @@ def test_no_false_negatives_and_bounded_fp(spark):
 def test_exact_probe_no_false_positives_or_negatives(spark):
     """The per-bucket sorted key-hash sets (exact-confirm fold-in): unlike
     the bitset's maybe_seen, exact_seen must be both FN-free AND FP-free on
-    distinct-hash URL sets — that's what lets the crawler skip the
-    seen-table anti-join entirely in shard_sets mode."""
+    distinct-hash URL sets — that's what lets the crawler admit new URLs
+    without any seen-table anti-join."""
     cfg = bloom.BloomConfig(n_buckets=8, m_bits=1 << 16, k=5)
     seen_urls = spark.createDataFrame(
         [(f"https://www.amazon.com/dp/B{i:07d}",) for i in range(2000)], "canonical_url string"
@@ -45,14 +45,14 @@ def test_exact_probe_no_false_positives_or_negatives(spark):
     keyed = bloom.with_bloom_keys(seen_urls, "canonical_url", cfg)
     shards = bloom.merge_into_shards(keyed, bloom.empty_shards(spark, cfg), cfg)
 
-    probed = bloom.probe_shards(keyed, shards, cfg, exact=True)
+    probed = bloom.probe_shards(keyed, shards, cfg)
     assert probed.filter(~F.col("exact_seen")).count() == 0
 
     unseen = spark.createDataFrame(
         [(f"https://www.amazon.com/gp/other/{i}",) for i in range(2000)], "canonical_url string"
     )
     probed_unseen = bloom.probe_shards(
-        bloom.with_bloom_keys(unseen, "canonical_url", cfg), shards, cfg, exact=True
+        bloom.with_bloom_keys(unseen, "canonical_url", cfg), shards, cfg
     )
     assert probed_unseen.filter(F.col("exact_seen")).count() == 0
     # exact_seen implies maybe_seen (the key set is a subset of what set bits)
@@ -86,14 +86,12 @@ def test_for_capacity_byte_aligned():
 
 
 def test_exact_probe_rejects_keyless_state(spark):
-    """Probing exact membership against state written WITHOUT key tracking
-    (seen_table mode / pre-r3 checkpoint) must raise, not silently answer
-    exact_seen=False for already-crawled URLs."""
+    """Probing against shard state whose populated buckets carry no key
+    set (state written before the per-bucket sets existed) must raise,
+    not silently answer exact_seen=False for already-crawled URLs."""
     import pytest
 
-    from amazonwebcrawler_spark.operators import bloom
-
-    cfg = bloom.BloomConfig(n_buckets=4, m_bits=1 << 14, track_keys=False)
+    cfg = bloom.BloomConfig(n_buckets=4, m_bits=1 << 14)
     urls = spark.range(0, 200).select(
         F.concat(F.lit("https://www.amazon.com/dp/K"), F.col("id").cast("string")).alias(
             "canonical_url"
@@ -101,43 +99,9 @@ def test_exact_probe_rejects_keyless_state(spark):
     )
     keyed = bloom.with_bloom_keys(urls, "canonical_url", cfg)
     shards = bloom.merge_into_shards(keyed, bloom.empty_shards(spark, cfg), cfg)
+    keyless = shards.withColumn("keys", F.lit(bytearray()))
     with pytest.raises(Exception, match="no key set"):
-        bloom.probe_shards(keyed, shards, cfg, exact=True).collect()
-
-
-def test_track_keys_merge_rejects_keyless_state(spark):
-    """ADVICE r4: resuming a store written with track_keys=False under
-    shard_sets mode must fail AT MERGE TIME — unioning new keys onto the
-    empty stored set would build a non-empty but incomplete key set that
-    passes the probe-side emptiness guard and silently re-admits every
-    pre-switch URL."""
-    import pytest
-
-    from amazonwebcrawler_spark.operators import bloom
-
-    off = bloom.BloomConfig(n_buckets=4, m_bits=1 << 14, track_keys=False)
-    on = bloom.BloomConfig(n_buckets=4, m_bits=1 << 14, track_keys=True)
-    batch1 = spark.createDataFrame([(f"a{i}",) for i in range(64)], "canonical_url string")
-    batch2 = spark.createDataFrame([(f"b{i}",) for i in range(64)], "canonical_url string")
-    keyless = bloom.merge_into_shards(
-        bloom.with_bloom_keys(batch1, "canonical_url", off), bloom.empty_shards(spark, off), off
-    ).localCheckpoint()
-    with pytest.raises(Exception, match="track_keys"):
-        bloom.merge_into_shards(
-            bloom.with_bloom_keys(batch2, "canonical_url", on), keyless, on
-        ).collect()
-    # a store written WITH tracking keeps accepting tracked merges
-    tracked = bloom.merge_into_shards(
-        bloom.with_bloom_keys(batch1, "canonical_url", on), bloom.empty_shards(spark, on), on
-    )
-    merged = bloom.merge_into_shards(
-        bloom.with_bloom_keys(batch2, "canonical_url", on), tracked, on
-    )
-    probed = bloom.probe_shards(
-        bloom.with_bloom_keys(batch1.unionByName(batch2), "canonical_url", on), merged, on,
-        exact=True,
-    )
-    assert probed.filter(~F.col("exact_seen")).count() == 0
+        bloom.probe_shards(keyed, keyless, cfg).collect()
 
 
 class TestBloomPlan:

@@ -206,10 +206,10 @@ class TestResume:
 
 class TestCompaction:
     def test_compaction_preserves_state_and_resume(self, spark):
-        """Every compact_every-th wave rewrites seen/shards/seed_flags as a
-        full base (manifest 'bases'); crawl results, the seen set, and exact
-        resume across a compaction boundary must be identical to the
-        uncompacted run."""
+        """Every compact_every-th wave rewrites shards/seed_flags as a full
+        base (manifest 'bases'; `seen` is an append-only log and never
+        compacts); crawl results, the seen set, and exact resume across a
+        compaction boundary must be identical to the uncompacted run."""
         a, b = "/tmp/crawl_nocompact", "/tmp/crawl_compact"
         for t in (a, b):
             shutil.rmtree(t, ignore_errors=True)
@@ -223,9 +223,10 @@ class TestCompaction:
         # a base was actually written
         base_waves = [
             w for w in comp.committed_waves()
-            if "seen" in comp._manifest(w).get("bases", ()) and w >= 0
+            if "shards" in comp._manifest(w).get("bases", ()) and w >= 0
         ]
         assert base_waves, "no compaction base written"
+        assert not any("seen" in comp._manifest(w).get("bases", ()) for w in comp.committed_waves())
         seen_a = {r.canonical_url for r in plain.load_deltas("seen").collect()}
         seen_b = {r.canonical_url for r in comp.load_deltas("seen").collect()}
         assert seen_a == seen_b
@@ -293,6 +294,74 @@ class TestCompaction:
         assert sa == sb
 
 
+class TestAdmission:
+    def test_loop_never_reads_seen(self, spark, monkeypatch):
+        """The seen confirm is answered inside the Bloom cogroup, and `seen`
+        never compacts: a multi-wave crawl that crosses compaction waves
+        must never load the `seen` table."""
+        from amazonwebcrawler_spark.sources.state_store import StateStore
+
+        tmp = "/tmp/crawl_no_seen_read"
+        shutil.rmtree(tmp, ignore_errors=True)
+        loaded = []
+        load = StateStore.load_deltas
+
+        def spy(self, name, as_of_wave=None):
+            loaded.append(name)
+            return load(self, name, as_of_wave)
+
+        monkeypatch.setattr(StateStore, "load_deltas", spy)
+        store = CrawlEngine(
+            spark, _cfg(tmp, max_waves=4, compact_every=2), seeds=seeds_df(spark, SEED_ROWS)
+        ).run()["store"]
+        assert any("shards" in store._manifest(w).get("bases", ()) for w in store.committed_waves())
+        assert loaded, "the spy saw no loads: the check is vacuous"
+        assert "seen" not in loaded
+
+    def test_product_pages_fetched_once(self, spark):
+        """Canonicalization strips a /dp/ link's keywords=, so a popular
+        product listed on several keyword SERPs is one URL: the crawl
+        (checked against the oracle) fetches each /dp/<ASIN> at most once
+        with status 200, and inventory_report has one row per ASIN."""
+        import tests.oracle as oracle_mod
+
+        tmp = "/tmp/crawl_one_fetch_per_asin"
+        shutil.rmtree(tmp, ignore_errors=True)
+        rows = [
+            (i, "keyword", kw, world.serp_url(kw, 1), "yogamat", 2)
+            for i, kw in enumerate(
+                ["yoga mat", "tpe yoga mat", "cork yoga mat", "travel mat", "thick gym mat",
+                 "eco yoga block", "pilates mat", "foldable mat"]
+            )
+        ]
+        cfg = _cfg(tmp, max_waves=4, tokens_per_shard=64, early_stop=False)
+        store = CrawlEngine(spark, cfg, seeds=seeds_df(spark, rows)).run()["store"]
+        o = oracle_mod.crawl_oracle(
+            rows, n_shards=cfg.n_shards, salt_bits=cfg.salt_bits,
+            tokens_per_shard=cfg.tokens_per_shard, max_waves=cfg.max_waves, early_stop=False,
+        )
+        lineage = store.load_deltas("lineage").collect()
+        assert sorted((r.wave, r.canonical_url) for r in lineage) == sorted(o.fetch_order)
+        assert {r.canonical_url for r in store.load_deltas("seen").collect()} == o.seen
+
+        def asin(url):
+            return url.rsplit("/dp/", 1)[-1].split("/")[0].split("?")[0]
+
+        ok_detail = [
+            asin(r.canonical_url) for r in lineage
+            if r.status == 200 and world.classify_url(r.canonical_url) == "detail"
+        ]
+        # non-vacuous: some product is listed under more than one keyword
+        listed: dict[str, set[str]] = {}
+        for _i, _k, kw, _u, _p, _d in rows:
+            for it in world.serp_page(kw, 1, "yogamat")["items"]:
+                listed.setdefault(asin(it["href"]), set()).add(kw)
+        assert any(len(kws) > 1 and a in ok_detail for a, kws in listed.items())
+        assert len(ok_detail) == len(set(ok_detail))
+        inv = [r.asin for r in reports.inventory_report(store).collect()]
+        assert inv and len(inv) == len(set(inv))
+
+
 class TestPrunedDequeue:
     def test_pruned_crawl_matches_oracle(self, spark):
         """The depth-pruned dequeue is a pure read optimization: with a
@@ -330,39 +399,18 @@ class TestPrunedDequeue:
         assert sorted((r.wave, r.canonical_url) for r in lineage) == sorted(o.fetch_order)
         assert {r.canonical_url for r in store.load_deltas("seen").collect()} == o.seen
 
-    def test_exact_confirm_modes_identical(self, spark):
-        """'shard_sets' (exact membership riding the bloom cogroup — no
-        seen-table scan, no anti-join) must produce the SAME crawl as the
-        default seen-table left_anti: seen set, discovery sequences, and
-        per-wave lineage ordering all byte-identical."""
-        res = {}
-        for mode in ("seen_table", "shard_sets"):
-            tmp = f"/tmp/crawl_confirm_{mode}"
-            shutil.rmtree(tmp, ignore_errors=True)
-            cfg = _cfg(tmp, tokens_per_shard=4, exact_confirm=mode)
-            st = CrawlEngine(spark, cfg, seeds=seeds_df(spark, SEED_ROWS)).run()["store"]
-            res[mode] = (
-                sorted((r.canonical_url, r.discovery_seq) for r in st.load_deltas("seen").collect()),
-                sorted((r.wave, r.canonical_url) for r in st.load_deltas("lineage").collect()),
-            )
-        assert res["seen_table"] == res["shard_sets"]
-        assert len(res["seen_table"][0]) > 50
-
     def test_shard_sets_resume_exact(self, spark):
-        """Exact resume must hold in shard_sets mode too: the per-bucket
-        key-hash sets reconstruct from the COW chain (latest version per
-        bucket) and the resumed crawl equals the uninterrupted one."""
+        """Exact resume of the seen confirm: the per-bucket key-hash sets
+        reconstruct from the COW chain (latest version per bucket) and the
+        resumed crawl — seen set with discovery sequences, and per-wave
+        lineage — equals the uninterrupted one."""
         a, b = "/tmp/crawl_ss_full", "/tmp/crawl_ss_resume"
         for t in (a, b):
             shutil.rmtree(t, ignore_errors=True)
         seeds = seeds_df(spark, SEED_ROWS)
-        full = CrawlEngine(
-            spark, _cfg(a, max_waves=10, exact_confirm="shard_sets"), seeds=seeds
-        ).run()["store"]
-        CrawlEngine(spark, _cfg(b, max_waves=2, exact_confirm="shard_sets"), seeds=seeds).run()
-        resumed = CrawlEngine(
-            spark, _cfg(b, max_waves=10, exact_confirm="shard_sets"), seeds=seeds
-        ).run(resume=True)["store"]
+        full = CrawlEngine(spark, _cfg(a, max_waves=10), seeds=seeds).run()["store"]
+        CrawlEngine(spark, _cfg(b, max_waves=2), seeds=seeds).run()
+        resumed = CrawlEngine(spark, _cfg(b, max_waves=10), seeds=seeds).run(resume=True)["store"]
         seen_a = sorted((r.canonical_url, r.discovery_seq) for r in full.load_deltas("seen").collect())
         seen_b = sorted((r.canonical_url, r.discovery_seq) for r in resumed.load_deltas("seen").collect())
         assert seen_a == seen_b
@@ -371,16 +419,16 @@ class TestPrunedDequeue:
         assert ord_a == ord_b
 
     def test_shard_sets_collision_failure_mode(self, spark, monkeypatch):
-        """Pin the documented shard_sets caveat (operators/bloom.py module
+        """Pin the documented seen-confirm caveat (operators/bloom.py module
         docstring): exactness holds only up to xxhash64 collisions on h1 —
         a colliding NEW url is wrongly reported exact_seen and dropped.
         Force collisions by truncating h1 to 6 bits (64 slots << #URLs) and
-        crawl the same seeds in both modes to exhaustion. The md5-exact
-        seen_table crawl is the oracle: it is unaffected by the truncation
-        (its confirm anti-joins on canonical_url), and the divergence it
-        detects must be exactly the documented failure mode — shard_sets'
-        seen set is a strict subset, and every URL it dropped collides with
-        an earlier-admitted key in the truncated hash space."""
+        crawl to exhaustion. The pure-Python crawl oracle keeps an exact
+        seen set, so it is the reference: the engine's seen set must be a
+        strict subset of it, and every URL it dropped must collide with an
+        admitted key in the truncated hash space — the documented failure
+        mode and nothing else."""
+        import tests.oracle as oracle_mod
         from amazonwebcrawler_spark.operators import bloom as bloom_mod
 
         def truncated_keys(df, url_col, cfg):
@@ -395,24 +443,24 @@ class TestPrunedDequeue:
             )
 
         monkeypatch.setattr(bloom_mod, "with_bloom_keys", truncated_keys)
-        seen = {}
-        for mode in ("seen_table", "shard_sets"):
-            tmp = f"/tmp/crawl_collision_{mode}"
-            shutil.rmtree(tmp, ignore_errors=True)
-            cfg = _cfg(tmp, max_waves=16, early_stop=False, exact_confirm=mode)
-            st = CrawlEngine(spark, cfg, seeds=seeds_df(spark, SEED_ROWS)).run()["store"]
-            seen[mode] = {r.canonical_url for r in st.load_deltas("seen").collect()}
-            shutil.rmtree(tmp, ignore_errors=True)
+        tmp = "/tmp/crawl_collision"
+        shutil.rmtree(tmp, ignore_errors=True)
+        cfg = _cfg(tmp, max_waves=16, early_stop=False)
+        st = CrawlEngine(spark, cfg, seeds=seeds_df(spark, SEED_ROWS)).run()["store"]
+        ss = {r.canonical_url for r in st.load_deltas("seen").collect()}
+        shutil.rmtree(tmp, ignore_errors=True)
+        oracle = oracle_mod.crawl_oracle(
+            SEED_ROWS, n_shards=cfg.n_shards, salt_bits=cfg.salt_bits,
+            tokens_per_shard=cfg.tokens_per_shard, max_waves=cfg.max_waves,
+            early_stop=False,
+        ).seen
 
-        oracle, ss = seen["seen_table"], seen["shard_sets"]
-        # the oracle crawl is a full crawl (same URL universe as an
-        # unpatched run would admit — md5-exact confirm ignores h1)
         assert len(oracle) > 100
-        # documented failure mode, detected by the equivalence oracle:
-        assert ss < oracle, "expected shard_sets to drop colliding URLs"
+        # documented failure mode, detected against the exact oracle:
+        assert ss < oracle, "expected the truncated-key crawl to drop colliding URLs"
         missing = oracle - ss
         # ...and nothing else: every dropped URL collides (truncated-h1
-        # equality) with a URL that shard_sets DID admit to the seen set
+        # equality) with a URL the engine DID admit to the seen set
         tv = {
             r.u: r.v
             for r in spark.createDataFrame(
@@ -577,22 +625,6 @@ class TestReports:
         assert ranks.count() == 1  # one keyword seed
 
 
-class TestConfigValidation:
-    def test_exact_confirm_typo_raises(self):
-        """A misspelled confirm mode must error at construction, not fall
-        through silently to the seen_table branch."""
-        with pytest.raises(ValueError, match="exact_confirm"):
-            CrawlConfig(checkpoint_dir="/tmp/unused_cfg", exact_confirm="shard_set")
-
-    def test_track_keys_wired_to_confirm_mode(self):
-        """seen_table keeps the lean shard state (no key sets); shard_sets
-        turns the sets on — regardless of the BloomConfig passed in."""
-        a = CrawlConfig(checkpoint_dir="/tmp/unused_cfg")
-        assert a.bloom.track_keys is False
-        b = CrawlConfig(checkpoint_dir="/tmp/unused_cfg", exact_confirm="shard_sets")
-        assert b.bloom.track_keys is True
-
-
 class TestExpiration:
     """Iceberg-style snapshot expiration (state_store.expire_snapshots):
     superseded frontier rewrites and pre-base hot-state deltas are
@@ -646,7 +678,7 @@ class TestExpiration:
         assert not set(retained_frontiers) & deleted_paths
 
         # live delta tables (no compaction base) lose NOTHING
-        assert not {"results", "images", "metrics", "lineage"} & deleted_tables
+        assert not {"seen", "results", "images", "metrics", "lineage"} & deleted_tables
 
     def test_expired_time_travel_raises(self, spark):
         store = self._run(spark, "/tmp/crawl_expire_tt", max_waves=6)
@@ -738,8 +770,11 @@ class TestExpiration:
         assert before[retained[-1]]["frontier"], "frontier emptied: reads are vacuous"
         out = store.expire_snapshots(keep_last=2)
         assert out["retained_waves"] == retained
-        # compaction bases inside the window make pre-base versions garbage
-        assert {t for t, _ in out["deleted"]} >= {"frontier", "seen", "shards"}
+        # compaction bases inside the window make pre-base versions garbage;
+        # the append-only seen log keeps every version
+        deleted = {t for t, _ in out["deleted"]}
+        assert deleted >= {"frontier", "shards"}
+        assert "seen" not in deleted
         for w in retained:
             assert read_all(w) == before[w], f"as_of_wave={w} changed by expiration"
 
