@@ -1067,10 +1067,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         one-wave crawl with max_retries=0 over 500 keyword seeds, so every
         deterministic transient failure (synthetic_world ~3% schedule,
         replacing the reference's unbounded recursive retry getRank.py:87-88)
-        lands in the dead_letter state table. The fetched set is exactly the
-        seed SERP URLs, so the DuckDB twin reproduces the md5-based failure
-        schedule over the same URLs — the last equivalence-only crawl-loop
-        operator becomes value-checked."""
+        is a dead letter (``CrawlEngine.dead_letters``: the lineage rows
+        that failed at the last allowed attempt). The fetched set is
+        exactly the seed SERP URLs, so the DuckDB twin reproduces the
+        md5-based failure schedule over the same URLs — the last
+        equivalence-only crawl-loop operator becomes value-checked."""
         import shutil
 
         from amazonwebcrawler_spark.operators import bloom as bloom_ops
@@ -1092,7 +1093,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         eng = CrawlEngine(spark, cfg, seeds=seeds_df(spark, rows))
         eng.run()
-        dead = eng.store.load_deltas("dead_letter")
+        dead = eng.dead_letters()
         return dead.select("seed_id", "canonical_url", F.col("attempt").cast("int").alias("attempt"))
 
     # ----------------------------------------------------- seen confirm (P15+/C6)

@@ -315,18 +315,6 @@ def apply_param_policy(df, policy, url_col: str = "url"):
     )
 
 
-def host_shard(host: Column, canonical_url: Column, n_shards: int = 32, salt_bits: int = 4) -> Column:
-    """Skew-aware host shard (SURVEY.md §4 'skew handling').
-
-    All of amazon.com is one logical host — hashing by host alone makes one
-    hot partition. Salting spreads each host over ``2**salt_bits`` shards
-    (deterministically, by URL), and the politeness token bucket divides a
-    host's budget by the same factor, so rate limits still hold globally.
-    """
-    salt = F.pmod(F.xxhash64(canonical_url), F.lit(2**salt_bits))
-    return F.pmod(F.xxhash64(host, salt), F.lit(n_shards)).cast("int")
-
-
 def _lower_scheme(h: Column) -> Column:
     # 'HTTPS://Host/x' → 'https://Host/x' (host case is canonicalize's
     # job; the scheme must be lowercase for its anchored regexes)

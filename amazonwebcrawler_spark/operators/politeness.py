@@ -41,49 +41,40 @@ def priority_sort_cols() -> list:
             F.col("discovery_seq").asc(), F.col("canonical_url").asc()]
 
 
-def select_wave_batch(
-    frontier: DataFrame,
-    tokens_per_shard: int,
-    robots: DataFrame | None = None,
-    return_ranked: bool = False,
-):
-    """Split the frontier into (this wave's batch, deferred remainder).
+def select_wave_batch(frontier: DataFrame, tokens_per_shard: int, robots: DataFrame):
+    """Split the frontier into (this wave's batch, deferred remainder,
+    ranked frontier).
 
     One shuffle on ``host_shard``; the window ranks each shard's queue and
     the token budget cuts it. Deferred rows keep their priority and win the
     next wave — exactly a token bucket refilled once per wave.
 
-    When ``robots`` (host, crawl_delay seconds) is given, a host with
-    ``crawl_delay > 1`` gets its per-shard budget divided by the delay
-    (floor, min 1) — the wave cadence stands in for wall-clock seconds, the
-    same stand-in the reference makes with its fixed sleeps
-    (getStockNumber.py:122).
+    ``robots`` is (host, crawl_delay seconds): a host with ``crawl_delay >
+    1`` gets its per-shard budget divided by the delay (floor, min 1) — the
+    wave cadence stands in for wall-clock seconds, the same stand-in the
+    reference makes with its fixed sleeps (getStockNumber.py:122). Hosts
+    absent from ``robots`` keep the full budget.
+
+    Both the batch and the deferred rows derive from the one ranking
+    window, so ``ranked`` is persisted — without the cache the sort+window
+    runs twice per wave (under the fetch job and under the next-frontier
+    job). The caller owns its unpersist.
     """
-    if robots is not None:
-        tokens = F.coalesce(
-            F.when(
-                F.col("crawl_delay") > 1,
-                F.greatest(F.floor(F.lit(tokens_per_shard) / F.col("crawl_delay")), F.lit(1)),
-            ),
-            F.lit(tokens_per_shard),
-        )
-        frontier = frontier.join(
-            F.broadcast(robots.select("host", "crawl_delay")), "host", "left"
-        ).withColumn("_tokens", tokens).drop("crawl_delay")
-    else:
-        frontier = frontier.withColumn("_tokens", F.lit(tokens_per_shard))
+    tokens = F.coalesce(
+        F.when(
+            F.col("crawl_delay") > 1,
+            F.greatest(F.floor(F.lit(tokens_per_shard) / F.col("crawl_delay")), F.lit(1)),
+        ),
+        F.lit(tokens_per_shard),
+    )
+    frontier = frontier.join(
+        F.broadcast(robots.select("host", "crawl_delay")), "host", "left"
+    ).withColumn("_tokens", tokens).drop("crawl_delay")
     w = Window.partitionBy("host_shard").orderBy(*priority_sort_cols())
-    ranked = frontier.withColumn("_tb_rank", F.row_number().over(w))
-    if return_ranked:
-        # BOTH outputs derive from the same ranking window — without a cache
-        # the sort+window runs twice per wave (once under the fetch job, once
-        # under the next-frontier job). The caller owns the unpersist.
-        ranked = ranked.persist()
+    ranked = frontier.withColumn("_tb_rank", F.row_number().over(w)).persist()
     batch = ranked.filter(F.col("_tb_rank") <= F.col("_tokens")).drop("_tb_rank", "_tokens")
     deferred = ranked.filter(F.col("_tb_rank") > F.col("_tokens")).drop("_tb_rank", "_tokens")
-    if return_ranked:
-        return batch, deferred, ranked
-    return batch, deferred
+    return batch, deferred, ranked
 
 
 #: the enqueue-time total order for new URLs (BFS order the reference's

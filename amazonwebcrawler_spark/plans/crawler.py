@@ -15,6 +15,7 @@ predicate (frontier emptiness + early-stop flags — tiny collects, C5/A3):
         new      = canonicalize → robots → in-wave dedup →
                    bloom probe + key-set confirm, one cogroup    (P14, C7, P15/J6)
         frontier = deferred ∪ retries ∪ new;  seen |= new        (C3)
+        lineage  = one row per fetch: status, sizes, page shape  (A1/A6, C3)
         snapshot commit                                          (C6, S10)
 
 Determinism: wave contents are a pure function of data — the frontier total
@@ -101,12 +102,12 @@ class CrawlConfig:
     early_stop: bool = True            # A3/L2: stop paging once first ad+natural
                                        # own hit found — the reference's core loop
                                        # semantics (getRank.py:208-209, 468-469)
-    compact_every: int = 16            # every K waves, rewrite the state
-                                       # chains the wave reads (shards,
-                                       # seed_flags) as a full base so those
+    compact_every: int = 16            # every K waves, rewrite the Bloom
+                                       # shard state as a full base so its
                                        # reads stay O(base + K deltas), not
-                                       # O(all waves); `seen` is never read
-                                       # by the loop and stays append-only
+                                       # O(all waves); the frontier and
+                                       # seed_flags are snapshots, and `seen`
+                                       # is never read by the loop
     bloom: bloom.BloomConfig = field(default_factory=lambda: bloom.BloomConfig(n_buckets=16, m_bits=1 << 17))
 
 
@@ -253,6 +254,53 @@ def classify_serp_items(items: DataFrame) -> DataFrame:
     )
 
 
+def explode_serp_items(pages: DataFrame, *keep: str) -> DataFrame:
+    """One row per SERP item of parsed pages (``p`` parsed with
+    ``SERP_JSON``): the ``keep`` page columns, the page's ``page``,
+    ``layout`` and ``has_next``, and the item's ``pos``, ``title`` (P2: a
+    missing title node reads 'Amazon recommendation'), ``href`` and
+    ``item_is_sponsored``. A page with no items yields no rows."""
+    return pages.select(
+        *keep,
+        F.col("p.page").alias("page"), F.col("p.layout").alias("layout"),
+        F.col("p.has_next").alias("has_next"),
+        F.explode("p.items").alias("item"),
+    ).select(
+        *keep, "page", "layout", "has_next",
+        F.col("item.pos").alias("pos"),
+        F.coalesce(F.col("item.title"), F.lit("Amazon recommendation")).alias("title"),
+        F.col("item.href").alias("href"),
+        F.col("item.is_sponsored").alias("item_is_sponsored"),
+    )
+
+
+def fetch_lineage(fetched: DataFrame, wave: int) -> DataFrame:
+    """The wave's one per-fetch record (north_rule lineage + metrics; A1,
+    A6, C3): one row per fetch attempt with its partition, status, attempt
+    and payload sizes, plus ``n_items`` and ``has_next`` for status-200
+    SERP pages. The reference's >45-row alarm (P8, getRank.py:165-167) is
+    ``n_items > 45`` and its empty-page message (P9, getRank.py:211)
+    ``n_items == 0``; per-shard fetch metrics are a ``groupBy("wave",
+    "host_shard")`` over these rows and dead letters their exhausted
+    failures (``CrawlEngine.dead_letters``). A projection over the fetch:
+    no join, no exchange (scripts/explain_plans.py check_fetch_lineage)."""
+    serp_ok = (F.col("kind") == "serp") & (F.col("status") == 200)
+    shape = F.from_json("content", "has_next boolean, items array<struct<pos:int>>")
+    return fetched.select(
+        F.lit(wave).alias("wave"),
+        F.spark_partition_id().alias("partition_id"),
+        "seed_id", "kind", "canonical_url", "parent_seq", "discovery_seq", "host_shard",
+        "status", "attempt",
+        F.length("content").alias("content_len"),
+        F.length("image_bytes").alias("image_len"),
+        F.when(serp_ok, shape).alias("_p"),
+    ).select(
+        "*",
+        F.when(F.col("_p").isNotNull(), F.size("_p.items")).alias("n_items"),
+        F.col("_p.has_next").alias("has_next"),
+    ).drop("_p")
+
+
 def _classify_kind(url: F.Column) -> F.Column:
     return (
         F.when(url.startswith(f"{world.HOST}/s?"), "serp")
@@ -375,6 +423,26 @@ class CrawlEngine:
             last_wave = wave
         return {"last_wave": last_wave, "store": store}
 
+    # ---------------------------------------------------- retries (C3)
+    def _retries(self, fetched: DataFrame) -> DataFrame:
+        """Transient failures (status -1) below ``max_retries`` re-enter the
+        frontier with ``attempt + 1``; the rest are dead letters."""
+        return (
+            fetched.filter((F.col("status") == -1) & (F.col("attempt") < self.cfg.max_retries))
+            .withColumn("attempt", F.col("attempt") + 1)
+            .select([f.name for f in FRONTIER_SCHEMA.fields])
+        )
+
+    def dead_letters(self, as_of_wave: int | None = None) -> DataFrame | None:
+        """Fetches that exhausted their retries: the ``lineage`` rows that
+        failed (status -1) at an attempt ``_retries`` no longer re-enqueues."""
+        lineage = self.store.load_deltas("lineage", as_of_wave)
+        if lineage is None:
+            return None
+        return lineage.filter(
+            (F.col("status") == -1) & (F.col("attempt") >= self.cfg.max_retries)
+        ).select("canonical_url", "seed_id", "attempt")
+
     # ------------------------------------------------------------ one wave
     def _run_wave(
         self,
@@ -386,12 +454,12 @@ class CrawlEngine:
     ):
         import time as _time
 
-        t_wave0 = _time.time()
+        # with the manifest's started_at (stamped before the commit's
+        # writes) this times the wave's build: dequeue → commit start
+        wave_started_at = _time.time()
         cfg, spark, store = self.cfg, self.spark, self.store
 
-        batch, deferred, _ranked = select_wave_batch(
-            frontier, cfg.tokens_per_shard, self.robots, return_ranked=True
-        )
+        batch, deferred, ranked = select_wave_batch(frontier, cfg.tokens_per_shard, self.robots)
 
         # ---- fetch (S4-S6): one mapInPandas over the batch, partitioned by shard
         fetched_schema = T.StructType(
@@ -415,15 +483,7 @@ class CrawlEngine:
             else batch.repartition(cfg.n_shards, "host_shard")
         )
         fetched = fetch_src.mapInPandas(_fetch_batches, fetched_schema).persist()
-
-        # ---- retries / dead letters (C3)
-        failed = fetched.filter(F.col("status") == -1)
-        retries = (
-            failed.filter(F.col("attempt") < cfg.max_retries)
-            .withColumn("attempt", F.col("attempt") + 1)
-            .select([f.name for f in FRONTIER_SCHEMA.fields])
-        )
-        dead = failed.filter(F.col("attempt") >= cfg.max_retries)
+        retries = self._retries(fetched)
         ok = fetched.filter(F.col("status") == 200)
 
         # ---- parse per kind (P1-P13): from_json, fully declarative
@@ -432,21 +492,9 @@ class CrawlEngine:
         category = ok.filter(F.col("kind") == "category").withColumn("p", F.from_json("content", CATEGORY_JSON))
         cart = ok.filter(F.col("kind") == "cart").withColumn("p", F.from_json("content", CART_JSON))
 
-        serp_items = (
-            serp.select(
-                "seed_id", "keyword", "canonical_url", "discovery_seq", "host_shard",
-                F.col("p.page").alias("page"), F.col("p.layout").alias("layout"),
-                F.col("p.has_next").alias("has_next"), "product_type", "max_depth", "depth",
-                F.posexplode_outer("p.items").alias("_i", "item"),
-            )
-            .select(
-                "*",
-                F.col("item.pos").alias("pos"),
-                F.coalesce(F.col("item.title"), F.lit("Amazon recommendation")).alias("title"),  # P2
-                F.col("item.href").alias("href"),
-                F.col("item.is_sponsored").alias("item_is_sponsored"),
-            )
-            .drop("_i")
+        serp_items = explode_serp_items(
+            serp, "seed_id", "keyword", "canonical_url", "discovery_seq", "host_shard",
+            "product_type", "max_depth", "depth",
         )
 
         # ---- classify own products + rank encode
@@ -489,13 +537,14 @@ class CrawlEngine:
         # ---- expansion (J4/L1): pagination + items + skus + cart probes
         expansions = []
         nxt = serp.filter(F.col("p.has_next") & (F.col("p.page") < F.col("max_depth")))
-        wave_flags = None
+        seed_flags = None
         if cfg.early_stop:
             # A3/L2: a seed with ≥1 sponsored and ≥1 natural own hit stops
             # paging — the reference's core loop exits once both are found
-            # (getRank.py:208-209, 468-469). Per-seed cumulative flags live
-            # in the tiny seed_flags delta (≤1 row per seed per wave), so
-            # the check never rescans the growing results history.
+            # (getRank.py:208-209, 468-469). Per-seed cumulative flags are
+            # the tiny seed_flags snapshot (≤1 row per seed): this wave's
+            # hits fold into the previous snapshot, so the check never
+            # rescans the growing results history.
             wave_flags = (
                 results.filter(F.col("is_own"))
                 .groupBy("seed_id")
@@ -504,15 +553,14 @@ class CrawlEngine:
                     F.max((~F.col("is_ad")).cast("int")).alias("has_nat"),
                 )
             )
-            prior_flags = store.load_deltas("seed_flags")
-            all_flags = (
-                wave_flags if prior_flags is None else prior_flags.unionByName(wave_flags)
+            prior_flags = store.load_snapshot("seed_flags")
+            seed_flags = (
+                (wave_flags if prior_flags is None else prior_flags.unionByName(wave_flags))
+                .groupBy("seed_id")
+                .agg(F.max("has_ad").alias("has_ad"), F.max("has_nat").alias("has_nat"))
             )
-            done = (
-                all_flags.groupBy("seed_id")
-                .agg(F.max("has_ad").alias("_a"), F.max("has_nat").alias("_n"))
-                .filter((F.col("_a") == 1) & (F.col("_n") == 1))
-                .select("seed_id")
+            done = seed_flags.filter((F.col("has_ad") == 1) & (F.col("has_nat") == 1)).select(
+                "seed_id"
             )
             nxt = nxt.join(F.broadcast(done), "seed_id", "left_anti")
         expansions.append(
@@ -608,24 +656,6 @@ class CrawlEngine:
         # aggregate doubles as the wave's new-URL count (politeness.py)
         seq_assigned, n_new = assign_discovery_seq(pre, next_seq)
         _new_priority = F.col("_indegree").cast("double")
-        # kind/failure tallies: the sizes aggregate above was the wave's
-        # first action and built the fetched cache, so this aggregate is a
-        # pure cache scan (~0.3 s) — ordering it here, not before the
-        # expansion, means the wave never pays a dedicated fetch-
-        # materialization job. (An Observation on the fetch would be free,
-        # but Observation.get crashes when the first action over a
-        # persisted observed plan is an empty-result aggregate — exactly
-        # the no-expansion final wave. Measured, not hypothetical.)
-        kind_rows = (
-            fetched.groupBy("kind")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum((F.col("status") == -1).cast("int")).alias("nf"),
-            )
-            .collect()
-        )
-        kind_counts: dict[str, int] = {r["kind"]: r["n"] for r in kind_rows}
-        n_failed_rows = sum(r["nf"] for r in kind_rows)
         new_rows = (
             seq_assigned
             .withColumn("priority_score", _new_priority)
@@ -671,9 +701,9 @@ class CrawlEngine:
         # (in-memory partitions × combos) tiny files
         new_frontier = new_frontier.repartition(cfg.n_shards, *PARTITIONING["frontier"])
 
-        # compaction cadence: every compact_every-th wave rewrites the
-        # chains the wave reads (shards / seed_flags) as a full base so the
-        # per-wave reads stay O(base + K deltas) instead of O(all waves)
+        # compaction cadence: every compact_every-th wave rewrites the Bloom
+        # shard state as a full base so the per-wave read stays
+        # O(base + K deltas) instead of O(all waves)
         compacting = bool(cfg.compact_every) and (wave + 1) % cfg.compact_every == 0
 
         # copy-on-write: only buckets that gained URLs this wave are emitted
@@ -683,100 +713,44 @@ class CrawlEngine:
             new_rows.select("bucket", "h1", "h2"), shards, cfg.bloom, dirty_only=not compacting
         )
 
-        # ---- metrics + lineage (A6, north_rule)
-        metrics = (
-            fetched.groupBy("host_shard")
-            .agg(
-                F.count("*").alias("n_fetched"),
-                F.sum((F.col("status") == -1).cast("int")).alias("n_failed"),
-                F.sum(F.length(F.col("content"))).alias("content_bytes"),
-                F.sum(F.length(F.col("image_bytes"))).alias("image_bytes"),
-            )
-            .withColumn("wave", F.lit(wave))
-            .withColumn("wave_t_start", F.lit(float(t_wave0)))
-            .withColumn("wave_build_sec", F.lit(round(_time.time() - t_wave0, 3)))
-        )
-        # per-page shape metrics (A1/P8/P9): the reference's audible >45-row
-        # alarm (getRank.py:165-167) and empty-page message (getRank.py:211)
-        # become rows in a metrics table instead of driver side effects
-        page_metrics = serp.select(
-            F.lit(wave).alias("wave"),
-            "canonical_url",
-            F.size("p.items").alias("n_items"),
-            F.col("p.has_next").alias("has_next"),
-            F.when(F.size("p.items") > 45, "anomaly")
-            .when(F.size("p.items") == 0, "empty")
-            .otherwise("ok")
-            .alias("flag"),
-        )
-        lineage = fetched.select(
-            F.lit(wave).alias("wave"),
-            F.spark_partition_id().alias("partition_id"),
-            "seed_id", "canonical_url", "parent_seq", "discovery_seq", "host_shard", "status",
-        )
-
-        has_serp = kind_counts.get("serp", 0) > 0
-        has_detail = kind_counts.get("detail", 0) > 0
-        has_cart = kind_counts.get("cart", 0) > 0
-        store = self.store
-        # delta tables are small per wave: coalesce the writes so each wave
+        # the per-wave tables are small: coalesce the writes so each wave
         # appends a few well-sized files instead of one file per shuffle
         # partition (192 tiny files/table/wave explodes both the write job's
-        # task count and every later load_deltas scan). Snapshot tables
-        # (frontier, shards) keep their natural partitioning — they are the
-        # tables that grow with frontier size.
+        # task count and every later load_deltas scan). The frontier and
+        # the shard state keep their natural partitioning — they are the
+        # tables that grow with frontier size. Every table is written every
+        # wave, empty or not: an empty write leaves a schema-only file, so
+        # no per-kind count gates the commit.
         n_out = max(2, cfg.n_shards // 8)
 
-        def delta(df: DataFrame | None) -> DataFrame | None:
+        def small(df: DataFrame | None) -> DataFrame | None:
             return None if df is None else df.coalesce(n_out)
-
-        # compaction rewrites: on a compacting wave the read state chains
-        # are written as full-history BASES (marked in the manifest; loaders
-        # stop descending the wave chain at a base). `seen` is the exact
-        # record of admitted URLs, appended every wave and never compacted.
-        bases: set[str] = set()
-        shards_df = new_shards if n_new > 0 else None  # COW: no dirty buckets → no write
-        flags_df = delta(wave_flags if has_serp else None)
-        if compacting:
-            bases.add("shards")
-            shards_df = new_shards  # full bucket set (dirty_only was off above)
-            if cfg.early_stop:
-                bases.add("seed_flags")
-                flags_df = all_flags.groupBy("seed_id").agg(
-                    F.max("has_ad").alias("has_ad"), F.max("has_nat").alias("has_nat")
-                )
 
         store.commit_wave(
             wave,
             {
                 "frontier": new_frontier,
-                "shards": shards_df,
-                "seen": delta(new_rows.select("canonical_url", "discovery_seq")),
-                "results": delta(results if has_serp else None),
-                "quarantine": delta(quarantine if has_serp else None),
-                "seed_flags": flags_df,
-                "detail_results": delta(detail_rows.drop("skus") if has_detail else None),
-                "cart_results": delta(cart_rows if has_cart else None),
+                # COW: no dirty buckets → no write, except for a base
+                "shards": new_shards if n_new > 0 or compacting else None,
+                "seen": small(new_rows.select("canonical_url", "discovery_seq")),
+                "seed_flags": small(seed_flags),
+                "results": small(results),
+                "quarantine": small(quarantine),
+                "detail_results": small(detail_rows.drop("skus")),
+                "cart_results": small(cart_rows),
                 # images keep natural partitioning: coalesce would collapse
                 # the (CPU-heavy, Python) decode stage itself, and the binary
                 # rows already produce well-sized files
-                "images": images if has_detail else None,
-                "metrics": delta(metrics),
-                "page_metrics": delta(page_metrics if has_serp else None),
-                "lineage": delta(lineage),
-                "dead_letter": delta(
-                    dead.select("canonical_url", "seed_id", "attempt")
-                    if n_failed_rows > 0
-                    else None
-                ),
+                "images": images,
+                "lineage": small(fetch_lineage(fetched, wave)),
             },
-            {"next_seq": next_seq},
-            bases=bases,
+            {"next_seq": next_seq, "wave_started_at": wave_started_at},
+            bases={"shards"} if compacting else frozenset(),
         )
         fetched.unpersist()
         new_rows.unpersist()
         pre.unpersist()
-        _ranked.unpersist()
+        ranked.unpersist()
         n_frontier = int(store.counter("n_frontier"))
         next_hot, next_cold = self._load_frontier()
         return next_hot, next_cold, store.load_shard_state(), next_seq, n_frontier

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from amazonwebcrawler_spark.functions.urls import canonicalize_url
-from amazonwebcrawler_spark.plans.crawler import SERP_JSON, classify_serp_items
+from amazonwebcrawler_spark.plans.crawler import SERP_JSON, classify_serp_items, explode_serp_items
 from amazonwebcrawler_spark.plans.reports import rank_strings
 from amazonwebcrawler_spark.sources import synthetic_world as world
 
@@ -48,15 +48,7 @@ def rank_wave(spark: SparkSession, keywords: list[tuple[str, str]], pages: int =
         .mapInPandas(_fetch, fetched_schema)
         .withColumn("p", F.from_json("content", SERP_JSON))
     )
-    items = parsed.select(
-        "seed_id", "keyword", "product_type",
-        F.col("p.page").alias("page"), F.col("p.layout").alias("layout"),
-        F.explode("p.items").alias("item"),
-    ).select(
-        "seed_id", "keyword", "product_type", "page", "layout",
-        F.col("item.pos").alias("pos"),
-        F.coalesce(F.col("item.title"), F.lit("Amazon recommendation")).alias("title"),
-    )
+    items = explode_serp_items(parsed, "seed_id", "keyword", "product_type")
     # W3 quarantine semantics: unknown-layout pages never contribute ranks
     # (getRank.py:317-328 parks 'Other mode' pages) — same routing as the
     # stateful engine's quarantine table

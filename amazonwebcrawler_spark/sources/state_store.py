@@ -8,22 +8,23 @@ rename is the commit point. A crash loses at most the in-flight wave;
 ``latest_manifest`` + the loaders give exact resume (tests/test_crawler.py).
 
 Layout under ``root``, one ``<table>/wave=<n>/`` directory per table a wave
-writes::
+writes (the crawl writes all ten every wave, empty or not, except
+``shards`` when no bucket changed and ``seed_flags`` without early stop)::
 
     frontier/        full frontier snapshot, partitioned (depth, host_shard)
     shards/          Bloom shard buckets, copy-on-write (dirty buckets only)
+    seed_flags/      full per-seed early-stop flags snapshot
     seen/            seen-set delta (append-only log: the exact record of
                      admitted URLs; the wave loop never reads it)
-    seed_flags/      per-seed early-stop flags delta
     results/         parsed SERP result delta
     quarantine/      unknown-layout SERP rows (rank 'Other mode')
     detail_results/  detail-page (BSR) delta
     cart_results/    cart-probe (inventory) delta
     images/          image+caption delta (input_hint schema)
-    metrics/         per-(wave, host_shard) fetch metrics and wave timings
-    page_metrics/    per-SERP-page shape flags
-    lineage/         per-fetch lineage rows
-    dead_letter/     fetches that exhausted their retries
+    lineage/         the per-fetch record: one row per fetch attempt with
+                     status, attempt, sizes and SERP page shape (per-shard
+                     fetch counts, P8/P9 page flags and dead letters are
+                     reads over it)
     _manifests/manifest-<n>.json   the commit records
 
 **The chain rule** (one walk, ``_chain``, serves every loader and
@@ -31,11 +32,11 @@ writes::
 versions at waves ≤ ``w``, walking back to and including the most recent
 *base*. A base is a wave whose manifest lists the table in ``bases`` (a
 compaction rewrote its full history) or any write of a full-snapshot table
-(``SNAPSHOT_TABLES``). So the frontier reads one version, ``shards`` /
-``seed_flags`` read back to their last compaction, and tables that never
-compact (``seen`` and the other per-wave logs) read every wave. At 10^10
-scale the shard state would become manifest-pruned per bucket — same
-manifest mechanics.
+(``SNAPSHOT_TABLES``). So the frontier and ``seed_flags`` read one
+version, ``shards`` reads back to its last compaction (the only table that
+compacts), and the per-wave logs (``seen``, ``lineage`` and the parsed
+results) read every wave. At 10^10 scale the shard state would become
+manifest-pruned per bucket — same manifest mechanics.
 """
 
 from __future__ import annotations
@@ -79,10 +80,9 @@ def partitioned_counts(path: str) -> dict[tuple[str, ...], int]:
     return out
 
 
-SNAPSHOT_TABLES = ("frontier",)          # full snapshot: every write is a base
+SNAPSHOT_TABLES = ("frontier", "seed_flags")   # full snapshot: every write is a base
 DELTA_TABLES = (
-    "seen", "results", "quarantine", "seed_flags", "detail_results",
-    "cart_results", "images", "metrics", "page_metrics", "lineage", "dead_letter",
+    "seen", "results", "quarantine", "detail_results", "cart_results", "images", "lineage",
 )
 #: write-time partition spec (Iceberg partition spec): the frontier is laid
 #: out by (depth, host_shard) so the politeness dequeue can prune depth
@@ -102,14 +102,14 @@ class StateStore:
         self,
         wave: int,
         tables: dict[str, DataFrame | None],
-        counters: dict[str, int],
+        counters: dict[str, float],
         bases: frozenset[str] | set[str] = frozenset(),
     ) -> None:
         """Write all wave outputs, then atomically publish the manifest.
 
         The per-table writes are independent Spark jobs — submitting them
         from a thread pool overlaps their scheduling/IO latency (the wave
-        loop's dominant fixed cost; each wave commits ~8 small tables).
+        loop's dominant fixed cost; each wave commits ~10 small tables).
         Tables in ``PARTITIONING`` are written under their partition spec.
 
         The frontier row count is recorded in the manifest counters from
@@ -203,8 +203,8 @@ class StateStore:
         return self.spark.read.parquet(*paths) if paths else None
 
     def load_snapshot(self, name: str, as_of_wave: int | None = None) -> DataFrame | None:
-        """Committed full snapshot of ``name`` (frontier) as of the given
-        wave (Iceberg-style time travel; None = latest)."""
+        """Committed full snapshot of ``name`` (``SNAPSHOT_TABLES``) as of
+        the given wave (Iceberg-style time travel; None = latest)."""
         return self._read(name, as_of_wave)
 
     def load_shard_state(self, as_of_wave: int | None = None) -> DataFrame | None:

@@ -753,6 +753,41 @@ def check_admission_chain(spark) -> list[str]:
     return []
 
 
+def check_fetch_lineage(spark) -> list[str]:
+    """The wave's per-fetch record (plans/crawler.fetch_lineage) over
+    synthetic fetched rows must stay a projection of the fetch: no
+    Exchange and no aggregate. Per-shard fetch counts are a read-time
+    groupBy over ``lineage``; an aggregate folded back into the commit
+    fails here."""
+    import re
+
+    from amazonwebcrawler_spark.plans.crawler import fetch_lineage
+
+    serp = F.col("id") % 3 == 0
+    fetched = spark.range(0, 1000).select(
+        F.col("id").alias("seed_id"),
+        F.when(serp, F.lit("serp")).otherwise(F.lit("detail")).alias("kind"),
+        F.concat(F.lit("https://www.amazon.com/dp/B"), F.col("id").cast("string")).alias("canonical_url"),
+        (F.col("id") % 37).alias("parent_seq"),
+        F.col("id").alias("discovery_seq"),
+        (F.col("id") % 8).cast("int").alias("host_shard"),
+        F.when(F.col("id") % 31 == 0, F.lit(-1)).otherwise(F.lit(200)).alias("status"),
+        F.lit(0).alias("attempt"),
+        F.when(serp, F.lit('{"has_next": true, "items": [{"pos": 1}]}'))
+        .otherwise(F.lit('{"kind": "detail"}'))
+        .alias("content"),
+        F.lit(None).cast("binary").alias("image_bytes"),
+    )
+    txt = plan_text(fetch_lineage(fetched, 0))
+    bad = [node for node in ("Exchange", "Aggregate") if re.search(rf"^\(\d+\) \w*{node}", txt, re.M)]
+    if bad:
+        print("FAIL fetch_lineage:", bad)
+        print(txt[:2500])
+        return ["fetch_lineage"]
+    print("ok   fetch_lineage: a projection of the fetch, no exchange, no aggregate")
+    return []
+
+
 def check_bucketed_join(spark, sf_dir: str) -> list[str]:
     """Co-located join via bucketing: write both join sides bucketed+sorted
     on the key, then assert the join plan has NO shuffle exchange on either
@@ -874,6 +909,7 @@ def main() -> int:
     bad = []
     bad += check_no_global_window(spark)
     bad += check_admission_chain(spark)
+    bad += check_fetch_lineage(spark)
     bad += check_no_lambda_capture(spark, sf_dir, qs)
     bad += check_bucketed_join(spark, sf_dir)
     bad += check_pagerank_iteration(spark)

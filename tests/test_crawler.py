@@ -73,11 +73,54 @@ class TestCrawlInvariants:
             assert world.robots_allowed(r.canonical_url)
 
     def test_metrics_and_lineage_present(self, spark, crawl):
-        m = crawl.load_deltas("metrics")
-        assert m.filter(F.col("n_fetched") > 0).count() > 0
+        """lineage is the per-fetch record: one row per fetch attempt with
+        its kind, attempt and payload sizes, and the per-(wave, shard)
+        fetch metrics are one groupBy over it."""
         lin = crawl.load_deltas("lineage")
-        # lineage covers every fetch with its partition id
-        assert lin.count() == m.agg(F.sum("n_fetched")).collect()[0][0]
+        per_shard = (
+            lin.groupBy("wave", "host_shard")
+            .agg(
+                F.count("*").alias("n_fetched"),
+                F.sum((F.col("status") == -1).cast("int")).alias("n_failed"),
+                F.sum("content_len").alias("content_bytes"),
+                F.sum("image_len").alias("image_bytes"),
+            )
+            .collect()
+        )
+        rows = lin.collect()
+        assert rows and all(r.partition_id is not None for r in rows)
+        assert sum(r.n_fetched for r in per_shard) == len(rows)
+        assert sum(r.n_failed for r in per_shard) == sum(r.status == -1 for r in rows)
+        content = image = 0
+        for r in rows:
+            assert r.kind == world.classify_url(r.canonical_url)
+            if r.status == -1:
+                assert r.content_len is None and r.image_len is None
+                continue
+            page = world.fetch(r.canonical_url)
+            assert r.content_len == len(page["content"])
+            assert r.image_len == (None if page["image_bytes"] is None else len(page["image_bytes"]))
+            content += r.content_len
+            image += r.image_len or 0
+        assert sum(r.content_bytes or 0 for r in per_shard) == content
+        assert sum(r.image_bytes or 0 for r in per_shard) == image > 0
+
+    def test_lineage_serp_page_shape(self, spark, crawl):
+        """Every status-200 SERP row of lineage carries the page's item
+        count and has_next (A1; the P8/P9 flags read n_items > 45 and
+        n_items == 0), equal to synthetic_world.serp_page's page as fetch
+        serves it; no other row carries them."""
+        import json
+
+        n_serp = 0
+        for r in crawl.load_deltas("lineage").collect():
+            if r.kind == "serp" and r.status == 200:
+                page = json.loads(world.fetch(r.canonical_url)["content"])
+                assert (r.n_items, r.has_next) == (len(page["items"]), page["has_next"])
+                n_serp += 1
+            else:
+                assert r.n_items is None and r.has_next is None
+        assert n_serp > 0
 
 
 class TestPriorityQueue:
@@ -109,9 +152,10 @@ class TestPriorityQueue:
         # strictly lower score may precede a higher-scored one
         from amazonwebcrawler_spark.operators.politeness import select_wave_batch
 
-        batch, deferred = select_wave_batch(fr, tokens_per_shard=5)
+        batch, deferred, ranked = select_wave_batch(fr, tokens_per_shard=5, robots=eng.robots)
         b = batch.select("host_shard", "depth", "priority_score").collect()
         d = deferred.select("host_shard", "depth", "priority_score").collect()
+        ranked.unpersist()
         worst_batch = {}
         for r in b:
             k = (r.host_shard, r.depth)
@@ -126,27 +170,47 @@ class TestPriorityQueue:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+@pytest.fixture(scope="module")
+def quarantine_crawl(spark):
+    """One wave over one SERP seed: no detail, category or cart page."""
+    tmp = "/tmp/crawl_quarantine"
+    shutil.rmtree(tmp, ignore_errors=True)
+    # 'probe kw 5' page 1 deterministically renders the 'other' layout
+    # with own-product items (synthetic_world.serp_page layout hash)
+    seeds = [(0, "keyword", "probe kw 5", world.serp_url("probe kw 5", 1), "yogamat", 1)]
+    eng = CrawlEngine(
+        spark,
+        _cfg(tmp, max_waves=1, follow_items=False, follow_skus=False, probe_inventory=False),
+        seeds=seeds_df(spark, seeds),
+    )
+    return eng.run()["store"]
+
+
 class TestQuarantine:
-    def test_other_layout_routes_to_quarantine(self, spark):
+    def test_other_layout_routes_to_quarantine(self, spark, quarantine_crawl):
         """W3: rows from unknown-layout SERPs land in the quarantine table
         (getRank.py:317-328's 'Other mode' 3000s sleep), never in results."""
-        tmp = "/tmp/crawl_quarantine"
-        shutil.rmtree(tmp, ignore_errors=True)
-        # 'probe kw 5' page 1 deterministically renders the 'other' layout
-        # with own-product items (synthetic_world.serp_page layout hash)
-        seeds = [(0, "keyword", "probe kw 5", world.serp_url("probe kw 5", 1), "yogamat", 1)]
-        eng = CrawlEngine(
-            spark,
-            _cfg(tmp, max_waves=1, follow_items=False, follow_skus=False, probe_inventory=False),
-            seeds=seeds_df(spark, seeds),
-        )
-        store = eng.run()["store"]
+        store = quarantine_crawl
         q = store.load_deltas("quarantine")
         assert q is not None and q.count() > 0
         assert {r.rank for r in q.collect()} == {"Other mode"}
         results = store.load_deltas("results")
         if results is not None:
             assert results.filter(F.col("rank") == "Other mode").count() == 0
+
+    def test_absent_kinds_commit_empty_tables(self, spark, quarantine_crawl, crawl):
+        """A wave that fetched no detail or cart page still commits images,
+        detail_results and cart_results: readable, empty, with the schema a
+        wave that has them writes — no per-kind count gates the commit."""
+        store = quarantine_crawl
+        fetched = store.load_deltas("lineage").collect()
+        assert {world.classify_url(r.canonical_url) for r in fetched} == {"serp"}
+        tables = store._manifest(0)["tables"]
+        for name in ("images", "detail_results", "cart_results"):
+            assert name in tables, f"wave 0 did not commit {name}"
+            df = store.load_deltas(name)
+            assert df.count() == 0
+            assert df.columns == crawl.load_deltas(name).columns, name
 
 
 class TestEarlyStop:
@@ -206,10 +270,11 @@ class TestResume:
 
 class TestCompaction:
     def test_compaction_preserves_state_and_resume(self, spark):
-        """Every compact_every-th wave rewrites shards/seed_flags as a full
-        base (manifest 'bases'; `seen` is an append-only log and never
-        compacts); crawl results, the seen set, and exact resume across a
-        compaction boundary must be identical to the uncompacted run."""
+        """Every compact_every-th wave rewrites the shard state as a full
+        base (manifest 'bases'; no other table compacts: `seen` is an
+        append-only log, seed_flags a snapshot); crawl results, the seen
+        set, and exact resume across a compaction boundary must be
+        identical to the uncompacted run."""
         a, b = "/tmp/crawl_nocompact", "/tmp/crawl_compact"
         for t in (a, b):
             shutil.rmtree(t, ignore_errors=True)
@@ -226,7 +291,15 @@ class TestCompaction:
             if "shards" in comp._manifest(w).get("bases", ()) and w >= 0
         ]
         assert base_waves, "no compaction base written"
-        assert not any("seen" in comp._manifest(w).get("bases", ()) for w in comp.committed_waves())
+        # only the shard state compacts; the wave writes one table per fact
+        tables = {
+            "frontier", "shards", "seen", "seed_flags", "results", "quarantine",
+            "detail_results", "cart_results", "images", "lineage",
+        }
+        for w in comp.committed_waves():
+            m = comp._manifest(w)
+            assert set(m["tables"]) <= tables, (w, sorted(m["tables"]))
+            assert set(m["bases"]) <= {"shards"}, (w, m["bases"])
         seen_a = {r.canonical_url for r in plain.load_deltas("seen").collect()}
         seen_b = {r.canonical_url for r in comp.load_deltas("seen").collect()}
         assert seen_a == seen_b
@@ -298,24 +371,25 @@ class TestAdmission:
     def test_loop_never_reads_seen(self, spark, monkeypatch):
         """The seen confirm is answered inside the Bloom cogroup, and `seen`
         never compacts: a multi-wave crawl that crosses compaction waves
-        must never load the `seen` table."""
+        must never read the `seen` table through any loader (the spy sits
+        on the chain walk every loader takes)."""
         from amazonwebcrawler_spark.sources.state_store import StateStore
 
         tmp = "/tmp/crawl_no_seen_read"
         shutil.rmtree(tmp, ignore_errors=True)
         loaded = []
-        load = StateStore.load_deltas
+        chain = StateStore._chain
 
-        def spy(self, name, as_of_wave=None):
+        def spy(self, name, as_of_wave, live=True):
             loaded.append(name)
-            return load(self, name, as_of_wave)
+            return chain(self, name, as_of_wave, live)
 
-        monkeypatch.setattr(StateStore, "load_deltas", spy)
+        monkeypatch.setattr(StateStore, "_chain", spy)
         store = CrawlEngine(
             spark, _cfg(tmp, max_waves=4, compact_every=2), seeds=seeds_df(spark, SEED_ROWS)
         ).run()["store"]
         assert any("shards" in store._manifest(w).get("bases", ()) for w in store.committed_waves())
-        assert loaded, "the spy saw no loads: the check is vacuous"
+        assert {"frontier", "shards", "seed_flags"} <= set(loaded), "the spy missed a loader"
         assert "seen" not in loaded
 
     def test_product_pages_fetched_once(self, spark):
@@ -511,8 +585,8 @@ class TestPrunedDequeue:
 
 
 #: columns that are execution artifacts, not data — excluded from the
-#: run-vs-run state comparison (wall-clock timings, physical partition ids)
-_NONDET_COLS = {"wave_t_start", "wave_build_sec", "partition_id"}
+#: run-vs-run state comparison (physical partition ids)
+_NONDET_COLS = {"partition_id"}
 
 
 def _table_rows(df):
@@ -531,8 +605,8 @@ class TestTimeTravel:
         """Iceberg-style snapshot time travel: reading state `as_of_wave=k`
         from a finished run must equal what a run stopped after wave k
         actually held — for EVERY delta table (state_store.DELTA_TABLES,
-        the claim at state_store.py load_deltas), the frontier snapshot,
-        and the COW shard state."""
+        the claim at state_store.py load_deltas), every snapshot table (the
+        frontier and seed_flags), and the COW shard state."""
         from amazonwebcrawler_spark.sources.state_store import DELTA_TABLES
 
         a, b = "/tmp/crawl_tt_full", "/tmp/crawl_tt_part"
@@ -557,6 +631,14 @@ class TestTimeTravel:
         tt_frontier = {r.canonical_url for r in full.load_snapshot("frontier", as_of_wave=k).collect()}
         part_frontier = {r.canonical_url for r in part.load_snapshot("frontier").collect()}
         assert tt_frontier == part_frontier
+
+        # seed_flags is one snapshot per wave: as of k it is wave k's
+        # version, which later waves have since replaced
+        tt_flags = _table_rows(full.load_snapshot("seed_flags", as_of_wave=k))
+        part_flags = _table_rows(part.load_snapshot("seed_flags"))
+        assert tt_flags == part_flags
+        assert tt_flags, "no seed has an own hit by wave k: the check is vacuous"
+        assert full._chain("seed_flags", k) == [(k, full._manifest(k)["tables"]["seed_flags"])]
 
         tt_shards = {r.bucket: r.n_items for r in full.load_shard_state(as_of_wave=k).collect()}
         part_shards = {r.bucket: r.n_items for r in part.load_shard_state().collect()}
@@ -678,7 +760,7 @@ class TestExpiration:
         assert not set(retained_frontiers) & deleted_paths
 
         # live delta tables (no compaction base) lose NOTHING
-        assert not {"seen", "results", "images", "metrics", "lineage"} & deleted_tables
+        assert not {"seen", "results", "images", "lineage"} & deleted_tables
 
     def test_expired_time_travel_raises(self, spark):
         store = self._run(spark, "/tmp/crawl_expire_tt", max_waves=6)
@@ -748,7 +830,7 @@ class TestExpiration:
         share: after expire_snapshots(keep_last=2), every loader reads
         every table as of each retained wave — no 'snapshot expired', and
         the same rows as before expiration."""
-        from amazonwebcrawler_spark.sources.state_store import DELTA_TABLES
+        from amazonwebcrawler_spark.sources.state_store import DELTA_TABLES, SNAPSHOT_TABLES
 
         tmp = "/tmp/crawl_expire_reads"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -761,7 +843,8 @@ class TestExpiration:
 
         def read_all(wave):
             out = {n: _table_rows(store.load_deltas(n, as_of_wave=wave)) for n in DELTA_TABLES}
-            out["frontier"] = _table_rows(store.load_snapshot("frontier", as_of_wave=wave))
+            for n in SNAPSHOT_TABLES:
+                out[n] = _table_rows(store.load_snapshot(n, as_of_wave=wave))
             out["shards"] = _table_rows(store.load_shard_state(as_of_wave=wave))
             return out
 
@@ -793,6 +876,8 @@ class TestManifestStamps:
                 for f in fns
             )
             assert m["started_at"] <= m["committed_at"]
+            if w >= 0:  # a crawl wave: its build precedes its commit
+                assert m["counters"]["wave_started_at"] <= m["started_at"]
             assert m["committed_at"] >= newest, (w, m["committed_at"], newest)
 
 
@@ -821,13 +906,13 @@ class TestOrphans:
             os.path.join(store.root, "results", f"wave={crash_wave}")
         )
         spark.range(3).write.parquet(
-            os.path.join(store.root, "metrics", f"wave={crash_wave}")
+            os.path.join(store.root, "lineage", f"wave={crash_wave}")
         )
         scan = store.orphan_scan()
         got = {(t, os.path.basename(p)) for t, p, _sz in scan["orphans"]}
         assert got == {
             ("results", f"wave={crash_wave}"),
-            ("metrics", f"wave={crash_wave}"),
+            ("lineage", f"wave={crash_wave}"),
         }
         assert scan["bytes"] > 0
 

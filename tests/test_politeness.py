@@ -16,14 +16,21 @@ def _frontier(spark, rows):
     return spark.createDataFrame(rows, FRONTIER_DDL)
 
 
+def _robots(spark, rows=()):
+    return spark.createDataFrame(list(rows), "host string, crawl_delay double")
+
+
 def test_budget_cuts_per_shard_in_priority_order(spark):
     rows = [
         (f"https://a.com/{i}", "a.com", i % 2, i % 3, i, 0.0) for i in range(20)
     ]
-    batch, deferred = select_wave_batch(_frontier(spark, rows), tokens_per_shard=3)
+    batch, deferred, ranked = select_wave_batch(
+        _frontier(spark, rows), tokens_per_shard=3, robots=_robots(spark)
+    )
     got = batch.collect()
     assert len(got) == 6  # 3 per shard × 2 shards
     assert deferred.count() == 14
+    ranked.unpersist()
     # within each shard, the batch is the depth/seq minimum of the queue
     for shard in (0, 1):
         shard_rows = sorted(
@@ -39,22 +46,22 @@ def test_crawl_delay_divides_budget(spark):
     ] + [
         (f"https://fast.com/{i}", "fast.com", 1, 0, 100 + i, 0.0) for i in range(10)
     ]
-    robots = spark.createDataFrame(
-        [("slow.com", 4.0), ("fast.com", 0.0)], "host string, crawl_delay double"
-    )
-    batch, _ = select_wave_batch(_frontier(spark, rows), tokens_per_shard=8, robots=robots)
+    robots = _robots(spark, [("slow.com", 4.0), ("fast.com", 0.0)])
+    batch, _, ranked = select_wave_batch(_frontier(spark, rows), tokens_per_shard=8, robots=robots)
     by_host = {
         r["host"]: r["n"]
         for r in batch.groupBy("host").agg(F.count("*").alias("n")).collect()
     }
+    ranked.unpersist()
     assert by_host == {"slow.com": 2, "fast.com": 8}  # 8/4=2 for the slow host
 
 
 def test_unknown_host_gets_default_budget(spark):
     rows = [(f"https://x.org/{i}", "x.org", 0, 0, i, 0.0) for i in range(5)]
-    robots = spark.createDataFrame([("other.com", 9.0)], "host string, crawl_delay double")
-    batch, _ = select_wave_batch(_frontier(spark, rows), tokens_per_shard=3, robots=robots)
+    robots = _robots(spark, [("other.com", 9.0)])
+    batch, _, ranked = select_wave_batch(_frontier(spark, rows), tokens_per_shard=3, robots=robots)
     assert batch.count() == 3
+    ranked.unpersist()
 
 
 class TestRecrawlPriority:
