@@ -1068,7 +1068,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         deterministic transient failure (synthetic_world ~3% schedule,
         replacing the reference's unbounded recursive retry getRank.py:87-88)
         is a dead letter (``CrawlEngine.dead_letters``: the lineage rows
-        that failed at the last allowed attempt). The fetched set is
+        the retry rule marked ``dead`` when they were fetched). The fetched set is
         exactly the seed SERP URLs, so the DuckDB twin reproduces the
         md5-based failure schedule over the same URLs — the last
         equivalence-only crawl-loop operator becomes value-checked."""

@@ -15,7 +15,7 @@ predicate (frontier emptiness + early-stop flags — tiny collects, C5/A3):
         new      = canonicalize → robots → in-wave dedup →
                    bloom probe + key-set confirm, one cogroup    (P14, C7, P15/J6)
         frontier = deferred ∪ retries ∪ new;  seen |= new        (C3)
-        lineage  = one row per fetch: status, sizes, page shape  (A1/A6, C3)
+        lineage  = one row per fetch: status, dead, sizes, shape (A1/A6, C3)
         snapshot commit                                          (C6, S10)
 
 Determinism: wave contents are a pure function of data — the frontier total
@@ -274,26 +274,34 @@ def explode_serp_items(pages: DataFrame, *keep: str) -> DataFrame:
     )
 
 
-def fetch_lineage(fetched: DataFrame, wave: int) -> DataFrame:
+def exhausted(max_retries: int) -> F.Column:
+    """The retry rule (C3) on a fetch row: a transient failure (status -1)
+    at ``attempt >= max_retries`` is a dead letter; one below it re-enters
+    the frontier (``CrawlEngine._retries``)."""
+    return (F.col("status") == -1) & (F.col("attempt") >= max_retries)
+
+
+def fetch_lineage(fetched: DataFrame, wave: int, max_retries: int) -> DataFrame:
     """The wave's one per-fetch record (north_rule lineage + metrics; A1,
-    A6, C3): one row per fetch attempt with its partition, status, attempt
-    and payload sizes, plus ``n_items`` and ``has_next`` for status-200
-    SERP pages. The reference's >45-row alarm (P8, getRank.py:165-167) is
-    ``n_items > 45`` and its empty-page message (P9, getRank.py:211)
-    ``n_items == 0``; per-shard fetch metrics are a ``groupBy("wave",
-    "host_shard")`` over these rows and dead letters their exhausted
-    failures (``CrawlEngine.dead_letters``). A projection over the fetch:
-    no join, no exchange (scripts/explain_plans.py check_fetch_lineage)."""
+    A6, C3): one row per fetch attempt with its partition, status, attempt,
+    payload sizes and ``dead`` (``exhausted`` when fetched, so a resume
+    under another ``max_retries`` keeps the set), plus ``n_items`` and
+    ``has_next`` for status-200 SERP pages. The reference's >45-row alarm
+    (P8, getRank.py:165-167) is ``n_items > 45`` and its empty-page message
+    (P9, getRank.py:211) ``n_items == 0``; per-shard fetch metrics are a
+    ``groupBy("wave", "host_shard")`` over these rows and dead letters the
+    ``dead`` ones (``CrawlEngine.dead_letters``). A projection over the
+    fetch: no join, no exchange (scripts/explain_plans.py
+    check_fetch_lineage)."""
     serp_ok = (F.col("kind") == "serp") & (F.col("status") == 200)
-    shape = F.from_json("content", "has_next boolean, items array<struct<pos:int>>")
     return fetched.select(
         F.lit(wave).alias("wave"),
         F.spark_partition_id().alias("partition_id"),
         "seed_id", "kind", "canonical_url", "parent_seq", "discovery_seq", "host_shard",
-        "status", "attempt",
+        "status", "attempt", exhausted(max_retries).alias("dead"),
         F.length("content").alias("content_len"),
         F.length("image_bytes").alias("image_len"),
-        F.when(serp_ok, shape).alias("_p"),
+        F.when(serp_ok, F.from_json("content", SERP_JSON)).alias("_p"),
     ).select(
         "*",
         F.when(F.col("_p").isNotNull(), F.size("_p.items")).alias("n_items"),
@@ -425,23 +433,21 @@ class CrawlEngine:
 
     # ---------------------------------------------------- retries (C3)
     def _retries(self, fetched: DataFrame) -> DataFrame:
-        """Transient failures (status -1) below ``max_retries`` re-enter the
-        frontier with ``attempt + 1``; the rest are dead letters."""
+        """Transient failures (status -1) the retry rule (``exhausted``)
+        leaves alive re-enter the frontier with ``attempt + 1``."""
         return (
-            fetched.filter((F.col("status") == -1) & (F.col("attempt") < self.cfg.max_retries))
+            fetched.filter((F.col("status") == -1) & ~exhausted(self.cfg.max_retries))
             .withColumn("attempt", F.col("attempt") + 1)
             .select([f.name for f in FRONTIER_SCHEMA.fields])
         )
 
-    def dead_letters(self, as_of_wave: int | None = None) -> DataFrame | None:
-        """Fetches that exhausted their retries: the ``lineage`` rows that
-        failed (status -1) at an attempt ``_retries`` no longer re-enqueues."""
-        lineage = self.store.load_deltas("lineage", as_of_wave)
+    def dead_letters(self) -> DataFrame | None:
+        """Fetches that exhausted their retries: the ``lineage`` rows the
+        retry rule marked ``dead`` when they were fetched."""
+        lineage = self.store.load_deltas("lineage")
         if lineage is None:
             return None
-        return lineage.filter(
-            (F.col("status") == -1) & (F.col("attempt") >= self.cfg.max_retries)
-        ).select("canonical_url", "seed_id", "attempt")
+        return lineage.filter("dead").select("canonical_url", "seed_id", "attempt")
 
     # ------------------------------------------------------------ one wave
     def _run_wave(
@@ -498,7 +504,7 @@ class CrawlEngine:
         )
 
         # ---- classify own products + rank encode
-        matched = classify_serp_items(serp_items.filter(F.col("pos").isNotNull()))
+        matched = classify_serp_items(serp_items)
 
         results_all = matched.select(
             F.lit(wave).alias("wave"), "seed_id", "keyword", "page", "pos", "layout",
@@ -742,7 +748,7 @@ class CrawlEngine:
                 # the (CPU-heavy, Python) decode stage itself, and the binary
                 # rows already produce well-sized files
                 "images": images,
-                "lineage": small(fetch_lineage(fetched, wave)),
+                "lineage": small(fetch_lineage(fetched, wave, cfg.max_retries)),
             },
             {"next_seq": next_seq, "wave_started_at": wave_started_at},
             bases={"shards"} if compacting else frozenset(),

@@ -22,9 +22,9 @@ writes (the crawl writes all ten every wave, empty or not, except
     cart_results/    cart-probe (inventory) delta
     images/          image+caption delta (input_hint schema)
     lineage/         the per-fetch record: one row per fetch attempt with
-                     status, attempt, sizes and SERP page shape (per-shard
-                     fetch counts, P8/P9 page flags and dead letters are
-                     reads over it)
+                     status, attempt, dead, sizes and SERP page shape
+                     (per-shard fetch counts, P8/P9 page flags and dead
+                     letters are reads over it)
     _manifests/manifest-<n>.json   the commit records
 
 **The chain rule** (one walk, ``_chain``, serves every loader and

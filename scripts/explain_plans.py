@@ -778,7 +778,7 @@ def check_fetch_lineage(spark) -> list[str]:
         .alias("content"),
         F.lit(None).cast("binary").alias("image_bytes"),
     )
-    txt = plan_text(fetch_lineage(fetched, 0))
+    txt = plan_text(fetch_lineage(fetched, 0, max_retries=2))
     bad = [node for node in ("Exchange", "Aggregate") if re.search(rf"^\(\d+\) \w*{node}", txt, re.M)]
     if bad:
         print("FAIL fetch_lineage:", bad)

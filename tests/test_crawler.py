@@ -267,6 +267,32 @@ class TestResume:
         ord_b = sorted((r.wave, r.canonical_url) for r in resumed.load_deltas("lineage").collect())
         assert ord_a == ord_b
 
+    def test_dead_letters_survive_resume_with_more_retries(self, spark):
+        """A fetch is a dead letter by the retry rule it was fetched under
+        (C3): wave 0 at max_retries=0 dead-letters its transient failures,
+        and resuming at max_retries=2 keeps them dead instead of re-reading
+        them under the new limit."""
+        tmp = "/tmp/crawl_dead_resume"
+        shutil.rmtree(tmp, ignore_errors=True)
+        # 'dead kw 107' and 'dead kw 127' page 1 fail their first attempt
+        # (synthetic_world.fetch_is_transient_failure); 0 and 1 do not
+        rows = [
+            (i, "keyword", f"dead kw {k}", world.serp_url(f"dead kw {k}", 1), "yogamat", 3)
+            for i, k in enumerate((0, 1, 107, 127))
+        ]
+        kw = dict(early_stop=False, follow_items=False, follow_skus=False, probe_inventory=False)
+        seeds = seeds_df(spark, rows)
+        eng = CrawlEngine(spark, _cfg(tmp, max_waves=1, max_retries=0, **kw), seeds=seeds)
+        eng.run()
+        first = sorted(tuple(r) for r in eng.dead_letters().collect())
+        assert [(url, attempt) for url, _, attempt in first] == [
+            (world.serp_url(f"dead kw {k}", 1), 0) for k in (107, 127)
+        ]
+        resumed = CrawlEngine(spark, _cfg(tmp, max_waves=2, max_retries=2, **kw), seeds=seeds)
+        assert resumed.run(resume=True)["last_wave"] == 1
+        assert sorted(tuple(r) for r in resumed.dead_letters().collect()) == first
+        shutil.rmtree(tmp, ignore_errors=True)
+
 
 class TestCompaction:
     def test_compaction_preserves_state_and_resume(self, spark):
