@@ -11,18 +11,22 @@ seen set every wave — the Bloom filter is the scale path:
   ``pos_i = (h1 + i*h2) mod m`` with ``h1 = xxhash64(url)`` and
   ``h2 = xxhash64(url, 's2')`` computed **JVM-side** as column expressions —
   the pandas kernels below only ever see int64s, all numpy-vectorized;
-* probe and merge are **cogrouped** ``applyInPandas`` over (candidates ⨝
+* every kernel is a **cogrouped** ``applyInPandas`` over (candidates ⨝
   shards) grouped by bucket, so a shard's bytes are materialized once per
   task, never duplicated per candidate row.
 
 **Exact membership in the same task.** Every shard also carries ``keys`` —
-the bucket's SORTED uint64 array of ``h1`` key hashes. The probe kernel
+the bucket's SORTED uint64 array of ``h1`` key hashes. ``probe_shards``
 answers ``maybe_seen`` from the bitset (false positives, never false
-negatives) and ``exact_seen`` by searchsorted membership in the key set,
-both inside the one cogroup task per bucket: the crawler admits
-``~exact_seen`` with zero extra shuffles and never reads the ``seen``
-table (the membership-inside-the-vectorized-kernel shape of *Accelerating
-Python UDFs in Vectorized Query Execution*, CIDR 2022). Cost: +8 B/URL of
+negatives) and ``exact_seen`` by searchsorted membership in the key set.
+The crawl's waves run :func:`admit_into_shards` instead: ONE cogroup task
+per bucket dedups the wave's candidates (the bucket is a pure function of
+the URL, so no duplicate group spans two tasks), drops the URLs already in
+the key set and merges the admitted keys into the shard — dedup, probe
+and merge with one shuffle, and no wave reads the ``seen`` table (the
+membership-inside-the-vectorized-kernel shape of *Accelerating Python UDFs
+in Vectorized Query Execution*, CIDR 2022). ``probe_shards`` and
+``merge_into_shards`` share its bit and key-set code. Cost: +8 B/URL of
 state (~80 GB at 10^10, ~20 MB/bucket at 4096 buckets — read/written per
 dirty bucket only, COW). Exactness is up to xxhash64 collisions on ``h1``:
 n URLs give ≈ n²/2^65 expected colliding pairs — ≈ 2.7 for a 10^10-URL
@@ -42,8 +46,20 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-SHARD_SCHEMA = "bucket int, bits binary, n_items long, m_bits long, k int, keys binary"
+SHARD_SCHEMA = T.StructType(
+    [
+        T.StructField("bucket", T.IntegerType()),
+        T.StructField("bits", T.BinaryType()),
+        T.StructField("n_items", T.LongType()),
+        T.StructField("m_bits", T.LongType()),
+        T.StructField("k", T.IntegerType()),
+        T.StructField("keys", T.BinaryType()),
+    ]
+)
+#: a shard row's fields besides its ``bucket``
+_SHARD_VALUES = [f for f in SHARD_SCHEMA.fields if f.name != "bucket"]
 
 
 @dataclass(frozen=True)
@@ -102,6 +118,59 @@ def empty_shards(spark: SparkSession, cfg: BloomConfig) -> DataFrame:
     return spark.createDataFrame(rows, SHARD_SCHEMA)
 
 
+def _shard_state(shard: pd.DataFrame, m: int) -> tuple[bytearray, int, np.ndarray]:
+    """A cogroup's shard side → (bits, n_items, sorted key-hash set); a
+    bucket with no shard row starts empty."""
+    if shard.empty:
+        return bytearray(m >> 3), 0, np.array([], dtype=np.uint64)
+    return (
+        bytearray(shard["bits"].iloc[0]),
+        int(shard["n_items"].iloc[0]),
+        np.frombuffer(shard["keys"].iloc[0] or b"", dtype=np.uint64),
+    )
+
+
+def _require_keys(n_items: int, key_set: np.ndarray) -> None:
+    """A populated bucket with NO key set was written without key
+    tracking — answering 'unseen' for already-crawled URLs would silently
+    re-admit them; fail loudly instead."""
+    if n_items > 0 and not len(key_set):
+        raise ValueError(
+            "exact probe on a shard with items but no key set — this "
+            "state was written without per-bucket key sets; start a "
+            "fresh store"
+        )
+
+
+def _in_key_set(key_set: np.ndarray, h1: np.ndarray) -> np.ndarray:
+    """(n,) bool: searchsorted membership of ``h1`` in the sorted set."""
+    h = h1.astype(np.uint64)
+    if not len(key_set):
+        return np.zeros(len(h), dtype=bool)
+    idx = np.searchsorted(key_set, h)
+    idx[idx >= len(key_set)] = len(key_set) - 1
+    return key_set[idx] == h
+
+
+def _merged_shard(
+    bucket: int, state: tuple[bytearray, int, np.ndarray], h1: np.ndarray, h2: np.ndarray,
+    k: int, m: int,
+) -> pd.DataFrame:
+    """One shard row: ``state`` with the (h1, h2) keys ORed into its bits
+    and unioned into its key set."""
+    bits, n_items, key_set = state
+    if len(h1):
+        _set_bits(bits, _positions(h1, h2, k, m))
+        n_items += len(h1)
+        # sorted exact key set — a pure function of the key SET
+        # (np.union1d sorts + dedups), independent of arrival order
+        key_set = np.union1d(key_set, h1.astype(np.uint64))
+    return pd.DataFrame(
+        [{"bucket": bucket, "bits": bytes(bits), "n_items": n_items, "m_bits": m,
+          "k": k, "keys": key_set.tobytes()}]
+    )
+
+
 def merge_into_shards(
     new_keys: DataFrame, shards: DataFrame, cfg: BloomConfig, dirty_only: bool = False
 ) -> DataFrame:
@@ -118,36 +187,16 @@ def merge_into_shards(
     (StateStore.load_shard_state reconstructs latest-per-bucket).
 
     Each emitted shard carries its bucket's sorted key-hash set, the old
-    set unioned with the new ``h1`` values.
+    set unioned with the new ``h1`` values. The crawl's waves merge inside
+    :func:`admit_into_shards`; this is the seed commit's merge.
     """
     k, m = cfg.k, cfg.m_bits
 
-    def merge(keys: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
+    def merge(key: tuple, keys: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
         if keys.empty and dirty_only:
-            return pd.DataFrame(
-                {"bucket": pd.Series(dtype="int32"), "bits": pd.Series(dtype=object),
-                 "n_items": pd.Series(dtype="int64"), "m_bits": pd.Series(dtype="int64"),
-                 "k": pd.Series(dtype="int32"), "keys": pd.Series(dtype=object)}
-            )
-        if shard.empty:
-            bucket = int(keys["bucket"].iloc[0])
-            bits, n_items = bytearray(m >> 3), 0
-            key_set = np.array([], dtype=np.uint64)
-        else:
-            bucket = int(shard["bucket"].iloc[0])
-            bits, n_items = bytearray(shard["bits"].iloc[0]), int(shard["n_items"].iloc[0])
-            key_set = np.frombuffer(shard["keys"].iloc[0] or b"", dtype=np.uint64)
-        if not keys.empty:
-            h1 = keys["h1"].to_numpy()
-            pos = _positions(h1, keys["h2"].to_numpy(), k, m)
-            _set_bits(bits, pos)
-            n_items += len(keys)
-            # sorted exact key set — a pure function of the key SET
-            # (np.union1d sorts + dedups), independent of arrival order
-            key_set = np.union1d(key_set, h1.astype(np.uint64))
-        return pd.DataFrame(
-            [{"bucket": bucket, "bits": bytes(bits), "n_items": n_items, "m_bits": m,
-              "k": k, "keys": key_set.tobytes()}]
+            return pd.DataFrame(columns=SHARD_SCHEMA.fieldNames())
+        return _merged_shard(
+            int(key[0]), _shard_state(shard, m), keys["h1"].to_numpy(), keys["h2"].to_numpy(), k, m
         )
 
     return (
@@ -169,8 +218,6 @@ def probe_shards(candidates: DataFrame, shards: DataFrame, cfg: BloomConfig) -> 
     before the sets existed) raises instead of answering.
     """
     k, m = cfg.k, cfg.m_bits
-    from pyspark.sql import types as T
-
     extra = [
         T.StructField("maybe_seen", T.BooleanType()),
         T.StructField("exact_seen", T.BooleanType()),
@@ -186,31 +233,92 @@ def probe_shards(candidates: DataFrame, shards: DataFrame, cfg: BloomConfig) -> 
             cand["maybe_seen"] = False
             cand["exact_seen"] = False
             return cand
-        key_set = np.frombuffer(shard["keys"].iloc[0] or b"", dtype=np.uint64)
-        # a populated bucket with NO key set was written without key
-        # tracking — answering exact_seen=False for already-crawled URLs
-        # would silently re-admit them; fail loudly instead
-        if int(shard["n_items"].iloc[0]) > 0 and not len(key_set):
-            raise ValueError(
-                "exact probe on a shard with items but no key set — this "
-                "state was written without per-bucket key sets; start a "
-                "fresh store"
-            )
+        bits, n_items, key_set = _shard_state(shard, m)
+        _require_keys(n_items, key_set)
         pos = _positions(cand["h1"].to_numpy(), cand["h2"].to_numpy(), k, m)
-        cand["maybe_seen"] = _test_bits(shard["bits"].iloc[0], pos)
-        h1 = cand["h1"].to_numpy().astype(np.uint64)
-        if len(key_set):
-            idx = np.searchsorted(key_set, h1)
-            idx[idx >= len(key_set)] = len(key_set) - 1
-            cand["exact_seen"] = key_set[idx] == h1
-        else:
-            cand["exact_seen"] = False
+        cand["maybe_seen"] = _test_bits(bits, pos)
+        cand["exact_seen"] = _in_key_set(key_set, cand["h1"].to_numpy())
         return cand
 
     return (
         candidates.groupBy("bucket")
         .cogroup(shards.groupBy("bucket"))
         .applyInPandas(probe, out_schema)
+    )
+
+
+def admit_into_shards(
+    candidates: DataFrame, shards: DataFrame, cfg: BloomConfig, dirty_only: bool = True
+) -> DataFrame:
+    """Dedup, exact seen-probe and shard merge in ONE cogroup per bucket.
+
+    ``candidates`` are crawl candidates keyed on ``canonical_url`` by
+    :func:`with_bloom_keys`, with ``parent_seq`` and ``parent_pos``; a URL
+    may appear many times. Per bucket the kernel keeps each URL's first
+    row by (parent_seq, parent_pos) with ``_indegree`` = the number of rows
+    it had, drops URLs already in the bucket's key set, and ORs the
+    admitted keys into the bucket's shard. That is sound because ``bucket``
+    is a pure function of the URL: no duplicate group spans two buckets.
+
+    One output, two kinds of rows, told apart by :func:`split_admission`:
+    the admitted rows (the candidate columns + ``_indegree``, shard columns
+    null) and the merged shards (``SHARD_SCHEMA``, candidate columns null).
+    Shards follow ``merge_into_shards``' copy-on-write rule: only buckets
+    that admitted a URL, or every bucket with ``dirty_only=False``.
+    Equals ``min_by`` dedup → ``probe_shards`` (admit ``~exact_seen``) →
+    ``merge_into_shards`` of the admitted keys (tests/test_bloom.py).
+    """
+    k, m = cfg.k, cfg.m_bits
+    # every column nullable: each row kind leaves the other's columns null
+    row_fields = [T.StructField(f.name, f.dataType) for f in candidates.schema.fields]
+    row_fields.append(T.StructField("_indegree", T.LongType()))
+    out_schema = T.StructType(row_fields + _SHARD_VALUES)
+    nullable_int = {
+        f.name for f in out_schema.fields if isinstance(f.dataType, (T.IntegerType, T.LongType))
+    }
+
+    def frame(rows: pd.DataFrame) -> pd.DataFrame:
+        # every output column, absent ones null; integer columns go
+        # nullable (Int64) so the mixed rows never round-trip h1/h2
+        # through float64
+        cols = {}
+        for name in out_schema.fieldNames():
+            col = rows[name] if name in rows else pd.Series([None] * len(rows), index=rows.index, dtype=object)
+            cols[name] = col.astype("Int64") if name in nullable_int else col
+        return pd.DataFrame(cols, index=rows.index)
+
+    def admit(key: tuple, cand: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
+        if cand.empty and (dirty_only or shard.empty):
+            return frame(pd.DataFrame())
+        state = _shard_state(shard, m)
+        _bits, n_items, key_set = state
+        _require_keys(n_items, key_set)
+        # in-wave dedup: the first-discovered row wins, the group size is
+        # its in-degree
+        cand = cand.sort_values(["canonical_url", "parent_seq", "parent_pos"], kind="mergesort")
+        indegree = cand.groupby("canonical_url", sort=False)["canonical_url"].transform("size")
+        first = ~cand["canonical_url"].duplicated()
+        rows = cand[first].assign(_indegree=indegree[first])
+        rows = rows[~_in_key_set(key_set, rows["h1"].to_numpy())]
+        if rows.empty and dirty_only:
+            return frame(rows)
+        merged = _merged_shard(int(key[0]), state, rows["h1"].to_numpy(), rows["h2"].to_numpy(), k, m)
+        return pd.concat([frame(rows), frame(merged)], ignore_index=True)
+
+    return (
+        candidates.groupBy("bucket")
+        .cogroup(shards.groupBy("bucket"))
+        .applyInPandas(admit, out_schema)
+    )
+
+
+def split_admission(admitted: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """:func:`admit_into_shards`' one output → (admitted rows, merged
+    shards). A shard row always has ``bits``; an admitted row never."""
+    is_shard = F.col("bits").isNotNull()
+    return (
+        admitted.filter(~is_shard).drop(*[f.name for f in _SHARD_VALUES]),
+        admitted.filter(is_shard).select(*SHARD_SCHEMA.fieldNames()),
     )
 
 

@@ -7,16 +7,21 @@ predicate (frontier emptiness + early-stop flags — tiny collects, C5/A3):
 
     while frontier non-empty:
         batch, deferred = token-bucket dequeue per host shard   (C2, W4)
-        fetched  = batch.mapInPandas(fetch)                      (S4-S6)
+        fetched  = batch.mapInPandas(fetch + image decode/phash) (S4-S6, S12)
         parsed   = from_json per page kind                       (P1-P13)
         results |= classify ⨝ broadcast(dims) + rank encode      (J1/J2, W1-W3)
-        images  |= decode/phash pandas-UDF over fetched bytes    (S12, input_hint)
+        images  |= projection of the fetched detail pages        (S12, input_hint)
         expand   = pagination + item/sku/cart fan-out            (J4, L1)
-        new      = canonicalize → robots → in-wave dedup →
-                   bloom probe + key-set confirm, one cogroup    (P14, C7, P15/J6)
+        new, shards' = canonicalize → robots → one cogroup per
+                   bloom bucket: in-wave dedup, key-set probe,
+                   shard merge                                   (P14, C7, P15/J6)
         frontier = deferred ∪ retries ∪ new;  seen |= new        (C3)
         lineage  = one row per fetch: status, dead, sizes, shape (A1/A6, C3)
         snapshot commit                                          (C6, S10)
+
+Two stages per wave cross into Python: the fetch ``mapInPandas`` and the
+admission cogroup (*Accelerating Python UDFs in Vectorized Query
+Execution*, CIDR 2022: one vectorized kernel per boundary).
 
 Determinism: wave contents are a pure function of data — the frontier total
 order is (depth, priority_score DESC, discovery_seq, canonical_url) where
@@ -85,7 +90,15 @@ CATEGORY_JSON = (
 )
 CART_JSON = "kind string, asin string, inventory string, alert string"
 
-IMAGES_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
+IMAGE_STRUCT = T.StructType(
+    [
+        T.StructField("image_id", T.StringType()),
+        T.StructField("w", T.IntegerType()),
+        T.StructField("h", T.IntegerType()),
+        T.StructField("fmt", T.StringType()),
+        T.StructField("phash", T.LongType()),
+    ]
+)
 
 
 @dataclass
@@ -112,56 +125,50 @@ class CrawlConfig:
 
 
 # ---------------------------------------------------------------- fetch UDF
-def _fetch_batches(batches):
-    """mapInPandas kernel: the sandbox 'network' (synthetic_world.fetch).
+def _image_meta(url: str, data: bytes) -> dict:
+    """Decoded metadata + pHash of one fetched image (``IMAGE_STRUCT``)."""
+    from amazonwebcrawler_spark.functions.images import decode_image, phash64
 
-    Real deployment swaps the body for an async HTTP client; the signature,
+    px = decode_image(data)
+    asin = url.rsplit("/dp/", 1)[-1].split("/")[0].split("?")[0]
+    return {
+        "image_id": f"img-{asin}",
+        "w": px.shape[1],
+        "h": px.shape[0],
+        "fmt": "png" if data[:8] == b"\x89PNG\r\n\x1a\n" else "jpeg",
+        "phash": phash64(px),
+    }
+
+
+def _fetch_batches(batches):
+    """mapInPandas kernel: the sandbox 'network' (synthetic_world.fetch),
+    plus the decode + pHash of each fetched image into an ``image`` struct
+    (S12; input_hint: decode via vectorized Arrow batches, never per-row
+    Spark), so the wave's ``images`` are a projection of the cached fetch.
+
+    Real deployment swaps the fetch for an async HTTP client; the signature,
     batching, and schema are the engine contract. Transient failures are
     deterministic per (url, attempt) → status=-1, retried by the loop (C3).
     """
     for pdf in batches:
-        statuses, contents, images = [], [], []
+        statuses, contents, images, metas = [], [], [], []
         for u, attempt in zip(pdf["canonical_url"], pdf["attempt"]):
-            if world.fetch_is_transient_failure(u, int(attempt)):
-                statuses.append(-1)
-                contents.append(None)
-                images.append(None)
-            else:
-                r = world.fetch(u)
-                statuses.append(r["status"])
-                contents.append(r["content"])
-                images.append(r["image_bytes"])
+            r = (
+                {"status": -1, "content": None, "image_bytes": None}
+                if world.fetch_is_transient_failure(u, int(attempt))
+                else world.fetch(u)
+            )
+            data = r["image_bytes"]
+            statuses.append(r["status"])
+            contents.append(r["content"])
+            images.append(data)
+            metas.append(None if data is None else _image_meta(u, bytes(data)))
         out = pdf.copy()
         out["status"] = pd.Series(statuses, dtype="int32")
         out["content"] = contents
         out["image_bytes"] = images
+        out["image"] = metas
         yield out
-
-
-def _decode_image_batches(batches):
-    """mapInPandas kernel: decode fetched image bytes → typed metadata + phash
-    (input_hint: decode via vectorized Arrow batches, never per-row Spark)."""
-    from amazonwebcrawler_spark.functions.images import decode_image, phash64
-
-    for pdf in batches:
-        rows = []
-        for url, data, caption in zip(pdf["canonical_url"], pdf["image_bytes"], pdf["caption"]):
-            if data is None:
-                continue
-            px = decode_image(bytes(data))
-            asin = url.rsplit("/dp/", 1)[-1].split("/")[0].split("?")[0]
-            rows.append(
-                {
-                    "image_id": f"img-{asin}",
-                    "bytes": bytes(data),
-                    "w": px.shape[1],
-                    "h": px.shape[0],
-                    "fmt": "png" if bytes(data)[:8] == b"\x89PNG\r\n\x1a\n" else "jpeg",
-                    "caption": caption,
-                    "phash": phash64(px),
-                }
-            )
-        yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"])
 
 
 # ---------------------------------------------------------------- helpers
@@ -193,43 +200,29 @@ def _robots_rules(spark: SparkSession) -> DataFrame:
 
 
 def admit_candidates(
-    candidates: DataFrame, rules: DataFrame, shards: DataFrame, cfg: bloom.BloomConfig
+    candidates: DataFrame, rules: DataFrame, shards: DataFrame, cfg: bloom.BloomConfig,
+    dirty_only: bool = True,
 ) -> DataFrame:
     """A wave's admission (C7/P15/J6): canonicalized candidates (with
-    ``host``, ``parent_seq``, ``parent_pos``) → the URLs never seen before,
-    one row each, with ``_indegree`` and the Bloom keys (h1, h2, bucket).
+    ``host``, ``parent_seq``, ``parent_pos``) → one output holding the URLs
+    never seen before, one row each with ``_indegree`` and the Bloom keys
+    (h1, h2, bucket), beside the buckets' merged shards
+    (``bloom.split_admission`` separates them).
 
     ``rules`` are robots rules already grouped per host (``_robots_rules``).
-    robots (a broadcast join, candidates never shuffle for it) → in-wave
-    dedup → one cogroup per Bloom bucket that tests the bitset and answers
-    exact membership from the bucket's key set. No step reads the ``seen``
-    table."""
-    candidates = keep_allowed(candidates, rules)
-    # in-wave dedup: first-discovered wins — one min_by aggregate with a
-    # map-side partial (one shuffle) instead of a row_number window. Its
-    # struct-of-strings buffer makes Spark plan it sort-based (a sort on
-    # each side of the exchange). (parent_seq, parent_pos) is unique per
-    # duplicate group member, so the pick is deterministic.
-    rest = [c for c in candidates.columns if c != "canonical_url"]
-    # the duplicate-group size doubles as the page-rank-like priority:
-    # in-wave in-degree (how many parent links discovered this URL) —
-    # rides the same aggregate, zero extra cost (north_star's
-    # "priority queue keyed by (depth, discovery-time, page-rank-like
-    # score)"; mirrored in tests/oracle.py)
-    deduped = (
-        candidates.groupBy("canonical_url")
-        .agg(
-            F.min_by(F.struct(*rest), F.struct("parent_seq", "parent_pos")).alias("_r"),
-            F.count("*").alias("_indegree"),
-        )
-        .select("canonical_url", "_indegree", "_r.*")
-    )
-    keyed = bloom.with_bloom_keys(deduped, "canonical_url", cfg)
-    return (
-        bloom.probe_shards(keyed, shards, cfg)
-        .filter(~F.col("exact_seen"))
-        .drop("maybe_seen", "exact_seen")
-    )
+    robots (a broadcast join, candidates never shuffle for it) → Bloom keys
+    → one cogroup per bucket (``bloom.admit_into_shards``) that dedups the
+    wave's candidates, answers exact membership from the bucket's key set
+    and merges the admitted keys into the shard. No step reads the ``seen``
+    table. First-discovered wins the dedup: (parent_seq, parent_pos) is
+    unique per duplicate group member, so the pick is deterministic. The
+    group size is the page-rank-like priority, the in-wave in-degree (how
+    many parent links discovered this URL; north_star's "priority queue
+    keyed by (depth, discovery-time, page-rank-like score)"; mirrored in
+    tests/oracle.py). ``dirty_only=False`` emits every bucket's shard (a
+    compacting wave's base)."""
+    keyed = bloom.with_bloom_keys(keep_allowed(candidates, rules), "canonical_url", cfg)
+    return bloom.admit_into_shards(keyed, shards, cfg, dirty_only=dirty_only)
 
 
 def classify_serp_items(items: DataFrame) -> DataFrame:
@@ -369,13 +362,12 @@ class CrawlEngine:
         when every depth is needed.
         """
         cfg, store = self.cfg, self.store
+        full = store.load_snapshot("frontier").select([f.name for f in FRONTIER_SCHEMA.fields])
         counts = partitioned_counts(store.latest_manifest()["tables"]["frontier"])
         if not counts:
             # the dynamic-partition writer emits NO files for an empty
-            # frontier (a plain write leaves an empty-schema file) — an
-            # empty snapshot is a normal final-wave state, not an error
-            return self.spark.createDataFrame([], FRONTIER_SCHEMA), None
-        full = store.load_snapshot("frontier").select([f.name for f in FRONTIER_SCHEMA.fields])
+            # frontier; the recorded schema still reads it, as no rows
+            return full, None
         per_shard: dict[int, dict[int, int]] = {}
         for parts, n in counts.items():
             kv = dict(p.split("=", 1) for p in parts)
@@ -463,32 +455,26 @@ class CrawlEngine:
         # with the manifest's started_at (stamped before the commit's
         # writes) this times the wave's build: dequeue → commit start
         wave_started_at = _time.time()
-        cfg, spark, store = self.cfg, self.spark, self.store
+        cfg, store = self.cfg, self.store
 
-        batch, deferred, ranked = select_wave_batch(frontier, cfg.tokens_per_shard, self.robots)
+        # the one Exchange of the dequeue: the politeness window reuses this
+        # host_shard partitioning, so the cached ranked frontier already
+        # holds one fetch task per shard
+        batch, deferred, ranked = select_wave_batch(
+            frontier.repartition(cfg.n_shards, "host_shard"), cfg.tokens_per_shard, self.robots
+        )
 
-        # ---- fetch (S4-S6): one mapInPandas over the batch, partitioned by shard
+        # ---- fetch (S4-S6, S12): one mapInPandas over the batch, partitioned by shard
         fetched_schema = T.StructType(
             list(batch.schema.fields)
             + [
                 T.StructField("status", T.IntegerType()),
                 T.StructField("content", T.StringType()),
                 T.StructField("image_bytes", T.BinaryType()),
+                T.StructField("image", IMAGE_STRUCT),
             ]
         )
-        # the politeness window already hash-partitioned the cached ranked
-        # frontier by host_shard (its Exchange); an explicit repartition on
-        # the same key is NOT elided through the InMemoryRelation boundary
-        # (verified in the plan), so only pay it when the wave actually
-        # needs a different fetch-task count than the session's shuffle
-        # partitioning
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        fetch_src = (
-            batch
-            if n_shuffle == cfg.n_shards
-            else batch.repartition(cfg.n_shards, "host_shard")
-        )
-        fetched = fetch_src.mapInPandas(_fetch_batches, fetched_schema).persist()
+        fetched = batch.mapInPandas(_fetch_batches, fetched_schema).persist()
         retries = self._retries(fetched)
         ok = fetched.filter(F.col("status") == 200)
 
@@ -534,10 +520,10 @@ class CrawlEngine:
             F.col("p.inventory").alias("inventory"), F.col("p.alert").alias("alert"),
         )
 
-        # ---- images (S12): decode + phash pandas-UDF over fetched bytes
-        images = (
-            detail.select("canonical_url", "image_bytes", F.col("p.title").alias("caption"))
-            .mapInPandas(_decode_image_batches, IMAGES_SCHEMA)
+        # ---- images (S12): the fetch kernel decoded them
+        images = detail.filter(F.col("image").isNotNull()).select(
+            "image.image_id", F.col("image_bytes").alias("bytes"), "image.w", "image.h",
+            "image.fmt", F.col("p.title").alias("caption"), "image.phash",
         )
 
         # ---- expansion (J4/L1): pagination + items + skus + cart probes
@@ -560,10 +546,13 @@ class CrawlEngine:
                 )
             )
             prior_flags = store.load_snapshot("seed_flags")
+            # persisted: the pagination kill, the frontier kill and the
+            # snapshot write all read it
             seed_flags = (
                 (wave_flags if prior_flags is None else prior_flags.unionByName(wave_flags))
                 .groupBy("seed_id")
                 .agg(F.max("has_ad").alias("has_ad"), F.max("has_nat").alias("has_nat"))
+                .persist()
             )
             done = seed_flags.filter((F.col("has_ad") == 1) & (F.col("has_nat") == 1)).select(
                 "seed_id"
@@ -654,7 +643,21 @@ class CrawlEngine:
             .withColumn("kind", _classify_kind(F.col("canonical_url")))
         )
         candidates = _with_host_shard(candidates, cfg)
-        pre = admit_candidates(candidates, self.robots_rules, shards, cfg.bloom).persist()
+
+        # compaction cadence: every compact_every-th wave rewrites the Bloom
+        # shard state as a full base so the per-wave read stays
+        # O(base + K deltas) instead of O(all waves)
+        compacting = bool(cfg.compact_every) and (wave + 1) % cfg.compact_every == 0
+
+        # copy-on-write: only buckets that gained URLs this wave are emitted
+        # and written; untouched buckets keep their last-written version.
+        # On a compacting wave the FULL bucket set is emitted (a shards base).
+        # The admission cogroup emits both; persisting its one output runs
+        # it once for the seq assignment, the frontier and the shard write.
+        admitted = admit_candidates(
+            candidates, self.robots_rules, shards, cfg.bloom, dirty_only=not compacting
+        ).persist()
+        pre, new_shards = bloom.split_admission(admitted)
 
         # ---- data-defined discovery order (W4): seq from (parent, pos, url)
         # assigned WITHOUT a global single-task window — per-parent rank +
@@ -666,7 +669,7 @@ class CrawlEngine:
             seq_assigned
             .withColumn("priority_score", _new_priority)
             .withColumn("attempt", F.lit(0))
-            .select([f.name for f in FRONTIER_SCHEMA.fields] + ["h1", "h2", "bucket"])
+            .select([f.name for f in FRONTIER_SCHEMA.fields])
             .persist()
         )
         next_seq += n_new
@@ -674,7 +677,7 @@ class CrawlEngine:
         new_frontier = (
             deferred.select([f.name for f in FRONTIER_SCHEMA.fields])
             .unionByName(retries.select([f.name for f in FRONTIER_SCHEMA.fields]))
-            .unionByName(new_rows.select([f.name for f in FRONTIER_SCHEMA.fields]))
+            .unionByName(new_rows)
         )
         if cold is not None:
             # depth-pruned dequeue: rows the budget provably couldn't reach
@@ -707,18 +710,6 @@ class CrawlEngine:
         # (in-memory partitions × combos) tiny files
         new_frontier = new_frontier.repartition(cfg.n_shards, *PARTITIONING["frontier"])
 
-        # compaction cadence: every compact_every-th wave rewrites the Bloom
-        # shard state as a full base so the per-wave read stays
-        # O(base + K deltas) instead of O(all waves)
-        compacting = bool(cfg.compact_every) and (wave + 1) % cfg.compact_every == 0
-
-        # copy-on-write: only buckets that gained URLs this wave are emitted
-        # and written; untouched buckets keep their last-written version.
-        # On a compacting wave the FULL bucket set is emitted (a shards base).
-        new_shards = bloom.merge_into_shards(
-            new_rows.select("bucket", "h1", "h2"), shards, cfg.bloom, dirty_only=not compacting
-        )
-
         # the per-wave tables are small: coalesce the writes so each wave
         # appends a few well-sized files instead of one file per shuffle
         # partition (192 tiny files/table/wave explodes both the write job's
@@ -744,19 +735,15 @@ class CrawlEngine:
                 "quarantine": small(quarantine),
                 "detail_results": small(detail_rows.drop("skus")),
                 "cart_results": small(cart_rows),
-                # images keep natural partitioning: coalesce would collapse
-                # the (CPU-heavy, Python) decode stage itself, and the binary
-                # rows already produce well-sized files
-                "images": images,
+                "images": small(images),
                 "lineage": small(fetch_lineage(fetched, wave, cfg.max_retries)),
             },
             {"next_seq": next_seq, "wave_started_at": wave_started_at},
             bases={"shards"} if compacting else frozenset(),
         )
-        fetched.unpersist()
-        new_rows.unpersist()
-        pre.unpersist()
-        ranked.unpersist()
+        for cached in (fetched, new_rows, admitted, ranked, seed_flags):
+            if cached is not None:
+                cached.unpersist()
         n_frontier = int(store.counter("n_frontier"))
         next_hot, next_cold = self._load_frontier()
         return next_hot, next_cold, store.load_shard_state(), next_seq, n_frontier

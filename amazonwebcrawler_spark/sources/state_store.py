@@ -25,7 +25,10 @@ writes (the crawl writes all ten every wave, empty or not, except
                      status, attempt, dead, sizes and SERP page shape
                      (per-shard fetch counts, P8/P9 page flags and dead
                      letters are reads over it)
-    _manifests/manifest-<n>.json   the commit records
+    _manifests/manifest-<n>.json   the commit records: each written table's
+                                   path and schema (loaders read with it,
+                                   so no read infers a schema), counters
+                                   and bases
 
 **The chain rule** (one walk, ``_chain``, serves every loader and
 ``expire_snapshots``): a table as of wave ``w`` is the union of its
@@ -112,6 +115,9 @@ class StateStore:
         loop's dominant fixed cost; each wave commits ~10 small tables).
         Tables in ``PARTITIONING`` are written under their partition spec.
 
+        Each written table's schema is recorded beside its path, so a read
+        never infers it from the files (a Spark job per read).
+
         The frontier row count is recorded in the manifest counters from
         the written parquet FOOTERS (driver-side pyarrow, no Spark job) —
         it is the loop's stop condition, and a count() job per wave just
@@ -124,6 +130,9 @@ class StateStore:
         entry: dict = {
             "wave": wave,
             "tables": {},
+            # each table's schema as written: loaders pass it to the
+            # reader, which then runs no schema-inference job
+            "schemas": {n: df.schema.json() for n, df in tables.items() if df is not None},
             "counters": dict(counters),
             # bases: tables for which THIS wave's files are a full compacted
             # rewrite (delta-chain checkpoint) — loaders read from the most
@@ -198,9 +207,19 @@ class StateStore:
         chain.reverse()
         return chain
 
+    def _reader(self, name: str, wave: int):
+        """A parquet reader carrying ``name``'s schema as wave ``wave``
+        wrote it (``commit_wave``)."""
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(json.loads(self._manifest(wave)["schemas"][name]))
+        return self.spark.read.schema(schema)
+
     def _read(self, name: str, as_of_wave: int | None) -> DataFrame | None:
-        paths = [p for _w, p in self._chain(name, as_of_wave)]
-        return self.spark.read.parquet(*paths) if paths else None
+        chain = self._chain(name, as_of_wave)
+        if not chain:
+            return None
+        return self._reader(name, chain[-1][0]).parquet(*[p for _w, p in chain])
 
     def load_snapshot(self, name: str, as_of_wave: int | None = None) -> DataFrame | None:
         """Committed full snapshot of ``name`` (``SNAPSHOT_TABLES``) as of
@@ -220,7 +239,7 @@ class StateStore:
         chain = self._chain("shards", as_of_wave)
         if not chain:
             return None
-        dfs = [self.spark.read.parquet(path).withColumn("_v", F.lit(w)) for w, path in chain]
+        dfs = [self._reader("shards", w).parquet(path).withColumn("_v", F.lit(w)) for w, path in chain]
         u = dfs[0]
         for d in dfs[1:]:
             u = u.unionByName(d)

@@ -710,13 +710,15 @@ def check_no_global_window(spark) -> list[str]:
 
 def check_admission_chain(spark) -> list[str]:
     """The wave's admission chain (plans/crawler.admit_candidates: the
-    robots step → in-wave min_by dedup → with_bloom_keys → probe_shards)
-    over synthetic candidates must hold exactly ONE
-    FlatMapCoGroupsInPandas — the per-bucket cogroup that tests the bitset
-    and answers exact membership — and join the robots rules by broadcast
-    (BuildRight: the candidate rows stream, never shuffle, for it). A
-    second confirm join (a seen-table anti-join) or a shuffled robots
-    join fails here."""
+    robots step → with_bloom_keys → bloom.admit_into_shards) over
+    synthetic candidates must hold exactly ONE FlatMapCoGroupsInPandas —
+    the per-bucket cogroup that dedups the wave's candidates, answers
+    exact membership from the key set and merges the shards — no
+    Aggregate node, and join the robots rules by broadcast (BuildRight:
+    the candidate rows stream, never shuffle, for it). A dedup aggregate
+    in front of the cogroup (a min_by plans as Sort → SortAggregate on
+    both sides of its exchange), a second cogroup for the merge, a
+    seen-table anti-join or a shuffled robots join fails here."""
     import re
 
     from amazonwebcrawler_spark.operators import bloom
@@ -740,6 +742,9 @@ def check_admission_chain(spark) -> list[str]:
     n_cogroups = len(re.findall(r"^\(\d+\) FlatMapCoGroupsInPandas", txt, re.M))
     if n_cogroups != 1:
         bad.append(f"{n_cogroups} FlatMapCoGroupsInPandas (want 1)")
+    aggs = re.findall(r"^\(\d+\) (\w*Aggregate)", txt, re.M)
+    if aggs:
+        bad.append(f"aggregates {aggs} (want none)")
     joins = re.findall(r"^\(\d+\) (\w*Join)", txt, re.M)
     if joins != ["BroadcastHashJoin"]:
         bad.append(f"joins {joins} (want one BroadcastHashJoin)")
@@ -749,7 +754,7 @@ def check_admission_chain(spark) -> list[str]:
         print("FAIL admission_chain:", bad)
         print(txt[:2500])
         return ["admission_chain"]
-    print("ok   admission_chain: one bucket cogroup, robots rules broadcast")
+    print("ok   admission_chain: one bucket cogroup, no aggregate, robots rules broadcast")
     return []
 
 

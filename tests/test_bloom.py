@@ -88,7 +88,8 @@ def test_for_capacity_byte_aligned():
 def test_exact_probe_rejects_keyless_state(spark):
     """Probing against shard state whose populated buckets carry no key
     set (state written before the per-bucket sets existed) must raise,
-    not silently answer exact_seen=False for already-crawled URLs."""
+    not silently answer exact_seen=False for already-crawled URLs; the
+    crawl's admission kernel refuses it the same way."""
     import pytest
 
     cfg = bloom.BloomConfig(n_buckets=4, m_bits=1 << 14)
@@ -102,6 +103,76 @@ def test_exact_probe_rejects_keyless_state(spark):
     keyless = shards.withColumn("keys", F.lit(bytearray()))
     with pytest.raises(Exception, match="no key set"):
         bloom.probe_shards(keyed, keyless, cfg).collect()
+    with pytest.raises(Exception, match="no key set"):
+        bloom.admit_into_shards(
+            keyed.withColumn("parent_seq", F.lit(0)).withColumn("parent_pos", F.lit(0)), keyless, cfg
+        ).collect()
+
+
+def _reference_admission(keyed, shards, cfg, dirty_only):
+    """The admission chain the fused kernel replaced: min_by dedup →
+    probe_shards (admit ~exact_seen) → merge_into_shards of the admitted
+    keys. Returns (admitted rows, merged shards)."""
+    rest = [c for c in keyed.columns if c != "canonical_url"]
+    deduped = (
+        keyed.groupBy("canonical_url")
+        .agg(
+            F.min_by(F.struct(*rest), F.struct("parent_seq", "parent_pos")).alias("_r"),
+            F.count("*").alias("_indegree"),
+        )
+        .select("canonical_url", "_indegree", "_r.*")
+    )
+    admitted = (
+        bloom.probe_shards(deduped, shards, cfg)
+        .filter(~F.col("exact_seen"))
+        .drop("maybe_seen", "exact_seen")
+    )
+    return admitted, bloom.merge_into_shards(
+        admitted.select("bucket", "h1", "h2"), shards, cfg, dirty_only=dirty_only
+    )
+
+
+def test_admit_into_shards_matches_the_reference_chain(spark):
+    """One cogroup per bucket (dedup + exact probe + merge) against the
+    chain it replaced, on cross-parent duplicates and already-seen URLs,
+    for a copy-on-write call and a compacting one: equal admitted rows,
+    equal _indegree and byte-equal shards."""
+    cfg = bloom.BloomConfig(n_buckets=4, m_bits=1 << 14)
+    seen = spark.createDataFrame(
+        [(f"https://www.amazon.com/dp/S{i}",) for i in range(0, 60, 3)], "canonical_url string"
+    )
+    shards = bloom.merge_into_shards(
+        bloom.with_bloom_keys(seen, "canonical_url", cfg), bloom.empty_shards(spark, cfg), cfg
+    ).persist()
+    # 7 parents × 60 positions over 60 URLs: every URL has several parents
+    # at different positions, and a third of them are already seen
+    rows = [
+        (f"https://www.amazon.com/dp/S{(p * 7 + pos) % 60}", p, pos, f"kw{p}", p % 3)
+        for p in range(7)
+        for pos in range(0, 60, 2 + p % 3)
+    ]
+    cand = spark.createDataFrame(
+        rows, "canonical_url string, parent_seq long, parent_pos int, keyword string, depth int"
+    )
+    # bucket 0 gets no candidate: copy-on-write leaves it out, compaction not
+    keyed = bloom.with_bloom_keys(cand, "canonical_url", cfg).filter(F.col("bucket") != 0)
+    for dirty_only in (True, False):
+        got_rows, got_shards = bloom.split_admission(
+            bloom.admit_into_shards(keyed, shards, cfg, dirty_only)
+        )
+        want_rows, want_shards = _reference_admission(keyed, shards, cfg, dirty_only)
+        cols = want_rows.columns
+        got = sorted(tuple(r) for r in got_rows.select(cols).collect())
+        want = sorted(tuple(r) for r in want_rows.collect())
+        assert got == want
+        assert any(r[cols.index("_indegree")] > 1 for r in got), "no duplicate reached the kernel"
+        assert len(got) < 60, "no already-seen URL was dropped"
+        shard_cols = ["bucket", "bits", "keys", "n_items"]
+        got_s = sorted(tuple(r) for r in got_shards.select(shard_cols).collect())
+        want_s = sorted(tuple(r) for r in want_shards.select(shard_cols).collect())
+        assert got_s == want_s
+        assert {r[0] for r in got_s} == (set(range(1, 4)) if dirty_only else set(range(4)))
+    shards.unpersist()
 
 
 class TestBloomPlan:

@@ -907,6 +907,28 @@ class TestManifestStamps:
             assert m["committed_at"] >= newest, (w, m["committed_at"], newest)
 
 
+class TestSchemaReads:
+    def test_loading_tables_runs_no_job(self, spark, crawl):
+        """Every table's schema is in its manifest, so loading any table of
+        a committed crawl, latest or as of an earlier wave, plans its read
+        without a schema-inference job."""
+        from amazonwebcrawler_spark.sources.state_store import DELTA_TABLES, SNAPSHOT_TABLES
+
+        tracker = spark.sparkContext.statusTracker()
+
+        def max_job_id():
+            return max(tracker.getJobIdsForGroup(None) or [-1])
+
+        before = max_job_id()
+        loaded = []
+        for as_of in (None, crawl.committed_waves()[1]):
+            loaded += [crawl.load_snapshot(n, as_of_wave=as_of) for n in SNAPSHOT_TABLES]
+            loaded += [crawl.load_deltas(n, as_of_wave=as_of) for n in DELTA_TABLES]
+            loaded.append(crawl.load_shard_state(as_of_wave=as_of))
+        assert all(df is not None for df in loaded)
+        assert max_job_id() == before
+
+
 class TestOrphans:
     """Orphan wave-directory scan/sweep (state_store.orphan_scan /
     delete_orphans): directories written by a crashed commit (no manifest)
