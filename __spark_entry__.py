@@ -118,31 +118,20 @@ def _caption_conflict_rows() -> list[tuple[str, int, str]]:
     return rows
 
 
-def _freeze_world_rows() -> list[tuple[str, int, int]]:
-    """Deterministic (video_id, frame_idx, phash) world shared by the
-    freeze_detect query and its DuckDB twin: 8 healthy videos (every
-    frame's hash distinct), a stutter (every frame duplicated once —
-    50% frozen but no long run), a mid-stream 16-frame freeze, an
-    all-frozen slate, and a single-frame clip."""
-    import hashlib
+def _crawl_query_dir(name: str) -> str:
+    """A fresh checkpoint directory for a query that runs the real crawl
+    engine. It is per process, so two sessions on one machine never share
+    a store; it outlives the call, because the returned frame reads the
+    store lazily, and it is removed when the process exits."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
 
-    def ph(tag: str) -> int:
-        v = int.from_bytes(hashlib.md5(tag.encode()).digest()[:8], "big")
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    rows = []
-    for v in range(8):
-        for i in range(24):
-            rows.append((f"fv-{v}", i, ph(f"fv-{v}-frame-{i}")))
-    for i in range(24):
-        rows.append(("fv-stutter", i, ph(f"stutter-{i // 2}")))
-    for i in range(30):
-        tag = "held" if 10 <= i < 26 else f"live-{i}"
-        rows.append(("fv-frozen-mid", i, ph(tag)))
-    for i in range(12):
-        rows.append(("fv-slate", i, ph("slate")))
-    rows.append(("fv-single", 0, ph("single")))
-    return rows
+    path = os.path.join(tempfile.gettempdir(), f"awc_{name}_q_{os.getpid()}")
+    shutil.rmtree(path, ignore_errors=True)
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def _gate_flags(d: DataFrame) -> DataFrame:
@@ -880,41 +869,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         qf = quality_filter(F.col("text"))
         return d.select("doc_id", qf["keep"].alias("keep"), qf["reasons"].alias("reasons"))
 
-    # ----------------------------------------------------- context-window chunking
-    def q_chunk_documents(spark, sf):
-        """Fixed-token training-sequence windows (64 tokens, 8 overlap);
-        chunk content value-checked via md5 digest."""
-        from amazonwebcrawler_spark.functions.text import chunk_documents
-
-        d = _t(spark, sf, "documents")
-        return chunk_documents(d, "text", "doc_id", max_tokens=64, overlap=8)
-
-    # ----------------------------------------------------- sequence packing
-    def q_pack_sequences(spark, sf):
-        """GPT-style concat-and-split packing of the chunked corpus into
-        512-token training sequences (functions/text.pack_sequences): the
-        manifest row (seq_id, offsets, token span) for every
-        (sequence, chunk) overlap, positions derived from a per-shard
-        window prefix-sum + broadcast shard offsets — never a global sort.
-        The twin re-derives the identical stream arithmetic in SQL."""
-        from amazonwebcrawler_spark.functions.text import chunk_documents, pack_sequences
-
-        d = _t(spark, sf, "documents")
-        ch = chunk_documents(d, "text", "doc_id", max_tokens=64, overlap=8)
-        return pack_sequences(ch, seq_len=512, n_shards=8).select(
-            "doc_id", "chunk_idx", "n_tokens", "chunk_md5", "seq_id",
-            "offset_in_seq", "offset_in_chunk", "n_seq_tokens",
-        )
-
-    # ----------------------------------------------------- LM quality signal
-    def q_lm_score(spark, sf):
-        """Self-trained unigram negative log-likelihood per doc (the
-        perplexity-filter stage of corpus curation, relational form)."""
-        from amazonwebcrawler_spark.functions.text import unigram_nll
-
-        d = _t(spark, sf, "documents")
-        return unigram_nll(d, "text", "doc_id")
-
     # ----------------------------------------------------- stratified sampling
     def q_stratified_sample(spark, sf):
         """Deterministic equal-quota sampling per language: the 20 docs
@@ -926,21 +880,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return corpus.stratified_sample(d, "lang", "doc_id", 20, salt="strat").select(
             "doc_id", "lang", "sample_rank"
         )
-
-    # ----------------------------------------------------- epoch shuffle order
-    def q_epoch_shuffle(spark, sf):
-        """Deterministic per-epoch global shuffle manifest
-        (operators/corpus.epoch_shuffle): the training-loader permutation
-        as a pure function of (seed, doc_id) — md5 lexicographic order
-        realized via key-prefix shards + per-shard windows + broadcast
-        offsets, never a global sort. The twin re-derives the SAME key,
-        shard arithmetic and both positions with one global row_number
-        (affordable at oracle scale; the operator exists precisely so the
-        engine never runs that window)."""
-        from amazonwebcrawler_spark.operators import corpus
-
-        d = _t(spark, sf, "documents")
-        return corpus.epoch_shuffle(d, "doc_id", seed=7, n_shards=32)
 
     # ----------------------------------------------------- corpus shape rollup
     def q_corpus_stats(spark, sf):
@@ -1072,15 +1011,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         exactly the seed SERP URLs, so the DuckDB twin reproduces the
         md5-based failure schedule over the same URLs — the last
         equivalence-only crawl-loop operator becomes value-checked."""
-        import shutil
-
         from amazonwebcrawler_spark.operators import bloom as bloom_ops
         from amazonwebcrawler_spark.plans.crawler import CrawlConfig, CrawlEngine
         from amazonwebcrawler_spark.sources import synthetic_world as world
         from amazonwebcrawler_spark.sources.seeds import seeds_df
 
-        ckpt = "/tmp/awc_dead_letter_q"
-        shutil.rmtree(ckpt, ignore_errors=True)
+        ckpt = _crawl_query_dir("dead_letter")
         rows = [
             (i, "keyword", f"dead kw {i}", world.serp_url(f"dead kw {i}", 1), "yogamat", 1)
             for i in range(500)
@@ -1105,21 +1041,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         every successfully fetched page-1 seed; the planted ones are
         ALREADY in the seen set, so admission depends entirely on the
         per-bucket sorted key-hash sets answering exact membership inside
-        the bloom cogroup probe (operators/bloom.py probe_shards'
-        ``exact_seen``) — both the drop branch (planted, seen) and the
-        admit branch (fresh) are exercised. Returned table: the
+        the Bloom-bucket admission cogroup (operators/bloom.py
+        ``admit_into_shards``) — both the drop branch (planted, seen) and
+        the admit branch (fresh) are exercised. Returned table: the
         full seen set with data-defined discovery_seq, which the DuckDB
         twin re-derives from the deterministic failure schedule + the
         enqueue-order seq contract (politeness.assign_discovery_seq)."""
-        import shutil
-
         from amazonwebcrawler_spark.operators import bloom as bloom_ops
         from amazonwebcrawler_spark.plans.crawler import CrawlConfig, CrawlEngine
         from amazonwebcrawler_spark.sources import synthetic_world as world
         from amazonwebcrawler_spark.sources.seeds import seeds_df
 
-        ckpt = "/tmp/awc_shard_sets_q"
-        shutil.rmtree(ckpt, ignore_errors=True)
+        ckpt = _crawl_query_dir("shard_sets")
         rows = [
             (i, "keyword", f"ss kw {i}", world.serp_url(f"ss kw {i}", 1), "yogamat", 2)
             for i in range(400)
@@ -1216,24 +1149,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     # ----------------------------------------------------- multimodal
-    def q_video_frame_sample(spark, sf):
-        from amazonwebcrawler_spark.functions import media
-
-        df = spark.createDataFrame(
-            [(f"vid-{i}", bytearray(media.synth_video(i, n_frames=12))) for i in range(16)],
-            "video_id string, bytes binary",
-        )
-        frames = df.repartition(8).mapInPandas(media.frame_sample_kernel(4), media.FRAMES_SCHEMA)
-        # project the frame bytes to a digest so the committed-golden DuckDB
-        # twin can value-check the full output (content via md5, not opaque)
-        return frames.select(
-            "video_id", "frame_idx", "phash",
-            F.md5("frame_bytes").alias("frame_md5"),
-            F.length("frame_bytes").alias("frame_len"),
-        )
-
     def q_images_resize(spark, sf):
-        from amazonwebcrawler_spark.functions import media
+        from amazonwebcrawler_spark.functions import images as fi
         from amazonwebcrawler_spark.sources import synthetic_world as world
 
         rows = []
@@ -1242,7 +1159,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             rows.append((rec["image_id"], bytearray(rec["bytes"])))
         df = spark.createDataFrame(rows, "image_id string, bytes binary")
         resized = df.repartition(8).mapInPandas(
-            media.resize_images_kernel(48, 32), media.RESIZED_SCHEMA
+            fi.resize_images_kernel(48, 32), fi.RESIZED_SCHEMA
         )
         # digest projection so the committed-golden twin value-checks the
         # resized pixel content, not just shapes
@@ -1251,15 +1168,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.md5("bytes").alias("bytes_md5"),
             F.length("bytes").alias("n_bytes"),
         )
-
-    def q_audio_features(spark, sf):
-        from amazonwebcrawler_spark.functions import media
-
-        df = spark.createDataFrame(
-            [(f"aud-{i}", bytearray(media.synth_audio(i))) for i in range(16)],
-            "audio_id string, bytes binary",
-        )
-        return df.repartition(8).mapInPandas(media.audio_features_kernel(), media.AUDIO_FEATURES_SCHEMA)
 
     # ----------------------------------------------------- image table validation (rows-only)
     def q_images_validate(spark, sf):
@@ -1572,22 +1480,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             counts.withColumn("rnk", F.dense_rank().over(wr))
             .withColumn("delta", F.col("rnk") - F.lag("rnk").over(wd))
             .select("day", "event_type", "n", "rnk", "delta")
-        )
-
-    # ----------------------------------------------------- mixture resampling
-    def q_mixture_sample(spark, sf):
-        """Training-mixture resampling (operators/corpus.mixture_sample):
-        per-source sampling weights à la Pile/RedPajama — rate<1
-        downsamples via the md5 hash gate, rate>1 duplicates with a
-        fractional extra copy; broadcast weight table + explode, zero
-        corpus shuffles. Rates are binary-exact so the twin reproduces the
-        truncation arithmetic bit-for-bit."""
-        from amazonwebcrawler_spark.operators.corpus import mixture_sample
-
-        d = _t(spark, sf, "documents")
-        weights = {"src0": 2.5, "src1": 1.5, "src2": 1.0, "src3": 0.5, "src4": 0.25}
-        return mixture_sample(d, "source", "doc_id", weights, salt="mix").select(
-            "doc_id", "source", "copy"
         )
 
     # ----------------------------------------------------- contrastive negatives
@@ -1915,50 +1807,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "event_id", "host", "ok", "consec_errors", "next_delay_ms"
         )
 
-    def q_classifier_score(spark, sf):
-        """fastText-shape quality-classifier inference (functions/text.
-        classifier_score): hashed unigram+bigram features → BROADCAST
-        weight-table join on the 31-bit-md5 bucket → one map-side-
-        combinable sum per doc; keep iff mean weight ≥ 0. The weight table
-        is a deterministic md5-derived stand-in for a trained model
-        (make_weight_table) — swap in an exported table and nothing else
-        changes. Exact integer milli-score (pmod floor-div, sign-safe on
-        both engines — DuckDB's // truncates, so the twin uses the
-        explicit pmod form)."""
-        from amazonwebcrawler_spark.functions.text import classifier_score, make_weight_table
-
-        return classifier_score(
-            _t(spark, sf, "documents"), "text", "doc_id", make_weight_table(spark)
-        )
-
-    def q_probe_train(spark, sf):
-        """Exact-integer linear-probe TRAINING (functions/text.
-        train_linear_probe): two full-batch least-squares gradient steps
-        over hashed unigram+bigram presence features, η = 2^-10, every
-        weight a BIGINT numerator (denominator 2^10 / 2^20) — the training
-        half of the classifier_score inference pair, same bucket space.
-        Labels: lang == 'en' (the stand-in quality label the DSIR query
-        also targets). The twin re-derives both gradient steps in SQL."""
-        from amazonwebcrawler_spark.functions.text import train_linear_probe
-
-        d = _t(spark, sf, "documents")
-        return train_linear_probe(d, "text", "doc_id", F.col("lang") == "en")
-
-    def q_dsir_weights(spark, sf):
-        """DSIR importance weighting (functions/text.dsir_weights, Xie et
-        al. NeurIPS 2023): per-document log importance weight under a
-        Laplace-smoothed hashed-n-gram LM of the target slice (lang='en')
-        vs the raw-corpus LM — the data-SELECTION counterpart of the
-        quality classifier. One feature explode serves both LM fits and
-        the scoring pass; the per-bucket log-ratio table (≤4096 rows)
-        broadcasts back onto the features, so the only data-sized shuffle
-        is the per-doc sum. Micro-nat BIGINT contract; keep = logw ≥ 0 on
-        the same integer."""
-        from amazonwebcrawler_spark.functions.text import dsir_weights
-
-        d = _t(spark, sf, "documents")
-        return dsir_weights(d, "text", "doc_id", F.col("lang") == "en")
-
     def q_param_policy(spark, sf):
         """DUST-style URL-parameter significance mining (functions/urls.
         param_policy, Bar-Yossef et al. WWW 2007): learn per-(host,param)
@@ -2029,20 +1877,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "o_orderkey", "url", "learned_url"
         )
 
-    def q_bpe_pairs(spark, sf):
-        """One BPE-training merge round (functions/text.bpe_merge_pairs,
-        Sennrich et al. 2016): top-50 adjacent character pairs weighted
-        by word frequency. The corpus collapses to DISTINCT words before
-        the pair explode — the classic training-loop speedup — and the
-        top-k is a TakeOrderedAndProject over two map-side-combinable
-        aggregates. Total (count desc, lhs, rhs) order makes the cut
-        boundary cross-engine deterministic."""
-        from amazonwebcrawler_spark.functions.text import bpe_merge_pairs
-
-        return bpe_merge_pairs(_t(spark, sf, "documents"), "text", "doc_id", k=50).select(
-            F.col("left").alias("lhs"), F.col("right").alias("rhs"), "pair_count"
-        )
-
     def q_segment_dedup(spark, sf):
         """Cross-document keep-first segment dedup (functions/text.
         crossdoc_segment_dedup — the CCNet/RefinedWeb paragraph rule: one
@@ -2060,16 +1894,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("n_kept").cast("long").alias("n_kept"),
             F.md5("clean_text").alias("clean_md5"),
         )
-
-    def q_vocab_topk(spark, sf):
-        """Corpus vocabulary head (functions/text.vocab_topk): top-25
-        tokens by global term count with document frequency, totally
-        ordered by (tf desc, token asc). The top-k is a
-        TakeOrderedAndProject — per-partition heaps, never a global sort —
-        the 100 TB-safe tokenizer-training primitive."""
-        from amazonwebcrawler_spark.functions.text import vocab_topk
-
-        return vocab_topk(_t(spark, sf, "documents"), "text", "doc_id", k=25)
 
     def q_link_extract(spark, sf):
         """HTML link extraction → frontier keys (functions/urls.
@@ -2570,18 +2394,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         images = spark.createDataFrame(rows, "image_id string, bytes binary").repartition(8)
         return flip_neardup_pairs(images, max_hamming=2)
 
-    def q_pmi_pairs(spark, sf):
-        """Top-40 PMI collocations (functions/text.pmi_collocations) over
-        adjacent token pairs of the documents corpus — phrase mining for
-        tokenizer vocab induction, the token-level companion to the
-        character-level bpe_pairs. min_count=3 drops hapax-pair noise;
-        totals ride 1-row broadcast crossJoins; micro-unit BIGINT with the
-        (pmi desc, lhs, rhs) total order pinning the top-k cut."""
-        from amazonwebcrawler_spark.functions.text import pmi_collocations
-
-        d = _t(spark, sf, "documents")
-        return pmi_collocations(d, "text", "doc_id", k=40, min_count=3)
-
     def q_opic(spark, sf):
         """OPIC crawl priority (operators/linkrank.opic_priority): 5
         synchronous cash rounds of Abiteboul et al.'s online page-
@@ -2712,20 +2524,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         d = _t(spark, sf, "documents")
         return phrase_match(d, "text", "doc_id", ("slow", "hash", "batch"))
 
-    def q_skipgram(spark, sf):
-        """Skip-gram co-occurrence mining (functions/text.skipgram_pairs,
-        the word2vec/SGNS training-pair generator): top-50 (center,
-        context) pairs within a ±3 window over the documents corpus,
-        distance-weighted by the exact integer 1000 DIV d. Linear plan:
-        each token explodes into 6 signed offsets and lands on its
-        context via a two-key (doc, pos+d) equi join — never a per-doc
-        quadratic self-join; min_count=3, total (weight desc, center,
-        context) order pins the top-k cut."""
-        from amazonwebcrawler_spark.functions.text import skipgram_pairs
-
-        d = _t(spark, sf, "documents")
-        return skipgram_pairs(d, "text", "doc_id", window=3, min_count=3, k=50)
-
     def q_hits_scores(spark, sf):
         """HITS hub/authority (operators/webgraph.hits): 5 L1-normalized
         power iterations over a deterministic two-family link graph from
@@ -2845,8 +2643,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         floor quotas + one extra for the largest remainders, ties to
         domain ascending, Σquota == budget by construction. The global
         remainder rank is computed WITHOUT a single-partition window
-        (value-range shards + per-shard totals, the pack_sequences
-        idiom); the twin is a plain SQL window rank."""
+        (value-range shards + per-shard totals, the
+        assign_discovery_seq idiom); the twin is a plain SQL window rank."""
         from amazonwebcrawler_spark.operators.politeness import allocate_budget
 
         o = _t(spark, sf, "orders")
@@ -2902,19 +2700,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from amazonwebcrawler_spark.operators.corpus import gram_novelty
 
         return gram_novelty(_t(spark, sf, "documents"), "text", "doc_id", n=3)
-
-    # ----------------------------------------------------- CCNet ppl tiers
-    def q_ppl_buckets(spark, sf):
-        """CCNet-style head/middle/tail perplexity tiers per language
-        (functions/text.ppl_buckets — Wenzek et al. 2020): unigram-LM
-        nll_micro (the green lm_score contract) tiered by exact-integer
-        ntile arithmetic over the (nll_micro, doc_id) total order within
-        each language — no float quantiles, both engines compute the
-        identical partition. The tier window partitions by language (never
-        a SinglePartition exchange)."""
-        from amazonwebcrawler_spark.functions.text import ppl_buckets
-
-        return ppl_buckets(_t(spark, sf, "documents"), "text", "doc_id", "lang")
 
     # ----------------------------------------------------- mirror detection
     def q_mirror_detect(spark, sf):
@@ -2991,36 +2776,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return _dedup.lsh_candidate_eval(
             _t(spark, sf, "documents"), "text", "doc_id",
             k=16, n_bands=4, threshold=0.5, shingle_n=3, max_bucket=200,
-        )
-
-    # ----------------------------------------------------- BPE tokenization
-    def q_bpe_encode(spark, sf):
-        """BPE tokenizer application (functions/text.bpe_encode_kernel —
-        Sennrich et al. 2016 / the GPT-2 encode loop): merges train
-        driver-side on a BOUNDED 64-doc sample (the IVF-codebook
-        discipline — tokenizers train on a sample, apply to the corpus),
-        then ONE Arrow crossing encodes every document with a per-batch
-        word cache collapsing the Zipf distribution. Output digests the
-        exact token stream (tokens_md5) plus fertility counters
-        (n_tokens/n_words/n_chars). Committed golden pinned to sf0.01;
-        capture re-derives merges AND every encoding through independent
-        implementations (Counter-based trainer, sequential rank-order
-        replay encoder) and asserts the end-of-word round-trip."""
-        from amazonwebcrawler_spark.functions.text import (
-            BPE_ENCODE_SCHEMA,
-            bpe_encode_kernel,
-            train_bpe,
-        )
-
-        d = _t(spark, sf, "documents")
-        sample = [
-            r.text for r in d.select("doc_id", "text").orderBy("doc_id").limit(64).collect()
-        ]
-        merges = train_bpe(sample, n_merges=200)
-        return (
-            d.select("doc_id", "text")
-            .repartition(8)
-            .mapInPandas(bpe_encode_kernel(merges), BPE_ENCODE_SCHEMA)
         )
 
     # ----------------------------------------------------- blur detection
@@ -3522,18 +3277,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return frontier_size_chao1(caps)
 
-    def q_kn_bigram(spark, sf):
-        """Interpolated Kneser–Ney bigram LM scoring (functions/text.
-        kn_bigram_nll): the word-ORDER-aware perplexity filter — common
-        words in implausible order now score badly. Self-trained (no
-        model artifact); d = 0.75 exact in binary on both engines; output
-        is the micro-unit BIGINT ln-mean (same contract as the r4-green
-        lm_score)."""
-        from amazonwebcrawler_spark.functions.text import kn_bigram_nll
-
-        d = _t(spark, sf, "documents")
-        return kn_bigram_nll(d, "text", "doc_id")
-
     def q_resolve_refs(spark, sf):
         """Full RFC 3986 reference resolution (functions/urls.
         resolve_reference): ../-relative, ./-relative, query-only,
@@ -3569,45 +3312,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "o_orderkey", resolve_reference(href, base).alias("resolved_url")
         )
 
-    def q_isotonic_calib(spark, sf):
-        """Isotonic (PAV) score calibration (operators/corpus.
-        isotonic_calibrate): the minimax form fitted(i) = max_{j<=i}
-        min_{k>=i} mean(label | [j,k]) over a 16-cell bucket table —
-        classifier scores become monotone keep-PROBABILITIES. Scores and
-        labels derive from documents (md5 score, doc_id-mod label with
-        P(label|s) ~ s/100) identically on both engines; interval means
-        are integer micro DIV, so the whole fit is exact integer
-        arithmetic — driver-hash-stable and monotone by theorem."""
-        from amazonwebcrawler_spark.operators.corpus import isotonic_calibrate
-
-        d = _t(spark, sf, "documents")
-        h = (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-            .cast("long")
-            % 100
-        )
-        scored = d.select(
-            h.alias("score"), (F.col("doc_id") % 100 < h).cast("int").alias("label")
-        )
-        return isotonic_calibrate(scored, "score", "label", n_buckets=16)
-
-    def q_leakage_split(spark, sf):
-        """Leakage-safe train/val/test split (operators/corpus.
-        leakage_safe_split): the split UNIT is the near-dup COMPONENT
-        (min-label CC over the same MinHash pairs as dedup_groups;
-        unpaired docs are singleton groups), so no near-dup pair can
-        cross a split boundary — by construction, not by audit. Group →
-        split is md5 mod 100 (98/1/1), exact integers + strings only;
-        the twin recomputes the closure as a recursive CTE and the same
-        md5 cut."""
-        from amazonwebcrawler_spark.operators.corpus import leakage_safe_split
-
-        d = _t(spark, sf, "documents")
-        pairs = dedup.minhash_lsh_pairs(
-            d, "text", "doc_id", k=16, n_bands=4, threshold=0.5, shingle_n=3, max_bucket=200
-        )
-        return leakage_safe_split(d, pairs)
-
     def q_ucb_schedule(spark, sf):
         """UCB1 explore/exploit host scheduling (operators/politeness.
         ucb_host_schedule): mean new-URL yield + sqrt(2 ln N / n)
@@ -3628,18 +3332,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .alias("reward"),
         )
         return ucb_host_schedule(log)
-
-    def q_vocab_growth(spark, sf):
-        """Heaps-law vocabulary growth (functions/text.vocab_growth):
-        V(N) ≈ k·N^β over discovery order, 10 id-range checkpoints —
-        the corpus-saturation / tokenizer-sizing diagnostic (β→0 means
-        new docs stop contributing vocabulary). Cumulative counts are
-        exact BIGINTs; the two OLS constants micro-round ln terms under
-        the repo's ln discipline; nothing data-scale is ever ordered."""
-        from amazonwebcrawler_spark.functions.text import vocab_growth
-
-        d = _t(spark, sf, "documents")
-        return vocab_growth(d, "text", "doc_id", n_points=10)
 
     def q_percent_norm(spark, sf):
         """RFC 3986 §6.2.2 percent-encoding normalization (functions/
@@ -3715,27 +3407,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return politeness_audit(log, min_gap_ms=1000)
 
-    def q_shot_detect(spark, sf):
-        """Shot-boundary detection (functions/media.shot_boundaries):
-        per-video lag-window Hamming over frame pHashes — keyframe
-        selection wants one frame per SHOT, not per k frames. 16
-        deterministic multi-scene videos (hard cuts at known frames:
-        {5,9} for even ids, {6} for odd); one Arrow decode pass
-        (frame_sample_kernel every_k=1), then pure-JVM bit_count(xor).
-        Committed-golden twin; the capture checker replays pHash diffs
-        in Python and pins every planted cut."""
-        from amazonwebcrawler_spark.functions import media
-
-        rows = []
-        for i in range(16):
-            lens = (5, 4, 3) if i % 2 == 0 else (6, 6)
-            rows.append((f"vid-{i}", bytearray(media.synth_video_scenes(i, lens))))
-        df = spark.createDataFrame(rows, "video_id string, bytes binary")
-        frames = df.repartition(8).mapInPandas(
-            media.frame_sample_kernel(1), media.FRAMES_SCHEMA
-        )
-        return media.shot_boundaries(frames, threshold=12)
-
     def q_mmr_topk(spark, sf):
         """MMR diversified retrieval (operators/similarity.mmr_topk,
         Carbonell & Goldstein 1998): each pick maximizes λ·rel −
@@ -3749,46 +3420,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         e = _t(spark, sf, "embeddings")
         qs = e.filter(F.col("vec_id") < 4)
         return mmr_topk(e, qs, "vec_id", "embedding", k=4, shortlist=8)
-
-    def q_temperature_mix(spark, sf):
-        """Temperature rebalancing (operators/corpus.temperature_weights):
-        q_l ∝ p_l^0.7 over document languages — the multilingual
-        head-vs-tail sampling rule; boost_milli feeds weighted_sample /
-        the epoch mixture. p is exact integer DIV; q/boost micro-round
-        the one pow term."""
-        from amazonwebcrawler_spark.operators.corpus import temperature_weights
-
-        d = _t(spark, sf, "documents")
-        return temperature_weights(d, "lang", alpha_milli=700)
-
-    def q_video_dedup(spark, sf):
-        """Video-level near-dup detection (functions/media.
-        video_neardup_pairs): shot keyframes → pigeonhole hamming join →
-        per-pair keyframe CONTAINMENT (trims caught from the trim's
-        side). World: 10 originals, 5 trimmed copies (last scene
-        dropped), 3 brightness-shifted re-encodes — every planted
-        relation must surface, directionally correct, and no unrelated
-        pair may collide (64-bit pHash). Committed-golden twin; the
-        capture checker replays the whole pipeline in Python."""
-        from amazonwebcrawler_spark.functions import media
-
-        rows = []
-        for i in range(10):
-            rows.append((f"vid-{i}", bytearray(media.synth_video_scenes(i, (5, 4, 3)))))
-        for i in range(5):
-            rows.append(
-                (f"vid-{i}-trim", bytearray(media.synth_video_scenes(i, (5, 4))))
-            )
-        for i in range(5, 8):
-            rows.append(
-                (f"vid-{i}-re",
-                 bytearray(media.synth_video_scenes(i, (5, 4, 3), shift=8)))
-            )
-        df = spark.createDataFrame(rows, "video_id string, bytes binary")
-        frames = df.repartition(8).mapInPandas(
-            media.frame_sample_kernel(1), media.FRAMES_SCHEMA
-        )
-        return media.video_neardup_pairs(frames, threshold=12, max_hamming=2)
 
     def q_rrf_fusion(spark, sf):
         """Hybrid-retrieval rank fusion (operators/similarity.rrf_fusion,
@@ -3825,28 +3456,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             tall = part if tall is None else tall.unionByName(part)
         return rrf_fusion(tall, k0=60, per_ranker=40, topk=10)
-
-    def q_ece_calib(spark, sf):
-        """Expected Calibration Error (operators/corpus.ece_calibration,
-        Naeini et al. AAAI'15): reliability diagram + scalar ECE for the
-        same md5-score / doc_id-mod-label world as isotonic_calib (bin
-        centers p_milli = 10·s + 5). Per-bin |acc−conf| numerators are
-        exact BIGINTs and the N-weighted sum telescopes to ONE integer
-        division — isotonic FIXES miscalibration, this MEASURES it, and
-        the pair shares one fixture so the two stay comparable."""
-        from amazonwebcrawler_spark.operators.corpus import ece_calibration
-
-        d = _t(spark, sf, "documents")
-        h = (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-            .cast("long")
-            % 100
-        )
-        scored = d.select(
-            (h * 10 + 5).alias("p_milli"),
-            (F.col("doc_id") % 100 < h).cast("int").alias("label"),
-        )
-        return ece_calibration(scored, "p_milli", "label", n_bins=10)
 
     def q_mojibake_detect(spark, sf):
         """Encoding-corruption detection (functions/text.mojibake_stats):
@@ -3907,52 +3516,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         patches = df.repartition(8).mapInPandas(fi.patch_stats_kernel(4), fi.PATCH_SCHEMA)
         return tiled_image_stats(patches, min_repeat=4)
 
-    def q_keyframe_select(spark, sf):
-        """Sharpest-frame-per-shot keyframe selection (functions/media.
-        keyframe_select over frame_quality_kernel): ONE fused Arrow pass
-        decodes each frame once for BOTH pHash (shot structure) and
-        variance-of-Laplacian focus (exact integer), then pure-JVM
-        windows pick the sharpest frame per shot — the frame a VLM
-        captioning/embedding stage should see, not the shot's first.
-        World: 12 videos × 2-3 shots × 4 frames; each shot is a
-        zero-Laplacian linear ramp (direction changes at every cut, so
-        pHash jumps) + a checkerboard texture with a KNOWN per-frame
-        amplitude that is zero at the pHash sample grid (pHash constant
-        within a shot) — lap_var scales with amp², so the planted
-        max-amp frame must win every shot. Every pixel is ≡4 (mod 8),
-        i.e. an FJPG bin center, so the lossy frame codec round-trips
-        EXACTLY and the closed-form pins survive encode. Committed
-        golden; the capture checker replays decode→phash→blur→cuts→
-        argmax in Python and pins boundaries and winners closed-form."""
-        import numpy as np
-
-        from amazonwebcrawler_spark.functions import media
-
-        yy, xx = np.meshgrid(np.arange(24), np.arange(24), indexing="ij")
-        ramps = (
-            28 + 8 * xx,
-            28 + 8 * (23 - xx),
-            28 + 8 * yy,
-            28 + 8 * (23 - yy),
-        )
-        checker = ((yy + xx) % 2 * 2 - 1) * (~((yy % 3 == 0) & (xx % 3 == 0)))
-        rows = []
-        for v in range(12):
-            frames = []
-            for s in range(2 + v % 2):
-                base = ramps[(v * 3 + s * 7) % 4]
-                for f in range(4):
-                    amp = ((f * 3 + s + v) % 4) * 8
-                    px = (base + amp * checker).astype(np.uint8)
-                    frames.append(np.stack([px, px, px], axis=-1))
-            rows.append((f"kv-{v}", bytearray(media.encode_video(frames))))
-        rows.append(("kv-corrupt", bytearray(b"NOTAVIDEO")))
-        df = spark.createDataFrame(rows, "video_id string, bytes binary")
-        fq = df.repartition(8).mapInPandas(
-            media.frame_quality_kernel(1), media.FRAME_QUALITY_SCHEMA
-        )
-        return media.keyframe_select(fq, threshold=12)
-
     def q_upscale_detect(spark, sf):
         """Re-inflated-thumbnail detection (operators/images_io.
         upscale_detect over functions/images.upscale_stats_kernel): a k×
@@ -3970,7 +3533,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import numpy as np
 
         from amazonwebcrawler_spark.functions import images as fi
-        from amazonwebcrawler_spark.functions.media import resize_pixels
+        from amazonwebcrawler_spark.functions.images import resize_pixels
         from amazonwebcrawler_spark.operators.images_io import upscale_detect
         from amazonwebcrawler_spark.sources import synthetic_world as world
 
@@ -3997,56 +3560,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         stats = df.repartition(8).mapInPandas(fi.upscale_stats_kernel(), fi.UPSCALE_SCHEMA)
         return upscale_detect(stats)
 
-    def q_audio_gate(spark, sf):
-        """Audio keep/drop gate (functions/media.audio_gate over
-        audio_gate_kernel): clipping (rail-sample ppm), silence ppm, the
-        longest silent RUN (mid-stream dropout vs uniformly quiet — the
-        distinction ppm alone conflates), and DC offset — every figure
-        an exact integer over the int16 PCM. World: 10 clean voiced
-        tones (keep), a hard-clipped take (~2/3 rail time), an all-quiet
-        take, a 500 ms mid-stream dropout exactly at the threshold, a
-        300 ms gap below it, a DC-biased take (reported, not gated), an
-        empty stream (vacuously silent), a corrupt container (zero
-        rows). Committed golden; the capture checker replays the DSP
-        with loop-based run counting (independent of the kernel's
-        vectorized path) and pins every verdict."""
-        import numpy as np
-
-        from amazonwebcrawler_spark.functions import media
-
-        t = np.arange(16000)
-        sine = np.sin(2 * np.pi * 220 * t / 16000)
-
-        def pcm(x):
-            return bytearray(media.encode_audio(
-                (np.clip(x, -1, 1) * 32767).astype(np.int16)
-            ))
-
-        rows = [
-            (f"aud-{i}", bytearray(media.synth_audio(i))) for i in range(10)
-        ]
-        rows.append(("diag-clipped", pcm(2.0 * sine)))
-        rng = np.random.default_rng(7)
-        rows.append(("diag-quiet", bytearray(media.encode_audio(
-            rng.integers(-50, 51, size=16000).astype(np.int16)
-        ))))
-        dropout = 0.5 * sine.copy()
-        dropout[6000:14000] = 0.0
-        rows.append(("diag-dropout", pcm(dropout)))
-        gap = 0.5 * sine.copy()
-        gap[6000:10800] = 0.0
-        rows.append(("diag-gap300", pcm(gap)))
-        rows.append(("diag-dc", pcm(0.3 * sine + 0.2)))
-        rows.append(("diag-empty", bytearray(media.encode_audio(
-            np.array([], dtype=np.int16)
-        ))))
-        rows.append(("diag-corrupt", bytearray(b"MP3\x00junk")))
-        df = spark.createDataFrame(rows, "audio_id string, bytes binary")
-        stats = df.repartition(8).mapInPandas(
-            media.audio_gate_kernel(), media.AUDIO_GATE_SCHEMA
-        )
-        return media.audio_gate(stats)
-
     def q_caption_conflicts(spark, sf):
         """Cross-modal label-noise audit (operators/images_io.
         caption_conflicts): stock captions (one caption over ≥3 visually
@@ -4064,37 +3577,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _caption_conflict_rows(), "image_id string, phash long, caption string"
         )
         return caption_conflicts(df.repartition(8))
-
-    def q_freeze_detect(spark, sf):
-        """Frame-freeze gate (functions/media.freeze_detect): runs of
-        identical frame pHashes — a stuck encoder, static slate or
-        looping placeholder starves a temporal model like silence
-        starves audio; the visual twin of audio_gate's dropout leg.
-        Gaps-and-islands pure JVM over the decode pass's frame table.
-        World (_freeze_world_rows, shared with the twin's VALUES): 8
-        healthy clips, a 50%-frozen stutter with no long run (ppm alone
-        would misflag it), a mid-stream 16-frame freeze, an all-frozen
-        slate, a single-frame clip. Twin replays the islands with
-        DuckDB window functions — real SQL, not a golden."""
-        from amazonwebcrawler_spark.functions.media import freeze_detect
-
-        df = spark.createDataFrame(
-            _freeze_world_rows(), "video_id string, frame_idx int, phash long"
-        )
-        return freeze_detect(df.repartition(8), min_run=8)
-
-    def q_oov_rate(spark, sf):
-        """Per-document OOV rate vs the corpus's own top-50 vocabulary
-        head (functions/text.oov_rate): the tokenizer-health audit — a
-        doc mostly outside the head fragments into rare-piece soup, and
-        corpus-level OOV drift between crawls triggers retraining. The
-        vocab is a TakeOrderedAndProject k-row head BROADCAST to the
-        exploded token stream; one doc-keyed agg; exact-integer ppm.
-        Twin replays the same (tf desc, token asc) head and left join
-        in DuckDB over the documents view — sf-dependent real SQL."""
-        from amazonwebcrawler_spark.functions.text import oov_rate
-
-        return oov_rate(_t(spark, sf, "documents"), "text", "doc_id", k=50, max_oov_ppm=400_000)
 
     def q_url_spam(spark, sf):
         """Per-URL spam/trap gate (functions/urls.url_spam_signals): the
@@ -4189,12 +3671,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         images_io.byte_shard_manifest): records → one virtual byte
         stream in (md5-bucket, id) corpus order → nominal-position
         shard/offset assignment (records never split; actual shard size
-        deviates by ≤ one record). The image-corpus layout plan a
-        training loader streams — pack_sequences' sibling, same
-        shard-window + bounded-totals prefix-sum discipline, no global
-        sort. World: sized records from orders (fixed-width ids so
-        lexicographic order is engine-portable); the twin replays the
-        stream arithmetic with ONE DuckDB window over (bucket, id)."""
+        deviates by ≤ one record). The image-corpus layout plan a training
+        loader streams — the shard-window + bounded-totals prefix-sum
+        discipline, no global sort. World: sized records from orders
+        (fixed-width ids so lexicographic order is engine-portable); the
+        twin replays the stream arithmetic with ONE DuckDB window over
+        (bucket, id)."""
         from amazonwebcrawler_spark.operators.images_io import byte_shard_manifest
 
         o = _t(spark, sf, "orders")
@@ -4242,15 +3724,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_psi_drift(spark, sf):
         """Population Stability Index between two score snapshots
-        (operators/corpus.psi_drift): the label-free drift alarm that
-        runs every wave — ece_calib needs labels, PSI only needs the
-        scored population twice. World: md5-derived milli scores over
-        documents; the "new" crawl shifts half the corpus up 200 milli
-        (a planted drift PSI must detect). One map-side bin count per
-        snapshot; all math on the ≤n_bins histogram join; per-bin terms
-        and the Σ total micro-rounded once (the lm_score log
-        discipline). Twin replays binning, Laplace smoothing and the
-        log terms in DuckDB — sf-dependent SQL."""
+        (operators/corpus.psi_drift): the label-free drift alarm that runs
+        every wave — PSI needs no labels, only the scored population twice.
+        World: md5-derived milli scores over documents; the "new" crawl
+        shifts half the corpus up 200 milli (a planted drift PSI must
+        detect). One map-side bin count per snapshot; all math on the
+        ≤n_bins histogram join; per-bin terms and the Σ total micro-rounded
+        once (the unigram_nll log discipline). Twin replays binning, Laplace
+        smoothing and the log terms in DuckDB — sf-dependent SQL."""
         from amazonwebcrawler_spark.operators.corpus import psi_drift
 
         d = _t(spark, sf, "documents")
@@ -4324,33 +3805,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return robots_delta(urls, old_rules, new_rules)
 
-    def q_mix_plan(spark, sf):
-        """Token-budget mixture plan (operators/corpus.mixture_plan):
-        published mixture weights + per-source inventories → per-source
-        target tokens, sampling rate and EPOCH count — the numbers a
-        training run is configured with, and the oversampling flag a
-        data card must disclose (small high-weight sources repeating
-        many epochs amplify memorization). Weights renormalize against
-        their own sum (the spec here sums to 997 milli on purpose);
-        all exact integer DIV. Inventories = per-language char counts
-        over documents (one map-side agg); the plan itself runs on the
-        dozens-row strata table with a 1-row broadcast weight sum.
-        Twin replays the arithmetic in SQL — sf-dependent."""
-        from amazonwebcrawler_spark.operators.corpus import mixture_plan
-
-        d = _t(spark, sf, "documents")
-        strata = d.groupBy(F.col("lang").alias("source")).agg(
-            F.sum("n_chars").alias("n_tokens")
-        ).withColumn(
-            "weight_milli",
-            F.when(F.col("source") == "en", 600)
-            .when(F.col("source") == "zh", 120)
-            .when(F.col("source") == "es", 100)
-            .when(F.col("source") == "de", 90)
-            .otherwise(87),
-        )
-        return mixture_plan(strata, total_tokens=150_000)
-
     def q_hard_negatives(spark, sf):
         """ANN-based hard-negative mining (operators/similarity.
         hard_negatives): per anchor, the nearest vectors NOT in its
@@ -4381,7 +3835,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         world: 21 distinct (n, fpr) cells derived from orders
         (n ∈ 10^4..10^10 scaled ×1..3, fpr 100..400 ppm). Float-borne
         columns (ln/exp/pow) land as single-rounded BIGINTs with
-        identical literals on both engine sides — the lm_score log
+        identical literals on both engine sides — the unigram_nll log
         discipline."""
         from amazonwebcrawler_spark.operators.bloom import bloom_plan
 
@@ -4439,12 +3893,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_image_probe(spark, sf):
         """Image-side model-scored gate (functions/images.
-        probe_score_kernel): classifier_score's sibling for the image
-        axis — decode once, grid-mean embed, sequential-dot a broadcast
-        linear probe head (deterministic stand-in weights; swap for a
-        trained aesthetic/NSFW head and nothing else changes), emit one
-        micro BIGINT logit; keep = logit ≥ 0 is pure JVM (sign ≡
-        sigmoid ≥ 0.5, no exp to drift). Bias sits at the world's score
+        probe_score_kernel) — decode once, grid-mean embed, sequential-dot a
+        broadcast linear probe head (deterministic stand-in weights; swap
+        for a trained aesthetic/NSFW head and nothing else changes), emit
+        one micro BIGINT logit; keep = logit ≥ 0 is pure JVM (sign ≡ sigmoid
+        ≥ 0.5, no exp to drift). Bias sits at the world's score
         center so BOTH verdict classes occur. World: 24 product shots +
         a flat card + a corrupt row (zero rows). Committed golden; the
         capture checker replays decode→embed→dot in Python and pins
@@ -4526,70 +3979,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return drain_plan(frontier, rates)
 
-    def q_video_pipeline(spark, sf):
-        """End-to-end video curation composition: ONE fused Arrow decode
-        (frame_quality_kernel) → sharpest-frame-per-shot keyframes
-        (keyframe_select, joined back to the quality table for the
-        winners' pHashes) → pigeonhole hamming containment
-        (keyframe_containment_pairs — the video_dedup back half,
-        factored to accept any keyframe policy) → per-video verdict
-        (best match by containment, ties to the lexicographically
-        first match). Proves the session-17 media stages COMPOSE with
-        the proven dedup machinery on a single decode pass. World: 10
-        multi-scene originals + 3 trims (prefix scenes — exact frames,
-        contained 1000‰ from the trim side) + 2 brightness-shifted
-        re-encodes + a corrupt row. Committed golden; the capture
-        checker replays decode→quality→cuts→argmax→hamming→containment
-        →verdict in Python and pins every planted relation."""
-        from amazonwebcrawler_spark.functions import media
-
-        LENS = [(5, 4, 3), (4, 4, 4), (6, 3, 3), (5, 5, 2), (3, 4, 5),
-                (4, 3, 5), (5, 3, 4), (6, 4, 2), (3, 5, 4), (4, 5, 3)]
-        rows = []
-        for i, lens in enumerate(LENS):
-            rows.append((f"orig-{i}", bytearray(media.synth_video_scenes(100 + i, lens))))
-        for i in (0, 3, 7):
-            rows.append((f"trim-{i}", bytearray(media.synth_video_scenes(100 + i, LENS[i][:2]))))
-        for i in (1, 5):
-            rows.append((f"re-{i}", bytearray(media.synth_video_scenes(100 + i, LENS[i], shift=4))))
-        rows.append(("vp-corrupt", bytearray(b"NOTAVIDEO")))
-        df = spark.createDataFrame(rows, "video_id string, bytes binary")
-        fq = df.repartition(8).mapInPandas(
-            media.frame_quality_kernel(1), media.FRAME_QUALITY_SCHEMA
-        )
-        sel = media.keyframe_select(fq, threshold=12)
-        kf = sel.join(fq, ["video_id", "frame_idx"]).select(
-            "video_id", "frame_idx", "phash"
-        )
-        pairs = media.keyframe_containment_pairs(kf, max_hamming=2)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("video_a").orderBy(
-            F.col("containment_milli").desc(), F.col("video_b").asc()
-        )
-        best = (
-            pairs.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                F.col("video_a").alias("video_id"),
-                F.col("video_b").alias("matched_video"),
-                "containment_milli",
-                "is_dup",
-            )
-        )
-        per_vid = sel.groupBy("video_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n_shots"),
-            F.sum("n_frames").cast("long").alias("n_frames"),
-        )
-        return per_vid.join(best, "video_id", "left").select(
-            "video_id",
-            "n_shots",
-            "n_frames",
-            F.coalesce("matched_video", F.lit("")).alias("matched_video"),
-            F.coalesce("containment_milli", F.lit(0)).cast("long").alias("containment_milli"),
-            F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
-        )
-
     def _warmed(fn):
         def wrapper(spark, sf):
             _ensure_warm(spark)
@@ -4618,7 +4007,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "budget_allocate": q_budget_allocate,
         "gopher_signals": q_gopher_signals,
         "selfdedup_clean": q_selfdedup_clean,
-        "vocab_topk": q_vocab_topk,
         "link_extract": q_link_extract,
         "sitemap_extract": q_sitemap_extract,
         "recrawl_priority": q_recrawl_priority,
@@ -4632,7 +4020,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rollup_metrics": q_rollup_metrics,
         "zorder_layout": q_zorder_layout,
         "rank_delta": q_rank_delta,
-        "mixture_sample": q_mixture_sample,
         "negative_pairs": q_negative_pairs,
         "snapshot_diff": q_snapshot_diff,
         "sketch_distinct": q_sketch_distinct,
@@ -4641,50 +4028,42 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ema_score": q_ema_score,
         "embed_quantize": q_embed_quantize,
         "weighted_sample": q_weighted_sample,
-        # positions 36-47: the session-6/7/8 operators — never driver-
+        # positions 34-43: the session-6/7/8 operators — never driver-
         # checked, so they take the window slots of the r3-green media/
         # report rows.
         "substring_dedup": q_substring_dedup,
         "robots_rfc": q_robots_rfc,
         "adaptive_backoff": q_adaptive_backoff,
         "pair_dedup": q_pair_dedup,
-        "classifier_score": q_classifier_score,
         "param_policy": q_param_policy,
         "param_apply": q_param_apply,
-        "bpe_pairs": q_bpe_pairs,
         "segment_dedup": q_segment_dedup,
-        "dsir_weights": q_dsir_weights,
         "corpus_stats": q_corpus_stats,
         "image_quality": q_image_quality,
         "semantic_dedup": q_semantic_dedup,
-        # positions 49-50: VERDICT r4 asked for the flagship + crawl-core
+        # positions 44-45: VERDICT r4 asked for the flagship + crawl-core
         # rows to get an r5 driver record (r3-green, absent from r4's
-        # window); dead_letter yields its slot to the never-checked
-        # dsir_weights — 48 uncovered keys + these two fill the window.
+        # window); dead_letter yields its slot to a never-checked key.
         "crawl_rank_wave": q_crawl_rank_wave,
         "robots_filter": q_robots_filter,
-        # ------- post-freeze additions (position 51+, local gate + pytest
-        # ------- coverage; see tests/test_registry.py POST_FREEZE)
+        # positions 46-50: the first five post-freeze operators, never
+        # driver-checked. They slid into the window when the LM-training
+        # and audio/video queries were deleted and freed five slots
+        # (tests/test_registry.py POST_FREEZE no longer lists them).
         "scc": q_scc,
-        # --- position 51+: no driver row this round. Every key below is
-        # already driver-green in r3 (media/report rows) or r4 (the bulk
-        # family); all stay covered by the local gate + pytest.
-        # probe_train / ann_recall are NEW in sessions 10-11 but sit here
-        # rather than at the front: displacing any window row would cost a
-        # judge-requested driver record (VERDICT r4 #1); local gate +
-        # pytest cover them.
-        "probe_train": q_probe_train,
         "ann_recall": q_ann_recall,
-        "epoch_shuffle": q_epoch_shuffle,
         "triangle_count": q_triangle_count,
         "label_prop": q_label_prop,
         "trust_rank": q_trust_rank,
+        # --- position 51+: no driver row this round. These keys are
+        # either driver-green in r3 (media/report rows) or r4 (the bulk
+        # family), or post-freeze additions (tests/test_registry.py
+        # POST_FREEZE); all stay covered by the local gate + pytest.
         "bm25_rank": q_bm25_rank,
         "heavy_hitters": q_heavy_hitters,
         "kcore": q_kcore,
         "random_walks": q_random_walks,
         "crop_dedup": q_crop_dedup,
-        "pmi_pairs": q_pmi_pairs,
         "opic_priority": q_opic,
         "containment_dedup": q_containment,
         "border_crop": q_border_crop,
@@ -4693,14 +4072,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_pq": q_ann_pq,
         "compaction_plan": q_compaction_plan,
         "phrase_match": q_phrase_match,
-        "skipgram_pairs": q_skipgram,
         "c4_clean": q_c4_clean,
         "gram_novelty": q_gram_novelty,
-        "ppl_buckets": q_ppl_buckets,
         "mirror_detect": q_mirror_detect,
         "blur_detect": q_blur_detect,
         "channel_stats": q_channel_stats,
-        "bpe_encode": q_bpe_encode,
         "lsh_eval": q_lsh_eval,
         "novelty_budget": q_novelty_budget,
         "smart_crop": q_smart_crop,
@@ -4720,11 +4096,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cuckoo_stats": q_cuckoo_stats,
         "pivot_report": q_pivot_report,
         "distinct_hosts": q_distinct_hosts,
-        "video_frame_sample": q_video_frame_sample,
         "images_resize": q_images_resize,
-        "audio_features": q_audio_features,
         "aspect_buckets": q_aspect_buckets,
-        "chunk_documents": q_chunk_documents,
         "corpus_pipeline": q_corpus_pipeline,
         "dedup_incremental": q_dedup_incremental,
         "dedup_keep": q_dedup_keep,
@@ -4733,8 +4106,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_ann": q_image_ann,
         "image_dedup_keep": q_image_dedup_keep,
         "image_pipeline": q_image_pipeline,
-        "lm_score": q_lm_score,
-        "pack_sequences": q_pack_sequences,
         "stratified_sample": q_stratified_sample,
         "tfidf_terms": q_tfidf_terms,
         "ann_topk": q_ann_topk,
@@ -4774,29 +4145,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hyperball": q_hyperball,
         "cdc_chunks": q_cdc_chunks,
         "frontier_size": q_frontier_size,
-        "kn_bigram": q_kn_bigram,
         "resolve_refs": q_resolve_refs,
-        "isotonic_calib": q_isotonic_calib,
-        "leakage_split": q_leakage_split,
         "ucb_schedule": q_ucb_schedule,
-        "vocab_growth": q_vocab_growth,
         "percent_norm": q_percent_norm,
         "link_audit": q_link_audit,
         "politeness_audit": q_politeness_audit,
-        "shot_detect": q_shot_detect,
         "mmr_topk": q_mmr_topk,
-        "temperature_mix": q_temperature_mix,
-        "video_dedup": q_video_dedup,
         "rrf_fusion": q_rrf_fusion,
-        "ece_calib": q_ece_calib,
         "mojibake_detect": q_mojibake_detect,
         "tile_detect": q_tile_detect,
-        "keyframe_select": q_keyframe_select,
         "upscale_detect": q_upscale_detect,
-        "audio_gate": q_audio_gate,
         "caption_conflicts": q_caption_conflicts,
-        "freeze_detect": q_freeze_detect,
-        "oov_rate": q_oov_rate,
         "url_spam": q_url_spam,
         "dedup_cluster_stats": q_dedup_cluster_stats,
         "host_fairness": q_host_fairness,
@@ -4805,9 +4164,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "boilerplate_strip": q_boilerplate_strip,
         "psi_drift": q_psi_drift,
         "robots_delta": q_robots_delta,
-        "mix_plan": q_mix_plan,
         "hard_negatives": q_hard_negatives,
-        "video_pipeline": q_video_pipeline,
         "drain_plan": q_drain_plan,
         "hamming_certify": q_hamming_certify,
         "image_probe": q_image_probe,
@@ -4823,8 +4180,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # =====================================================================
 def _golden_sql() -> dict[str, str]:
     """Committed-golden twins (scripts/gen_goldens.py) for deterministic,
-    sf-independent queries whose kernels (bloom bitsets, PNG codec, PCM DSP,
-    the crawl wave) aren't SQL-expressible: the captured output renders as a
+    sf-independent queries whose kernels (bloom bitsets, PNG codec, the
+    crawl wave) aren't SQL-expressible: the captured output renders as a
     typed VALUES table, so the driver value-hashes them like any other query.
     Types are cast to the exact Spark column types (INTEGER/BIGINT/DOUBLE)
     so both engines hash identical renderings."""
@@ -5485,46 +4842,6 @@ FROM (
   FROM obs2 o2 JOIN pv USING (host)
 ) o
 """,
-        "pmi_pairs": rf"""
--- top-40 adjacent-token collocations by PMI = ln(c_ab·N_uni² / (N_bi·c_a·c_b)),
--- pair_count >= 3, total (pmi desc, lhs, rhs) order pins the cut; micro BIGINT
-WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
-tk AS (SELECT doc_id, string_split(t, ' ') AS toks FROM norm WHERE t <> ''),
-uni AS (SELECT u.w FROM tk, UNNEST(toks) AS u(w)),
-cu AS (SELECT w, COUNT(*) AS c FROM uni GROUP BY 1),
-nu AS (SELECT SUM(c) AS n_uni FROM cu),
-bi AS (
-  SELECT toks[g.i - 1] AS lhs, toks[g.i] AS rhs
-  FROM tk, UNNEST(generate_series(2, len(toks))) AS g(i)
-  WHERE len(toks) >= 2
-),
-cb AS (
-  SELECT lhs, rhs, COUNT(*) AS pair_count FROM bi GROUP BY 1, 2
-  HAVING COUNT(*) >= 3
-),
-nb AS (SELECT COUNT(*) AS n_bi FROM bi)
-SELECT cb.lhs, cb.rhs, cb.pair_count,
-  CAST(round(ln(
-    (cb.pair_count::DOUBLE * nu.n_uni * nu.n_uni) / (nb.n_bi::DOUBLE * a.c * b.c)
-  ) * 1000000) AS BIGINT) AS pmi_micro
-FROM cb JOIN cu a ON a.w = cb.lhs JOIN cu b ON b.w = cb.rhs
-CROSS JOIN nu CROSS JOIN nb
-ORDER BY pmi_micro DESC, cb.lhs ASC, cb.rhs ASC LIMIT 40
-""",
-        "bpe_pairs": r"""
-WITH words AS (
-  SELECT unnest(regexp_extract_all(lower(text), '(\w+|[^\w\s])', 1)) AS word FROM documents
-),
-wc AS (SELECT word, COUNT(*) AS wn FROM words GROUP BY word),
-pairs AS (
-  SELECT substring(word, i, 1) AS lhs, substring(word, i + 1, 1) AS rhs, wn
-  FROM wc, UNNEST(generate_series(1, length(word) - 1)) AS g(i)
-  WHERE length(word) >= 2
-)
-SELECT lhs, rhs, CAST(SUM(wn) AS BIGINT) AS pair_count
-FROM pairs GROUP BY lhs, rhs
-ORDER BY pair_count DESC, lhs ASC, rhs ASC LIMIT 50
-""",
         "segment_dedup": r"""
 WITH tok AS (
   SELECT doc_id,
@@ -5553,127 +4870,6 @@ SELECT t.doc_id,
   md5(COALESCE(r.clean_text, '')) AS clean_md5
 FROM tok t LEFT JOIN reb r USING (doc_id)
 """,
-        "probe_train": r"""
-WITH tok AS (
-  SELECT doc_id, CAST(lang = 'en' AS BIGINT) AS y,
-    CASE WHEN t = '' THEN CAST([] AS VARCHAR[]) ELSE string_split(t, ' ') END AS toks
-  FROM (SELECT doc_id, lang, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-        FROM documents)
-),
-uni AS (SELECT doc_id, y, unnest(toks) AS f FROM tok),
-bi AS (
-  SELECT doc_id, y, list_extract(toks, i + 1) || ' ' || list_extract(toks, i + 2) AS f
-  FROM tok, UNNEST(generate_series(0, len(toks) - 2)) AS u(i)
-  WHERE len(toks) >= 2
-),
-feats AS (SELECT doc_id, y, f FROM uni UNION ALL SELECT doc_id, y, f FROM bi),
-fb AS (
-  SELECT DISTINCT doc_id, y,
-    CAST(CAST(CAST(('0x' || substr(md5(f), 1, 8)) AS UBIGINT) & 2147483647 AS BIGINT) % 4096 AS INT)
-      AS bucket
-  FROM feats
-),
-g1 AS (
-  SELECT bucket, SUM(y) AS n_pos, 2 * SUM(y) - COUNT(*) AS w1
-  FROM fb GROUP BY bucket
-),
-z AS (
-  SELECT fb.doc_id, fb.y, SUM(g1.w1) AS zn
-  FROM fb JOIN g1 USING (bucket) GROUP BY fb.doc_id, fb.y
-),
-g2 AS (
-  SELECT fb.bucket, SUM(z.zn - 1024 * (2 * z.y - 1)) AS g2num
-  FROM fb JOIN z USING (doc_id) GROUP BY fb.bucket
-)
-SELECT g1.bucket,
-  CAST(g1.n_pos AS BIGINT) AS n_pos,
-  CAST(g1.w1 AS BIGINT) AS w1_num,
-  CAST(1024 * g1.w1 - g2.g2num AS BIGINT) AS w2_num
-FROM g1 JOIN g2 USING (bucket)
-""",
-        "dsir_weights": r"""
-WITH tok AS (
-  SELECT doc_id, (lang = 'en') AS tgt,
-    CASE WHEN t = '' THEN CAST([] AS VARCHAR[]) ELSE string_split(t, ' ') END AS toks
-  FROM (SELECT doc_id, lang, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-        FROM documents)
-),
-uni AS (SELECT doc_id, tgt, unnest(toks) AS f FROM tok),
-bi AS (
-  SELECT doc_id, tgt, list_extract(toks, i + 1) || ' ' || list_extract(toks, i + 2) AS f
-  FROM tok, UNNEST(generate_series(0, len(toks) - 2)) AS u(i)
-  WHERE len(toks) >= 2
-),
-feats AS (SELECT doc_id, tgt, f FROM uni UNION ALL SELECT doc_id, tgt, f FROM bi),
-fb AS (
-  SELECT doc_id,
-    CAST(CAST(CAST(('0x' || substr(md5(f), 1, 8)) AS UBIGINT) & 2147483647 AS BIGINT) % 4096 AS INT)
-      AS bucket,
-    CAST(tgt AS BIGINT) AS tgt
-  FROM feats
-),
-bc AS (SELECT bucket, COUNT(*) AS c_r, SUM(tgt) AS c_t FROM fb GROUP BY bucket),
-tot AS (SELECT COUNT(*) AS n_r, SUM(tgt) AS n_t FROM fb),
-lam AS (
-  SELECT bucket,
-    ln(c_t + 1) - ln(n_t + 4096.0) - ln(c_r + 1) + ln(n_r + 4096.0) AS lam
-  FROM bc, tot
-),
-agg AS (
-  SELECT fb.doc_id, COUNT(*) AS n_features, SUM(lam.lam) AS s
-  FROM fb JOIN lam USING (bucket) GROUP BY fb.doc_id
-),
-sc AS (
-  SELECT t.doc_id, CAST(COALESCE(a.n_features, 0) AS BIGINT) AS n_features,
-    CAST(COALESCE(round(a.s * 1000000), 0) AS BIGINT) AS logw_micro
-  FROM tok t LEFT JOIN agg a USING (doc_id)
-)
-SELECT doc_id, n_features, logw_micro,
-  CAST(CASE WHEN logw_micro >= 0 THEN 1 ELSE 0 END AS INT) AS keep
-FROM sc
-""",
-        "classifier_score": r"""
-WITH tok AS (
-  SELECT doc_id,
-    CASE WHEN t = '' THEN CAST([] AS VARCHAR[]) ELSE string_split(t, ' ') END AS toks
-  FROM (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM documents)
-),
-uni AS (SELECT doc_id, unnest(toks) AS f FROM tok),
-bi AS (
-  SELECT doc_id, list_extract(toks, i + 1) || ' ' || list_extract(toks, i + 2) AS f
-  FROM tok, UNNEST(generate_series(0, len(toks) - 2)) AS u(i)
-  WHERE len(toks) >= 2
-),
-feats AS (SELECT doc_id, f FROM uni UNION ALL SELECT doc_id, f FROM bi),
-w AS (
-  SELECT CAST(i AS INT) AS bucket,
-    CAST(CAST(('0x' || substr(md5('w-' || i::VARCHAR), 1, 8)) AS UBIGINT) & 2147483647 AS BIGINT)
-      % 2001 - 1000 AS w
-  FROM (SELECT unnest(range(4096)) AS i)
-),
-fb AS (
-  SELECT doc_id,
-    CAST(CAST(CAST(('0x' || substr(md5(f), 1, 8)) AS UBIGINT) & 2147483647 AS BIGINT) % 4096 AS INT)
-      AS bucket
-  FROM feats
-),
-agg AS (
-  SELECT fb.doc_id, COUNT(*) AS n_features, SUM(w.w) AS sw
-  FROM fb JOIN w USING (bucket) GROUP BY fb.doc_id
-),
-sc AS (
-  SELECT t.doc_id,
-    CAST(COALESCE(a.n_features, 0) AS BIGINT) AS n_features,
-    CAST(CASE WHEN COALESCE(a.n_features, 0) > 0
-         THEN (a.sw * 1000 - (((a.sw * 1000) % a.n_features + a.n_features) % a.n_features))
-              / a.n_features
-         ELSE 0 END AS BIGINT) AS score_milli
-  FROM tok t LEFT JOIN agg a USING (doc_id)
-)
-SELECT doc_id, n_features, score_milli,
-  CAST(CASE WHEN score_milli >= 0 THEN 1 ELSE 0 END AS INT) AS keep
-FROM sc
-""",
         "adaptive_backoff": r"""
 WITH ev AS (
   SELECT event_id, ts, 'host-' || (user_id % 50)::VARCHAR AS host,
@@ -5699,16 +4895,6 @@ SELECT event_id, host, ok, CAST(consec AS INT) AS consec_errors,
   CAST(CASE WHEN ok = 1 THEN 1000
        ELSE (CAST(1000 AS BIGINT) << least(consec, 6)) END AS BIGINT) AS next_delay_ms
 FROM c
-""",
-        "vocab_topk": rf"""
-WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
-tok AS (
-  SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm WHERE t <> ''
-)
-SELECT token, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS doc_freq
-FROM tok GROUP BY token
-ORDER BY tf DESC, token ASC
-LIMIT 25
 """,
         "scc": scc_oracle_sql(
             "SELECT o_orderkey % 11 AS src, (o_orderkey % 11 + 1) % 11 AS dst FROM orders "
@@ -5882,32 +5068,6 @@ JOIN sizes sa ON sa.doc_id = i.id_a
 JOIN sizes sb ON sb.doc_id = i.id_b
 WHERE greatest((i.n_inter * 1000000) // sa.n,
                (i.n_inter * 1000000) // sb.n) >= 800000
-""",
-        "skipgram_pairs": rf"""
--- top-50 skip-gram pairs, ±3 window, weight = sum(1000 // d); total
--- (weight desc, center, context) order pins the cut — mirrors the Spark
--- offset-explode + equi-join exactly (pair multiset identical)
-WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
-tk AS (SELECT doc_id, string_split(t, ' ') AS toks FROM norm WHERE t <> ''),
-tr AS (
-  SELECT doc_id, g.i - 1 AS pos, toks[g.i] AS tok
-  FROM tk, UNNEST(generate_series(1, len(toks))) AS g(i)
-),
-pairs AS (
-  SELECT a.tok AS center, b.tok AS context,
-    1000 // abs(b.pos - a.pos) AS w
-  FROM tr a JOIN tr b
-    ON a.doc_id = b.doc_id
-   AND b.pos BETWEEN a.pos - 3 AND a.pos + 3
-   AND b.pos <> a.pos
-),
-agg AS (
-  SELECT center, context, COUNT(*)::BIGINT AS n_pairs,
-    SUM(w)::BIGINT AS weight_milli
-  FROM pairs GROUP BY 1, 2 HAVING COUNT(*) >= 3
-)
-SELECT center, context, n_pairs, weight_milli FROM agg
-ORDER BY weight_milli DESC, center ASC, context ASC LIMIT 50
 """,
         "phrase_match": rf"""
 -- positional phrase search for 'slow hash batch': token at pos p matching
@@ -6567,26 +5727,6 @@ SELECT doc_id, term, tf, score_micro,
 FROM scored
 QUALIFY rank <= 5
 """,
-        "chunk_documents": rf"""
--- context-window chunking: chunk i = tokens [i*56+1 .. i*56+64] (1-based,
--- step = max_tokens - overlap = 56); >=1 chunk per non-empty doc; content
--- checked via md5 of the space-joined window
-WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
-tk AS (SELECT doc_id, string_split(t, ' ') AS toks FROM norm WHERE t <> ''),
-nc AS (
-  SELECT doc_id, toks,
-    greatest(1, CAST(ceil((len(toks) - 8) / 56.0) AS INT)) AS n_chunks
-  FROM tk
-),
-idx AS (
-  SELECT doc_id, toks, u.chunk_idx
-  FROM nc, UNNEST(generate_series(0, n_chunks - 1)) AS u(chunk_idx)
-)
-SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-  len(toks[(chunk_idx * 56 + 1):(chunk_idx * 56 + 64)]) AS n_tokens,
-  md5(array_to_string(toks[(chunk_idx * 56 + 1):(chunk_idx * 56 + 64)], ' ')) AS chunk_md5
-FROM idx
-""",
         "alignment_filter": """
 -- CLIP-score-style alignment filter: row-wise cosine over paired embedding
 -- columns (double math, micro-unit BIGINT contract, zero-denominator -> 0),
@@ -6644,70 +5784,6 @@ SELECT image_id, CAST(w AS INT) AS w, CAST(h AS INT) AS h,
   CAST((greatest(bucket_w, (w * bucket_h + h - 1) // h) - bucket_w) // 2 AS INT) AS crop_x,
   CAST((greatest(bucket_h, (h * bucket_w + w - 1) // w) - bucket_h) // 2 AS INT) AS crop_y
 FROM scored WHERE rk = 1
-""",
-        "pack_sequences": rf"""
--- concat-and-split packing: the corpus is one virtual token stream in
--- (md5-shard, doc_id, chunk_idx) order, cut every 512 tokens; a chunk's
--- stream span [gs, ge) maps to sequences gs//512 .. (ge-1)//512
-WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
-tk AS (SELECT doc_id, string_split(t, ' ') AS toks FROM norm WHERE t <> ''),
-nc AS (
-  SELECT doc_id, toks,
-    greatest(1, CAST(ceil((len(toks) - 8) / 56.0) AS INT)) AS n_chunks
-  FROM tk
-),
-idx AS (
-  SELECT doc_id, toks, u.chunk_idx
-  FROM nc, UNNEST(generate_series(0, n_chunks - 1)) AS u(chunk_idx)
-),
-ch AS (
-  SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-    len(toks[(chunk_idx * 56 + 1):(chunk_idx * 56 + 64)]) AS n_tokens,
-    md5(array_to_string(toks[(chunk_idx * 56 + 1):(chunk_idx * 56 + 64)], ' ')) AS chunk_md5
-  FROM idx
-),
-sh AS (
-  SELECT *,
-    CAST(CAST(('0x' || substr(md5('pack' || doc_id::VARCHAR), 1, 8)) AS UBIGINT) % 8 AS INT) AS shard
-  FROM ch WHERE n_tokens > 0
-),
-cum AS (
-  SELECT *, CAST(SUM(n_tokens) OVER (
-    PARTITION BY shard ORDER BY doc_id, chunk_idx ROWS UNBOUNDED PRECEDING
-  ) AS BIGINT) AS e FROM sh
-),
-tot AS (SELECT shard, SUM(n_tokens) AS t FROM sh GROUP BY shard),
-offs AS (
-  SELECT shard, CAST(COALESCE(SUM(t) OVER (
-    ORDER BY shard ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-  ), 0) AS BIGINT) AS o FROM tot
-),
-g AS (
-  SELECT c.doc_id, c.chunk_idx, c.n_tokens, c.chunk_md5,
-    o.o + c.e - c.n_tokens AS gs, o.o + c.e AS ge
-  FROM cum c JOIN offs o USING (shard)
-),
-x AS (
-  SELECT g.*, u.seq_id FROM g,
-    UNNEST(generate_series(gs // 512, (ge - 1) // 512)) AS u(seq_id)
-)
-SELECT doc_id, chunk_idx, n_tokens, chunk_md5, seq_id,
-  CAST(greatest(gs, seq_id * 512) - seq_id * 512 AS INT) AS offset_in_seq,
-  CAST(greatest(gs, seq_id * 512) - gs AS INT) AS offset_in_chunk,
-  CAST(least(ge, (seq_id + 1) * 512) - greatest(gs, seq_id * 512) AS INT) AS n_seq_tokens
-FROM x
-""",
-        "lm_score": rf"""
--- self-trained unigram LM: nll = -avg(ln(count(term)/total_tokens)) per doc
-WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
-tk AS (SELECT doc_id, string_split(t, ' ') AS toks FROM norm WHERE t <> ''),
-term_rows AS (SELECT doc_id, u.term FROM tk, UNNEST(toks) AS u(term)),
-counts AS (SELECT term, COUNT(*) AS cnt FROM term_rows GROUP BY term),
-total AS (SELECT COUNT(*) AS total FROM term_rows)
-SELECT r.doc_id, COUNT(*) AS n_tokens,
-  CAST(round(-AVG(ln(c.cnt::DOUBLE / t.total)) * 1000000) AS BIGINT) AS nll_micro
-FROM term_rows r JOIN counts c USING (term) CROSS JOIN total t
-GROUP BY r.doc_id
 """,
         "c4_clean": rf"""
 -- plant 5-token lines with (doc_id+i)-keyed decorations, then replay the
@@ -7051,31 +6127,6 @@ SELECT s.query_id, CAST(dcg_micro AS BIGINT) AS dcg_micro,
   CAST(idcg_micro AS BIGINT) AS idcg_micro,
   CAST((dcg_micro * 1000000) // idcg_micro AS BIGINT) AS ndcg_micro
 FROM sysd s JOIN ideal USING (query_id) WHERE idcg_micro > 0
-""",
-        "ppl_buckets": rf"""
--- lm_score's unigram-NLL CTE + exact-integer ntile per language
-WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
-tk AS (SELECT doc_id, string_split(t, ' ') AS toks FROM norm WHERE t <> ''),
-term_rows AS (SELECT doc_id, u.term FROM tk, UNNEST(toks) AS u(term)),
-counts AS (SELECT term, COUNT(*) AS cnt FROM term_rows GROUP BY term),
-total AS (SELECT COUNT(*) AS total FROM term_rows),
-scored AS (
-  SELECT r.doc_id, COUNT(*) AS n_tokens,
-    CAST(round(-AVG(ln(c.cnt::DOUBLE / t.total)) * 1000000) AS BIGINT) AS nll_micro
-  FROM term_rows r JOIN counts c USING (term) CROSS JOIN total t
-  GROUP BY r.doc_id
-),
-j AS (
-  SELECT s.doc_id, d.lang, s.n_tokens, s.nll_micro,
-    row_number() OVER (PARTITION BY d.lang ORDER BY s.nll_micro, s.doc_id) AS rn,
-    COUNT(*) OVER (PARTITION BY d.lang) AS n
-  FROM scored s JOIN documents d USING (doc_id)
-)
-SELECT doc_id, lang, n_tokens, nll_micro,
-  CASE WHEN rn * 3 <= n THEN 'head'
-       WHEN rn * 3 <= n * 2 THEN 'middle'
-       ELSE 'tail' END AS bucket
-FROM j
 """,
         "mirror_detect": rf"""
 WITH f AS (SELECT doc_id, md5({norm}) AS fp FROM documents),
@@ -7685,24 +6736,6 @@ SELECT day, event_type, n, rnk,
   rnk - lag(rnk) OVER (PARTITION BY event_type ORDER BY day) AS delta
 FROM r
 """,
-        "mixture_sample": """
-WITH w(source, rate) AS (
-  VALUES ('src0', 2.5), ('src1', 1.5), ('src2', 1.0), ('src3', 0.5), ('src4', 0.25)
-),
-b AS (
-  SELECT d.doc_id, d.source, w.rate,
-    CAST(CAST(('0x' || substr(md5('mix' || d.doc_id::VARCHAR), 1, 8)) AS UBIGINT) % 10000 AS INT) AS bucket
-  FROM documents d JOIN w USING (source)
-),
-n AS (
-  SELECT doc_id, source,
-    CAST(FLOOR(rate) AS INT)
-      + CASE WHEN bucket < CAST(FLOOR((rate % 1.0) * 10000) AS INT) THEN 1 ELSE 0 END AS n_copies
-  FROM b
-)
-SELECT doc_id, source, UNNEST(generate_series(1, n_copies)) AS copy
-FROM n WHERE n_copies > 0
-""",
         "negative_pairs": """
 WITH b AS (
   SELECT doc_id,
@@ -7830,20 +6863,6 @@ FROM r WHERE sample_rank <= 5
 """,
         "ann_lsh": _ann_lsh_sql(),
         "ann_recall": _ann_recall_sql(),
-        "epoch_shuffle": """
-WITH k AS (
-  SELECT doc_id, md5('epoch:7:' || CAST(doc_id AS VARCHAR)) AS key FROM documents
-),
-s AS (
-  SELECT doc_id, key,
-    CAST((CAST(('0x' || substr(key, 1, 8)) AS UBIGINT) * 32) >> 32 AS INT) AS shard
-  FROM k
-)
-SELECT doc_id, shard,
-  CAST(row_number() OVER (PARTITION BY shard ORDER BY key, doc_id) AS BIGINT) AS pos_in_shard,
-  CAST(row_number() OVER (ORDER BY key, doc_id) - 1 AS BIGINT) AS global_pos
-FROM s
-""",
         "hll_distinct": _hll_distinct_sql(),
         "hyperball": _hyperball_sql(),
         "cdc_chunks": _cdc_chunks_sql(),
@@ -7867,31 +6886,6 @@ SELECT host,
   CAST((f1 * (f1 - 1)) // (2 * (f2 + 1)) AS BIGINT) AS unseen_est,
   CAST(((n_captures - f1) * 1000000) // n_captures AS BIGINT) AS coverage_micro
 FROM agg
-""",
-        "kn_bigram": rf"""
--- interpolated Kneser-Ney bigram LM, self-trained, d = 750/1000
-WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
-tk AS (SELECT doc_id, string_split(t, ' ') AS toks FROM norm WHERE t <> ''),
-bg AS (
-  SELECT doc_id, list_extract(toks, i) AS w1, list_extract(toks, i + 1) AS w2
-  FROM tk, UNNEST(generate_series(1, len(toks) - 1)) AS u(i)
-  WHERE len(toks) >= 2
-),
-c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY w1, w2),
-lft AS (SELECT w1, SUM(c12) AS c1, COUNT(*) AS n1plus_fw FROM c12 GROUP BY w1),
-cont AS (SELECT w2, COUNT(*) AS cont FROM c12 GROUP BY w2),
-types AS (SELECT COUNT(*) AS t_types FROM c12),
-lm AS (
-  SELECT c.w1, c.w2,
-    (c.c12 - 750::DOUBLE / 1000.0) / l.c1
-      + (750::DOUBLE / 1000.0) * l.n1plus_fw / l.c1 * (r.cont::DOUBLE / t.t_types)
-      AS p
-  FROM c12 c JOIN lft l USING (w1) JOIN cont r USING (w2) CROSS JOIN types t
-)
-SELECT b.doc_id, COUNT(*) AS n_bigrams,
-  CAST(round(-AVG(ln(m.p)) * 1000000) AS BIGINT) AS nll_micro
-FROM bg b JOIN lm m ON b.w1 = m.w1 AND b.w2 = m.w2
-GROUP BY b.doc_id
 """,
         "resolve_refs": r"""
 -- RFC 3986 §5.2.2 reference resolution; §5.2.4 as a recursive segment stack
@@ -7982,67 +6976,6 @@ FROM walk w JOIN segs s2 ON s2.id = w.id AND w.i = len(s2.sg)
 UNION ALL
 SELECT id AS o_orderkey, NULL AS resolved_url FROM tgt WHERE s IS NULL
 """,
-        "isotonic_calib": """
--- PAV via the minimax characterization, exact integer micro means
-WITH scored AS (
-  SELECT CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) % 100 AS BIGINT) AS s,
-    CASE WHEN doc_id % 100 <
-      CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) % 100
-    THEN 1 ELSE 0 END AS y
-  FROM documents
-),
-rng AS (SELECT MIN(s) AS lo, MAX(s) AS hi FROM scored),
-b AS (SELECT CAST(((s - lo) * 16) // (hi - lo + 1) AS INT) AS bucket, y FROM scored, rng),
-bkt AS (SELECT bucket, COUNT(*) AS n, SUM(y) AS pos FROM b GROUP BY bucket),
-pre AS (
-  SELECT bucket, n, pos,
-    SUM(n) OVER (ORDER BY bucket) AS cw,
-    SUM(pos) OVER (ORDER BY bucket) AS cy
-  FROM bkt
-),
-pairs AS (
-  SELECT l.bucket AS j, h.bucket AS k,
-    ((h.cy - (l.cy - l.pos)) * 1000000) // (h.cw - (l.cw - l.n)) AS a_micro
-  FROM pre l JOIN pre h ON l.bucket <= h.bucket
-),
-mins AS (
-  SELECT p.j, t.bucket AS i, MIN(p.a_micro) AS m
-  FROM pairs p JOIN bkt t ON p.j <= t.bucket AND p.k >= t.bucket
-  GROUP BY p.j, t.bucket
-),
-fitted AS (SELECT i, MAX(m) AS fitted_micro FROM mins GROUP BY i)
-SELECT b2.bucket, CAST(b2.n AS BIGINT) AS n, CAST(b2.pos AS BIGINT) AS pos,
-  CAST((b2.pos * 1000000) // b2.n AS BIGINT) AS rate_micro,
-  CAST(f.fitted_micro AS BIGINT) AS fitted_micro
-FROM bkt b2 JOIN fitted f ON f.i = b2.bucket
-""",
-        "leakage_split": rf"""
--- near-dup components -> md5 split units (98/1/1); closure is exact
-WITH RECURSIVE {minhash_pairs_ctes},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-),
-reach(id, lbl) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id
-),
-grp AS (SELECT id AS doc_id, MIN(lbl) AS group_id FROM reach GROUP BY id),
-base AS (
-  SELECT d.doc_id, COALESCE(g.group_id, d.doc_id) AS group_id
-  FROM documents d LEFT JOIN grp g USING (doc_id)
-)
-SELECT doc_id, group_id,
-  CASE
-    WHEN CAST(('0x' || substr(md5('split' || CAST(group_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 100 < 98
-      THEN 'train'
-    WHEN CAST(('0x' || substr(md5('split' || CAST(group_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 100 < 99
-      THEN 'val'
-    ELSE 'test' END AS split
-FROM base
-""",
         "ucb_schedule": """
 -- UCB1 per host: exact integer mean + micro-rounded confidence radius
 WITH log AS (
@@ -8060,52 +6993,6 @@ SELECT host,
   CAST((sum_reward * 1000000) // n_waves AS BIGINT)
     + CAST(round(sqrt(2.0 * ln(n_total) / n_waves) * 1000000) AS BIGINT) AS ucb_micro
 FROM ph CROSS JOIN tot
-""",
-        "vocab_growth": rf"""
--- Heaps-law fit over 10 discovery-order checkpoints
-WITH base AS (
-  SELECT doc_id AS _id,
-    CASE WHEN t = '' THEN CAST([] AS VARCHAR[]) ELSE string_split(t, ' ') END AS tk
-  FROM (SELECT doc_id, {norm} AS t FROM documents)
-),
-rng AS (SELECT MIN(_id) AS lo, MAX(_id) AS hi FROM base),
-docs AS (
-  SELECT CAST(((_id - lo) * 10) // (hi - lo + 1) AS INT) AS b, len(tk) AS n, tk
-  FROM base, rng
-),
-tpb AS (SELECT b, SUM(n) AS toks FROM docs GROUP BY b),
-firstb AS (
-  SELECT fb AS b, COUNT(*) AS vocab FROM (
-    SELECT u.term, MIN(b) AS fb FROM docs, UNNEST(tk) AS u(term) GROUP BY u.term
-  ) GROUP BY fb
-),
-cells AS (
-  SELECT COALESCE(t.b, f.b) AS b, COALESCE(t.toks, 0) AS toks,
-         COALESCE(f.vocab, 0) AS vocab
-  FROM tpb t FULL JOIN firstb f ON t.b = f.b
-),
-cum AS (
-  SELECT b, SUM(toks) OVER (ORDER BY b) AS tokens_cum,
-         SUM(vocab) OVER (ORDER BY b) AS vocab_cum
-  FROM cells QUALIFY tokens_cum > 0
-),
-fit AS (
-  SELECT
-    CAST(round((sxy - sx * sy / m) / (sxx - sx * sx / m) * 1000000) AS BIGINT)
-      AS slope_micro,
-    CAST(round((sy / m - (sxy - sx * sy / m) / (sxx - sx * sx / m) * sx / m)
-      * 1000000) AS BIGINT) AS lnk_micro
-  FROM (
-    SELECT CAST(COUNT(*) AS DOUBLE) AS m,
-      SUM(ln(tokens_cum)) AS sx, SUM(ln(vocab_cum)) AS sy,
-      SUM(ln(tokens_cum) * ln(vocab_cum)) AS sxy,
-      SUM(ln(tokens_cum) * ln(tokens_cum)) AS sxx
-    FROM cum
-  )
-)
-SELECT b, CAST(tokens_cum AS BIGINT) AS tokens_cum,
-  CAST(vocab_cum AS BIGINT) AS vocab_cum, slope_micro, lnk_micro
-FROM cum CROSS JOIN fit
 """,
         "percent_norm": r"""
 -- RFC 3986 6.2.2: decode unreserved escapes, uppercase the rest
@@ -8187,7 +7074,7 @@ FROM g GROUP BY host
         "rrf_fusion": rf"""
 -- RRF = SUM(1000000 // (60 + rank)) over two real rankers: BM25 (two fixed
 -- term queries, bm25_rank's exact arithmetic) + corpus-LM fluency (-nll,
--- lm_score's arithmetic, shared across queries); ranks by (score DESC, doc
+-- unigram_nll's arithmetic, shared across queries); ranks by (score DESC, doc
 -- ASC), per-ranker lists capped at 40, fused top-10 per query — all-BIGINT
 WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
 tk AS (SELECT doc_id, string_split(t, ' ') AS toks FROM norm WHERE t <> ''),
@@ -8266,54 +7153,7 @@ SELECT doc_id,
   n_hits >= 2 AS is_mojibake
 FROM corr
 """,
-        "ece_calib": """
--- ECE = (SUM_b |1000*pos_b - SUM(p)_b| * 1000) // N, one final integer
--- division (no per-bin rounding compounds); same md5/label world as
--- isotonic_calib with bin-center probabilities p_milli = 10*s + 5
-WITH scored AS (
-  SELECT CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) % 100 AS BIGINT) * 10 + 5 AS p,
-    CASE WHEN doc_id % 100 <
-      CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) % 100
-    THEN 1 ELSE 0 END AS y
-  FROM documents
-),
-b AS (SELECT LEAST((p * 10) // 1001, 9) AS bin, p, y FROM scored),
-bins AS (
-  SELECT bin, COUNT(*) AS n, SUM(y) AS pos, SUM(p) AS sp FROM b GROUP BY bin
-),
-pre AS (
-  SELECT bin, n, pos,
-    sp // n AS conf_milli,
-    (pos * 1000) // n AS acc_milli,
-    abs(1000 * pos - sp) AS gap_num
-  FROM bins
-),
-tot AS (SELECT SUM(n) AS nt, SUM(gap_num) AS gt FROM pre)
-SELECT CAST(bin AS INT) AS bin, CAST(n AS BIGINT) AS n, CAST(pos AS BIGINT) AS pos,
-  CAST(conf_milli AS BIGINT) AS conf_milli, CAST(acc_milli AS BIGINT) AS acc_milli,
-  CAST(gap_num AS BIGINT) AS gap_num,
-  CAST((t.gt * 1000) // t.nt AS BIGINT) AS ece_micro
-FROM pre CROSS JOIN tot t
-""",
-        "temperature_mix": """
--- q_l ∝ p_l^0.7 with exact-integer p and micro-rounded pow terms
-WITH counts AS (SELECT lang AS stratum, COUNT(*) AS n_docs FROM documents GROUP BY lang),
-tot AS (SELECT SUM(n_docs) AS n_total FROM counts),
-withp AS (
-  SELECT stratum, n_docs, n_total,
-    pow(n_docs / CAST(n_total AS DOUBLE), 700::DOUBLE / 1000.0) AS qraw
-  FROM counts, tot
-),
-z AS (SELECT SUM(qraw) AS z FROM withp)
-SELECT stratum, CAST(n_docs AS BIGINT) AS n_docs,
-  CAST((n_docs * 1000000) // n_total AS BIGINT) AS p_micro,
-  CAST(round(qraw / z.z * 1000000) AS BIGINT) AS q_micro,
-  CAST(round((qraw / z.z) / (n_docs / CAST(n_total AS DOUBLE)) * 1000) AS BIGINT)
-    AS boost_milli
-FROM withp, z
-""",
         "caption_conflicts": _caption_conflicts_sql(),
-        "freeze_detect": _freeze_detect_sql(),
         "hamming_certify": r"""
 -- same md5 60-bit world + exact-distance companions; exhaustive n²
 -- bit_count truth vs the same truth restricted... the BLOCKED side is
@@ -8411,28 +7251,6 @@ negs AS (
 SELECT n.query_id, n.neighbor_id, CAST(n.neg_rank AS INT) AS neg_rank,
   n.cos_sim_micro, e.n_excluded
 FROM negs n JOIN excl e USING (query_id)
-""",
-        "mix_plan": r"""
--- same weight spec (sums to 997 — renormalization exercised), same
--- char-count inventories, exact integer plan arithmetic
-WITH strata AS (
-  SELECT lang AS source, SUM(n_chars) AS n_tokens,
-    CASE lang WHEN 'en' THEN 600 WHEN 'zh' THEN 120 WHEN 'es' THEN 100
-              WHEN 'de' THEN 90 ELSE 87 END AS weight_milli
-  FROM documents GROUP BY lang
-),
-ws AS (SELECT SUM(weight_milli) AS wsum FROM strata),
-plan AS (
-  SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens,
-    CAST(weight_milli AS BIGINT) AS weight_milli,
-    CAST((150000 * weight_milli) // ws.wsum AS BIGINT) AS target_tokens
-  FROM strata CROSS JOIN ws
-)
-SELECT *,
-  CAST((target_tokens * 1000000) // greatest(n_tokens, 1) AS BIGINT) AS sample_rate_ppm,
-  CAST((target_tokens * 1000) // greatest(n_tokens, 1) AS BIGINT) AS n_epochs_milli,
-  (target_tokens * 1000000) // greatest(n_tokens, 1) > 1000000 AS oversampled
-FROM plan
 """,
         "robots_delta": r"""
 -- both rule snapshots evaluated with the robots_rfc precedence (longest
@@ -8707,27 +7525,6 @@ SELECT *,
    OR digit_milli >= 400 OR max_seg_repeat >= 3) AS is_spam
 FROM sig
 """,
-        "oov_rate": rf"""
-WITH norm AS (SELECT doc_id, {norm} AS t FROM documents),
-tok AS (
-  SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM norm WHERE t <> ''
-),
-vocab AS (
-  SELECT token FROM (
-    SELECT token, COUNT(*) AS tf FROM tok GROUP BY token
-    ORDER BY tf DESC, token ASC LIMIT 50
-  )
-)
-SELECT t.doc_id,
-  CAST(COUNT(*) AS BIGINT) AS n_tokens,
-  CAST(SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-  CAST((SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) * 1000000) // COUNT(*)
-       AS BIGINT) AS oov_ppm,
-  (SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) * 1000000) // COUNT(*)
-    >= 400000 AS high_oov
-FROM tok t LEFT JOIN vocab v USING (token)
-GROUP BY t.doc_id
-""",
         **_golden_sql(),
     }
 
@@ -8766,40 +7563,6 @@ SELECT f.image_id, f.phash, f.caption_fp,
 FROM fp f
 JOIN bycap b USING (caption_fp)
 JOIN byph p USING (phash)
-"""
-
-
-def _freeze_detect_sql(min_run: int = 8) -> str:
-    """Twin of q_freeze_detect: the SAME _freeze_world_rows world as a
-    VALUES table, islands numbered with DuckDB window functions."""
-    values = ",\n".join(f"('{v}', {i}, {p})" for v, i, p in _freeze_world_rows())
-    return f"""
-WITH frames(video_id, frame_idx, phash) AS (VALUES
-{values}
-),
-lagd AS (
-  SELECT video_id, frame_idx,
-    CASE WHEN lag(phash) OVER w IS NULL OR lag(phash) OVER w <> phash
-         THEN 1 ELSE 0 END AS new_run,
-    CASE WHEN lag(phash) OVER w = phash THEN 1 ELSE 0 END AS frozen
-  FROM frames WINDOW w AS (PARTITION BY video_id ORDER BY frame_idx)
-),
-runs AS (
-  SELECT video_id, frozen,
-    SUM(new_run) OVER (PARTITION BY video_id ORDER BY frame_idx) AS run_id
-  FROM lagd
-),
-runlen AS (
-  SELECT video_id, run_id, COUNT(*) AS rl, SUM(frozen) AS fr
-  FROM runs GROUP BY video_id, run_id
-)
-SELECT video_id,
-  CAST(SUM(rl) AS BIGINT) AS n_frames,
-  CAST(SUM(fr) AS BIGINT) AS n_frozen,
-  CAST((SUM(fr) * 1000000) // SUM(rl) AS BIGINT) AS frozen_ppm,
-  CAST(MAX(rl) AS BIGINT) AS longest_run,
-  MAX(rl) >= {min_run} AS is_frozen
-FROM runlen GROUP BY video_id
 """
 
 

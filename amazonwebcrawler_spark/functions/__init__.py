@@ -3,7 +3,6 @@ vectorized pandas UDFs. Nothing in here touches driver-side state."""
 
 from amazonwebcrawler_spark.functions.urls import (  # noqa: F401
     canonicalize_url,
-    url_hash,
     url_host,
 )
 from amazonwebcrawler_spark.functions.rank import (  # noqa: F401

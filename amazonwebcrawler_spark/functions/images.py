@@ -112,6 +112,34 @@ def decode_image(data: bytes) -> np.ndarray:
     )
 
 
+# ------------------------------------------------------------------ resize
+def resize_pixels(px: np.ndarray, w: int, h: int) -> np.ndarray:
+    """Nearest-neighbour resize (h_out, w_out) — real, pure numpy."""
+    ys = (np.arange(h) * px.shape[0]) // h
+    xs = (np.arange(w) * px.shape[1]) // w
+    return px[np.ix_(ys, xs)]
+
+
+def resize_images_kernel(target_w: int, target_h: int, out_fmt: str = "png"):
+    """mapInPandas kernel factory: (image_id, bytes) → resized (image_id,
+    bytes, w, h). Decode → resize → re-encode inside the Arrow batch."""
+    import pandas as pd
+
+    def kernel(batches):
+        for pdf in batches:
+            rows = []
+            for image_id, data in zip(pdf["image_id"], pdf["bytes"]):
+                px = resize_pixels(decode_image(bytes(data)), target_w, target_h)
+                out = encode_png(px) if out_fmt == "png" else encode_jpeg(px)
+                rows.append({"image_id": image_id, "bytes": out, "w": target_w, "h": target_h})
+            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h"])
+
+    return kernel
+
+
+RESIZED_SCHEMA = "image_id string, bytes binary, w int, h int"
+
+
 # ----------------------------------------------------------------- metrics
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     """Peak signal-to-noise ratio in dB between two uint8 images."""
@@ -940,15 +968,13 @@ def probe_weights(dim: int = 48, seed: int = 424242) -> list:
 
 def probe_score_kernel(weights: list, bias_micro: int):
     """ONE Arrow pass ``(image_id, bytes) → (image_id, logit_micro)`` —
-    the image-side model-scored gate (classifier_score's sibling for
-    the image axis): decode once, grid-mean embed (:func:`embed_image`
-    — swap for a real encoder and nothing else changes), then a
-    SEQUENTIAL float dot (fixed order, IEEE deterministic — never
-    BLAS) against the broadcast probe weights; emitted as one
-    micro-rounded BIGINT logit. The keep verdict compares the logit
-    against ZERO JVM-side — sign(logit) ≡ sigmoid ≥ 0.5 with no exp
-    to drift. Undecodable bytes yield zero rows (validate owns the
-    corrupt signal)."""
+    the image-side model-scored gate: decode once, grid-mean embed
+    (:func:`embed_image` — swap for a real encoder and nothing else
+    changes), then a SEQUENTIAL float dot (fixed order, IEEE deterministic —
+    never BLAS) against the broadcast probe weights; emitted as one
+    micro-rounded BIGINT logit. The keep verdict compares the logit against
+    ZERO JVM-side — sign(logit) ≡ sigmoid ≥ 0.5 with no exp to drift.
+    Undecodable bytes yield zero rows (validate owns the corrupt signal)."""
     import pandas as pd
 
     def gen(batches):

@@ -81,11 +81,11 @@ def plan_compaction(
     partition's concatenated byte stream falls in the same target-sized
     window. Every group's total is < target + max_file_bytes (a file that
     straddles a boundary joins the group where it starts) — the same
-    bounded-overshoot contract as GPT-style sequence packing
-    (`text.pack_sequences`), and unlike greedy first-fit it is a pure
-    function of (partition, file order), so the plan is reproducible and
-    windowable: one partition-local running-sum window + one group-stats
-    window, ZERO joins, zero driver state, no global sort.
+    bounded-overshoot contract as GPT-style sequence packing, and unlike
+    greedy first-fit it is a pure function of (partition, file order), so
+    the plan is reproducible and windowable: one partition-local running-sum
+    window + one group-stats window, ZERO joins, zero driver state, no
+    global sort.
 
     ``rewrite`` marks groups worth rewriting: more than one file, or a
     single file well under target (half) — a lone already-compact file is

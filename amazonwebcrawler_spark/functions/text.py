@@ -44,7 +44,7 @@ def bind_once(col: Column, body) -> Column:
     higher-order-function lambda: Catalyst's subexpression elimination
     skips any expression containing a lambda variable, so an outer capture
     re-evaluates the whole tree per element — O(n²) work for a per-index
-    slice over a tokenization (measured 10× on classifier_score before
+    slice over a tokenization (measured 10× on a hashed-feature scorer before
     this idiom). ``F.get(..., 0)`` keeps NULL inputs NULL-propagating
     exactly as direct evaluation would."""
     return F.get(F.transform(F.array(col), body), 0)
@@ -125,11 +125,6 @@ def quality_score_raw(text: Column) -> Column:
     punct_pen = F.greatest(F.lit(0.0), F.lit(1.0) - punct_ratio(text) * 4)
     stop_score = F.least(stopword_ratio(text) * 5, F.lit(1.0))
     return len_score * 0.4 + punct_pen * 0.3 + stop_score * 0.3
-
-
-def quality_score(text: Column) -> Column:
-    """6dp-rounded :func:`quality_score_raw` — kept for float consumers."""
-    return F.round(quality_score_raw(text), 6)
 
 
 def quality_filter(text: Column) -> Column:
@@ -366,130 +361,6 @@ def unigram_nll(df, text_col: str, id_col: str):
     )
 
 
-def chunk_documents(df, text_col: str, id_col: str, max_tokens: int = 64, overlap: int = 8):
-    """Context-window chunking: split each document into fixed-size token
-    windows with ``overlap`` tokens of shared context between consecutive
-    chunks — the stage between curation and tokenization that turns a
-    cleaned corpus into training sequences.
-
-    Chunk ``i`` covers tokens ``[i·step, i·step + max_tokens)`` with
-    ``step = max_tokens − overlap``; every NON-EMPTY document yields at
-    least one chunk (short docs are a single partial window, empty or
-    whitespace-only docs yield none) and every token is in ≥1 chunk. Returns (doc_id, chunk_idx, n_tokens, chunk_md5) — the
-    digest value-checks chunk CONTENT without shipping the text, and the
-    pipeline that wants the text itself swaps ``chunk_md5`` for the
-    ``concat_ws`` column. Pure column math: tokenize once, explode a
-    per-doc chunk-index sequence, slice — no shuffle at all until the
-    caller aggregates.
-    """
-    if overlap >= max_tokens:
-        raise ValueError(f"overlap must be < max_tokens, got {overlap} >= {max_tokens}")
-    step = max_tokens - overlap
-    toks = tokens(F.col(text_col))
-    n = F.size(toks)
-    n_chunks = F.greatest(
-        F.lit(1), F.ceil((n - F.lit(overlap)) / F.lit(float(step))).cast("int")
-    )
-    chunked = df.select(
-        F.col(id_col).alias("doc_id"), toks.alias("_toks"), n_chunks.alias("_nc")
-    ).filter(F.size("_toks") > 0).select(
-        "doc_id",
-        "_toks",
-        F.explode(F.sequence(F.lit(0), F.col("_nc") - 1)).alias("chunk_idx"),
-    )
-    window = F.slice(F.col("_toks"), F.col("chunk_idx") * step + 1, max_tokens)
-    return chunked.select(
-        "doc_id",
-        "chunk_idx",
-        F.size(window).alias("n_tokens"),
-        F.md5(F.concat_ws(" ", window)).alias("chunk_md5"),
-    )
-
-
-def pack_sequences(
-    chunks,
-    seq_len: int,
-    n_shards: int = 32,
-    id_col: str = "doc_id",
-    idx_col: str = "chunk_idx",
-    tokens_col: str = "n_tokens",
-):
-    """Pack chunked documents into fixed-length training sequences —
-    GPT-style concat-and-split packing: the whole corpus is one virtual
-    token stream in deterministic corpus order, cut every ``seq_len``
-    tokens. Returns a packing MANIFEST: one row per (sequence, chunk)
-    overlap with the input columns plus
-
-    - ``seq_id``        global 0-based training-sequence number
-    - ``offset_in_seq`` where this chunk's contribution starts in the seq
-    - ``offset_in_chunk`` which of the chunk's own tokens that is
-    - ``n_seq_tokens``  how many of the chunk's tokens land in this seq
-
-    so a chunk crossing a boundary appears once per sequence it touches,
-    every sequence except the stream's last is exactly full, and
-    per chunk ``sum(n_seq_tokens) == n_tokens``. The manifest (ints + ids,
-    never text) is what a loader needs to materialize sequences.
-
-    Scale shape: the corpus order is (shard, doc_id, chunk_idx) with
-    shard = md5-bucket of the doc id (engine-portable, all chunks of a doc
-    contiguous), so the prefix sum that defines each chunk's stream
-    position is a WINDOW PARTITIONED BY SHARD — no global sort, no
-    single-task window; a shard's state is its chunk-manifest rows only.
-    Global positions come from per-shard totals: one map-side-combinable
-    aggregate whose collect is bounded by the ``n_shards`` config constant
-    (same justification as politeness.assign_discovery_seq), turned into
-    cumulative offsets and broadcast back. Shard boundaries fall
-    mid-sequence by design — the stream is globally contiguous, so the
-    result is byte-identical to a single global concat, but no machine
-    ever sees more than its shard.
-    """
-    if seq_len <= 0:
-        raise ValueError(f"seq_len must be positive, got {seq_len}")
-    from pyspark.sql import Window
-
-    from amazonwebcrawler_spark.operators.corpus import hash_bucket
-
-    sh = chunks.filter(F.col(tokens_col) > 0).withColumn(
-        "_shard", hash_bucket(F.col(id_col), n_shards, salt="pack")
-    )
-    w = (
-        Window.partitionBy("_shard")
-        .orderBy(F.col(id_col).asc(), F.col(idx_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = sh.withColumn("_end", F.sum(F.col(tokens_col)).over(w).cast("long"))
-    # shard totals: ≤ n_shards rows (config constant — never data-scale)
-    totals = {
-        r["_shard"]: r["t"]
-        for r in sh.groupBy("_shard").agg(F.sum(tokens_col).alias("t")).collect()
-    }
-    acc = 0
-    offs = []
-    for shard in sorted(totals):
-        offs.append((int(shard), acc))
-        acc += int(totals[shard])
-    spark = chunks.sparkSession
-    off_df = spark.createDataFrame(offs or [(0, 0)], "_shard int, _off long")
-    L = F.lit(seq_len).cast("long")
-    g = (
-        cum.join(F.broadcast(off_df), "_shard")
-        .withColumn("_gs", F.col("_off") + F.col("_end") - F.col(tokens_col))
-        .withColumn("_ge", F.col("_off") + F.col("_end"))
-    )
-    x = g.withColumn(
-        "seq_id",
-        F.explode(F.sequence(F.floor(F.col("_gs") / L), F.floor((F.col("_ge") - 1) / L))),
-    )
-    lo = F.greatest(F.col("_gs"), F.col("seq_id") * L)
-    hi = F.least(F.col("_ge"), (F.col("seq_id") + 1) * L)
-    return (
-        x.withColumn("offset_in_seq", (lo - F.col("seq_id") * L).cast("int"))
-        .withColumn("offset_in_chunk", (lo - F.col("_gs")).cast("int"))
-        .withColumn("n_seq_tokens", (hi - lo).cast("int"))
-        .drop("_shard", "_end", "_off", "_gs", "_ge")
-    )
-
-
 # --------------------------------------------------------------- repetition
 def _token_chunks(toks: Column, chunk: int) -> Column:
     """Non-overlapping ``chunk``-token segments of a token array, each
@@ -655,277 +526,6 @@ def self_dedup_chunks(df, text_col: str, id_col: str, chunk: int = 10):
     )
 
 
-def vocab_topk(df, text_col: str, id_col: str, k: int = 100):
-    """Global vocabulary head: the ``k`` most frequent whitespace tokens of
-    the normalized corpus with term count and document frequency — the
-    tokenizer-training / stopword-discovery primitive.
-
-    Returns (token, tf, doc_freq) with the cut totally ordered by
-    (tf desc, token asc) so the boundary is cross-engine deterministic.
-
-    Scale shape: explode → ONE map-side-combinable hash aggregate on token
-    (df via count(distinct doc) inside the same agg) → global top-k. The
-    top-k is a TakeOrderedAndProject (per-partition heaps + a k-row driver
-    merge), never a full sort — the classic 100 TB-safe head query.
-    """
-    rows = df.select(F.col(id_col).alias("_id"), F.explode(tokens(F.col(text_col))).alias("token"))
-    agg = rows.groupBy("token").agg(
-        F.count("*").alias("tf"), F.countDistinct("_id").alias("doc_freq")
-    )
-    return agg.orderBy(F.col("tf").desc(), F.col("token").asc()).limit(k)
-
-
-def bpe_merge_pairs(df, text_col: str, id_col: str, k: int = 50):
-    """One BPE-training merge round: the ``k`` most frequent ADJACENT
-    symbol pairs over the corpus, weighted by word frequency (Sennrich et
-    al. 2016 — the classic speedup counts each distinct word once and
-    multiplies by its corpus count instead of walking every occurrence).
-    Symbols here are the initial single-character alphabet; re-running
-    after applying the winning merge is the full training loop, and the
-    expensive primitive — the weighted pair count — is this operator.
-
-    Returns (left, right, pair_count), totally ordered by
-    (pair_count desc, left asc, right asc) so the cut boundary is
-    cross-engine deterministic.
-
-    Scale shape: word explode → ONE map-side-combinable word-count agg
-    (the corpus collapses from tokens to DISTINCT words — orders of
-    magnitude smaller), then a per-word pair explode over the word TABLE
-    (not the corpus), one more map-side-combinable agg, and a
-    TakeOrderedAndProject top-k (per-partition heaps, never a global
-    sort). No Python anywhere.
-    """
-    words = df.select(F.explode(word_tokens(F.col(text_col))).alias("word"))
-    wc = words.groupBy("word").agg(F.count("*").alias("wn"))
-    # adjacent symbols via direct substring at each pair index — an
-    # intermediate char-array captured in the lambda would be rebuilt
-    # (lambda-bearing expressions are never CSE'd) for every pair
-    pairs = wc.where(F.length("word") >= 2).select(
-        "wn",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word") - 1),
-                lambda i: F.struct(
-                    F.substring(F.col("word"), i, F.lit(1)).alias("left"),
-                    F.substring(F.col("word"), (i + F.lit(1)).cast("int"), F.lit(1)).alias(
-                        "right"
-                    ),
-                ),
-            )
-        ).alias("p"),
-    )
-    agg = pairs.groupBy(F.col("p.left").alias("left"), F.col("p.right").alias("right")).agg(
-        F.sum("wn").alias("pair_count")
-    )
-    return agg.orderBy(
-        F.col("pair_count").desc(), F.col("left").asc(), F.col("right").asc()
-    ).limit(k)
-
-
-#: end-of-word marker for BPE symbol sequences (Sennrich et al. 2016)
-BPE_EOW = "</w>"
-
-#: the word splitter shared by the trainer and the encode kernel — the
-#: pure-Python twin of :func:`word_tokens` (runs of word chars OR single
-#: non-space non-word chars, lowercased)
-import re as _re  # noqa: E402
-
-_BPE_WORD_RE = _re.compile(r"(\w+|[^\w\s])")
-
-
-def bpe_word_split(text: str) -> list[str]:
-    return _BPE_WORD_RE.findall(text.lower())
-
-
-def train_bpe(texts, n_merges: int = 200) -> list[tuple[str, str]]:
-    """Reference BPE trainer (Sennrich et al. 2016) over a BOUNDED sample —
-    driver-side pure Python, the same bounded-sample discipline as the IVF
-    k-means codebook: tokenizers are trained on a few GB sample and
-    APPLIED to the 100 TB corpus, so the expensive distributed primitive
-    is the per-round pair count (:func:`bpe_merge_pairs`), not this loop.
-
-    Deterministic: ties on pair count break to the lexicographically
-    smallest (left, right); training stops early when no pair repeats.
-    Returns the ordered merge list — index = rank."""
-    word_freq: dict[tuple[str, ...], int] = {}
-    for t in texts:
-        for w in bpe_word_split(t):
-            key = tuple(w) + (BPE_EOW,)
-            word_freq[key] = word_freq.get(key, 0) + 1
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        counts: dict[tuple[str, str], int] = {}
-        for syms, n in word_freq.items():
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + n
-        if not counts:
-            break
-        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        if counts[best] < 2:
-            break
-        merges.append(best)
-        merged = best[0] + best[1]
-        nxt: dict[tuple[str, ...], int] = {}
-        for syms, n in word_freq.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and (syms[i], syms[i + 1]) == best:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            key = tuple(out)
-            nxt[key] = nxt.get(key, 0) + n
-        word_freq = nxt
-    return merges
-
-
-def bpe_encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
-    """GPT-2-style BPE application: repeatedly merge the LOWEST-RANK
-    adjacent pair (leftmost on rank ties) until none remains — equivalent
-    to replaying the merges in training order, but O(len²·merges-present)
-    per word instead of O(len·n_merges)."""
-    syms = list(word) + [BPE_EOW]
-    while len(syms) > 1:
-        best_rank, best_i = None, -1
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank, best_i = r, i
-        if best_rank is None:
-            break
-        syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-    return syms
-
-
-def bpe_encode_kernel(merges):
-    """mapInPandas kernel ``(doc_id, text) → BPE_ENCODE_SCHEMA``: apply a
-    trained merge table to every document — the tokenize-and-count stage
-    between curation and sequence packing. The merge table is a closure
-    constant (a few KB — it ships in the serialized task like the IVF
-    codebook literals); a per-batch WORD CACHE collapses the Zipf
-    distribution, so the per-word loop runs once per distinct word per
-    batch, not once per occurrence.
-
-    Output per doc: ``n_words``, ``n_tokens`` (BPE symbols incl. the
-    end-of-word markers), ``n_chars`` (normalized word chars — fertility
-    denominator), and ``tokens_md5`` digesting the full space-joined
-    token stream in document order, so the twin value-checks the exact
-    tokenization without shipping it."""
-    import hashlib
-
-    import pandas as pd
-
-    ranks = {p: i for i, p in enumerate(merges)}
-
-    def gen(batches):
-        cache: dict[str, list[str]] = {}
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                words = bpe_word_split(text or "")
-                toks: list[str] = []
-                for w in words:
-                    enc = cache.get(w)
-                    if enc is None:
-                        enc = bpe_encode_word(w, ranks)
-                        cache[w] = enc
-                    toks.extend(enc)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_words": len(words),
-                        "n_tokens": len(toks),
-                        "n_chars": sum(len(w) for w in words),
-                        "tokens_md5": hashlib.md5(" ".join(toks).encode()).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_words", "n_tokens", "n_chars", "tokens_md5"]
-            )
-
-    return gen
-
-
-#: Spark schema of bpe_encode_kernel's output
-BPE_ENCODE_SCHEMA = (
-    "doc_id long, n_words int, n_tokens int, n_chars int, tokens_md5 string"
-)
-
-
-def pmi_collocations(df, text_col: str, id_col: str, k: int = 40, min_count: int = 3):
-    """Top-``k`` collocations by pointwise mutual information over adjacent
-    token pairs (Church & Hanks 1990) — the phrase-mining signal that
-    feeds tokenizer vocab induction ("new york", "machine learning" become
-    single tokens) and the multi-word-expression half of `bpe_merge_pairs`
-    (which counts CHARACTER pairs inside words; this counts TOKEN pairs
-    across the stream):
-
-        pmi(a,b) = ln( P(a,b) / (P(a)·P(b)) )
-                 = ln( (c_ab · N_uni²) / (N_bi · c_a · c_b) )
-
-    ``min_count`` drops rare-pair noise (PMI's classic failure mode: two
-    hapaxes adjacent once score the maximum) BEFORE the unigram joins, so
-    the joined bigram table is already the interesting sliver.
-
-    Scale shape: one materialized tokenization (attribute capture only —
-    the bind_once doctrine), one pair explode, two map-side-combinable
-    counts (bigrams, unigrams), totals as 1-row broadcast crossJoins (the
-    bm25 idiom), two equi joins of the filtered bigram sliver onto the
-    vocab-sized unigram table, and a TakeOrderedAndProject top-k — never
-    a global sort. Returns ``(lhs, rhs, pair_count, pmi_micro)``
-    totally ordered by (pmi_micro desc, lhs, rhs) so the cut boundary
-    is cross-engine deterministic; micro-unit BIGINT (tfidf drift
-    argument).
-    """
-    toks = df.select(tokens(F.col(text_col)).alias("toks"))
-    uni = toks.select(F.explode("toks").alias("w"))
-    cu = uni.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    n_uni = cu.agg(F.sum("c").alias("n_uni"))
-    bi = toks.where(F.size("toks") >= 2).select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(2), F.size("toks")),
-                lambda i: F.struct(
-                    F.get(F.col("toks"), i - 2).alias("lhs"),
-                    F.get(F.col("toks"), i - 1).alias("rhs"),
-                ),
-            )
-        ).alias("p")
-    )
-    cb = (
-        bi.groupBy(F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs"))
-        .agg(F.count(F.lit(1)).alias("pair_count"))
-        .filter(F.col("pair_count") >= min_count)
-    )
-    n_bi = bi.agg(F.count(F.lit(1)).alias("n_bi"))
-    scored = (
-        cb.join(cu.select(F.col("w").alias("lhs"), F.col("c").alias("ca")), "lhs")
-        .join(cu.select(F.col("w").alias("rhs"), F.col("c").alias("cb")), "rhs")
-        .crossJoin(F.broadcast(n_uni))
-        .crossJoin(F.broadcast(n_bi))
-        .select(
-            "lhs",
-            "rhs",
-            "pair_count",
-            F.round(
-                F.log(
-                    (F.col("pair_count").cast("double") * F.col("n_uni") * F.col("n_uni"))
-                    / (F.col("n_bi").cast("double") * F.col("ca") * F.col("cb"))
-                )
-                * 1_000_000
-            )
-            .cast("long")
-            .alias("pmi_micro"),
-        )
-    )
-    return scored.orderBy(
-        F.col("pmi_micro").desc(), F.col("lhs").asc(), F.col("rhs").asc()
-    ).limit(k)
-
-
 def build_postings(
     df,
     text_col: str,
@@ -1043,73 +643,6 @@ def phrase_match(df, text_col: str, id_col: str, phrase: tuple[str, ...] | list[
     )
 
 
-def skipgram_pairs(
-    df,
-    text_col: str,
-    id_col: str,
-    window: int = 3,
-    min_count: int = 3,
-    k: int = 50,
-):
-    """Top-``k`` skip-gram co-occurrence pairs within a ±``window`` token
-    context — the word2vec/SGNS training-pair generator (Mikolov et al.
-    2013): each (center, context) pair is counted once per co-occurrence
-    and distance-weighted (the standard 1/d falloff) as the exact integer
-    ``1000 DIV d`` milli-weight, so the twin reproduces the ranking
-    bit-for-bit. The window generalizes :func:`pmi_collocations`'s
-    adjacent-only bigrams (w=1 context ≈ its pair stream, directed).
-
-    Scale shape: the naive form self-joins token rows per doc and goes
-    QUADRATIC in document length; here each token row explodes into the
-    2·``window`` signed offsets and lands on exactly one context token
-    via a two-key ``(doc, pos+d)`` equi join (the random_walks indexed-
-    adjacency discipline) — linear, 2w shuffled rows per token. One
-    map-side-combinable (center, context) count + a TakeOrderedAndProject
-    top-k; ``min_count`` drops hapax-pair noise. Returns
-    ``(center, context, n_pairs, weight_milli)`` totally ordered by
-    (weight desc, center, context).
-    """
-    if window < 1:
-        raise ValueError(f"skipgram_pairs: window must be >= 1, got {window}")
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.col(text_col))).alias("_pos", "_tok"),
-    ).persist()
-    offsets = [d for d in range(-window, window + 1) if d != 0]
-    probes = toks.select(
-        "doc_id",
-        F.col("_tok").alias("center"),
-        F.explode(
-            F.array(*[(F.col("_pos") + F.lit(d)).alias(str(d)) for d in offsets])
-        ).alias("_ctx_pos"),
-        F.col("_pos"),
-    )
-    ctx = toks.select(
-        "doc_id", F.col("_pos").alias("_ctx_pos"), F.col("_tok").alias("context")
-    )
-    pairs = (
-        probes.join(ctx, ["doc_id", "_ctx_pos"])
-        .select(
-            "center",
-            "context",
-            F.abs(F.col("_ctx_pos") - F.col("_pos")).cast("long").alias("_d"),
-        )
-        .select("center", "context", F.expr("1000L DIV _d").alias("_w"))
-        .groupBy("center", "context")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum("_w").alias("weight_milli"),
-        )
-        .filter(F.col("n_pairs") >= min_count)
-    )
-    out = pairs.orderBy(
-        F.col("weight_milli").desc(), F.col("center").asc(), F.col("context").asc()
-    ).limit(k)
-    out = out.localCheckpoint(eager=True)
-    toks.unpersist()
-    return out
-
-
 def crossdoc_segment_dedup(df, text_col: str, id_col: str, chunk: int = 10):
     """Cross-document segment dedup, FIRST occurrence kept (the CCNet /
     RefinedWeb paragraph-dedup rule: one copy of every duplicated
@@ -1163,288 +696,6 @@ def crossdoc_segment_dedup(df, text_col: str, id_col: str, chunk: int = 10):
             F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
             F.coalesce("clean_text", F.lit("")).alias("clean_text"),
         )
-    )
-
-
-def train_linear_probe(
-    df, text_col: str, id_col: str, label_pred, n_buckets: int = 4096, eta_shift: int = 10
-):
-    """Distributed EXACT linear-probe training — two full-batch gradient
-    steps of a least-squares linear model over hashed unigram+bigram
-    PRESENCE features, with a power-of-two learning rate so every weight
-    is an exact integer numerator over a fixed denominator. This is the
-    training half of the DCLM/fastText-shape quality classifier:
-    :func:`classifier_score` is the inference half and consumes the same
-    bucket space, so ``(bucket, w2_num)`` drops straight in as its weight
-    table (a positive-mean doc under w2 is a positive-mean doc under the
-    real-valued weights — the shared denominator cancels in the sign).
-
-    Model: targets are the ±1 encoding ``s = 2y − 1`` of ``label_pred``
-    (the standard least-squares classification encoding — with {0,1}
-    targets and a zero init, buckets seen only in negative docs would
-    train to weight EXACTLY 0 and tie at the keep-iff-≥0 boundary);
-    ``x_{d,f} ∈ {0,1}`` (DISTINCT hashed features per doc); squared loss;
-    ``η = 2^-eta_shift`` (``D = 2^eta_shift``); ``w⁰ = 0``. Exact integer
-    recurrences::
-
-        w1_num_f = Σ_d s_d·x_{d,f} = 2·n_pos_f − cnt_f  -- −g¹; w¹ = w1_num/D
-        zn_d     = Σ_f w1_num_f·x_{d,f}                 -- z¹ = zn/D
-        g2num_f  = Σ_d (zn_d − D·s_d)·x_{d,f}           -- g² = g2num/D
-        w2_num_f = D·w1_num_f − g2num_f                 -- w² = w2_num/D²
-
-    Every quantity is BIGINT arithmetic — the DuckDB twin reproduces each
-    value bit-for-bit (no transcendental enters the contract, unlike a
-    sigmoid). Returns one row per bucket PRESENT in the corpus:
-    ``(bucket, n_pos, w1_num, w2_num)`` (``n_pos`` = positive-doc count,
-    the raw sufficient statistic beside the signed weights).
-
-    Scale shape: the feature explode + DISTINCT is the one data-sized
-    shuffle family (distinct on (doc, bucket), the z-pass regroup on doc,
-    and the g² regroup on bucket — all natural high-cardinality keys);
-    both gradient tables are ≤``n_buckets`` rows and BROADCAST back, so
-    the model state never shuffles the corpus. Overflow bound: with
-    presence features, ``zn ≤ feats/doc · max n1`` and ``g2num ≤ docs ·
-    max zn`` — int64-safe to ~10^6 labeled docs, which is the actual
-    regime (quality probes train on labeled SAMPLES; the 100 TB pass is
-    the inference side, which this feeds).
-    """
-    from amazonwebcrawler_spark.operators.dedup import shingle_hash31
-
-    if eta_shift < 1 or eta_shift > 20:
-        raise ValueError(f"eta_shift must be in [1, 20], got {eta_shift}")
-    d_scale = 1 << eta_shift
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        label_pred.cast("long").alias("_y"),
-        tokens(F.col(text_col)).alias("_toks"),
-    )
-    t = F.col("_toks")
-    bi = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - 2),
-            lambda i: F.concat_ws(" ", F.get(t, i), F.get(t, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    # presence features: DISTINCT (doc, bucket) pairs — persisted: the
-    # gradient pass, the z pass, and the g² pass all iterate this table
-    keyed = (
-        base.select("_id", "_y", F.explode(F.concat(t, bi)).alias("_f"))
-        .select(
-            "_id", "_y", (shingle_hash31(F.col("_f")) % n_buckets).cast("int").alias("bucket")
-        )
-        .distinct()
-        .persist()
-    )
-    g1 = keyed.groupBy("bucket").agg(
-        F.sum("_y").alias("n_pos"),
-        (F.lit(2) * F.sum("_y") - F.count(F.lit(1))).alias("_w1"),
-    )
-    z = (
-        keyed.join(F.broadcast(g1), "bucket")
-        .groupBy("_id", "_y")
-        .agg(F.sum("_w1").alias("_zn"))
-    )
-    resid = z.select(
-        "_id",
-        (F.col("_zn") - F.lit(d_scale) * (F.lit(2) * F.col("_y") - F.lit(1))).alias("_r"),
-    )
-    # resid is one row per LABELED doc — the bounded training sample (see
-    # scale note below) — so broadcast it instead of shuffling the whole
-    # feature table by _id (measured: removes the one remaining data-sized
-    # exchange of the g² pass; guide §3.1 broadcast-the-small-side)
-    g2 = (
-        keyed.join(F.broadcast(resid), "_id")
-        .groupBy("bucket")
-        .agg(F.sum("_r").alias("_g2"))
-    )
-    out = g1.join(g2, "bucket").select(
-        F.col("bucket"),
-        F.col("n_pos").cast("long").alias("n_pos"),
-        F.col("_w1").cast("long").alias("w1_num"),
-        (F.lit(d_scale) * F.col("_w1") - F.col("_g2")).cast("long").alias("w2_num"),
-    )
-    # training is eager by nature: materialize the ≤n_buckets-row model
-    # (lineage truncation) and release the feature cache — the same
-    # persist → localCheckpoint → unpersist discipline as minhash_lsh
-    out = out.localCheckpoint(eager=True)
-    keyed.unpersist()
-    return out
-
-
-def make_weight_table(spark, n_buckets: int = 4096):
-    """Deterministic linear-classifier weight table: (bucket int, w int).
-
-    Stand-in for a TRAINED text-classifier's weight vector (fastText-style
-    quality models hash features into a fixed bucket space and learn one
-    weight per bucket) — no model ships in this container, so weights are
-    md5-derived integers in [-1000, 1000], reproducible bit-for-bit in
-    DuckDB. Swap this for a real exported weight table and nothing in
-    :func:`classifier_score` changes.
-    """
-    b = F.col("id").cast("int")
-    w = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("w-"), b.cast("string"))), 1, 8), 16, 10)
-        .cast("long")
-        .bitwiseAND(F.lit(0x7FFFFFFF))
-        % 2001
-        - 1000
-    )
-    return spark.range(n_buckets).select(b.alias("bucket"), w.cast("long").alias("w"))
-
-
-def classifier_score(df, text_col: str, id_col: str, weights, n_buckets: int = 4096):
-    """Linear text-classifier INFERENCE at corpus scale (the fastText-shape
-    quality model of DCLM/CCNet-style pipelines): hashed unigram+bigram
-    features → weight lookup → per-document mean weight, keep iff ≥ 0.
-
-    This is the model-scored quality filter's distributed plumbing:
-    features are one explode (bigrams built by a higher-order transform —
-    swap for the explode+get idiom if it ever dominates a profile); the
-    weight VECTOR arrives as a BROADCAST join on the feature's hash bucket
-    (a real model's 10^6-row weight table is far too wide for literal
-    expressions but trivially broadcastable); the score is one
-    map-side-combinable sum per doc. Exactly one data-sized shuffle (the
-    per-doc aggregate), no Python.
-
-    Buckets use the same 31-bit-md5 idiom as MinHash (``shingle_hash31``)
-    so DuckDB re-derives them exactly. Scoring is exact integer
-    arithmetic: ``score_milli`` = floor((Σw·1000)/n_features); docs with
-    zero features score 0 and are kept (nothing to judge).
-
-    Returns (id, n_features bigint, score_milli bigint, keep int).
-    """
-    from amazonwebcrawler_spark.operators.dedup import shingle_hash31
-
-    # Materialize the token array behind a projection boundary BEFORE the
-    # bigram transform: referencing the raw tokens(...) expression inside
-    # the lambda would embed the whole normalize+split tree at every
-    # F.get, re-running the regex normalization twice per bigram —
-    # O(n_tokens²) regex work per document (measured 10× on the bench
-    # leg). CollapseProject keeps the boundary because the alias is
-    # non-cheap and multiply referenced (same idiom as operators/dedup).
-    base = df.select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_toks"))
-    t = F.col("_toks")
-    bi = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - 2),
-            lambda i: F.concat_ws(" ", F.get(t, i), F.get(t, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    feats = base.select("_id", F.explode_outer(F.concat(t, bi)).alias("_f"))
-    keyed = feats.withColumn(
-        "bucket",
-        F.when(
-            F.col("_f").isNotNull(), (shingle_hash31(F.col("_f")) % n_buckets).cast("int")
-        ),
-    )
-    scored = (
-        keyed.join(F.broadcast(weights), "bucket", "left")
-        .groupBy("_id")
-        .agg(
-            F.count(F.col("_f")).alias("n_features"),
-            F.coalesce(F.sum("w"), F.lit(0)).cast("long").alias("_sw"),
-        )
-    )
-    num = F.col("_sw") * 1000
-    milli = F.when(
-        F.col("n_features") > 0,
-        ((num - F.pmod(num, F.col("n_features"))) / F.col("n_features")).cast("long"),
-    ).otherwise(F.lit(0).cast("long"))
-    return scored.select(
-        F.col("_id").alias(id_col),
-        "n_features",
-        milli.alias("score_milli"),
-        (milli >= 0).cast("int").alias("keep"),
-    )
-
-
-def dsir_weights(df, text_col: str, id_col: str, target_pred, n_buckets: int = 4096,
-                 alpha: int = 1):
-    """DSIR importance weights (Xie et al., NeurIPS 2023 — Data Selection
-    via Importance Resampling): score every raw document by how much more
-    likely it is under a hashed-n-gram LM of the TARGET slice than under
-    the raw-corpus LM. ``target_pred`` is a boolean Column over ``df``
-    marking the in-domain slice (here: a language/quality predicate; in
-    production: the Wikipedia/books slice DSIR targets).
-
-    Both LMs are Laplace-``alpha``-smoothed bag-of-hashed-n-gram models
-    over the SAME unigram+bigram bucket space as :func:`classifier_score`:
-    ``logw(doc) = Σ_f [ln p_t(b(f)) − ln p_r(b(f))]``. Emitted as a
-    micro-nat BIGINT (sum-of-ln drift ~1e-13 relative — the tfidf/nll
-    argument); ``keep = logw_micro ≥ 0`` (doc more target-like than raw)
-    evaluates on the same integer. Feature-less docs score 0 and keep,
-    matching :func:`classifier_score`. Downstream, ``corpus.
-    weighted_sample`` consumes ``logw_micro`` as the A-ES weight to
-    realize the "resampling" half of DSIR deterministically.
-
-    Scale shape: TWO passes over the exploded feature stream total — one
-    map-side-combinable (bucket → count, target-count) aggregate of
-    ≤``n_buckets`` rows (eagerly localCheckpointed so the LM totals and
-    the log-ratio table both read the materialized 4096-row result
-    instead of re-running the explode), and the per-doc scoring sum. The
-    per-bucket log-ratio table broadcasts back onto the feature stream
-    (corpus never shuffles for the lookup); the only data-sized shuffle
-    is the per-doc sum. No Python anywhere.
-    """
-    from amazonwebcrawler_spark.operators.dedup import shingle_hash31
-
-    # token array materialized behind a projection boundary — see the
-    # identical note in classifier_score (avoids O(n_tokens²) regex work)
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        target_pred.cast("long").alias("_tgt"),
-        tokens(F.col(text_col)).alias("_toks"),
-    )
-    t = F.col("_toks")
-    bi = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - 2),
-            lambda i: F.concat_ws(" ", F.get(t, i), F.get(t, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    feats = base.select(
-        "_id",
-        "_tgt",
-        F.explode_outer(F.concat(t, bi)).alias("_f"),
-    ).withColumn(
-        "bucket",
-        F.when(
-            F.col("_f").isNotNull(), (shingle_hash31(F.col("_f")) % n_buckets).cast("int")
-        ),
-    )
-    present = feats.where(F.col("_f").isNotNull())
-    # ≤n_buckets rows; eager localCheckpoint so totals + the log-ratio
-    # table below don't each re-run the full token explode (3 passes → 2)
-    counts = present.groupBy("bucket").agg(
-        F.count("*").alias("c_r"), F.sum("_tgt").alias("c_t")
-    ).localCheckpoint()
-    totals = counts.select(F.sum("c_r").alias("n_r"), F.sum("c_t").alias("n_t"))
-    smooth = F.lit(float(alpha * n_buckets))
-    lam = counts.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        (
-            F.log(F.col("c_t") + alpha) - F.log(F.col("n_t") + smooth)
-            - F.log(F.col("c_r") + alpha) + F.log(F.col("n_r") + smooth)
-        ).alias("lam"),
-    )
-    scored = (
-        feats.join(F.broadcast(lam), "bucket", "left")
-        .groupBy("_id")
-        .agg(
-            F.count("_f").alias("n_features"),
-            F.coalesce(F.round(F.sum("lam") * 1_000_000), F.lit(0))
-            .cast("long")
-            .alias("logw_micro"),
-        )
-    )
-    return scored.select(
-        F.col("_id").alias(id_col),
-        "n_features",
-        "logw_micro",
-        (F.col("logw_micro") >= 0).cast("int").alias("keep"),
     )
 
 
@@ -1524,48 +775,6 @@ def c4_line_clean(
     )
 
 
-def ppl_buckets(df, text_col: str, id_col: str, lang_col: str):
-    """CCNet-style perplexity bucketing (Wenzek et al. 2020): score every
-    document with the self-trained unigram LM (:func:`unigram_nll`) and
-    split each language into head / middle / tail thirds by score — the
-    standard quality tiers used to build training mixtures (head = fluent
-    common-vocabulary text, tail = rare-token soup).
-
-    Tier arithmetic is exact-integer ntile: with per-language rank ``rn``
-    (ordered by ``(nll_micro, doc_id)``, a total order) and language size
-    ``n``, head is ``rn·3 ≤ n``, middle is ``rn·3 ≤ 2n``, else tail — both
-    engines compute the identical partition with no float quantiles.
-
-    Scale shape: the LM scoring is :func:`unigram_nll`'s key-partitioned
-    joins; the tiering adds ONE window partitioned by language. At 100 TB
-    a per-language sort is the honest cost of exact tertiles; the
-    approximate production variant replaces the window with per-language
-    ``percentile_approx`` cutoffs broadcast back (no sort), at the price
-    of SQL-twin exactness. Returns
-    ``(doc_id, lang, n_tokens, nll_micro, bucket)``."""
-    from pyspark.sql import Window
-
-    scored = unigram_nll(df, text_col, id_col)
-    langs = df.select(F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang"))
-    j = scored.join(langs, "doc_id")
-    w = Window.partitionBy("lang").orderBy("nll_micro", "doc_id")
-    wn = Window.partitionBy("lang")
-    return (
-        j.withColumn("_rn", F.row_number().over(w))
-        .withColumn("_n", F.count("*").over(wn))
-        .select(
-            "doc_id",
-            "lang",
-            "n_tokens",
-            "nll_micro",
-            F.when(F.col("_rn") * 3 <= F.col("_n"), "head")
-            .when(F.col("_rn") * 3 <= F.col("_n") * 2, "middle")
-            .otherwise("tail")
-            .alias("bucket"),
-        )
-    )
-
-
 def caption_quality(
     df,
     caption_col: str = "caption",
@@ -1639,172 +848,6 @@ def caption_quality(
     )
 
 
-def kn_bigram_nll(df, text_col: str, id_col: str, discount_milli: int = 750):
-    """Interpolated Kneser–Ney bigram LM quality signal (Kneser & Ney 1995;
-    Chen & Goodman 1999 eq. 4.24) — the step up from :func:`unigram_nll`
-    that actual perplexity filters (CCNet's KenLM stage) take: a document
-    full of common words in IMPLAUSIBLE order now scores badly, which the
-    unigram model cannot see. Self-trained on the corpus itself, so there
-    is no model artifact::
-
-        p(w2|w1) = (c(w1,w2) − d)/c(w1·) + d·N1+(w1·)/c(w1·) · p_cont(w2)
-        p_cont(w2) = N1+(·w2) / |bigram types|
-
-    with absolute discount ``d = discount_milli/1000`` (the canonical 0.75;
-    750/1000 is exact in binary, so both engines use the identical double).
-    Every scored bigram was seen in training (same corpus), so ``c ≥ 1 > d``
-    and p > 0 without a max() guard — the continuation term is what the
-    discount mass pays for, exactly the KN insight ("Francisco" is frequent
-    but follows only "San": its continuation weight is tiny).
-
-    Scale shape: bigram extraction is a shuffle-free array transform
-    (``transform(sequence(...))`` over the token array — one codegen
-    projection, no self-join); training is ONE map-side-combinable hash
-    aggregate on (w1,w2) — the only data-proportional shuffle — and the
-    three smoothing statistics (left sum + fan-out, continuation count,
-    type total) are aggregations OVER the bigram-TYPE table (vocabulary-
-    sized, not corpus-sized). Scoring re-joins the doc bigram stream with
-    the type table on the SAME (w1,w2) key; the type total broadcasts as a
-    one-row aggregate. Mirrors the decontamination pattern: in production
-    the "train" side runs on a held-out slice and the type table persists
-    bucketed on (w1,w2).
-
-    Returns (doc_id, n_bigrams, nll_micro) — micro-unit BIGINT via the
-    repo's ln-mean discipline (summation drift ~1e-13 relative, far inside
-    a micro cell; same contract as unigram_nll, driver-green since r4).
-    Documents with fewer than 2 tokens have no bigram and are absent by
-    construction (score them with unigram_nll).
-    """
-    d = F.lit(discount_milli).cast("double") / F.lit(1000.0)
-    docs = df.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("tk")
-    ).filter(F.size("tk") >= 2)
-    bg = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr("transform(sequence(1, size(tk)-1), i -> struct(tk[i-1] AS w1, tk[i] AS w2))")
-        ).alias("b"),
-    ).select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-    c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    left = c12.groupBy("w1").agg(
-        F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1plus_fw")
-    )
-    cont = c12.groupBy("w2").agg(F.count(F.lit(1)).alias("cont"))
-    types = c12.select(F.count(F.lit(1)).alias("t_types"))
-    lm = (
-        c12.join(left, "w1")
-        .join(cont, "w2")
-        .crossJoin(F.broadcast(types))
-        .select(
-            "w1",
-            "w2",
-            (
-                (F.col("c12") - d) / F.col("c1")
-                + d * F.col("n1plus_fw") / F.col("c1") * (F.col("cont") / F.col("t_types"))
-            ).alias("p"),
-        )
-    )
-    return (
-        bg.join(lm, ["w1", "w2"])
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(-F.avg(F.log(F.col("p"))) * 1_000_000).cast("long").alias("nll_micro"),
-        )
-    )
-
-
-def vocab_growth(df, text_col: str, id_col: str, n_points: int = 10):
-    """Heaps-law vocabulary growth fit — V(N) ≈ k·N^β over discovery order.
-
-    As a crawl ingests documents, distinct-vocabulary growth against total
-    tokens follows Heaps' law; the exponent β (typically 0.4–0.6) is the
-    tokenizer-planning and is-the-corpus-saturating diagnostic: β falling
-    toward 0 means new documents stop contributing vocabulary (mirror/
-    template mass), β near 1 means vocabulary chaos (OCR noise, ID soup).
-
-    Relational shape — NOTHING data-scale is ordered: documents bucket
-    into ``n_points`` id-range cells from a broadcast min/max (discovery
-    order = doc id, the corpus discipline gram_novelty already uses);
-    per-bucket token sums and per-bucket first-seen-term counts (terms
-    keyed by their ``min(doc)`` — one map-side-combinable aggregate each)
-    accumulate over the ``n_points``-row table only. The OLS fit of
-    ``ln V`` on ``ln N`` is closed-form over those ≤n_points rows — the
-    bounded-table contract of isotonic_calibrate again.
-
-    Returns ``n_points`` rows (bucket, tokens_cum, vocab_cum,
-    slope_micro, lnk_micro) — cumulative counts are exact BIGINTs; the
-    two fit constants (repeated per row) micro-round the ln terms under
-    the repo's ln discipline. Buckets with zero cumulative tokens (empty
-    leading ranges) are excluded from the fit on both engines.
-    """
-    base = df.select(
-        F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_tk")
-    )
-    rng = base.select(F.min("_id").alias("_lo"), F.max("_id").alias("_hi"))
-    bucket = F.expr(f"CAST(((_id - _lo) * {n_points}L) DIV (_hi - _lo + 1L) AS INT)")
-
-    docs = base.crossJoin(F.broadcast(rng)).select(
-        bucket.alias("b"), F.size("_tk").alias("_n"), "_id", "_tk"
-    )
-    tok_per_bucket = docs.groupBy("b").agg(F.sum("_n").alias("toks"))
-
-    first = (
-        docs.select("b", F.explode("_tk").alias("term"))
-        .groupBy("term")
-        .agg(F.min("b").alias("fb"))
-        .groupBy(F.col("fb").alias("b"))
-        .agg(F.count(F.lit(1)).alias("vocab"))
-    )
-    cells = (
-        tok_per_bucket.join(first, "b", "full")
-        .select(
-            "b",
-            F.coalesce("toks", F.lit(0)).alias("toks"),
-            F.coalesce("vocab", F.lit(0)).alias("vocab"),
-        )
-    )
-    w = Window.orderBy("b")  # bounded: ≤ n_points rows by construction
-    cum = cells.select(
-        "b",
-        F.sum("toks").over(w).alias("tokens_cum"),
-        F.sum("vocab").over(w).alias("vocab_cum"),
-    ).filter(F.col("tokens_cum") > 0)
-
-    x = F.log(F.col("tokens_cum").cast("double"))
-    y = F.log(F.col("vocab_cum").cast("double"))
-    fit = cum.agg(
-        F.count(F.lit(1)).alias("m"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-    ).select(
-        F.round(
-            (F.col("sxy") - F.col("sx") * F.col("sy") / F.col("m"))
-            / (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("m"))
-            * 1_000_000
-        )
-        .cast("long")
-        .alias("slope_micro"),
-        F.round(
-            (
-                F.col("sy") / F.col("m")
-                - (F.col("sxy") - F.col("sx") * F.col("sy") / F.col("m"))
-                / (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("m"))
-                * F.col("sx")
-                / F.col("m")
-            )
-            * 1_000_000
-        )
-        .cast("long")
-        .alias("lnk_micro"),
-    )
-    return cum.crossJoin(F.broadcast(fit)).select(
-        "b", "tokens_cum", "vocab_cum", "slope_micro", "lnk_micro"
-    )
-
-
 #: cp1252-mojibake artifact sequences: UTF-8 bytes of common Latin-1
 #: accented chars / smart punctuation decoded as cp1252 produce exactly
 #: these 2-3 char sequences ("café" → "cafÃ©", U+2019 → "â€™"). Literal
@@ -1847,44 +890,6 @@ def mojibake_stats(df, text_col: str, id_col: str, min_hits: int = 2):
         "n_hits",
         F.expr("(n_hits * 1000000L) DIV greatest(n_chars, 1L)").alias("hit_ratio_micro"),
         (F.col("n_hits") >= min_hits).alias("is_mojibake"),
-    )
-
-
-def oov_rate(df, text_col: str, id_col: str, k: int = 100, max_oov_ppm: int = 500_000):
-    """Per-document out-of-vocabulary rate against the corpus's own
-    top-``k`` vocabulary head — the tokenizer-health audit run before
-    committing a vocab size: a document whose tokens mostly fall outside
-    the head fragments into rare-piece soup (inflated sequence lengths,
-    starved embeddings), and a rising corpus-level OOV ppm between
-    crawls is the drift alarm that triggers tokenizer retraining.
-
-    Vocabulary = :func:`vocab_topk`'s (tf desc, token asc) head — the
-    cut boundary is totally ordered, so the flag is cross-engine
-    deterministic. Scale shape: the vocab is k rows → BROADCAST to the
-    exploded token stream (no shuffle on the corpus side beyond the one
-    doc-keyed count agg); ``oov_ppm`` exact integer DIV. Documents that
-    normalize to zero tokens yield no row (nothing to measure — the
-    quality gate owns empty docs).
-
-    Returns (doc_id, n_tokens, n_oov, oov_ppm, high_oov)."""
-    toks = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("token")
-    )
-    vocab = vocab_topk(df, text_col, id_col, k=k).select("token", F.lit(1).alias("_in"))
-    return (
-        toks.join(F.broadcast(vocab), "token", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum(F.when(F.col("_in").isNull(), 1).otherwise(0)).cast("long").alias("n_oov"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "n_oov",
-            F.expr("(n_oov * 1000000) DIV n_tokens").alias("oov_ppm"),
-            (F.expr("(n_oov * 1000000) DIV n_tokens") >= max_oov_ppm).alias("high_oov"),
-        )
     )
 
 

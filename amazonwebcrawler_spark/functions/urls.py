@@ -68,11 +68,6 @@ def url_host(url: Column) -> Column:
     return F.lower(F.regexp_extract(url, r"^https?://([^/?#]*)", 1))
 
 
-def url_hash(canonical_url: Column) -> Column:
-    """64-bit stable hash of the canonical URL — the URL-seen key (P15/J6)."""
-    return F.xxhash64(canonical_url)
-
-
 def host_trap_stats(
     df,
     url_col: str = "canonical_url",

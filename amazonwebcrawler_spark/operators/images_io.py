@@ -441,16 +441,15 @@ def byte_shard_manifest(
     bytes_col: str = "n_bytes",
     n_parts: int = 32,
 ) -> DataFrame:
-    """WebDataset-style shard manifest over sized records — the image
-    corpus's analogue of text.pack_sequences: training loaders stream
-    tar-like shards of ~``shard_bytes``, so the curation pipeline must
-    emit a DETERMINISTIC (record → shard, offset) assignment the writer
-    and every re-run reproduce bit-for-bit (the reference saves one file
-    per product with no layout plan, crawler/crawler.py:64-76; at 10^10
-    images the layout IS the product).
+    """WebDataset-style shard manifest over sized records: training loaders
+    stream tar-like shards of ~``shard_bytes``, so the curation pipeline
+    must emit a DETERMINISTIC (record → shard, offset) assignment the writer
+    and every re-run reproduce bit-for-bit (the reference saves one file per
+    product with no layout plan, crawler/crawler.py:64-76; at 10^10 images
+    the layout IS the product).
 
     Semantics: records form one virtual byte stream in corpus order
-    (md5-bucket, id — engine-portable, same as pack_sequences);
+    (md5-bucket, id — engine-portable);
     ``shard_id = stream_offset DIV shard_bytes`` — nominal-position
     sharding, so records never split, every shard's nominal span is
     exactly ``shard_bytes``, and actual shard size deviates by at most
@@ -460,7 +459,7 @@ def byte_shard_manifest(
     Scale shape: the stream offset is a prefix sum over a WINDOW
     PARTITIONED BY md5 BUCKET plus cumulative bucket totals from a
     ≤``n_parts``-row collect broadcast back — no global sort, no
-    single-task window (the pack_sequences discipline verbatim).
+    single-task window (the politeness.assign_discovery_seq discipline).
     Zero-byte records are dropped (nothing to store). Returns the input
     id + (n_bytes, stream_offset, shard_id, offset_in_shard)."""
     if shard_bytes <= 0:

@@ -204,7 +204,7 @@ def allocate_budget(
     sharded by value (``shard = n_shards−1 − (rem·n_shards) DIV D`` — a
     deterministic function of data, not of partitioning), ranked inside
     each shard, and shifted by per-shard totals collected as ≤
-    ``n_shards`` rows (the pack_sequences prefix-sum idiom). Two 1-row
+    ``n_shards`` rows (the assign_discovery_seq prefix-sum idiom). Two 1-row
     broadcasts carry D and the leftover; the demand table shuffles once.
 
     Rows with non-positive demand are dropped (they get no quota and
@@ -622,7 +622,7 @@ def host_fairness(
     ``repartitionByRange(c, host)`` (a distributed sort), ranked within
     each range partition, and offset by cumulative per-partition counts
     — a ≤``n_parts``-row collect, the same bounded-totals discipline as
-    text.pack_sequences / politeness.assign_discovery_seq. One final
+    politeness.assign_discovery_seq. One final
     map-side aggregate. Returns ONE row: (n_hosts, n_fetches,
     gini_micro, top1pct_share_ppm, top10pct_share_ppm)."""
     counts = fetch_log.groupBy(F.col(host_col).alias("_h")).agg(

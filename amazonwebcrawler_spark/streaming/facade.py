@@ -333,34 +333,3 @@ def rate_control_stream(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def audio_gate_stream(spark: SparkSession, src_dir: str, out_dir: str, schema=None):
-    """Streaming audio curation gate: PCM rows ``(audio_id, bytes)``
-    arriving as files pass through the SAME Arrow kernel + verdict the
-    batch side uses (``media.audio_gate_kernel`` → ``media.audio_gate``
-    — mapInPandas and the pure-column verdict are both stream-capable,
-    applied UNCHANGED), exactly-once into an append parquet sink. One
-    operator, one contract, batch or stream — a continuously crawling
-    deployment gates audio as it lands with no second implementation to
-    drift; the stream≡batch equivalence is pinned in
-    tests/test_streaming.py like the other foreachBatch-free twins."""
-    from amazonwebcrawler_spark.functions import media
-
-    if schema is None:
-        schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    stats = stream.mapInPandas(media.audio_gate_kernel(), media.AUDIO_GATE_SCHEMA)
-    gated = media.audio_gate(stats)
-    return (
-        gated.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{out_dir}/audio_gated")
-        .option("checkpointLocation", f"{out_dir}/_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -50,9 +50,6 @@ BENCH_QUERIES = (
     # so this times the WHOLE materialization, not just the final count.
     # ~14 s warm at sf0.1/local[32] idle (first rep pays plan warm-up).
     "corpus_pipeline",
-    # chunk → pack manifest (r4): the training-sequence prep stage; times
-    # the sharded prefix-sum + explode (includes the bounded totals collect)
-    "pack_sequences",
     # temporal joins (r4 session 5): the one-shuffle union-tag as-of and
     # the bucketized interval join — both over the full events table, so
     # the timing is the shuffle+window / equi-join cost, not a toy
@@ -77,27 +74,13 @@ BENCH_QUERIES = (
     # never shuffles) — timed so both scale claims carry numbers
     "substring_dedup",
     "robots_rfc",
-    # classifier inference throughput: hashed-feature explode + broadcast
-    # weight join + one per-doc agg — the model-scored quality filter leg
-    "classifier_score",
-    # r5 session 9: DSIR importance weighting (one feature explode feeds
-    # both LM fits + scoring; broadcast log-ratio table), keep-first
-    # segment dedup (segment-keyed window election + doc reassembly), and
-    # the BPE merge-pair round (distinct-word collapse + top-k heaps)
-    "dsir_weights",
+    # r5 session 9: keep-first segment dedup (segment-keyed window
+    # election + doc reassembly)
     "segment_dedup",
-    "bpe_pairs",
-    # r5 session 10: exact-integer linear-probe training — two broadcast
-    # gradient rounds over the hashed-presence feature table; timed so the
-    # "model state never shuffles the corpus" claim carries a number
-    "probe_train",
     # r5 session 11: recall@k eval — lsh + brute-force + the hit join in
     # one leg, so the "evaluation is itself a distributed join" claim is
     # timed against the indexes it measures
     "ann_recall",
-    # r5 session 11: per-epoch shuffle manifest — shard windows + broadcast
-    # offsets standing in for the global sort an epoch reshuffle never runs
-    "epoch_shuffle",
     # r5 session 11: degree-oriented triangle counting — the wedge join's
     # √m out-degree bound is the claim; timing it keeps the number honest
     "triangle_count",
@@ -116,10 +99,6 @@ BENCH_QUERIES = (
     # the no-fan-out claim) — timed so the per-round costs carry numbers
     "kcore",
     "random_walks",
-    # r5 session 12 (cont.): PMI collocation mining — bigram + unigram
-    # map-side aggs with a TakeOrderedAndProject top-k; timed so the
-    # never-a-global-sort claim carries a number
-    "pmi_pairs",
     # OPIC crawl priority — 5 integer cash rounds (join + map-side sum +
     # 1-row purse broadcast per round); timed beside host_rank so the
     # online-vs-offline priority cost comparison carries numbers
@@ -144,25 +123,16 @@ BENCH_QUERIES = (
     "compaction_plan",
     # phrase search — filtered Generate + two map-side aggs, zero joins
     "phrase_match",
-    # skip-gram mining — offset explode + two-key equi join (linear, never
-    # a per-doc quadratic self-join); timed so that claim carries a number
-    "skipgram_pairs",
     # r5 session 14: C4 line cleaning (one Generate + one per-doc agg),
-    # n-gram novelty (gram-keyed min + join back), CCNet ppl tiers
-    # (lm_score joins + language-partitioned window), mirror detection
+    # n-gram novelty (gram-keyed min + join back), mirror detection
     # (fingerprint equi self-join + skew-guard window), blur detection
     # and channel-normalization stats (one Arrow decode pass each) —
     # timed so each scale claim carries a number
     "c4_clean",
     "gram_novelty",
-    "ppl_buckets",
     "mirror_detect",
     "blur_detect",
     "channel_stats",
-    # BPE tokenizer application — bounded-sample driver training + one
-    # Arrow encode crossing with a per-batch word cache; timed so the
-    # tokenize-and-count stage carries a number
-    "bpe_encode",
     # LSH banding eval — pipeline candidates vs exact shingle-join truth;
     # timed so the eval-on-a-sample discipline carries a number
     "lsh_eval",
@@ -194,27 +164,13 @@ BENCH_QUERIES = (
     "color_stats",
     # discovery-completeness audit — robots→sitemap→seen set arithmetic
     "sitemap_coverage",
-    # r5 session 16: KN bigram LM — the (w1,w2) train aggregate + re-join
-    # scoring pass; timed so the order-aware perplexity stage has a number
-    "kn_bigram",
     # RFC 3986 resolution — one codegen projection (case tree + segment
     # fold); timed as the frontier-expansion unit cost
     "resolve_refs",
     # storage-level CDC chunking — the explode-heavy rolling-cut pass
     "cdc_chunks",
-    # r5 session 17: fused frame-quality decode (pHash + Laplacian in ONE
-    # Arrow pass) + pure-JVM sharpest-per-shot windows; the no-second-
-    # decode claim carries a number beside the other media kernels
-    "keyframe_select",
     # block-constancy upscale audit — one decode pass, three reshapes
     "upscale_detect",
-    # PCM clipping/silence/dropout gate — one Arrow DSP pass
-    "audio_gate",
-    # pHash run-length islands — one window shuffle, two rollup aggs
-    "freeze_detect",
-    # per-doc OOV vs broadcast vocab head — sf-dependent corpus leg: the
-    # explode + broadcast join + doc-keyed agg cost scales with documents
-    "oov_rate",
     # boilerplate removal — block split + higher-order density filter, all
     # codegen over synthetic pages from orders; the scan-rate claim's number
     "boilerplate_strip",

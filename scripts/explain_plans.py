@@ -51,18 +51,9 @@ CHECKS = {
     # image ANN: exactly one Python crossing (the Arrow-batched embedding
     # decode); the retrieval itself broadcasts the query side
     "image_ann": ["MapInPandas", "BroadcastNestedLoopJoin"],
-    # chunking is shuffle-free pure column math: codegen spans, no exchange,
-    # no Python anywhere
-    "chunk_documents": ["[codegen id :"],
-    # the unigram LM's corpus total must arrive as a broadcast, not a shuffle
-    "lm_score": ["BroadcastNestedLoopJoin", "HashAggregate"],
     # trap detection: two host-keyed hash aggregations of pure column math —
     # no Python eval node anywhere (NEG_CHECKS)
     "trap_detect": ["HashAggregate", "[codegen id :"],
-    # sequence packing: the stream prefix-sum is a SHARD-partitioned window
-    # and the global offsets arrive via broadcast — never a global sort
-    # (no SinglePartition exchange, NEG_CHECKS), no Python anywhere
-    "pack_sequences": ["Window", "BroadcastHashJoin", "[codegen id :"],
     # aspect bucketing: argmin over a literal struct array — one codegen'd
     # projection, zero joins/exchanges/Python (NEG_CHECKS)
     "aspect_buckets": ["[codegen id :", "array_min"],
@@ -84,11 +75,6 @@ CHECKS = {
     # rank delta: both windows are partitioned (day / event_type) — the
     # date-over-date diff never needs a global sort (NEG_CHECKS)
     "rank_delta": ["Window", "HashAggregate", "[codegen id :"],
-    # mixture resampling: broadcast weight table + explode — the corpus
-    # itself is never shuffled (no Exchange on the big side would be ideal
-    # to assert, but the broadcast build shows as its own exchange; the
-    # Generate & BHJ are the plan signature)
-    "mixture_sample": ["BroadcastHashJoin", "Generate", "[codegen id :"],
     # in-batch negatives: bucket windows + ONE equi self-join
     "negative_pairs": ["Window", "HashJoin", "[codegen id :"],
     # CDC diff: digests joined, not payloads; full outer on the id
@@ -109,9 +95,6 @@ CHECKS = {
     # intra-doc self-dedup: ONE codegen'd projection — zero shuffles,
     # zero joins, zero Python (NEG forbids all three)
     "selfdedup_clean": ["[codegen id :"],
-    # vocabulary head: map-side-combinable agg + TakeOrderedAndProject
-    # (per-partition heaps) — never a global Sort
-    "vocab_topk": ["TakeOrderedAndProject", "HashAggregate", "[codegen id :"],
     # link extraction: regexp + resolve + canonicalize all in one
     # codegen'd projection over a Generate — no join, no shuffle, no Python
     "link_extract": ["Generate", "[codegen id :"],
@@ -156,9 +139,6 @@ CHECKS = {
     # adaptive backoff: two HOST-partitioned windows, pure integer math —
     # never a global sort, no join, no Python (NEG)
     "adaptive_backoff": ["Window", "[codegen id :"],
-    # classifier inference: weight table arrives as a BROADCAST join; the
-    # score is one map-side-combinable per-doc aggregate; no Python (NEG)
-    "classifier_score": ["BroadcastHashJoin", "HashAggregate", "partial_count", "[codegen id :"],
     # DUST param-policy mining: one higher-order projection (distinct-key
     # explode Generate) + two map-side-combinable hash aggs — no join, no
     # window, no Python, no single-partition exchange (NEG)
@@ -166,22 +146,12 @@ CHECKS = {
     # learned-policy application: the strip sets arrive as ONE broadcast
     # row per host — the URL side never shuffles for the rewrite
     "param_apply": ["BroadcastHashJoin", "[codegen id :"],
-    # DSIR: the per-bucket log-ratio table arrives as a BROADCAST join on
-    # the feature stream; both LM fits and the per-doc sum are map-side-
-    # combinable hash aggs; no Python (NEG)
-    "dsir_weights": ["BroadcastHashJoin", "HashAggregate", "partial_count", "[codegen id :"],
     # recall@k eval: the hit join + per-query aggregate over two top-k
     # result sets — map-side partials. The LSH side's bucket encode is the
     # Arrow kernel at the default table count (r6, the ann_pq precedent —
     # literal hyperplane dots defeat codegen), positively asserted;
     # row-at-a-time Python stays forbidden (NEG)
     "ann_recall": ["ArrowEvalPython", "HashAggregate", "[codegen id :"],
-    # epoch shuffle: SHARD-partitioned row_number windows + broadcast
-    # offsets — never a global sort (NEG forbids SinglePartition), no
-    # Python (triangle_count has no entry: its output is eagerly
-    # localCheckpointed inside the operator, the hits/minhash discipline,
-    # so the formatted plan is an RDD scan)
-    "epoch_shuffle": ["Window", "BroadcastHashJoin", "[codegen id :"],
     # BM25: df_t and dl arrive as BROADCAST equi-joins on the query-filtered
     # tf stream; N and avgdl as 1-row broadcast crossJoins (the accepted
     # BNLJ-Cross idiom); every aggregate map-side-combinable; no Python
@@ -193,10 +163,6 @@ CHECKS = {
     # to the distinct-key probe; exact counts are one map-side-combinable
     # hash agg; no Python, no sort-merge, no cartesian (NEG)
     "heavy_hitters": ["BroadcastHashJoin", "HashAggregate", "partial_count", "[codegen id :"],
-    # PMI collocations: map-side-combinable bigram/unigram counts, top-k
-    # via per-partition heaps (TakeOrderedAndProject — never a global
-    # Sort), totals broadcast; no Python (NEG)
-    "pmi_pairs": ["HashAggregate", "partial_count", "TakeOrderedAndProject", "[codegen id :"],
     # postings build: tf + sorted position list in ONE ObjectHashAggregate
     # over (term, doc); df via a term-PARTITIONED window (never global —
     # NEG forbids SinglePartition); no Python anywhere
@@ -224,11 +190,6 @@ CHECKS = {
     # partial_min) + equi join back — no nested-loop, no Python, no
     # global sort (NEG)
     "gram_novelty": ["Generate", "HashAggregate", "partial_min", "[codegen id :"],
-    # CCNet tiers: lm_score's broadcast-total shape (BNLJ Cross is the
-    # accepted 1-row-broadcast idiom) + LANGUAGE-partitioned windows —
-    # the 1-row total agg's SinglePartition exchange is the accepted
-    # bounded shape (budget_allocate precedent), so not forbidden
-    "ppl_buckets": ["Window", "BroadcastNestedLoopJoin", "HashAggregate", "[codegen id :"],
     # mirror detection: fp equi self-join + map-side-combinable pair
     # counts — never host×host (NEG forbids nested-loop/cartesian), no
     # Python, no single-partition exchange. r6: the (host, fp) table is
@@ -241,10 +202,6 @@ CHECKS = {
     "blur_detect": ["MapInPandas"],
     # smart crop: same single-decode map-only shape
     "smart_crop": ["MapInPandas"],
-    # BPE encode: exactly ONE Python crossing (the Arrow tokenize
-    # kernel; the merge table is a closure constant) — no join, no
-    # window, no shuffle beyond the round-robin repartition (NEG)
-    "bpe_encode": ["MapInPandas"],
     # novelty budget composition: the gram-novelty rollup feeds the
     # SHARD-partitioned Hamilton remainder window — no Python anywhere
     # (NEG; the 1-row D/leftover broadcasts are the accepted
@@ -300,71 +257,44 @@ CHECKS = {
     # partial combine (partial_count / partial_sum), pure integer column
     # math — no Python, no window, no join (NEG_CHECKS)
     "frontier_size": ["HashAggregate", "partial_count", "partial_sum", "[codegen id :"],
-    # KN bigram LM: bigram extraction is a codegen'd array transform (no
-    # self-join); the type total arrives as a broadcast one-row aggregate;
-    # training + scoring are hash aggregates — no Python (NEG_CHECKS)
-    "kn_bigram": ["BroadcastNestedLoopJoin", "HashAggregate", "[codegen id :"],
     # RFC 3986 resolution: the whole case tree + §5.2.4 segment fold is ONE
     # codegen projection over the scan — no shuffle, no join, no Python
     "resolve_refs": ["[codegen id :", "ReadSchema: struct<o_orderkey:bigint>"],
-    # isotonic calibration: the corpus reduces through ONE map-side-
-    # combinable bucket aggregate before anything quadratic; the score
-    # range broadcasts; no Python (NEG_CHECKS)
-    "isotonic_calib": ["HashAggregate", "partial_count", "BroadcastNestedLoopJoin"],
     # UCB1: one map-side host aggregate + the broadcast 1-row total —
     # no window, no data-side join, no Python (NEG_CHECKS)
     "ucb_schedule": ["HashAggregate", "partial_count", "BroadcastNestedLoopJoin"],
     # percent normalization: tokenize + transform + join is one codegen
     # projection — no shuffle, no Python
     "percent_norm": ["[codegen id :", "ReadSchema: struct<o_orderkey:bigint>"],
-    # frame-freeze islands: ONE video-keyed window (lag + running sum share
-    # the spec) + two hash rollups — no Python, no single-partition
-    # exchange (NEG_CHECKS)
-    "freeze_detect": ["Window", "HashAggregate", "[codegen id :"],
-    # OOV audit: the vocab head must arrive as a BROADCAST to the token
-    # stream — the corpus shuffles only for the doc-keyed agg; no Python
-    "oov_rate": ["BroadcastHashJoin", "HashAggregate", "[codegen id :"],
     # cross-modal conflict audit: md5 fingerprints + two count-distinct
     # hash aggregates, pure JVM (NEG_CHECKS)
     "caption_conflicts": ["HashAggregate", "[codegen id :"],
     # per-URL spam gate: every heuristic (incl. the nested higher-order
     # segment count) is codegen column math — no Python, no Window
     "url_spam": ["[codegen id :"],
-    # keyframe selection: exactly ONE Python crossing (the fused Arrow
-    # frame-quality decode); shot assignment + argmax are JVM windows
-    # (struct-max compiles to ObjectHashAggregate/SortAggregate — assert
-    # the generic Aggregate suffix)
-    "keyframe_select": ["MapInPandas", "Window", "Aggregate"],
 }
 
 #: queries whose plan must be rendered with AQE disabled (see dedup_simhash)
 NO_AQE = {
     "dedup_simhash", "hamming_neardup", "dedup_incremental",
-    "trap_detect", "pack_sequences",
+    "trap_detect",
     "asof_join", "range_join", "skew_join_salted", "rollup_metrics", "rank_delta",
-    "mixture_sample", "negative_pairs", "snapshot_diff", "sketch_distinct",
+    "negative_pairs", "snapshot_diff", "sketch_distinct",
     "expectations", "winsorize", "ema_score",
-    "gopher_signals", "vocab_topk", "recrawl_priority", "substring_dedup",
-    "robots_rfc", "adaptive_backoff", "classifier_score",
+    "gopher_signals", "recrawl_priority", "substring_dedup",
+    "robots_rfc", "adaptive_backoff",
     "etld1_domain", "anchor_rollup", "template_detect", "canonical_group",
     "capture_novelty", "budget_allocate", "param_policy", "param_apply",
-    "dsir_weights", "ann_recall", "epoch_shuffle",
-    "bm25_rank", "heavy_hitters", "pmi_pairs", "postings_build", "ann_pq",
+    "ann_recall",
+    "bm25_rank", "heavy_hitters", "postings_build", "ann_pq",
     "compaction_plan", "phrase_match",
-    "c4_clean", "gram_novelty", "ppl_buckets", "mirror_detect",
+    "c4_clean", "gram_novelty", "mirror_detect",
     "novelty_budget", "hll_distinct", "cdc_chunks", "frontier_size",
-    "kn_bigram",
-    "freeze_detect", "oov_rate", "caption_conflicts", "url_spam",
-    "keyframe_select",
+    "caption_conflicts", "url_spam",
 }
 
 NEG_CHECKS = {
     # query -> substrings that must NOT appear in the plan
-    "freeze_detect": [
-        "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-        "Exchange SinglePartition",
-    ],
-    "oov_rate": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "caption_conflicts": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "url_spam": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Window"],
     "trap_detect": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
@@ -372,11 +302,9 @@ NEG_CHECKS = {
     "hyperball": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "cdc_chunks": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "frontier_size": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Window", "Join"],
-    "kn_bigram": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Window"],
     "resolve_refs": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join",
     ],
-    "isotonic_calib": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "ucb_schedule": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Window"],
     "percent_norm": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join",
@@ -384,11 +312,6 @@ NEG_CHECKS = {
     "dedup_simhash": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "hamming_neardup": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "dedup_incremental": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
-    "chunk_documents": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange"],
-    "lm_score": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
-    "pack_sequences": [
-        "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange SinglePartition",
-    ],
     "aspect_buckets": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join",
     ],
@@ -410,7 +333,6 @@ NEG_CHECKS = {
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "Exchange SinglePartition", "Join",
     ],
-    "mixture_sample": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "negative_pairs": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "NestedLoop", "Cartesian",
@@ -428,7 +350,6 @@ NEG_CHECKS = {
         "Exchange SinglePartition",
     ],
     "selfdedup_clean": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join"],
-    "vocab_topk": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Sort "],
     "link_extract": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join"],
     "sitemap_extract": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join"],
     "recrawl_priority": [
@@ -474,10 +395,6 @@ NEG_CHECKS = {
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "Exchange SinglePartition", "Join",
     ],
-    "classifier_score": [
-        "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-        "Exchange SinglePartition", "NestedLoop", "Cartesian",
-    ],
     "param_policy": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "Exchange SinglePartition", "Join", "Window",
@@ -486,21 +403,10 @@ NEG_CHECKS = {
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "Exchange SinglePartition", "NestedLoop", "Cartesian",
     ],
-    # (the 1-row totals broadcast renders as BroadcastNestedLoopJoin Cross
-    # BuildRight — the repo's accepted broadcast-1-row idiom, same as
-    # tfidf/nll — so NestedLoop is deliberately NOT forbidden here)
-    "dsir_weights": [
-        "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-        "Exchange SinglePartition", "SortMergeJoin",
-    ],
     # both top-k inputs are pure column math; the brute-force side's
     # broadcast-queries crossJoin renders as BroadcastNestedLoopJoin (the
     # accepted broadcast-small-side idiom), so only Cartesian is forbidden
     "ann_recall": ["BatchEvalPython", "MapInPandas", "Cartesian"],
-    "epoch_shuffle": [
-        "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-        "Exchange SinglePartition", "NestedLoop", "Cartesian",
-    ],
     # bm25: the 1-row totals (N, avgdl) broadcast as BNLJ Cross and their
     # global aggregates are bounded 1-row SinglePartition exchanges (the
     # budget_allocate-accepted shapes), so neither is forbidden here
@@ -512,14 +418,6 @@ NEG_CHECKS = {
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "SortMergeJoin", "NestedLoop", "Cartesian",
         "Exchange SinglePartition",
-    ],
-    # pmi: the 1-row totals broadcast as BNLJ Cross and their global
-    # aggregates are bounded 1-row SinglePartition exchanges (accepted
-    # shapes, the bm25 precedent); a global Sort node would mean the
-    # top-k lost its TakeOrderedAndProject form, so it IS forbidden
-    "pmi_pairs": [
-        "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-        "SortMergeJoin", "Cartesian", "Sort ",
     ],
     # postings: window sorts are partition-local by construction; forbid
     # Python, joins (df comes from the window, not a self-join), and any
@@ -551,18 +449,12 @@ NEG_CHECKS = {
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "NestedLoop", "Cartesian", "Exchange SinglePartition",
     ],
-    # ppl_buckets: the 1-row corpus-total agg's SinglePartition exchange
-    # and its BNLJ-Cross broadcast are the accepted bounded shapes
-    # (budget_allocate/bm25 precedents) — only Python and a cartesian
-    # product are forbidden
-    "ppl_buckets": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Cartesian"],
     "mirror_detect": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "NestedLoop", "Cartesian", "Exchange SinglePartition",
     ],
     "blur_detect": ["Join", "Cartesian"],
     "channel_stats": ["Join", "Cartesian", "Exchange SinglePartition"],
-    "bpe_encode": ["Join", "Cartesian", "Window", "Exchange SinglePartition"],
     "novelty_budget": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Cartesian"],
     "smart_crop": ["Join", "Cartesian", "Window", "Exchange SinglePartition"],
     # the 1-row totals broadcast is the accepted crossJoin shape; a
@@ -623,21 +515,16 @@ def _lambda_spans(plan: str):
 #: lambda. Catalyst CSE skips lambda-bearing expressions, so a lambda that
 #: captures the tokenization re-runs the regex PER ELEMENT — O(n²) work per
 #: document that no node-level plan assert can see (the r5-s10 finding:
-#: classifier_score went 15.2 s → 1.4 s at sf0.1 from this alone). The fix
+#: a text-classifier query went 15.2 s → 1.4 s at sf0.1 from this alone). The fix
 #: idiom is text.bind_once / a materialized projection boundary.
 LAMBDA_CAPTURE_QUERIES = (
-    "classifier_score",
-    "dsir_weights",
     "gopher_signals",
     "selfdedup_clean",
     "segment_dedup",
     "winnow_fingerprints",
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
-    "bpe_pairs",
-    "chunk_documents",
     "text_stats",
-    "pmi_pairs",
     "postings_build",
 )
 

@@ -1,6 +1,6 @@
 """Generate committed-golden oracle rows for the deterministic, sf-independent
-driver queries that have no SQL-expressible twin (bloom plumbing, image/video/
-audio kernels, the flagship crawl wave).
+driver queries that have no SQL-expressible twin (bloom plumbing, image
+kernels, the flagship crawl wave).
 
 Each golden is the query's own output, captured once and committed to
 ``amazonwebcrawler_spark/goldens.json``; ``__spark_entry__.oracle_sql`` renders
@@ -9,7 +9,7 @@ these queries like any other.
 
 **Capture is self-checking**: every query's independent invariants (the ones
 the pytest suite owns — planted counts, zero false negatives, all-true decode
-flags, frame-sampling arithmetic, IVF recall vs the exact top-k) are asserted
+flags, IVF recall vs the exact top-k) are asserted
 HERE, at capture time, so a bug present when the golden is taken fails the
 capture instead of being pinned as "correct". A golden therefore certifies
 both drift-freedom since capture AND the invariants at capture.
@@ -49,18 +49,6 @@ GOLDEN_QUERIES: dict[str, dict[str, str]] = {
         "fmt_ok": "BOOLEAN", "phash_ok": "BOOLEAN", "phash_recomputed": "BIGINT",
         "caption_len": "INTEGER", "n_bytes": "INTEGER",
     },
-    "video_frame_sample": {
-        "video_id": "VARCHAR", "frame_idx": "INTEGER", "phash": "BIGINT",
-        "frame_md5": "VARCHAR", "frame_len": "INTEGER",
-    },
-    "shot_detect": {
-        "video_id": "VARCHAR", "frame_idx": "INTEGER",
-        "hamming_prev": "INTEGER", "is_boundary": "BOOLEAN",
-    },
-    "video_dedup": {
-        "video_a": "VARCHAR", "video_b": "VARCHAR", "n_keyframes_a": "BIGINT",
-        "n_matched": "BIGINT", "containment_milli": "BIGINT", "is_dup": "BOOLEAN",
-    },
     "images_resize": {
         "image_id": "VARCHAR", "w": "INTEGER", "h": "INTEGER",
         "bytes_md5": "VARCHAR", "n_bytes": "INTEGER",
@@ -72,10 +60,6 @@ GOLDEN_QUERIES: dict[str, dict[str, str]] = {
     "image_ann": {
         "query_id": "VARCHAR", "neighbor_id": "VARCHAR",
         "cos_sim_e4": "BIGINT", "rank": "INTEGER",
-    },
-    "audio_features": {
-        "audio_id": "VARCHAR", "duration_us": "BIGINT", "rms_micro": "BIGINT",
-        "zcr_micro": "BIGINT", "peak_micro": "BIGINT",
     },
     "image_quality": {
         "image_id": "VARCHAR", "w": "INTEGER", "h": "INTEGER",
@@ -119,10 +103,6 @@ GOLDEN_QUERIES: dict[str, dict[str, str]] = {
         "channel": "VARCHAR", "n_px": "BIGINT",
         "mean_milli": "BIGINT", "var_micro": "BIGINT",
     },
-    "bpe_encode": {
-        "doc_id": "BIGINT", "n_words": "INTEGER", "n_tokens": "INTEGER",
-        "n_chars": "INTEGER", "tokens_md5": "VARCHAR",
-    },
     "smart_crop": {
         "image_id": "VARCHAR", "w": "INTEGER", "h": "INTEGER",
         "crop_x": "INTEGER", "crop_y": "INTEGER", "crop_side": "INTEGER",
@@ -138,10 +118,6 @@ GOLDEN_QUERIES: dict[str, dict[str, str]] = {
         "image_id": "VARCHAR", "n_patches": "BIGINT", "n_sigs": "BIGINT",
         "max_repeat": "BIGINT", "is_tiled": "BOOLEAN",
     },
-    "keyframe_select": {
-        "video_id": "VARCHAR", "shot_id": "INTEGER", "n_frames": "BIGINT",
-        "frame_idx": "INTEGER", "lap_var": "BIGINT",
-    },
     "upscale_detect": {
         "image_id": "VARCHAR", "w": "INTEGER", "h": "INTEGER",
         "is_flat": "BOOLEAN", "const2_milli": "BIGINT",
@@ -150,18 +126,6 @@ GOLDEN_QUERIES: dict[str, dict[str, str]] = {
     },
     "image_probe": {
         "image_id": "VARCHAR", "logit_micro": "BIGINT", "keep": "BOOLEAN",
-    },
-    "video_pipeline": {
-        "video_id": "VARCHAR", "n_shots": "BIGINT", "n_frames": "BIGINT",
-        "matched_video": "VARCHAR", "containment_milli": "BIGINT",
-        "is_dup": "BOOLEAN",
-    },
-    "audio_gate": {
-        "audio_id": "VARCHAR", "duration_us": "BIGINT",
-        "clipped_ppm": "BIGINT", "silence_ppm": "BIGINT",
-        "longest_silence_ms": "BIGINT", "dc_micro": "BIGINT",
-        "is_clipped": "BOOLEAN", "is_silent": "BOOLEAN",
-        "has_dropout": "BOOLEAN", "keep": "BOOLEAN",
     },
     "bloom_stats": {
         "bucket": "INTEGER", "n_probed": "BIGINT", "false_negatives": "BIGINT",
@@ -182,7 +146,6 @@ PINNED_SF: dict[str, str] = {
     "ann_ivf": "sf0.01",
     "semantic_dedup": "sf0.01",
     "ann_pq": "sf0.01",
-    "bpe_encode": "sf0.01",
 }
 
 OUT = os.path.join(
@@ -259,101 +222,6 @@ def _check_images_validate(rows, ctx):
         if r["decode_ok"]:
             assert r["dims_ok"] and r["fmt_ok"], r
             assert r["phash_recomputed"] is not None, r
-
-
-def _check_video_frame_sample(rows, ctx):
-    """16 synthetic videos × 12 frames sampled every 4 → exactly frames
-    0, 4, 8 per video."""
-    per_vid: dict[str, list[int]] = {}
-    for r in rows:
-        per_vid.setdefault(r["video_id"], []).append(r["frame_idx"])
-        assert r["frame_len"] > 0 and r["frame_md5"], r
-    assert len(per_vid) == 16, len(per_vid)
-    for vid, idxs in per_vid.items():
-        assert sorted(idxs) == [0, 4, 8], (vid, sorted(idxs))
-
-
-def _check_shot_detect(rows, ctx):
-    """Independent Python replay: decode every synthetic multi-scene
-    video, recompute pHash diffs, and pin that boundaries fire at EXACTLY
-    the planted cut frames ({5,9} even ids / {6} odd) — measured regimes
-    are intra-scene ≤ 4 vs cut ≥ 25 against threshold 12, so both sides
-    of the threshold are exercised with margin."""
-    from amazonwebcrawler_spark.functions.images import hamming64, phash64
-    from amazonwebcrawler_spark.functions.media import iter_frames, synth_video_scenes
-
-    by_vid: dict[str, dict[int, tuple]] = {}
-    for r in rows:
-        by_vid.setdefault(r["video_id"], {})[r["frame_idx"]] = (
-            r["hamming_prev"], r["is_boundary"]
-        )
-    assert len(by_vid) == 16
-    for i in range(16):
-        lens = (5, 4, 3) if i % 2 == 0 else (6, 6)
-        cuts = {5, 9} if i % 2 == 0 else {6}
-        ph = [phash64(f) for f in iter_frames(synth_video_scenes(i, lens))]
-        got = by_vid[f"vid-{i}"]
-        assert sorted(got) == list(range(len(ph)))
-        for j in range(len(ph)):
-            d = -1 if j == 0 else hamming64(ph[j - 1], ph[j])
-            assert got[j] == (d, j in cuts), (i, j, got[j], d)
-            if j in cuts:
-                assert d >= 25
-            elif j > 0:
-                assert d <= 4
-
-
-def _check_video_dedup(rows, ctx):
-    """Independent Python replay of the WHOLE keyframe-containment
-    pipeline (decode → cuts → keyframes → ≤2-bit match → containment),
-    plus the planted-relation audit: every trim/re-encode pair present
-    and directionally scored, zero unrelated collisions."""
-    from amazonwebcrawler_spark.functions.images import hamming64, phash64
-    from amazonwebcrawler_spark.functions.media import iter_frames, synth_video_scenes
-
-    worlds = {}
-    for i in range(10):
-        worlds[f"vid-{i}"] = (i, (5, 4, 3), 0)
-    for i in range(5):
-        worlds[f"vid-{i}-trim"] = (i, (5, 4), 0)
-    for i in range(5, 8):
-        worlds[f"vid-{i}-re"] = (i, (5, 4, 3), 8)
-    kfs = {}
-    for vid, (seed, lens, shift) in worlds.items():
-        ph = [phash64(f) for f in iter_frames(synth_video_scenes(seed, lens, shift=shift))]
-        cuts = [0]
-        for j in range(1, len(ph)):
-            if hamming64(ph[j - 1], ph[j]) > 12:
-                cuts.append(j)
-        kfs[vid] = [ph[j] for j in cuts]
-    want = set()
-    for a in worlds:
-        for b in worlds:
-            if a == b:
-                continue
-            matched = sum(
-                1 for x in kfs[a] if any(hamming64(x, y) <= 2 for y in kfs[b])
-            )
-            if matched:
-                cm = matched * 1000 // len(kfs[a])
-                want.add((a, b, len(kfs[a]), matched, cm, cm >= 600))
-    got = {
-        (r["video_a"], r["video_b"], r["n_keyframes_a"], r["n_matched"],
-         r["containment_milli"], r["is_dup"])
-        for r in rows
-    }
-    assert got == want, (sorted(got - want), sorted(want - got))
-    by_pair = {(a, b): (m, cm, d) for a, b, _n, m, cm, d in got}
-    for i in range(5):  # trims: full containment from the trim side, 2/3 back
-        assert by_pair[(f"vid-{i}-trim", f"vid-{i}")] == (2, 1000, True)
-        assert by_pair[(f"vid-{i}", f"vid-{i}-trim")] == (2, 666, True)
-    for i in range(5, 8):  # re-encodes: full both ways
-        assert by_pair[(f"vid-{i}-re", f"vid-{i}")] == (3, 1000, True)
-        assert by_pair[(f"vid-{i}", f"vid-{i}-re")] == (3, 1000, True)
-    # no unrelated pair may appear at all
-    for a, b, *_ in got:
-        ra, rb = a.split("-")[1], b.split("-")[1]
-        assert ra == rb, (a, b)
 
 
 def _check_dedup_phash(rows, ctx):
@@ -726,16 +594,6 @@ def _check_images_resize(rows, ctx):
         assert r["n_bytes"] > 0 and r["bytes_md5"], r
 
 
-def _check_audio_features(rows, ctx):
-    assert len(rows) == 16, len(rows)
-    for r in rows:
-        assert r["duration_us"] > 0, r
-        # floor-div peak vs half-up rms can cross by <1 micro at the edge,
-        # hence the +1 slack; int16 full-scale |−32768|/32768 can hit 1.0
-        assert 0 <= r["rms_micro"] <= r["peak_micro"] + 1 <= 1_000_001, r
-        assert 0 <= r["zcr_micro"] <= 1_000_000, r
-
-
 def _check_image_quality(rows, ctx):
     """Analytic expectations for the planted diagnostics, then an
     independent numpy recompute of EVERY decodable row (the statistics are
@@ -1026,66 +884,6 @@ def _check_tile_detect(rows, ctx):
     assert "diag-corrupt" not in got
 
 
-def _check_keyframe_select(rows, ctx):
-    """Full Python replay (rebuild videos → decode → phash/blur → cut
-    detection → per-shot argmax) plus closed-form pins: every shot
-    boundary sits exactly at a planted scene start (frames 4, 8), pHash
-    is CONSTANT within each shot (texture zeroed on the sample grid),
-    and each shot's winner is its max-amplitude frame (lap_var ∝ amp²
-    over a zero-Laplacian ramp; ties impossible — amps are a
-    permutation of {0,8,16,24}). All pixels are FJPG bin centers
-    (≡4 mod 8), so the lossy codec round-trips exactly — asserted."""
-    import numpy as np
-
-    from amazonwebcrawler_spark.functions import media
-    from amazonwebcrawler_spark.functions.images import blur_stats, phash64
-
-    yy, xx = np.meshgrid(np.arange(24), np.arange(24), indexing="ij")
-    ramps = (28 + 8 * xx, 28 + 8 * (23 - xx), 28 + 8 * yy, 28 + 8 * (23 - yy))
-    checker = ((yy + xx) % 2 * 2 - 1) * (~((yy % 3 == 0) & (xx % 3 == 0)))
-
-    expected = set()
-    for v in range(12):
-        n_shots = 2 + v % 2
-        frames = []
-        amps = []
-        for s in range(n_shots):
-            base = ramps[(v * 3 + s * 7) % 4]
-            for f in range(4):
-                amp = ((f * 3 + s + v) % 4) * 8
-                amps.append(amp)
-                px = (base + amp * checker).astype(np.uint8)
-                frames.append(np.stack([px, px, px], axis=-1))
-        decoded = list(media.iter_frames(media.encode_video(frames)))
-        assert all(np.array_equal(a, b) for a, b in zip(decoded, frames))
-        ph = [phash64(p) for p in decoded]
-        lv = [blur_stats(p)["lap_var"] for p in decoded]
-        # cut replay + pins
-        shot = 0
-        per_shot: dict[int, list[tuple[int, int, int]]] = {0: []}
-        for i in range(len(frames)):
-            if i > 0:
-                ham = bin((ph[i] ^ ph[i - 1]) & 0xFFFFFFFFFFFFFFFF).count("1")
-                planted_cut = i % 4 == 0
-                assert (ham > 12) == planted_cut, (v, i, ham)
-                if not planted_cut:
-                    assert ham == 0, (v, i, ham)  # texture zero on sample grid
-                if planted_cut:
-                    shot += 1
-                    per_shot[shot] = []
-            per_shot[shot].append((lv[i], i, amps[i]))
-        for s, fr in per_shot.items():
-            best = max(fr, key=lambda t: (t[0], -t[1]))
-            assert best[2] == max(a for _, _, a in fr), (v, s, fr)  # max-amp wins
-            expected.add((f"kv-{v}", s, 4, best[1], best[0]))
-    got = {
-        (r["video_id"], r["shot_id"], r["n_frames"], r["frame_idx"], r["lap_var"])
-        for r in rows
-    }
-    assert got == expected, (sorted(got - expected)[:3], sorted(expected - got)[:3])
-    assert not any(r["video_id"] == "kv-corrupt" for r in rows)
-
-
 def _check_upscale_detect(rows, ctx):
     """Independent replay: decode every image the query built and
     re-derive each constant-block fraction via np.unique over block
@@ -1097,7 +895,7 @@ def _check_upscale_detect(rows, ctx):
     import numpy as np
 
     from amazonwebcrawler_spark.functions import images as fi
-    from amazonwebcrawler_spark.functions.media import resize_pixels
+    from amazonwebcrawler_spark.functions.images import resize_pixels
     from amazonwebcrawler_spark.sources import synthetic_world as world
 
     def tex(h, w):
@@ -1214,173 +1012,6 @@ def _check_image_probe(rows, ctx):
     # flat card: all-equal pixels embed to the zero-centered vector →
     # the dot collapses to ~0 and the bias decides
     assert not expected["probe-flat"][1]
-
-
-def _check_video_pipeline(rows, ctx):
-    """Full Python replay of the composition — decode → per-frame
-    pHash/lap_var → cut detection → sharpest-per-shot argmax → all-pairs
-    hamming ≤2 keyframe matching → ordered containment → best-match
-    verdict — plus closed-form pins: every trim contained 1000‰ from
-    its side, every planted pair flagged dup both ways, no orig↔orig
-    match, corrupt row absent."""
-    from amazonwebcrawler_spark.functions import media
-    from amazonwebcrawler_spark.functions.images import blur_stats, hamming64, phash64
-
-    LENS = [(5, 4, 3), (4, 4, 4), (6, 3, 3), (5, 5, 2), (3, 4, 5),
-            (4, 3, 5), (5, 3, 4), (6, 4, 2), (3, 5, 4), (4, 5, 3)]
-    worlds = {f"orig-{i}": media.synth_video_scenes(100 + i, lens)
-              for i, lens in enumerate(LENS)}
-    for i in (0, 3, 7):
-        worlds[f"trim-{i}"] = media.synth_video_scenes(100 + i, LENS[i][:2])
-    for i in (1, 5):
-        worlds[f"re-{i}"] = media.synth_video_scenes(100 + i, LENS[i], shift=4)
-
-    kf = {}
-    shots_frames = {}
-    for vid, data in worlds.items():
-        frames = list(media.iter_frames(data))
-        ph = [phash64(p) for p in frames]
-        lv = [blur_stats(p)["lap_var"] for p in frames]
-        shot, per_shot = 0, {0: []}
-        for i in range(len(frames)):
-            if i > 0 and hamming64(ph[i], ph[i - 1]) > 12:
-                shot += 1
-                per_shot[shot] = []
-            per_shot[shot].append(i)
-        winners = []
-        for s in sorted(per_shot):
-            idxs = per_shot[s]
-            best = max(idxs, key=lambda i: (lv[i] if lv[i] is not None else -1, -i))
-            winners.append((best, ph[best]))
-        kf[vid] = winners
-        shots_frames[vid] = (len(per_shot), len(frames))
-
-    expected = {}
-    for va, ka in kf.items():
-        best = None
-        for vb, kb in kf.items():
-            if vb == va:
-                continue
-            matched = sum(
-                1 for ia, pa in ka if any(hamming64(pa, pb) <= 2 for _, pb in kb)
-            )
-            if matched == 0:
-                continue
-            cont = matched * 1000 // len(ka)
-            if best is None or cont > best[0] or (cont == best[0] and vb < best[1]):
-                best = (cont, vb)
-        ns, nf = shots_frames[va]
-        if best is None:
-            expected[va] = (ns, nf, "", 0, False)
-        else:
-            expected[va] = (ns, nf, best[1], best[0], best[0] >= 600)
-
-    # closed-form pins
-    for i in (0, 3, 7):
-        assert expected[f"trim-{i}"][2:] == (f"orig-{i}", 1000, True)
-        assert expected[f"orig-{i}"][2] == f"trim-{i}" and expected[f"orig-{i}"][4]
-    for i in (1, 5):
-        assert expected[f"re-{i}"][2] == f"orig-{i}" and expected[f"re-{i}"][4]
-        assert expected[f"orig-{i}"][2] == f"re-{i}" and expected[f"orig-{i}"][4]
-    unplanted = {f"orig-{i}" for i in range(10)} - {"orig-0", "orig-1", "orig-3", "orig-5", "orig-7"}
-    assert all(expected[v][2] == "" for v in unplanted)
-
-    got = {
-        r["video_id"]: (r["n_shots"], r["n_frames"], r["matched_video"],
-                        r["containment_milli"], r["is_dup"])
-        for r in rows
-    }
-    assert got == expected, (
-        sorted(set(got) ^ set(expected))[:3],
-        [k for k in got if k in expected and got[k] != expected[k]][:3],
-    )
-    assert "vp-corrupt" not in got
-
-
-def _check_audio_gate(rows, ctx):
-    """Independent DSP replay: rebuild every PCM stream the query built,
-    recount clipped/quiet samples and the longest quiet run with a
-    PYTHON LOOP (the kernel uses vectorized diff-of-flatnonzero), apply
-    the verdict thresholds by hand, and pin every planted regime:
-    clipped ≈ 2/3 rail time, quiet → vacuous silence, the 500 ms
-    dropout exactly AT the threshold, the 300 ms gap below it, the DC
-    bias reported but not gated, the empty stream vacuously silent, the
-    corrupt row absent, and all 10 clean tones kept."""
-    import numpy as np
-
-    from amazonwebcrawler_spark.functions import media
-
-    t = np.arange(16000)
-    sine = np.sin(2 * np.pi * 220 * t / 16000)
-
-    def ints(x):
-        return (np.clip(x, -1, 1) * 32767).astype(np.int16)
-
-    worlds = {f"aud-{i}": media.decode_audio(media.synth_audio(i))[0] for i in range(10)}
-    worlds["diag-clipped"] = ints(2.0 * sine)
-    rng = np.random.default_rng(7)
-    worlds["diag-quiet"] = rng.integers(-50, 51, size=16000).astype(np.int16)
-    dropout = 0.5 * sine.copy()
-    dropout[6000:14000] = 0.0
-    worlds["diag-dropout"] = ints(dropout)
-    gap = 0.5 * sine.copy()
-    gap[6000:10800] = 0.0
-    worlds["diag-gap300"] = ints(gap)
-    worlds["diag-dc"] = ints(0.3 * sine + 0.2)
-    worlds["diag-empty"] = np.array([], dtype=np.int16)
-
-    expected = {}
-    for aid, s16 in worlds.items():
-        # round-trip through the container: what the kernel actually sees
-        dec, rate = media.decode_audio(media.encode_audio(s16))
-        assert np.array_equal(dec, s16) and rate == 16000
-        n = len(s16)
-        clipped = quiet = run = longest = 0
-        total = 0
-        for v in s16.tolist():
-            total += v
-            if abs(v) >= 32767:
-                clipped += 1
-            if abs(v) <= 327:
-                quiet += 1
-                run += 1
-                longest = max(longest, run)
-            else:
-                run = 0
-        c_ppm = clipped * 1_000_000 // n if n else 0
-        s_ppm = quiet * 1_000_000 // n if n else 1_000_000
-        l_ms = longest * 1000 // 16000
-        dc = total * 1_000_000 // (n * 32768) if n else 0
-        is_c = c_ppm >= 1000
-        is_s = s_ppm >= 900_000 or n == 0
-        drop = l_ms >= 500 and not is_s
-        expected[aid] = (
-            n * 1_000_000 // 16000 if n else 0, c_ppm, s_ppm, l_ms, dc,
-            is_c, is_s, drop, not (is_c or is_s or drop),
-        )
-
-    e = expected
-    assert e["diag-clipped"][1] > 600_000 and e["diag-clipped"][5]
-    assert e["diag-quiet"][2] == 1_000_000 and e["diag-quiet"][6]
-    assert e["diag-dropout"][3] == 500 and e["diag-dropout"][7] and not e["diag-dropout"][8]
-    assert 300 <= e["diag-gap300"][3] < 500 and e["diag-gap300"][8]
-    assert e["diag-dc"][4] >= 190_000 and e["diag-dc"][8]  # reported, not gated
-    assert e["diag-empty"][0] == 0 and e["diag-empty"][6]
-    assert all(e[f"aud-{i}"][8] for i in range(10))  # clean tones all keep
-
-    got = {
-        r["audio_id"]: (
-            r["duration_us"], r["clipped_ppm"], r["silence_ppm"],
-            r["longest_silence_ms"], r["dc_micro"], r["is_clipped"],
-            r["is_silent"], r["has_dropout"], r["keep"],
-        )
-        for r in rows
-    }
-    assert got == expected, (
-        sorted(set(got) ^ set(expected))[:3],
-        [k for k in got if k in expected and got[k] != expected[k]][:3],
-    )
-    assert "diag-corrupt" not in got
 
 
 def _check_blur_detect(rows, ctx):
@@ -1587,88 +1218,6 @@ def _check_smart_crop(rows, ctx):
     for r in rows:
         assert 0 <= r["crop_x"] <= r["w"] - r["crop_side"]
         assert 0 <= r["crop_y"] <= r["h"] - r["crop_side"]
-
-
-def _check_bpe_encode(rows, ctx):
-    """Re-derive the WHOLE tokenization through independent
-    implementations: a Counter-over-occurrence-lists trainer (vs the
-    kernel's freq-dict trainer) and a sequential rank-order replay encoder
-    (vs the kernel's lowest-rank-first loop — their equivalence is the
-    classic BPE apply identity, so disagreement means a real bug). Also
-    asserts the end-of-word round-trip on every distinct word."""
-    import hashlib
-    from collections import Counter
-
-    import duckdb
-
-    from amazonwebcrawler_spark.functions.text import BPE_EOW, bpe_word_split
-
-    docs = duckdb.sql(
-        f"SELECT doc_id, text FROM read_parquet('{ctx['sf_dir']}/documents.parquet')"
-        " ORDER BY doc_id"
-    ).fetchall()
-    sample = [t for _, t in docs[:64]]
-
-    # independent trainer: occurrence lists + Counter
-    corpus = [list(w) + [BPE_EOW] for t in sample for w in bpe_word_split(t)]
-    merges = []
-    for _ in range(200):
-        c = Counter()
-        for syms in corpus:
-            c.update(zip(syms, syms[1:]))
-        if not c:
-            break
-        best = min(c.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        if c[best] < 2:
-            break
-        merges.append(best)
-        for k, syms in enumerate(corpus):
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and (syms[i], syms[i + 1]) == best:
-                    out.append(syms[i] + syms[i + 1])
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            corpus[k] = out
-
-    def encode_replay(word: str) -> list[str]:
-        syms = list(word) + [BPE_EOW]
-        for left, right in merges:
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
-                    out.append(left + right)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
-
-    by_id = {r["doc_id"]: r for r in rows}
-    assert len(rows) == len(docs), (len(rows), len(docs))
-    cache: dict[str, list[str]] = {}
-    for did, text in docs:
-        words = bpe_word_split(text or "")
-        toks = []
-        for w in words:
-            if w not in cache:
-                enc = encode_replay(w)
-                assert "".join(enc) == w + BPE_EOW, (w, enc)  # round-trip
-                cache[w] = enc
-            toks.extend(cache[w])
-        got = by_id[did]
-        assert got["n_words"] == len(words), did
-        assert got["n_chars"] == sum(len(w) for w in words), did
-        assert got["n_tokens"] == len(toks), (did, got["n_tokens"], len(toks))
-        want_md5 = hashlib.md5(" ".join(toks).encode()).hexdigest()
-        assert got["tokens_md5"] == want_md5, did
-    # the merges must actually compress: corpus-wide tokens < chars+words
-    total_toks = sum(r["n_tokens"] for r in rows)
-    total_syms = sum(r["n_chars"] + r["n_words"] for r in rows)
-    assert 0 < total_toks < total_syms, (total_toks, total_syms)
 
 
 def _check_bloom_stats(rows, ctx):
@@ -1890,9 +1439,6 @@ CHECKERS = {
     "ann_ivf": _check_ann_ivf,
     "images_decode": _check_images_decode,
     "images_validate": _check_images_validate,
-    "video_frame_sample": _check_video_frame_sample,
-    "shot_detect": _check_shot_detect,
-    "video_dedup": _check_video_dedup,
     "images_resize": _check_images_resize,
     "dedup_phash": _check_dedup_phash,
     "crop_dedup": _check_crop_dedup,
@@ -1900,7 +1446,6 @@ CHECKERS = {
     "pair_dedup": _check_pair_dedup,
     "semantic_dedup": _check_semantic_dedup,
     "image_ann": _check_image_ann,
-    "audio_features": _check_audio_features,
     "image_quality": _check_image_quality,
     "image_pipeline": _check_image_pipeline,
     "image_patches": _check_image_patches,
@@ -1911,14 +1456,10 @@ CHECKERS = {
     "cuckoo_stats": _check_cuckoo_stats,
     "blur_detect": _check_blur_detect,
     "channel_stats": _check_channel_stats,
-    "bpe_encode": _check_bpe_encode,
     "smart_crop": _check_smart_crop,
     "color_stats": _check_color_stats,
     "tile_detect": _check_tile_detect,
-    "keyframe_select": _check_keyframe_select,
     "upscale_detect": _check_upscale_detect,
-    "audio_gate": _check_audio_gate,
-    "video_pipeline": _check_video_pipeline,
     "image_probe": _check_image_probe,
 }
 assert set(CHECKERS) == set(GOLDEN_QUERIES), "every golden needs a capture-time checker"

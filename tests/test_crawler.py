@@ -32,9 +32,8 @@ def _cfg(tmp: str, **kw) -> CrawlConfig:
 
 
 @pytest.fixture(scope="module")
-def crawl(spark):
-    tmp = "/tmp/crawl_itest"
-    shutil.rmtree(tmp, ignore_errors=True)
+def crawl(spark, tmp_path_factory):
+    tmp = str(tmp_path_factory.mktemp("crawl_itest"))
     eng = CrawlEngine(spark, _cfg(tmp), seeds=seeds_df(spark, SEED_ROWS))
     out = eng.run()
     return out["store"]
@@ -124,13 +123,12 @@ class TestCrawlInvariants:
 
 
 class TestPriorityQueue:
-    def test_indegree_priority_is_nonvacuous_and_reorders(self, spark):
+    def test_indegree_priority_is_nonvacuous_and_reorders(self, spark, tmp_path):
         """W4/north_star: the page-rank-like score must (a) actually take
         values >1 on the synthetic world (popular-pool ASINs shared across
         keywords) and (b) move those URLs ahead of earlier-discovered
         depth-peers in the dequeue."""
-        tmp = "/tmp/crawl_prio_test"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = str(tmp_path / "crawl_prio_test")
         rows = [
             (i, "keyword", f"kw {i} synth", world.serp_url(f"kw {i} synth", 1), "yogamat", 2)
             for i in range(24)
@@ -167,14 +165,12 @@ class TestPriorityQueue:
                     f"deferred row with score {r.priority_score} outranks "
                     f"batch minimum {worst_batch[k]} in {k}"
                 )
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @pytest.fixture(scope="module")
-def quarantine_crawl(spark):
+def quarantine_crawl(spark, tmp_path_factory):
     """One wave over one SERP seed: no detail, category or cart page."""
-    tmp = "/tmp/crawl_quarantine"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = str(tmp_path_factory.mktemp("crawl_quarantine"))
     # 'probe kw 5' page 1 deterministically renders the 'other' layout
     # with own-product items (synthetic_world.serp_page layout hash)
     seeds = [(0, "keyword", "probe kw 5", world.serp_url("probe kw 5", 1), "yogamat", 1)]
@@ -214,7 +210,7 @@ class TestQuarantine:
 
 
 class TestEarlyStop:
-    def test_early_stop_fetches_fewer_pages(self, spark):
+    def test_early_stop_fetches_fewer_pages(self, spark, tmp_path):
         """A3/L2: once a seed has its first ad + first natural own hit, its
         pagination stops (reference core loop, getRank.py:208-209,468-469).
         'probe kw 4' page 1 contains both hits → early-stop crawls 1 serp
@@ -224,8 +220,7 @@ class TestEarlyStop:
         seeds = [(0, "keyword", "probe kw 4", world.serp_url("probe kw 4", 1), "yogamat", 6)]
         counts = {}
         for flag in (True, False):
-            tmp = f"/tmp/crawl_es_{flag}"
-            shutil.rmtree(tmp, ignore_errors=True)
+            tmp = str(tmp_path / f"crawl_es_{flag}")
             eng = CrawlEngine(
                 spark,
                 _cfg(tmp, max_waves=10, early_stop=flag,
@@ -248,10 +243,8 @@ class TestEarlyStop:
 
 
 class TestResume:
-    def test_exact_resume_matches_uninterrupted(self, spark):
-        a, b = "/tmp/crawl_full", "/tmp/crawl_resume"
-        for t in (a, b):
-            shutil.rmtree(t, ignore_errors=True)
+    def test_exact_resume_matches_uninterrupted(self, spark, tmp_path):
+        a, b = str(tmp_path / "crawl_full"), str(tmp_path / "crawl_resume")
         seeds = seeds_df(spark, SEED_ROWS)
 
         full = CrawlEngine(spark, _cfg(a, max_waves=10), seeds=seeds).run()["store"]
@@ -267,13 +260,12 @@ class TestResume:
         ord_b = sorted((r.wave, r.canonical_url) for r in resumed.load_deltas("lineage").collect())
         assert ord_a == ord_b
 
-    def test_dead_letters_survive_resume_with_more_retries(self, spark):
+    def test_dead_letters_survive_resume_with_more_retries(self, spark, tmp_path):
         """A fetch is a dead letter by the retry rule it was fetched under
         (C3): wave 0 at max_retries=0 dead-letters its transient failures,
         and resuming at max_retries=2 keeps them dead instead of re-reading
         them under the new limit."""
-        tmp = "/tmp/crawl_dead_resume"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = str(tmp_path / "crawl_dead_resume")
         # 'dead kw 107' and 'dead kw 127' page 1 fail their first attempt
         # (synthetic_world.fetch_is_transient_failure); 0 and 1 do not
         rows = [
@@ -291,19 +283,16 @@ class TestResume:
         resumed = CrawlEngine(spark, _cfg(tmp, max_waves=2, max_retries=2, **kw), seeds=seeds)
         assert resumed.run(resume=True)["last_wave"] == 1
         assert sorted(tuple(r) for r in resumed.dead_letters().collect()) == first
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 class TestCompaction:
-    def test_compaction_preserves_state_and_resume(self, spark):
+    def test_compaction_preserves_state_and_resume(self, spark, tmp_path):
         """Every compact_every-th wave rewrites the shard state as a full
         base (manifest 'bases'; no other table compacts: `seen` is an
         append-only log, seed_flags a snapshot); crawl results, the seen
         set, and exact resume across a compaction boundary must be
         identical to the uncompacted run."""
-        a, b = "/tmp/crawl_nocompact", "/tmp/crawl_compact"
-        for t in (a, b):
-            shutil.rmtree(t, ignore_errors=True)
+        a, b = str(tmp_path / "crawl_nocompact"), str(tmp_path / "crawl_compact")
         seeds = seeds_df(spark, SEED_ROWS)
         plain = CrawlEngine(spark, _cfg(a, max_waves=10, compact_every=0), seeds=seeds).run()["store"]
         # compact every 2 waves; interrupt at 3 and resume (crosses a base)
@@ -337,7 +326,7 @@ class TestCompaction:
         sb = {r.bucket: r.n_items for r in comp.load_shard_state().collect()}
         assert sa == sb
 
-    def test_crash_between_base_write_and_manifest_rename(self, spark):
+    def test_crash_between_base_write_and_manifest_rename(self, spark, tmp_path):
         """Kill mid-compaction: the compacting wave's base FILES are on disk
         but its manifest rename never happened. The manifest is the commit
         point — loaders must ignore the orphan wave directories and serve
@@ -345,9 +334,7 @@ class TestCompaction:
         identically to an uninterrupted run."""
         import os
 
-        a, b = "/tmp/crawl_full_mc", "/tmp/crawl_crash_mc"
-        for t in (a, b):
-            shutil.rmtree(t, ignore_errors=True)
+        a, b = str(tmp_path / "crawl_full_mc"), str(tmp_path / "crawl_crash_mc")
         seeds = seeds_df(spark, SEED_ROWS)
         full = CrawlEngine(spark, _cfg(a, max_waves=10, compact_every=2), seeds=seeds).run()["store"]
 
@@ -394,15 +381,14 @@ class TestCompaction:
 
 
 class TestAdmission:
-    def test_loop_never_reads_seen(self, spark, monkeypatch):
+    def test_loop_never_reads_seen(self, spark, monkeypatch, tmp_path):
         """The seen confirm is answered inside the Bloom cogroup, and `seen`
         never compacts: a multi-wave crawl that crosses compaction waves
         must never read the `seen` table through any loader (the spy sits
         on the chain walk every loader takes)."""
         from amazonwebcrawler_spark.sources.state_store import StateStore
 
-        tmp = "/tmp/crawl_no_seen_read"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = str(tmp_path / "crawl_no_seen_read")
         loaded = []
         chain = StateStore._chain
 
@@ -418,15 +404,14 @@ class TestAdmission:
         assert {"frontier", "shards", "seed_flags"} <= set(loaded), "the spy missed a loader"
         assert "seen" not in loaded
 
-    def test_product_pages_fetched_once(self, spark):
+    def test_product_pages_fetched_once(self, spark, tmp_path):
         """Canonicalization strips a /dp/ link's keywords=, so a popular
         product listed on several keyword SERPs is one URL: the crawl
         (checked against the oracle) fetches each /dp/<ASIN> at most once
         with status 200, and inventory_report has one row per ASIN."""
         import tests.oracle as oracle_mod
 
-        tmp = "/tmp/crawl_one_fetch_per_asin"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = str(tmp_path / "crawl_one_fetch_per_asin")
         rows = [
             (i, "keyword", kw, world.serp_url(kw, 1), "yogamat", 2)
             for i, kw in enumerate(
@@ -463,7 +448,7 @@ class TestAdmission:
 
 
 class TestPrunedDequeue:
-    def test_pruned_crawl_matches_oracle(self, spark):
+    def test_pruned_crawl_matches_oracle(self, spark, tmp_path):
         """The depth-pruned dequeue is a pure read optimization: with a
         budget small enough that whole depth bands are left unread (64
         one-page keyword seeds, 2 tokens per shard), the crawl's per-wave
@@ -472,8 +457,7 @@ class TestPrunedDequeue:
         must really have been dequeued from a pruned (hot, cold) split."""
         import tests.oracle as oracle_mod
 
-        tmp = "/tmp/crawl_prune_oracle"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = str(tmp_path / "crawl_prune_oracle")
         rows = [
             (i, "keyword", f"kw {i} synth", world.serp_url(f"kw {i} synth", 1), "yogamat", 1)
             for i in range(64)
@@ -499,14 +483,12 @@ class TestPrunedDequeue:
         assert sorted((r.wave, r.canonical_url) for r in lineage) == sorted(o.fetch_order)
         assert {r.canonical_url for r in store.load_deltas("seen").collect()} == o.seen
 
-    def test_shard_sets_resume_exact(self, spark):
+    def test_shard_sets_resume_exact(self, spark, tmp_path):
         """Exact resume of the seen confirm: the per-bucket key-hash sets
         reconstruct from the COW chain (latest version per bucket) and the
         resumed crawl — seen set with discovery sequences, and per-wave
         lineage — equals the uninterrupted one."""
-        a, b = "/tmp/crawl_ss_full", "/tmp/crawl_ss_resume"
-        for t in (a, b):
-            shutil.rmtree(t, ignore_errors=True)
+        a, b = str(tmp_path / "crawl_ss_full"), str(tmp_path / "crawl_ss_resume")
         seeds = seeds_df(spark, SEED_ROWS)
         full = CrawlEngine(spark, _cfg(a, max_waves=10), seeds=seeds).run()["store"]
         CrawlEngine(spark, _cfg(b, max_waves=2), seeds=seeds).run()
@@ -518,7 +500,7 @@ class TestPrunedDequeue:
         ord_b = sorted((r.wave, r.canonical_url) for r in resumed.load_deltas("lineage").collect())
         assert ord_a == ord_b
 
-    def test_shard_sets_collision_failure_mode(self, spark, monkeypatch):
+    def test_shard_sets_collision_failure_mode(self, spark, monkeypatch, tmp_path):
         """Pin the documented seen-confirm caveat (operators/bloom.py module
         docstring): exactness holds only up to xxhash64 collisions on h1 —
         a colliding NEW url is wrongly reported exact_seen and dropped.
@@ -543,12 +525,10 @@ class TestPrunedDequeue:
             )
 
         monkeypatch.setattr(bloom_mod, "with_bloom_keys", truncated_keys)
-        tmp = "/tmp/crawl_collision"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = str(tmp_path / "crawl_collision")
         cfg = _cfg(tmp, max_waves=16, early_stop=False)
         st = CrawlEngine(spark, cfg, seeds=seeds_df(spark, SEED_ROWS)).run()["store"]
         ss = {r.canonical_url for r in st.load_deltas("seen").collect()}
-        shutil.rmtree(tmp, ignore_errors=True)
         oracle = oracle_mod.crawl_oracle(
             SEED_ROWS, n_shards=cfg.n_shards, salt_bits=cfg.salt_bits,
             tokens_per_shard=cfg.tokens_per_shard, max_waves=cfg.max_waves,
@@ -571,7 +551,7 @@ class TestPrunedDequeue:
         for u in missing:
             assert tv[u] in admitted_vals, f"dropped URL {u} has no collision partner"
 
-    def test_load_frontier_prunes_exactly(self, spark):
+    def test_load_frontier_prunes_exactly(self, spark, tmp_path):
         """Handcrafted snapshot with every shard holding ≥ tokens rows at
         depth 0: _load_frontier must return ONLY depth 0 as hot (the exact
         bound), the rest as cold, with partition pruning visible in the
@@ -582,8 +562,7 @@ class TestPrunedDequeue:
 
         from amazonwebcrawler_spark.plans.crawler import FRONTIER_SCHEMA
 
-        tmp = "/tmp/crawl_prune_unit"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = str(tmp_path / "crawl_prune_unit")
         cfg = _cfg(tmp, tokens_per_shard=2, n_shards=4)
         eng = CrawlEngine(spark, cfg, seeds=seeds_df(spark, SEED_ROWS))
         rows = [
@@ -627,7 +606,7 @@ def _table_rows(df):
 
 
 class TestTimeTravel:
-    def test_as_of_wave_equals_interrupted_run(self, spark):
+    def test_as_of_wave_equals_interrupted_run(self, spark, tmp_path):
         """Iceberg-style snapshot time travel: reading state `as_of_wave=k`
         from a finished run must equal what a run stopped after wave k
         actually held — for EVERY delta table (state_store.DELTA_TABLES,
@@ -635,9 +614,7 @@ class TestTimeTravel:
         frontier and seed_flags), and the COW shard state."""
         from amazonwebcrawler_spark.sources.state_store import DELTA_TABLES
 
-        a, b = "/tmp/crawl_tt_full", "/tmp/crawl_tt_part"
-        for t in (a, b):
-            shutil.rmtree(t, ignore_errors=True)
+        a, b = str(tmp_path / "crawl_tt_full"), str(tmp_path / "crawl_tt_part")
         seeds = seeds_df(spark, SEED_ROWS)
         full = CrawlEngine(spark, _cfg(a, max_waves=10), seeds=seeds).run()["store"]
         part = CrawlEngine(spark, _cfg(b, max_waves=2), seeds=seeds).run()["store"]
@@ -740,7 +717,6 @@ class TestExpiration:
     byte-identical before and after; expired time travel raises."""
 
     def _run(self, spark, tmp, max_waves, compact_every=2):
-        shutil.rmtree(tmp, ignore_errors=True)
         eng = CrawlEngine(
             spark,
             _cfg(tmp, max_waves=max_waves, compact_every=compact_every),
@@ -748,10 +724,10 @@ class TestExpiration:
         )
         return eng.run()["store"]
 
-    def test_expire_reclaims_only_unreachable(self, spark):
+    def test_expire_reclaims_only_unreachable(self, spark, tmp_path):
         import os
 
-        store = self._run(spark, "/tmp/crawl_expire", max_waves=6)
+        store = self._run(spark, str(tmp_path / "crawl_expire"), max_waves=6)
         waves = store.committed_waves()
         assert len(waves) >= 5
         before = {
@@ -788,8 +764,8 @@ class TestExpiration:
         # live delta tables (no compaction base) lose NOTHING
         assert not {"seen", "results", "images", "lineage"} & deleted_tables
 
-    def test_expired_time_travel_raises(self, spark):
-        store = self._run(spark, "/tmp/crawl_expire_tt", max_waves=6)
+    def test_expired_time_travel_raises(self, spark, tmp_path):
+        store = self._run(spark, str(tmp_path / "crawl_expire_tt"), max_waves=6)
         waves = store.committed_waves()
         old = waves[0]
         # pre-expiration: time travel works
@@ -798,28 +774,28 @@ class TestExpiration:
         with pytest.raises(ValueError, match="snapshot expired"):
             store.load_snapshot("frontier", as_of_wave=old)
 
-    def test_resume_after_expiration(self, spark):
+    def test_resume_after_expiration(self, spark, tmp_path):
         """Expiration must not break the resume path: continue the crawl
         after expiring, and the result equals an uninterrupted run."""
-        tmp = "/tmp/crawl_expire_resume"
+        tmp = str(tmp_path / "crawl_expire_resume")
         store = self._run(spark, tmp, max_waves=3)
         store.expire_snapshots(keep_last=1)
         eng = CrawlEngine(
             spark, _cfg(tmp, max_waves=16, compact_every=2), seeds=seeds_df(spark, SEED_ROWS)
         )
         resumed = eng.run(resume=True)["store"]
-        full = self._run(spark, "/tmp/crawl_expire_full", max_waves=16)
+        full = self._run(spark, str(tmp_path / "crawl_expire_full"), max_waves=16)
         for name in ("results", "seen", "images"):
             a = sorted(map(tuple, resumed.load_deltas(name).collect()))
             b = sorted(map(tuple, full.load_deltas(name).collect()))
             assert a == b
 
-    def test_keep_last_validation(self, spark):
-        store = self._run(spark, "/tmp/crawl_expire_val", max_waves=2)
+    def test_keep_last_validation(self, spark, tmp_path):
+        store = self._run(spark, str(tmp_path / "crawl_expire_val"), max_waves=2)
         with pytest.raises(ValueError, match="keep_last"):
             store.expire_snapshots(keep_last=0)
 
-    def test_unknown_table_never_deleted(self, spark):
+    def test_unknown_table_never_deleted(self, spark, tmp_path):
         """ADVICE r4: a table committed under a name outside the store's
         table lists (a future commit_wave addition, an external caller) is
         never compacted, so every version of it stays on the chain of the
@@ -828,7 +804,7 @@ class TestExpiration:
         import json
         import os
 
-        store = self._run(spark, "/tmp/crawl_expire_unknown", max_waves=6)
+        store = self._run(spark, str(tmp_path / "crawl_expire_unknown"), max_waves=6)
         waves = store.committed_waves()
         old = waves[0]
         # plant a table name outside the store's table lists in an OLD
@@ -851,15 +827,14 @@ class TestExpiration:
         assert "frontier" in {t for t, _ in out["deleted"]}
 
 
-    def test_retained_waves_stay_readable(self, spark):
+    def test_retained_waves_stay_readable(self, spark, tmp_path):
         """The guarantee of the one chain walk the loaders and expiration
         share: after expire_snapshots(keep_last=2), every loader reads
         every table as of each retained wave — no 'snapshot expired', and
         the same rows as before expiration."""
         from amazonwebcrawler_spark.sources.state_store import DELTA_TABLES, SNAPSHOT_TABLES
 
-        tmp = "/tmp/crawl_expire_reads"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = str(tmp_path / "crawl_expire_reads")
         # a small budget keeps the frontier non-empty through the last wave
         store = CrawlEngine(
             spark,
@@ -936,16 +911,15 @@ class TestOrphans:
     never touched; resume semantics are unaffected."""
 
     def _store(self, spark, tmp):
-        shutil.rmtree(tmp, ignore_errors=True)
         eng = CrawlEngine(
             spark, _cfg(tmp, max_waves=4), seeds=seeds_df(spark, SEED_ROWS)
         )
         return eng.run()["store"]
 
-    def test_scan_finds_only_crashed_writes(self, spark):
+    def test_scan_finds_only_crashed_writes(self, spark, tmp_path):
         import os
 
-        store = self._store(spark, "/tmp/crawl_orphans")
+        store = self._store(spark, str(tmp_path / "crawl_orphans"))
         assert store.orphan_scan() == {"orphans": [], "bytes": 0}
 
         # simulate a crash: wave dirs written, manifest never renamed
@@ -972,10 +946,10 @@ class TestOrphans:
               if "results" in store._manifest(w)["tables"]]
         ).count()
 
-    def test_age_guard_then_sweep(self, spark):
+    def test_age_guard_then_sweep(self, spark, tmp_path):
         import os
 
-        store = self._store(spark, "/tmp/crawl_orphans2")
+        store = self._store(spark, str(tmp_path / "crawl_orphans2"))
         crash_wave = max(store.committed_waves()) + 1
         p = os.path.join(store.root, "results", f"wave={crash_wave}")
         spark.range(5).write.parquet(p)
@@ -991,8 +965,8 @@ class TestOrphans:
         assert not os.path.exists(p)
         assert store.orphan_scan() == {"orphans": [], "bytes": 0}
 
-    def test_expired_paths_not_reported_as_orphans(self, spark):
-        store = self._store(spark, "/tmp/crawl_orphans3")
+    def test_expired_paths_not_reported_as_orphans(self, spark, tmp_path):
+        store = self._store(spark, str(tmp_path / "crawl_orphans3"))
         store.expire_snapshots(keep_last=1)
         # expire tombstones paths and deletes them; nothing left to scan
         assert store.orphan_scan()["orphans"] == []

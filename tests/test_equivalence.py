@@ -4,8 +4,6 @@ form — the full local[8]/local[32] throughput run lives in bench.py)."""
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -42,13 +40,13 @@ class TestCanonicalizeParity:
         got = [r.c for r in df.select(canonicalize_url(F.col("url")).alias("c")).collect()]
         assert got == [canonicalize_url_py(v) for v in vectors]
 
-    def test_host_shard_parity(self, spark):
+    def test_host_shard_parity(self, spark, tmp_path):
         from amazonwebcrawler_spark.plans.crawler import CrawlConfig, _with_host_shard
 
         urls = [world.serp_url("yoga mat", p) for p in range(1, 6)] + [
             world.detail_url(world.asin_for("yoga mat", 1, i)) for i in range(1, 6)
         ]
-        cfg = CrawlConfig(checkpoint_dir="/tmp/unused", n_shards=8, salt_bits=2)
+        cfg = CrawlConfig(checkpoint_dir=str(tmp_path), n_shards=8, salt_bits=2)
         df = spark.createDataFrame([(u,) for u in urls], "canonical_url string")
         got = {
             r.canonical_url: r.host_shard for r in _with_host_shard(df, cfg).collect()
@@ -59,7 +57,6 @@ class TestCanonicalizeParity:
 
 def _engine_order_and_seen(spark, tmpdir: str, shuffle_partitions: int):
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    shutil.rmtree(tmpdir, ignore_errors=True)
     cfg = CrawlConfig(checkpoint_dir=tmpdir, bloom=bloom.BloomConfig(n_buckets=8, m_bits=1 << 16), **CFG)
     eng = CrawlEngine(spark, cfg, seeds=seeds_df(spark, SEED_ROWS))
     out = eng.run()
@@ -78,13 +75,13 @@ def oracle_run():
 
 
 class TestCrawlEquivalence:
-    def test_engine_matches_oracle_parallelism_a(self, spark, oracle_run):
-        order, seen = _engine_order_and_seen(spark, "/tmp/crawl_eq_a", 4)
+    def test_engine_matches_oracle_parallelism_a(self, spark, oracle_run, tmp_path):
+        order, seen = _engine_order_and_seen(spark, str(tmp_path), 4)
         assert seen == oracle_run.seen
         assert order == sorted(oracle_run.fetch_order)
 
-    def test_engine_matches_oracle_parallelism_b(self, spark, oracle_run):
+    def test_engine_matches_oracle_parallelism_b(self, spark, oracle_run, tmp_path):
         # different shuffle parallelism → byte-identical crawl order
-        order, seen = _engine_order_and_seen(spark, "/tmp/crawl_eq_b", 13)
+        order, seen = _engine_order_and_seen(spark, str(tmp_path), 13)
         assert seen == oracle_run.seen
         assert order == sorted(oracle_run.fetch_order)

@@ -488,35 +488,6 @@ class TestExtractLinksRel:
         assert [r["nofollow"] for r in got] == [False, True]
 
 
-class TestOovRate:
-    """functions/text.oov_rate — vocab boundary determinism and ppm math."""
-
-    def test_oov_math_and_boundary(self, spark):
-        from amazonwebcrawler_spark.functions.text import oov_rate
-
-        # tf: "aa"×4, "bb"×3, "cc"×3, "dd"×1 → k=2 vocab = {aa, bb}
-        # (bb beats cc on the token-asc tiebreak at equal tf)
-        rows = [
-            (1, "aa bb cc aa"),
-            (2, "aa bb cc dd"),
-            (3, "aa bb cc aa"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id int, text string")
-        out = {r["doc_id"]: r for r in oov_rate(df, "text", "doc_id", k=2, max_oov_ppm=400_000).collect()}
-        assert (out[1]["n_tokens"], out[1]["n_oov"], out[1]["oov_ppm"]) == (4, 1, 250000)
-        assert not out[1]["high_oov"]
-        assert (out[2]["n_oov"], out[2]["oov_ppm"], out[2]["high_oov"]) == (2, 500000, True)
-
-    def test_empty_doc_yields_no_row(self, spark):
-        from amazonwebcrawler_spark.functions.text import oov_rate
-
-        df = spark.createDataFrame(
-            [(1, "alpha beta"), (2, "   "), (3, "")], "doc_id int, text string"
-        )
-        out = oov_rate(df, "text", "doc_id", k=10).collect()
-        assert sorted(r["doc_id"] for r in out) == [1]
-
-
 class TestExtractMainText:
     """functions/text.extract_main_text — block classification on
     hand-built HTML: link-density boundary, nested anchor tags,

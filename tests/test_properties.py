@@ -83,22 +83,8 @@ class TestCodecProperties:
 
 
 class TestSession17Properties:
-    """Pure-kernel properties for the session-17 media/audio math —
-    replayed against brute-force Python on randomized inputs."""
-
-    @given(st.lists(st.booleans(), max_size=200))
-    @settings(max_examples=60, deadline=None)
-    def test_longest_run_matches_brute(self, mask):
-        import numpy as np
-
-        from amazonwebcrawler_spark.functions.media import _longest_run
-
-        arr = np.array(mask, dtype=bool)
-        best = cur = 0
-        for v in mask:
-            cur = cur + 1 if v else 0
-            best = max(best, cur)
-        assert _longest_run(arr) == best
+    """Pure-kernel properties for the session-17 image and host-fairness
+    math — replayed against brute-force Python on randomized inputs."""
 
     @given(st.integers(0, 2**32 - 1), st.sampled_from([2, 3, 4]),
            st.sampled_from([(8, 8), (12, 16), (24, 20)]))
@@ -106,8 +92,7 @@ class TestSession17Properties:
     def test_upscale_stats_detects_planted_factor(self, seed, k, hw):
         import numpy as np
 
-        from amazonwebcrawler_spark.functions.images import upscale_stats
-        from amazonwebcrawler_spark.functions.media import resize_pixels
+        from amazonwebcrawler_spark.functions.images import resize_pixels, upscale_stats
 
         h, w = hw
         rng = np.random.default_rng(seed)

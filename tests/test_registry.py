@@ -12,7 +12,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: r3-green rows granted window slots anyway: the judge's explicit round-5
 #: ask (flagship + crawl-core rows absent from r4's window). dead_letter
-#: yielded its slot when dsir_weights landed — a first-ever driver row
+#: yielded its slot to a never-checked key — a first-ever driver row
 #: beats a second-round row for an r3-green key.
 FLAGSHIP_SLOTS = ("crawl_rank_wave", "robots_filter")
 
@@ -20,29 +20,26 @@ FLAGSHIP_SLOTS = ("crawl_rank_wave", "robots_filter")
 #: full (48 never-checked keys + the 2 flagship slots), so granting a new
 #: key a slot would evict an equally-never-checked key — zero-sum for
 #: external coverage and churn for the documented layout. These stay at
-#: position 51+ on the local gate + pytest until a future window rotation.
+#: position 51+ on the local gate + pytest. Deleting the LM-training and
+#: audio/video queries freed five window slots; the five post-freeze keys
+#: that slid into them (scc, ann_recall, triangle_count, label_prop,
+#: trust_rank) left this list, since a window slot is theirs now.
 POST_FREEZE = (
-    "probe_train", "ann_recall", "epoch_shuffle", "triangle_count",
-    "label_prop", "trust_rank", "bm25_rank", "heavy_hitters",
-    "kcore", "random_walks", "crop_dedup", "pmi_pairs", "opic_priority",
-    "containment_dedup", "border_crop", "postings_build", "flip_dedup",
-    "ann_pq", "compaction_plan", "phrase_match", "skipgram_pairs",
-    "c4_clean", "gram_novelty", "ppl_buckets", "mirror_detect",
-    "blur_detect", "channel_stats", "bpe_encode", "lsh_eval",
-    "novelty_budget", "smart_crop", "scc",
-    "shard_rebalance", "caption_filter", "aimd_rate", "contam_spans",
-    "hist_quantiles", "ndcg_eval", "color_stats", "sitemap_coverage",
-    "hll_distinct", "hyperball", "cdc_chunks", "frontier_size", "kn_bigram",
-    "resolve_refs", "isotonic_calib", "leakage_split", "ucb_schedule",
-    "vocab_growth", "percent_norm", "link_audit", "politeness_audit",
-    "shot_detect", "mmr_topk", "temperature_mix", "video_dedup",
-    "rrf_fusion", "ece_calib", "mojibake_detect", "tile_detect",
-    "keyframe_select", "upscale_detect", "audio_gate", "caption_conflicts",
-    "freeze_detect", "oov_rate", "url_spam", "dedup_cluster_stats",
-    "host_fairness", "phash_bit_stats", "wds_shards", "boilerplate_strip",
-    "psi_drift", "robots_delta", "mix_plan", "hard_negatives",
-    "video_pipeline", "drain_plan", "hamming_certify", "image_probe",
-    "drop_reasons", "bloom_plan", "data_card",
+    "bm25_rank", "heavy_hitters", "kcore", "random_walks", "crop_dedup",
+    "opic_priority", "containment_dedup", "border_crop", "postings_build",
+    "flip_dedup", "ann_pq", "compaction_plan", "phrase_match", "c4_clean",
+    "gram_novelty", "mirror_detect", "blur_detect", "channel_stats",
+    "lsh_eval", "novelty_budget", "smart_crop", "shard_rebalance",
+    "caption_filter", "aimd_rate", "contam_spans", "hist_quantiles",
+    "ndcg_eval", "color_stats", "sitemap_coverage", "hll_distinct",
+    "hyperball", "cdc_chunks", "frontier_size", "resolve_refs",
+    "ucb_schedule", "percent_norm", "link_audit", "politeness_audit",
+    "mmr_topk", "rrf_fusion", "mojibake_detect", "tile_detect",
+    "upscale_detect", "caption_conflicts", "url_spam",
+    "dedup_cluster_stats", "host_fairness", "phash_bit_stats", "wds_shards",
+    "boilerplate_strip", "psi_drift", "robots_delta", "hard_negatives",
+    "drain_plan", "hamming_certify", "image_probe", "drop_reasons",
+    "bloom_plan", "data_card",
 )
 
 
@@ -75,9 +72,9 @@ class TestRegistryContract:
 
     def test_driver_window_is_exactly_the_uncovered_keys(self):
         """The 50-entry window must hold EVERY key that has never had a
-        green driver row (47 as of r5 session 9) — leaving one out while a
-        driver-green key keeps a slot wastes external coverage — plus the
-        judge-requested flagship trio in the remaining slots."""
+        green driver row — leaving one out while a driver-green key keeps a
+        slot wastes external coverage — plus the judge-requested flagship
+        pair in the remaining slots."""
         import __spark_entry__ as m
 
         keys = list(m.queries())
@@ -94,3 +91,29 @@ class TestRegistryContract:
         # every remaining slot-holder must be justified (uncovered or flagship)
         wasted = sorted(window - never - set(FLAGSHIP_SLOTS))
         assert not wasted, f"window slots wasted on driver-green rows: {wasted}"
+
+    def test_harness_legs_exist(self):
+        """Every leg the two bench harnesses time (``bench.BENCH_QUERIES``
+        and ``perfbench/queries.py::LEGS``) names a registered query, so
+        deleting a query cannot leave a harness raising ``KeyError``. The
+        tuples are read from the source, so neither harness is imported."""
+        import ast
+
+        import __spark_entry__ as m
+
+        def str_tuple(rel: str, name: str) -> list[str]:
+            with open(os.path.join(REPO, rel)) as f:
+                tree = ast.parse(f.read())
+            for node in tree.body:
+                if isinstance(node, ast.Assign) and any(
+                    isinstance(t, ast.Name) and t.id == name for t in node.targets
+                ):
+                    return [ast.literal_eval(e) for e in node.value.elts]
+            raise AssertionError(f"{rel} defines no {name}")
+
+        keys = set(m.queries())
+        for rel, name in (("bench.py", "BENCH_QUERIES"), ("perfbench/queries.py", "LEGS")):
+            legs = str_tuple(rel, name)
+            assert legs, f"{rel}::{name} is empty"
+            unknown = [q for q in legs if q not in keys]
+            assert not unknown, f"{rel}::{name} names unregistered queries: {unknown}"

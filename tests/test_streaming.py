@@ -4,16 +4,13 @@ equivalent batch aggregation."""
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import functions as F
 
 from amazonwebcrawler_spark.streaming.facade import events_windowed_stream
 
 
-def test_events_windowed_stream_matches_batch(spark, sf_dir):
-    out = "/tmp/stream_out"
-    shutil.rmtree(out, ignore_errors=True)
+def test_events_windowed_stream_matches_batch(spark, sf_dir, tmp_path):
+    out = str(tmp_path / "stream_out")
     q = events_windowed_stream(spark, sf_dir, out)
     q.awaitTermination(120)
 
@@ -39,15 +36,14 @@ def test_events_windowed_stream_matches_batch(spark, sf_dir):
     assert all(k in b and b[k] == v for k, v in g.items())  # nothing fabricated
 
 
-def test_urls_seen_stream_matches_batch_distinct(spark, sf_dir):
+def test_urls_seen_stream_matches_batch_distinct(spark, sf_dir, tmp_path):
     """Streaming URL-seen (dropDuplicates + watermark) must emit exactly
     the batch engine's first-sighting set: same canonicalization, same
     dedup key, each URL exactly once."""
     from amazonwebcrawler_spark.functions.urls import canonicalize_url
     from amazonwebcrawler_spark.streaming.facade import urls_seen_stream
 
-    out = "/tmp/stream_urls"
-    shutil.rmtree(out, ignore_errors=True)
+    out = str(tmp_path / "stream_urls")
     q = urls_seen_stream(spark, sf_dir, out)
     q.awaitTermination(120)
 
@@ -70,17 +66,14 @@ def test_urls_seen_stream_matches_batch_distinct(spark, sf_dir):
     assert set(got) == want
 
 
-def test_sessionize_stream_matches_batch(spark, sf_dir):
+def test_sessionize_stream_matches_batch(spark, sf_dir, tmp_path):
     """applyInPandasWithState sessionization (custom stateful operator) must
     emit exactly the batch sessionization minus each user's final session
     (still open in state when the stream drains)."""
-    import shutil as _sh
-
     from pyspark.sql import Window
     from amazonwebcrawler_spark.operators.sessions import sessionize, sessionize_stream
 
-    out = "/tmp/stream_sessions"
-    _sh.rmtree(out, ignore_errors=True)
+    out = str(tmp_path / "stream_sessions")
     q = sessionize_stream(spark, sf_dir, out, gap_minutes=30)
     q.awaitTermination(180)
 
@@ -345,56 +338,3 @@ def test_rate_control_stream_rejects_out_of_order(spark, tmp_path):
 
     with _pytest.raises(StreamingQueryException, match="append-ordered"):
         q2.awaitTermination(120)
-
-
-def test_audio_gate_stream_matches_batch(spark, tmp_path):
-    """Streaming audio gate runs the batch kernel + verdict unchanged:
-    the drained stream's output must equal the batch gate over the same
-    rows — clipped / dropout / quiet verdicts included, corrupt rows
-    quarantined mid-stream."""
-    import numpy as np
-
-    from amazonwebcrawler_spark.functions import media
-    from amazonwebcrawler_spark.streaming.facade import audio_gate_stream
-
-    src = str(tmp_path / "aud_src")
-    out = str(tmp_path / "aud_out")
-    schema = "audio_id string, bytes binary"
-    t = np.arange(16000)
-    sine = np.sin(2 * np.pi * 220 * t / 16000)
-
-    def pcm(x):
-        return bytearray(media.encode_audio((np.clip(x, -1, 1) * 32767).astype(np.int16)))
-
-    for part in range(3):
-        rows = [(f"clean-{part}-{i}", bytearray(media.synth_audio(part * 10 + i)))
-                for i in range(3)]
-        if part == 0:
-            rows.append((f"clipped-{part}", pcm(3.0 * sine)))
-        if part == 1:
-            drop = 0.5 * sine.copy()
-            drop[0:9000] = 0.0
-            rows.append((f"dropout-{part}", pcm(drop)))
-        if part == 2:
-            rows.append(("corrupt", bytearray(b"MP3junk")))
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
-
-    q = audio_gate_stream(spark, src, out)
-    q.awaitTermination(120)
-
-    got = sorted(map(tuple, spark.read.parquet(f"{out}/audio_gated").collect()))
-    batch = media.audio_gate(
-        spark.read.parquet(src).mapInPandas(
-            media.audio_gate_kernel(), media.AUDIO_GATE_SCHEMA
-        )
-    )
-    want = sorted(map(tuple, batch.collect()))
-    assert got == want
-    by_id = {r[0]: r for r in got}
-    assert "corrupt" not in by_id
-    assert any(k.startswith("clipped") for k in by_id)
-    clipped = next(v for k, v in by_id.items() if k.startswith("clipped"))
-    dropout = next(v for k, v in by_id.items() if k.startswith("dropout"))
-    # schema: ..., is_clipped, is_silent, has_dropout, keep
-    assert clipped[-4] and not clipped[-1]
-    assert dropout[-2] and not dropout[-1]

@@ -51,117 +51,6 @@ class TestUnigramNll:
         assert got[3].nll_micro > got[1].nll_micro
 
 
-class TestChunking:
-    def test_window_arithmetic(self, spark):
-        """Exact window coverage: a 150-token doc at (64, 8) yields chunks
-        starting every 56 tokens, full chunks except the tail, consecutive
-        chunks share exactly 8 tokens, and a short doc is one partial
-        chunk."""
-        import hashlib
-
-        from amazonwebcrawler_spark.functions.text import chunk_documents
-
-        toks = [f"t{i}" for i in range(150)]
-        d = spark.createDataFrame(
-            [(1, " ".join(toks)), (2, "a b c")], "doc_id long, text string"
-        )
-        got = {
-            (r.doc_id, r.chunk_idx): r
-            for r in chunk_documents(d, "text", "doc_id", 64, 8).collect()
-        }
-        assert {k for k in got} == {(1, 0), (1, 1), (1, 2), (2, 0)}
-        for idx in range(3):
-            window = toks[idx * 56: idx * 56 + 64]
-            r = got[(1, idx)]
-            assert r.n_tokens == len(window)
-            assert r.chunk_md5 == hashlib.md5(" ".join(window).encode()).hexdigest()
-        assert got[(1, 2)].n_tokens == 150 - 2 * 56  # tail chunk is partial
-        assert got[(2, 0)].n_tokens == 3
-
-    def test_rejects_bad_overlap(self, spark):
-        import pytest
-
-        from amazonwebcrawler_spark.functions.text import chunk_documents
-
-        d = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="overlap"):
-            chunk_documents(d, "text", "doc_id", max_tokens=8, overlap=8)
-
-
-class TestPackSequences:
-    def _chunks(self, spark, rows, parts=1):
-        df = spark.createDataFrame(
-            rows, "doc_id long, chunk_idx int, n_tokens int, chunk_md5 string"
-        )
-        return df.repartition(parts) if parts > 1 else df
-
-    def test_stream_arithmetic_and_invariants(self, spark):
-        """Closed-form check with one shard: docs in order, seq_len=10.
-        Chunk spans follow the running prefix sum; every sequence except the
-        last is exactly full; per-chunk contributions cover the chunk."""
-        from amazonwebcrawler_spark.functions.text import pack_sequences
-
-        rows = [
-            (1, 0, 7, "a"), (1, 1, 7, "b"),  # doc 1: spans [0,7), [7,14)
-            (2, 0, 4, "c"),                  # doc 2: [14,18)
-            (3, 0, 12, "d"),                 # doc 3: [18,30) — crosses 2 cuts
-        ]
-        out = pack_sequences(
-            self._chunks(spark, rows), seq_len=10, n_shards=1
-        ).collect()
-        got = {(r.doc_id, r.chunk_idx, r.seq_id): r for r in out}
-        # chunk (1,1) covers stream [7,14): split 3 tokens in seq 0 + 4 in seq 1
-        a = got[(1, 1, 0)]
-        assert (a.offset_in_seq, a.offset_in_chunk, a.n_seq_tokens) == (7, 0, 3)
-        b = got[(1, 1, 1)]
-        assert (b.offset_in_seq, b.offset_in_chunk, b.n_seq_tokens) == (0, 3, 4)
-        # chunk (3,0) covers [18,30): 2 tokens in seq 1, 10 in seq 2
-        assert got[(3, 0, 1)].n_seq_tokens == 2 and got[(3, 0, 2)].n_seq_tokens == 10
-        # invariants: per-chunk coverage + all sequences full except the last
-        by_chunk = {}
-        by_seq = {}
-        for r in out:
-            by_chunk[(r.doc_id, r.chunk_idx)] = by_chunk.get((r.doc_id, r.chunk_idx), 0) + r.n_seq_tokens
-            by_seq[r.seq_id] = by_seq.get(r.seq_id, 0) + r.n_seq_tokens
-        assert by_chunk == {(1, 0): 7, (1, 1): 7, (2, 0): 4, (3, 0): 12}
-        last = max(by_seq)
-        assert all(v == 10 for s, v in by_seq.items() if s != last)
-        assert by_seq[last] == 30 - 10 * last
-
-    def test_partitioning_invariance_and_global_contiguity(self, spark):
-        """The manifest is a pure function of the data: identical under
-        repartitioning, and the multi-shard global stream is contiguous
-        (offsets tile [0, total) with no gaps or overlaps)."""
-        from amazonwebcrawler_spark.functions.text import pack_sequences
-
-        rows = [(d, i, 5 + (d * 7 + i) % 9, f"m{d}-{i}") for d in range(20) for i in range(3)]
-        a = sorted(
-            map(tuple, pack_sequences(self._chunks(spark, rows), 16, n_shards=4).collect())
-        )
-        b = sorted(
-            map(tuple, pack_sequences(self._chunks(spark, rows, parts=7), 16, n_shards=4).collect())
-        )
-        assert a == b and len(a) > len(rows)  # some chunks must straddle cuts
-        total = sum(r[2] for r in rows)
-        covered = sorted(
-            (r.seq_id * 16 + r.offset_in_seq, r.n_seq_tokens)
-            for r in pack_sequences(self._chunks(spark, rows), 16, n_shards=4).collect()
-        )
-        pos = 0
-        for start, n in covered:
-            assert start == pos, (start, pos)
-            pos += n
-        assert pos == total
-
-    def test_rejects_bad_seq_len(self, spark):
-        import pytest
-
-        from amazonwebcrawler_spark.functions.text import pack_sequences
-
-        with pytest.raises(ValueError, match="seq_len"):
-            pack_sequences(self._chunks(spark, [(1, 0, 1, "x")]), 0)
-
-
 class TestGopherRepetition:
     def test_hand_computed_signals(self, spark):
         """Chunk and bigram fractions match hand-derived exact values."""
@@ -229,21 +118,6 @@ class TestSelfDedupChunks:
         assert twice.clean_text == " ".join(["a"] * 10 + ["b"] * 10)
 
 
-class TestVocabTopk:
-    def test_counts_and_cut_order(self, spark):
-        from amazonwebcrawler_spark.functions.text import vocab_topk
-
-        docs = [(1, "the cat the dog"), (2, "the cat"), (3, "zebra ant")]
-        d = spark.createDataFrame(docs, "doc_id long, text string")
-        rows = vocab_topk(d, "text", "doc_id", k=3).collect()
-        assert [(r.token, r.tf, r.doc_freq) for r in rows] == [
-            ("the", 3, 2),
-            ("cat", 2, 2),
-            # tf=1 tie bucket cuts lexicographically: ant < dog < zebra
-            ("ant", 1, 1),
-        ]
-
-
 class TestRepetitionPythonMirror:
     def test_gopher_and_selfdedup_match_python_reference(self, spark):
         """Both repetition operators equal an independent Python
@@ -307,92 +181,6 @@ class TestRepetitionPythonMirror:
                 assert g[i].top_bigram == "" and g[i].top_bigram_count == 0, i
 
 
-class TestClassifierScore:
-    """functions/text.classifier_score vs an independent Python mirror of
-    the feature hashing + weight derivation (hashlib, not Spark md5)."""
-
-    @staticmethod
-    def _py_score(text, n_buckets=4096):
-        import hashlib
-        import re
-
-        def h31(s):
-            return int(hashlib.md5(s.encode()).hexdigest()[:8], 16) & 0x7FFFFFFF
-
-        t = re.sub(r"\s+", " ", text.lower()).strip()
-        toks = t.split(" ") if t else []
-        feats = toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-        sw = sum(h31(f"w-{h31(f) % n_buckets}") % 2001 - 1000 for f in feats)
-        n = len(feats)
-        milli = (sw * 1000) // n if n else 0  # python // floors like pmod form
-        return n, milli, int(milli >= 0)
-
-    def test_matches_python_mirror(self, spark):
-        from amazonwebcrawler_spark.functions.text import classifier_score, make_weight_table
-
-        rows = [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "single"),
-            (3, ""),
-            (4, "a a a a a a"),
-            (5, "Mixed   CASE    and   gaps here"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = {
-            r.doc_id: (r.n_features, r.score_milli, r.keep)
-            for r in classifier_score(df, "text", "doc_id", make_weight_table(spark)).collect()
-        }
-        assert got == {i: self._py_score(t) for i, t in rows}
-
-    def test_all_docs_present_and_bounded(self, spark, sf_dir):
-        from amazonwebcrawler_spark.functions.text import classifier_score, make_weight_table
-
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        out = classifier_score(d, "text", "doc_id", make_weight_table(spark))
-        rows = out.collect()
-        assert len(rows) == d.count()
-        assert all(-1000_000 <= r.score_milli <= 1000_000 for r in rows)
-        assert all(r.keep == int(r.score_milli >= 0) for r in rows)
-
-
-class TestBpeMergePairs:
-    @staticmethod
-    def _py_pairs(texts, k):
-        import re
-        from collections import Counter
-
-        wc = Counter()
-        for t in texts:
-            wc.update(re.findall(r"(\w+|[^\w\s])", t.lower()))
-        pc = Counter()
-        for w, n in wc.items():
-            for a, b in zip(w, w[1:]):
-                pc[(a, b)] += n
-        ranked = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))
-        return {pair: n for pair, n in ranked[:k]}
-
-    def test_matches_python_mirror(self, spark):
-        texts = [
-            "the cat, the hat! and the that",
-            "banana bandana ananas",
-            "aa aa aa ab",
-            "",
-        ]
-        df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-        from amazonwebcrawler_spark.functions.text import bpe_merge_pairs
-
-        got = {(r.left, r.right): r.pair_count for r in bpe_merge_pairs(df, "text", "doc_id", k=10).collect()}
-        assert got == self._py_pairs(texts, 10)
-
-    def test_word_frequency_weighting(self, spark):
-        # "ab" occurs 3 times as a word -> pair (a,b) counts 3, not 1
-        df = spark.createDataFrame([(1, "ab ab ab cd")], "doc_id long, text string")
-        from amazonwebcrawler_spark.functions.text import bpe_merge_pairs
-
-        got = {(r.left, r.right): r.pair_count for r in bpe_merge_pairs(df, "text", "doc_id", k=5).collect()}
-        assert got == {("a", "b"): 3, ("c", "d"): 1}
-
-
 class TestCrossdocSegmentDedup:
     @staticmethod
     def _py(texts, chunk):
@@ -447,91 +235,6 @@ class TestCrossdocSegmentDedup:
             assert all(got[i] == 1 for i in range(1, 40))
 
 
-class TestDsirWeights:
-    @staticmethod
-    def _py(rows, n_buckets=4096, alpha=1):
-        import hashlib
-        import math
-        import re
-        from collections import Counter
-
-        def feats(t):
-            toks = [x for x in re.sub(r"\s+", " ", t.lower()).strip().split(" ") if x]
-            return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-
-        def bucket(f):
-            return (int(hashlib.md5(f.encode()).hexdigest()[:8], 16) & 0x7FFFFFFF) % n_buckets
-
-        c_r, c_t = Counter(), Counter()
-        for _i, t, tgt in rows:
-            for f in feats(t):
-                b = bucket(f)
-                c_r[b] += 1
-                if tgt:
-                    c_t[b] += 1
-        n_r, n_t = sum(c_r.values()), sum(c_t.values())
-        out = {}
-        for i, t, _tgt in rows:
-            fs = feats(t)
-            s = sum(
-                math.log(c_t[bucket(f)] + alpha) - math.log(n_t + alpha * n_buckets)
-                - math.log(c_r[bucket(f)] + alpha) + math.log(n_r + alpha * n_buckets)
-                for f in fs
-            )
-            lw = int(round(s * 1_000_000)) if fs else 0
-            out[i] = (len(fs), lw, int(lw >= 0))
-        return out
-
-    def test_matches_python_mirror(self, spark):
-        rows = [
-            (1, "alpha beta alpha beta gamma", True),
-            (2, "alpha beta delta", True),
-            (3, "zeta yota zeta yota kappa", False),
-            (4, "alpha beta zeta yota", False),
-            (5, "", False),
-        ]
-        from pyspark.sql import functions as F
-
-        from amazonwebcrawler_spark.functions.text import dsir_weights
-
-        df = spark.createDataFrame(rows, "doc_id long, text string, tgt boolean")
-        got = {
-            r.doc_id: (r.n_features, r.logw_micro, r.keep)
-            for r in dsir_weights(df, "text", "doc_id", F.col("tgt")).collect()
-        }
-        exp = self._py(rows)
-        assert set(got) == set(exp)
-        for i in got:
-            assert got[i][0] == exp[i][0], i
-            # sum-of-ln drift can straddle a micro boundary: allow 1 micro
-            assert abs(got[i][1] - exp[i][1]) <= 1, (i, got[i], exp[i])
-
-    def test_target_vocab_scores_positive(self, spark):
-        # docs built from the target slice's vocabulary get logw > 0,
-        # raw-only vocabulary scores negative, empty docs keep at 0.
-        # n_buckets=64 keeps the corpus well above the Laplace mass alpha*B
-        # (with the default 4096 a 40-doc corpus is all smoothing and every
-        # logw hugs 0 — the operator needs n_features >> alpha*B, as any
-        # real corpus has).
-        rows = (
-            [(i, "alpha beta gamma delta", True) for i in range(10)]
-            + [(100 + i, "zeta yota kappa mu", False) for i in range(30)]
-            + [(200, "alpha beta gamma delta", False), (201, "", False)]
-        )
-        from pyspark.sql import functions as F
-
-        from amazonwebcrawler_spark.functions.text import dsir_weights
-
-        df = spark.createDataFrame(rows, "doc_id long, text string, tgt boolean")
-        got = {
-            r.doc_id: r
-            for r in dsir_weights(df, "text", "doc_id", F.col("tgt"), n_buckets=64).collect()
-        }
-        assert got[200].logw_micro > 0 and got[200].keep == 1
-        assert got[100].logw_micro < 0 and got[100].keep == 0
-        assert got[201].logw_micro == 0 and got[201].keep == 1 and got[201].n_features == 0
-
-
 class TestBindOnce:
     def test_equivalence_and_null_propagation(self, spark):
         """bind_once(col, body) ≡ body(col) on values, including NULL input
@@ -569,19 +272,18 @@ class TestBindOnce:
         """The optimized plans of the bind_once consumers must not carry a
         regex/split inside any lambdafunction — Catalyst never CSEs
         lambda-bearing trees, so a captured tokenization re-runs per array
-        element (O(n²) per doc; classifier_score measured 15.2 s → 1.4 s at
-        sf0.1 when this regressed). Mirrors scripts/explain_plans.py's
-        check_no_lambda_capture for the unit suite."""
+        element (O(n²) per doc; a hashed-feature scorer measured 15.2 s →
+        1.4 s at sf0.1 when this regressed). Mirrors
+        scripts/explain_plans.py's check_no_lambda_capture for the unit
+        suite."""
         import sys
 
         sys.path.insert(0, "/root/repo")
         from scripts.explain_plans import _lambda_spans
 
         from amazonwebcrawler_spark.functions.text import (
-            classifier_score,
-            dsir_weights,
+            build_postings,
             gopher_repetition_signals,
-            make_weight_table,
             winnow_fingerprint_rows,
         )
         from amazonwebcrawler_spark.operators.dedup import minhash_signature
@@ -589,8 +291,7 @@ class TestBindOnce:
 
         d = spark.createDataFrame([(1, "a b c d e", "en")], "doc_id long, text string, lang string")
         plans = {
-            "classifier": classifier_score(d, "text", "doc_id", make_weight_table(spark, 64), 64),
-            "dsir": dsir_weights(d, "text", "doc_id", F.col("lang") == "en", 64),
+            "postings": build_postings(d, "text", "doc_id", min_df=1),
             "gopher": gopher_repetition_signals(d, "text", "doc_id", chunk=2),
             "winnow": winnow_fingerprint_rows(d, "text", "doc_id"),
             "minhash_col": d.select(minhash_signature(F.col("text"), k=4)),
@@ -600,78 +301,6 @@ class TestBindOnce:
             plan = df._jdf.queryExecution().optimizedPlan().toString()
             hits = {f for span in _lambda_spans(plan) for f in forbid if f in span}
             assert not hits, f"{name}: {sorted(hits)} captured inside a lambda"
-
-
-class TestTrainLinearProbe:
-    @staticmethod
-    def _mirror(docs, n_buckets=4096, d_scale=1024):
-        """Pure-Python exact mirror of train_linear_probe (hashlib + ints)."""
-        import hashlib
-        import re
-
-        def bucket(f):
-            h = int(hashlib.md5(f.encode()).hexdigest()[:8], 16) & 0x7FFFFFFF
-            return h % n_buckets
-
-        fb = {}  # doc_id -> (y, set of buckets)
-        for doc_id, text, y in docs:
-            toks = re.sub(r"\s+", " ", text.lower()).strip().split(" ") if text.strip() else []
-            feats = list(toks) + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-            if feats:
-                fb[doc_id] = (y, {bucket(f) for f in feats})
-        n1, w1 = {}, {}  # ±1 target encoding: w1 = 2·n_pos − cnt
-        for y, bs in fb.values():
-            for b in bs:
-                n1[b] = n1.get(b, 0) + y
-                w1[b] = w1.get(b, 0) + (2 * y - 1)
-        zn = {d: sum(w1[b] for b in bs) for d, (y, bs) in fb.items()}
-        g2 = {}
-        for d, (y, bs) in fb.items():
-            r = zn[d] - d_scale * (2 * y - 1)
-            for b in bs:
-                g2[b] = g2.get(b, 0) + r
-        return {
-            b: (n1[b], w1[b], d_scale * w1[b] - g2[b]) for b in n1
-        }  # bucket -> (n_pos, w1_num, w2_num)
-
-    def test_exact_vs_python_mirror(self, spark):
-        """Every (bucket, n_pos, w1_num, w2_num) row equals the hashlib/int
-        Python mirror exactly — the contract is pure integer arithmetic."""
-        from amazonwebcrawler_spark.functions.text import train_linear_probe
-        from pyspark.sql import functions as F
-
-        docs = [
-            (1, "good solid prose with Varied words", 1),
-            (2, "good good good spammy spam", 0),
-            (3, "another fine document of words", 1),
-            (4, "spam spam buy now buy now", 0),
-            (5, "words words words", 0),
-            (6, "", 0),
-        ]
-        d = spark.createDataFrame(
-            [(i, t, "en" if y else "xx") for i, t, y in docs], "doc_id long, text string, lang string"
-        )
-        out = train_linear_probe(d, "text", "doc_id", F.col("lang") == "en").collect()
-        got = {r.bucket: (r.n_pos, r.w1_num, r.w2_num) for r in out}
-        assert got == self._mirror(docs)
-
-    def test_weights_feed_classifier_score(self, spark):
-        """Composition: w2 plugs into classifier_score as the weight table
-        and separates the planted classes (positive docs keep, negative
-        drop) — training and inference share one bucket space."""
-        from amazonwebcrawler_spark.functions.text import classifier_score, train_linear_probe
-        from pyspark.sql import functions as F
-
-        pos = [(i, "quality prose sentence number %d" % i, "en") for i in range(1, 9)]
-        neg = [(i, "buy spam now cheap pills %d" % i, "xx") for i in range(9, 17)]
-        d = spark.createDataFrame(pos + neg, "doc_id long, text string, lang string")
-        w = train_linear_probe(d, "text", "doc_id", F.col("lang") == "en").select(
-            "bucket", F.col("w2_num").alias("w")
-        )
-        scored = classifier_score(d, "text", "doc_id", w).collect()
-        keep = {r.doc_id: r.keep for r in scored}
-        assert all(keep[i] == 1 for i, _, _ in pos)
-        assert all(keep[i] == 0 for i, _, _ in neg)
 
 
 class TestBM25:
@@ -720,73 +349,6 @@ class TestBM25:
         out = {r.doc_id: r.bm25_micro for r in bm25_scores(d, "text", "doc_id", ("common", "rare")).collect()}
         assert all(v > 0 for v in out.values())
         assert out[1] > max(v for k, v in out.items() if k != 1)
-
-
-class TestPmiCollocations:
-    def _run(self, spark, docs, **kw):
-        from amazonwebcrawler_spark.functions.text import pmi_collocations
-
-        d = spark.createDataFrame(docs, "doc_id long, text string")
-        return [
-            (r.lhs, r.rhs, r.pair_count, r.pmi_micro)
-            for r in pmi_collocations(d, "text", "doc_id", **kw).collect()
-        ]
-
-    @staticmethod
-    def _py(docs, k, min_count):
-        import math
-        import re
-        from collections import Counter
-
-        cu, cb = Counter(), Counter()
-        n_bi = 0
-        for _, text in docs:
-            toks = re.sub(r"\s+", " ", text.lower()).strip().split(" ")
-            toks = [t for t in toks if t]
-            cu.update(toks)
-            for a, b in zip(toks, toks[1:]):
-                cb[(a, b)] += 1
-                n_bi += 1
-        n_uni = sum(cu.values())
-        rows = []
-        for (a, b), c in cb.items():
-            if c < min_count:
-                continue
-            pmi = math.log((c * n_uni * n_uni) / (n_bi * cu[a] * cu[b]))
-            rows.append((a, b, c, round(pmi * 1_000_000)))
-        rows.sort(key=lambda r: (-r[3], r[0], r[1]))
-        return rows[:k]
-
-    def test_planted_collocation_tops_the_list(self, spark):
-        """'new york' always adjacent; 'the' ubiquitous: the fixed phrase
-        gets the max PMI, the stopword pair the min, and every row equals
-        the Counter/math mirror (micro ints, ±1 ulp on the cut)."""
-        docs = [
-            (i, f"the city of new york and the port of new york w{i} the end")
-            for i in range(6)
-        ]
-        got = self._run(spark, docs, k=40, min_count=3)
-        want = self._py(docs, 40, 3)
-        assert len(got) == len(want)
-        for g, w in zip(sorted(got), sorted(want)):
-            assert g[:3] == w[:3] and abs(g[3] - w[3]) <= 1, (g, w)
-        by_pair = {(l, r): p for l, r, _, p in got}
-        # the fixed phrase scores above every stopword-anchored pair
-        stop_best = max(p for (l, r), p in by_pair.items() if l == "the" or r == "the")
-        assert by_pair[("new", "york")] > stop_best
-
-    def test_min_count_drops_hapax_pairs(self, spark):
-        docs = [(1, "alpha beta alpha beta alpha beta unique pair")]
-        got = self._run(spark, docs, k=40, min_count=3)
-        pairs = {(l, r) for l, r, _, _ in got}
-        assert ("unique", "pair") not in pairs
-        assert ("alpha", "beta") in pairs
-
-    def test_empty_and_single_token_docs_ignored(self, spark):
-        docs = [(1, ""), (2, "solo"), (3, "a b a b a b")]
-        got = self._run(spark, docs, k=10, min_count=3)
-        # (a,b) occurs 3× (>= min_count); (b,a) only 2× and is dropped
-        assert {(l, r) for l, r, _, _ in got} == {("a", "b")}
 
 
 class TestBuildPostings:
@@ -906,161 +468,6 @@ class TestPhraseMatch:
             phrase_match(d, "text", "doc_id", ())
 
 
-class TestSkipgramPairs:
-    DOCS = [
-        (1, "the cat sat on the mat"),
-        (2, "the cat ran to the cat"),
-        (3, "solo"),
-        (4, ""),
-    ]
-
-    def _run(self, spark, **kw):
-        from amazonwebcrawler_spark.functions.text import skipgram_pairs
-
-        d = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        return [
-            (r.center, r.context, r.n_pairs, r.weight_milli)
-            for r in skipgram_pairs(d, "text", "doc_id", **kw).collect()
-        ]
-
-    @staticmethod
-    def _py(docs, window, min_count, k):
-        import re
-        from collections import defaultdict
-
-        agg = defaultdict(lambda: [0, 0])
-        for _, t in docs:
-            tk = [w for w in re.sub(r"\s+", " ", t.lower()).strip().split(" ") if w]
-            for i, c in enumerate(tk):
-                for j in range(max(0, i - window), min(len(tk), i + window + 1)):
-                    if j == i:
-                        continue
-                    e = agg[(c, tk[j])]
-                    e[0] += 1
-                    e[1] += 1000 // abs(j - i)
-        rows = [
-            (c, x, n, w) for (c, x), (n, w) in agg.items() if n >= min_count
-        ]
-        rows.sort(key=lambda r: (-r[3], r[0], r[1]))
-        return rows[:k]
-
-    def test_matches_python_mirror_exactly(self, spark):
-        got = self._run(spark, window=2, min_count=1, k=100)
-        want = self._py(self.DOCS, window=2, min_count=1, k=100)
-        assert sorted(got) == sorted(want)
-        # the top-k cut itself is the same total order
-        assert got == want
-
-    def test_symmetry_and_distance_weight(self, spark):
-        got = {(c, x): (n, w) for c, x, n, w in self._run(spark, window=3, min_count=1, k=500)}
-        # co-occurrence is symmetric in counts
-        assert got[("cat", "sat")][0] == got[("sat", "cat")][0]
-        # doc1: 'the'(4) is mat's only in-window 'the' (distance 1; the
-        # first 'the' sits at distance 5, outside ±3) → weight 1000
-        assert got[("mat", "the")] == (1, 1000)
-        # 'sat'(2) sees both 'the's: distances 2 and 2 → 2 × 500
-        assert got[("sat", "the")] == (2, 1000)
-
-    def test_window_one_is_adjacent_only(self, spark):
-        got = {(c, x) for c, x, _, _ in self._run(spark, window=1, min_count=1, k=500)}
-        assert ("the", "sat") not in got  # distance 2
-        assert ("the", "cat") in got
-
-    def test_invalid_window_raises(self, spark):
-        import pytest as _pytest
-
-        from amazonwebcrawler_spark.functions.text import skipgram_pairs
-
-        d = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        with _pytest.raises(ValueError):
-            skipgram_pairs(d, "text", "doc_id", window=0)
-
-
-class TestBpeEncode:
-    def test_trainer_learns_most_frequent_pair_first(self):
-        from amazonwebcrawler_spark.functions.text import train_bpe
-
-        # 'ab' appears in every word; first merge must be ('a','b')
-        merges = train_bpe(["abab abx aby", "ab abz"], n_merges=3)
-        assert merges[0] == ("a", "b")
-        assert train_bpe(["abab abx aby", "ab abz"], 3) == train_bpe(
-            ["abab abx aby", "ab abz"], 3
-        )
-
-    def test_encode_round_trip_and_replay_equivalence(self):
-        import random
-
-        from amazonwebcrawler_spark.functions.text import (
-            BPE_EOW,
-            bpe_encode_word,
-            train_bpe,
-        )
-
-        rng = random.Random(9)
-        words = ["".join(rng.choice("abcde") for _ in range(rng.randint(1, 12))) for _ in range(300)]
-        merges = train_bpe([" ".join(words)], n_merges=60)
-        ranks = {p: i for i, p in enumerate(merges)}
-
-        def replay(word):
-            syms = list(word) + [BPE_EOW]
-            for left, right in merges:
-                out, i = [], 0
-                while i < len(syms):
-                    if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
-                        out.append(left + right)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            return syms
-
-        for w in set(words):
-            enc = bpe_encode_word(w, ranks)
-            assert "".join(enc) == w + BPE_EOW
-            assert enc == replay(w), w
-
-    def test_merges_compress(self):
-        from amazonwebcrawler_spark.functions.text import bpe_encode_word, train_bpe
-
-        text = "the cat sat on the mat the cat sat"
-        merges = train_bpe([text], n_merges=30)
-        ranks = {p: i for i, p in enumerate(merges)}
-        assert len(bpe_encode_word("the", ranks)) < len("the") + 1
-
-    def test_kernel_matches_direct(self, spark):
-        import hashlib
-
-        from amazonwebcrawler_spark.functions.text import (
-            BPE_ENCODE_SCHEMA,
-            bpe_encode_kernel,
-            bpe_encode_word,
-            bpe_word_split,
-            train_bpe,
-        )
-
-        docs = [
-            (1, "The cat sat on the mat."),
-            (2, "A cat! A mat!"),
-            (3, ""),
-            (4, "unseen zzqq words"),
-        ]
-        merges = train_bpe([t for _, t in docs], n_merges=40)
-        ranks = {p: i for i, p in enumerate(merges)}
-        df = spark.createDataFrame(docs, "doc_id long, text string").repartition(3)
-        got = {
-            r.doc_id: r
-            for r in df.mapInPandas(bpe_encode_kernel(merges), BPE_ENCODE_SCHEMA).collect()
-        }
-        for did, text in docs:
-            words = bpe_word_split(text)
-            toks = [t for w in words for t in bpe_encode_word(w, ranks)]
-            assert got[did].n_words == len(words)
-            assert got[did].n_tokens == len(toks)
-            assert got[did].tokens_md5 == hashlib.md5(" ".join(toks).encode()).hexdigest()
-        assert got[3].n_tokens == 0 and got[3].n_words == 0
-
-
 class TestCaptionQuality:
     def _run(self, spark, caps, **kw):
         from amazonwebcrawler_spark.functions.text import caption_quality
@@ -1099,154 +506,3 @@ class TestCaptionQuality:
         assert r["digit_milli"] == 2 * 1000 // 10
         assert r["alpha_milli"] == 6 * 1000 // 10
         assert r["caption_words"] == 3 and r["caption_chars"] == 10
-
-
-class TestKnBigramNll:
-    """functions/text.kn_bigram_nll vs a pure-Python interpolated
-    Kneser-Ney replay, plus the word-ORDER sensitivity the unigram model
-    cannot express."""
-
-    D = 0.75
-
-    @staticmethod
-    def _py_kn(texts, d):
-        import math
-        import re
-        from collections import Counter, defaultdict
-
-        def toks(t):
-            t = re.sub(r"\s+", " ", t.lower()).strip()
-            return t.split(" ") if t else []
-
-        bgs = {i: list(zip(tk, tk[1:])) for i, (t,) in enumerate(texts) for tk in [toks(t)]}
-        c12 = Counter(b for bl in bgs.values() for b in bl)
-        c1, n1plus, cont = Counter(), defaultdict(set), defaultdict(set)
-        for (w1, w2), c in c12.items():
-            c1[w1] += c
-            n1plus[w1].add(w2)
-            cont[w2].add(w1)
-        T = len(c12)
-
-        def p(w1, w2):
-            return (c12[(w1, w2)] - d) / c1[w1] + d * len(n1plus[w1]) / c1[w1] * (
-                len(cont[w2]) / T
-            )
-
-        out = {}
-        for i, bl in bgs.items():
-            if bl:
-                out[i] = (len(bl), round(-sum(math.log(p(*b)) for b in bl) / len(bl) * 1e6))
-        return out
-
-    def _run(self, spark, texts):
-        from amazonwebcrawler_spark.functions.text import kn_bigram_nll
-
-        df = spark.createDataFrame(
-            [(i, t) for i, (t,) in enumerate(texts)], "doc_id long, text string"
-        )
-        return {
-            r["doc_id"]: (r["n_bigrams"], r["nll_micro"])
-            for r in kn_bigram_nll(df, "text", "doc_id").collect()
-        }
-
-    def test_matches_python_oracle(self, spark):
-        texts = [
-            ("the cat sat on the mat",),
-            ("the dog sat on the cat",),
-            ("a cat and a dog and a mat",),
-            ("the the the the",),
-            ("solo",),  # < 2 tokens: absent from output
-            ("",),
-        ]
-        got = self._run(spark, texts)
-        want = self._py_kn(texts, self.D)
-        assert set(got) == set(want)
-        for i in want:
-            assert got[i][0] == want[i][0]
-            assert abs(got[i][1] - want[i][1]) <= 1  # ln summation-order ulp
-
-    def test_word_order_sensitivity(self, spark):
-        # corpus dominated by "x y" transitions; one doc uses the SAME
-        # unigram bag in reversed (rare) order -> strictly higher nll
-        base = "alpha beta gamma delta " * 10
-        rev = "delta gamma beta alpha " * 10
-        texts = [(base,)] * 5 + [(rev,)]
-        got = self._run(spark, texts)
-        natural = got[0][1]
-        reversed_ = got[5][1]
-        assert reversed_ > natural
-
-    def test_randomized_vs_oracle(self, spark):
-        import random
-
-        rng = random.Random(42)
-        vocab = [f"w{i}" for i in range(12)]
-        texts = [
-            (" ".join(rng.choice(vocab) for _ in range(rng.randint(0, 30))),)
-            for _ in range(30)
-        ]
-        got = self._run(spark, texts)
-        want = self._py_kn(texts, self.D)
-        assert set(got) == set(want)
-        for i in want:
-            assert got[i][0] == want[i][0]
-            assert abs(got[i][1] - want[i][1]) <= 1
-
-
-class TestVocabGrowth:
-    """functions/text.vocab_growth — cumulative checkpoint exactness vs a
-    Python replay, and the Heaps-exponent regime signal."""
-
-    def _run(self, spark, rows, n_points=5):
-        from amazonwebcrawler_spark.functions.text import vocab_growth
-
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = vocab_growth(df, "text", "doc_id", n_points=n_points).collect()
-        return sorted(out, key=lambda r: r["b"])
-
-    def test_checkpoints_match_python_replay(self, spark):
-        import random
-        import re
-
-        rng = random.Random(21)
-        vocab = [f"t{i}" for i in range(200)]
-        rows = [
-            (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 40))))
-            for i in range(60)
-        ]
-        n_points = 5
-        out = self._run(spark, rows, n_points)
-
-        lo, hi = 0, 59
-        cells_t = [0] * n_points
-        first = {}
-        for i, t in rows:
-            b = (i - lo) * n_points // (hi - lo + 1)
-            toks = re.sub(r"\s+", " ", t.lower()).strip().split(" ") if t.strip() else []
-            cells_t[b] += len(toks)
-            for w in toks:
-                first.setdefault(w, b)
-        cells_v = [0] * n_points
-        for b in first.values():
-            cells_v[b] += 1
-        ct = cv = 0
-        want = []
-        for b in range(n_points):
-            ct += cells_t[b]
-            cv += cells_v[b]
-            if ct > 0:
-                want.append((b, ct, cv))
-        assert [(r["b"], r["tokens_cum"], r["vocab_cum"]) for r in out] == want
-        # slope constant across rows, and sane for a zipfy-random corpus
-        slopes = {r["slope_micro"] for r in out}
-        assert len(slopes) == 1
-
-    def test_saturated_corpus_has_low_slope(self, spark):
-        # identical docs after the first: vocabulary stops growing -> beta ~ 0;
-        # growing vocabulary per doc -> beta near 1
-        flat = [(i, "alpha beta gamma delta epsilon") for i in range(40)]
-        grow = [(i, " ".join(f"w{i}_{j}" for j in range(5))) for i in range(40)]
-        s_flat = self._run(spark, flat)[0]["slope_micro"]
-        s_grow = self._run(spark, grow)[0]["slope_micro"]
-        assert s_flat < 100_000  # ~0
-        assert s_grow > 900_000  # ~1
