@@ -16,7 +16,7 @@ shuffle of the big side at all. hash_sample is a pure projection+filter
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from amazonwebcrawler_spark.functions.text import normalize_text
@@ -208,6 +208,53 @@ def weighted_sample(
         .filter(F.col("sample_rank") <= k)
         .withColumn("es_key_micro", F.round(F.col("_es") * 1_000_000).cast("long"))
         .drop("_es")
+    )
+
+
+def mixture_sample(
+    df: DataFrame,
+    source_col: str,
+    key_col: str,
+    weights: dict[str, float],
+    salt: str = "",
+    n_buckets: int = 10_000,
+) -> DataFrame:
+    """Deterministic mixture resampling — the Pile/RedPajama "sampling
+    weight per source" step: each source's rows are kept/duplicated so the
+    output mixture matches the target rates. Rate < 1 downsamples (hash
+    gate, same math as :func:`hash_sample`); rate > 1 upsamples —
+    ``floor(rate)`` guaranteed copies plus one more when the row's hash
+    falls under the fractional part. Sources absent from ``weights`` are
+    dropped (inner join against the weight table).
+
+    Output: the input columns + ``copy`` (1-based duplicate index) — a
+    downstream trainer shuffles on (key, copy). Selection is a pure
+    function of the data: re-runs, repartitions and other engines produce
+    the SAME multiset (the resumability contract every sampler here obeys).
+
+    Plan: the weight table is a handful of rows → broadcast join; the copy
+    fan-out is ``explode(sequence(...))`` — no shuffle of the corpus at
+    all. Rates should be binary-exact fractions (0.25, 1.5, …) if an
+    external SQL engine must reproduce the truncation arithmetic.
+    """
+    spark = df.sparkSession
+    wdf = F.broadcast(
+        spark.createDataFrame(
+            [(s, float(r)) for s, r in sorted(weights.items())],
+            f"{source_col} string, _rate double",
+        )
+    )
+    frac_thresh = ((F.col("_rate") % 1.0) * n_buckets).cast("int")
+    n_copies = (
+        F.floor("_rate").cast("int")
+        + (hash_bucket(F.col(key_col), n_buckets, salt) < frac_thresh).cast("int")
+    )
+    return (
+        df.join(wdf, source_col, "inner")
+        .withColumn("_n", n_copies)
+        .filter(F.col("_n") > 0)
+        .withColumn("copy", F.explode(F.sequence(F.lit(1), F.col("_n"))))
+        .drop("_rate", "_n")
     )
 
 
@@ -459,6 +506,69 @@ def host_template_stats(
     )
 
 
+def epoch_shuffle(df: DataFrame, id_col: str, seed: int, n_shards: int = 32) -> DataFrame:
+    """Deterministic per-epoch global shuffle order for training-data
+    loading — the "reshuffle the corpus every epoch" step of an LLM
+    training pipeline, done as a pure function of ``(seed, id)`` so the
+    permutation is reproducible across runs, engines, partitionings and
+    resume boundaries (a re-run of epoch 7 MUST feed batches in the same
+    order; ``df.orderBy(rand())`` is none of these things).
+
+    The permutation is the lexicographic order of
+    ``md5('epoch:{seed}:' || id)`` (ties broken by id; distinct ids make
+    key ties astronomically unlikely anyway). Realized WITHOUT a global
+    sort: the shard is the TOP bits of the key prefix —
+    ``shard = (v·n_shards) >> 32`` with ``v`` = first 8 hex chars as an
+    int — which is monotone in the key, so ``(shard, key)`` order IS key
+    order and the within-shard ``row_number`` windows never merge into a
+    single partition. Global positions come from per-shard counts: one
+    map-side-combinable aggregate whose collect is bounded by the
+    ``n_shards`` config constant, cumulated driver-side and broadcast back
+    (the assign_discovery_seq justification). A loader materializes
+    epoch order by reading shards in shard order, each pre-sorted —
+    exactly how a 100 TB corpus is shuffled in practice (shard-level
+    ordering + in-shard sort, never a cluster-wide sort).
+
+    Returns the input's ``id_col`` plus ``shard`` (int), ``pos_in_shard``
+    (1-based BIGINT) and ``global_pos`` (0-based BIGINT) — a shuffle
+    MANIFEST (ints + ids, never payload), bijective onto [0, n).
+    """
+    from pyspark.sql import Window
+
+    if n_shards < 1 or n_shards > 4096:
+        raise ValueError(f"n_shards must be in [1, 4096], got {n_shards}")
+    key = F.md5(F.concat(F.lit(f"epoch:{seed}:"), F.col(id_col).cast("string")))
+    v = F.conv(F.substring(key, 1, 8), 16, 10).cast("long")
+    keyed = df.select(
+        F.col(id_col),
+        key.alias("_key"),
+        F.shiftright(v * F.lit(n_shards), 32).cast("int").alias("shard"),
+    )
+    w = Window.partitionBy("shard").orderBy(F.col("_key").asc(), F.col(id_col).asc())
+    ranked = keyed.withColumn("pos_in_shard", F.row_number().over(w).cast("long"))
+    # per-shard counts: ≤ n_shards rows (config constant — never data-scale)
+    counts = {
+        r["shard"]: r["c"]
+        for r in keyed.groupBy("shard").agg(F.count(F.lit(1)).alias("c")).collect()
+    }
+    acc = 0
+    offs = []
+    for shard in sorted(counts):
+        offs.append((int(shard), acc))
+        acc += int(counts[shard])
+    spark = df.sparkSession
+    off_df = spark.createDataFrame(offs or [(0, 0)], "shard int, _off long")
+    return (
+        ranked.join(F.broadcast(off_df), "shard")
+        .select(
+            id_col,
+            "shard",
+            "pos_in_shard",
+            (F.col("_off") + F.col("pos_in_shard") - 1).alias("global_pos"),
+        )
+    )
+
+
 def countmin_certify(
     df: DataFrame, key_col: str, depth: int = 4, width: int = 256
 ) -> DataFrame:
@@ -675,6 +785,249 @@ def hist_quantiles(
     )
 
 
+def isotonic_calibrate(
+    scored: DataFrame,
+    score_col: str = "score",
+    label_col: str = "label",
+    n_buckets: int = 32,
+) -> DataFrame:
+    """Isotonic (PAV) calibration of classifier scores — exact integer form.
+
+    A quality classifier's raw score is only a RANKING; using it as a
+    keep-probability or a mixture weight needs calibration. Pool-Adjacent-Violators is the standard monotone
+    fit, but its sequential pooling looks driver-shaped — this uses the
+    minimax characterization instead (Robertson, Wright & Dykstra 1988,
+    thm 1.4.4)::
+
+        fitted(i) = max_{j ≤ i} min_{k ≥ i} mean(label | bucket ∈ [j, k])
+
+    which is pure relational algebra over the BUCKET table: scores
+    fixed-width-bucket into ``n_buckets`` cells (one 1-row min/max
+    aggregate broadcasts the range), per-bucket (weight, positives) is one
+    map-side-combinable hash aggregate — the only data-proportional
+    shuffle — and the minimax runs entirely on the B-row bucket table:
+    prefix sums + a B×B pair expansion (≤ n_buckets² ≈ 1024 rows) + two
+    windows. Interval means are integer micro units (``sy·10⁶ DIV w``),
+    so min/max compositions are EXACT — no float anywhere, the output is
+    bit-stable on any engine, and monotonicity is a theorem, not a test
+    tolerance.
+
+    Returns (bucket, n, pos, rate_micro, fitted_micro) ordered-safe for
+    the driver hash; ``fitted_micro`` is non-decreasing in ``bucket``.
+    Empty buckets simply don't appear (the minimax over PRESENT buckets
+    equals PAV on the weighted sequence). 100 TB shape: the scored corpus
+    reduces to ≤ n_buckets rows before anything quadratic happens;
+    calibrated keep-probabilities broadcast back as a B-row dim join.
+    """
+    rng = scored.select(
+        F.min(score_col).alias("_lo"), F.max(score_col).alias("_hi")
+    )
+    b = scored.crossJoin(F.broadcast(rng)).select(
+        F.expr(
+            f"CAST((({score_col} - _lo) * {n_buckets}L) DIV (_hi - _lo + 1L) AS INT)"
+        ).alias("bucket"),
+        F.col(label_col).cast("long").alias("y"),
+    )
+    buckets = b.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos")
+    )
+    w_ord = Window.orderBy("bucket")
+    pre = buckets.select(
+        "bucket",
+        "n",
+        "pos",
+        F.sum("n").over(w_ord).alias("cw"),
+        F.sum("pos").over(w_ord).alias("cy"),
+    )
+    lo = pre.select(
+        F.col("bucket").alias("j"),
+        (F.col("cw") - F.col("n")).alias("w0"),
+        (F.col("cy") - F.col("pos")).alias("y0"),
+    )
+    hi = pre.select(F.col("bucket").alias("k"), F.col("cw").alias("w1"), F.col("cy").alias("y1"))
+    pairs = lo.join(hi, F.col("j") <= F.col("k")).select(
+        "j", "k", F.expr("((y1 - y0) * 1000000L) DIV (w1 - w0)").alias("a_micro")
+    )
+    # min over k ≥ i for each (j, i): reverse running min per j; then
+    # fitted(i) = max over the j ≤ i rows (pairs only holds j ≤ k = i)
+    w_rev = Window.partitionBy("j").orderBy(F.col("k").desc())
+    mins = pairs.select("j", F.col("k").alias("i"), F.min("a_micro").over(w_rev).alias("m"))
+    fitted = mins.groupBy("i").agg(F.max("m").alias("fitted_micro"))
+    return (
+        buckets.join(fitted, buckets["bucket"] == fitted["i"])
+        .select(
+            "bucket",
+            "n",
+            "pos",
+            F.expr("(pos * 1000000L) DIV n").alias("rate_micro"),
+            F.col("fitted_micro").cast("long").alias("fitted_micro"),
+        )
+    )
+
+
+def leakage_safe_split(
+    docs: DataFrame,
+    pairs: DataFrame,
+    id_col: str = "doc_id",
+    cuts: tuple = (("train", 98), ("val", 1), ("test", 1)),
+    salt: str = "split",
+) -> DataFrame:
+    """Train/val/test split that cannot leak near-duplicates across splits.
+
+    A plain per-document hash split puts one member of a near-dup pair in
+    train and its twin in test — the eval then "measures" memorization
+    (the failure decontamination guards against, except self-inflicted).
+    The split UNIT here is the near-dup COMPONENT: pairs collapse to
+    groups (min-label :func:`~amazonwebcrawler_spark.operators.dedup.
+    connected_components`), unpaired documents are their own singleton
+    group, and every group lands in exactly one split by a deterministic
+    md5 of its group id — so "no dup pair crosses a split boundary" holds
+    by CONSTRUCTION, for any future re-run, on any partitioning.
+
+    ``cuts`` are integer percents summing to 100 (md5 mod 100 buckets) —
+    exact, engine-independent arithmetic; repartition-invariant because
+    nothing depends on row order. Scale shape: the CC loop runs only over
+    PAIRED docs (the tiny sliver); the corpus itself sees one left join
+    against the group sliver + pure column math. Returns
+    (doc_id, group_id, split).
+    """
+    total = sum(p for _, p in cuts)
+    if total != 100:
+        raise ValueError(f"cuts must sum to 100, got {total}")
+    from amazonwebcrawler_spark.operators.dedup import connected_components
+
+    groups = connected_components(pairs).withColumnRenamed("doc_id", "_gid_doc")
+    base = docs.select(F.col(id_col).alias("doc_id")).join(
+        groups, F.col("doc_id") == F.col("_gid_doc"), "left"
+    )
+    unit = F.coalesce(F.col("group_id"), F.col("doc_id"))
+    h = (
+        F.conv(
+            F.substring(F.md5(F.concat(F.lit(salt), unit.cast("string"))), 1, 8), 16, 10
+        ).cast("long")
+        % 100
+    )
+    expr = None
+    acc = 0
+    for name, pct in cuts:
+        acc += pct
+        cond = h < acc
+        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
+    return base.select(
+        "doc_id", unit.alias("group_id"), expr.alias("split")
+    )
+
+
+def temperature_weights(
+    df: DataFrame, strata_col: str, alpha_milli: int = 700
+) -> DataFrame:
+    """Temperature-based stratum rebalancing — the multilingual sampling
+    rule (q_l ∝ p_l^α, α < 1) that keeps head languages from drowning the
+    tail while still respecting corpus mass (α=1 is proportional, α=0 is
+    uniform; 0.7 is the published multilingual-pretraining default, e.g.
+    the mBERT/XLM exponent). ``boost_milli = q/p`` is the per-document
+    sampling weight a pipeline feeds into :func:`weighted_sample` or the
+    epoch mixture.
+
+    Shape: ONE map-side-combinable stratum count, then everything runs on
+    the strata table (languages/sources — dozens of rows) with two
+    broadcast 1-row totals. ``p_micro`` is exact integer DIV; ``q_micro``
+    and ``boost_milli`` round the one irrational term (``pow``) under the
+    repo's micro discipline. Returns (stratum, n_docs, p_micro, q_micro,
+    boost_milli).
+    """
+    alpha = F.lit(alpha_milli).cast("double") / F.lit(1000.0)
+    counts = df.groupBy(F.col(strata_col).alias("stratum")).agg(
+        F.count(F.lit(1)).alias("n_docs")
+    )
+    total = counts.agg(F.sum("n_docs").alias("_n_total"))
+    with_p = counts.crossJoin(F.broadcast(total)).select(
+        "stratum",
+        "n_docs",
+        "_n_total",
+        F.pow(F.col("n_docs") / F.col("_n_total"), alpha).alias("_qraw"),
+    )
+    z = with_p.agg(F.sum("_qraw").alias("_z"))
+    return with_p.crossJoin(F.broadcast(z)).select(
+        "stratum",
+        "n_docs",
+        F.expr("(n_docs * 1000000L) DIV _n_total").alias("p_micro"),
+        F.round(F.col("_qraw") / F.col("_z") * 1_000_000).cast("long").alias("q_micro"),
+        F.round(
+            (F.col("_qraw") / F.col("_z")) / (F.col("n_docs") / F.col("_n_total")) * 1000
+        ).cast("long").alias("boost_milli"),
+    )
+
+
+def ece_calibration(
+    scored: DataFrame,
+    prob_col: str = "p_milli",
+    label_col: str = "label",
+    n_bins: int = 10,
+) -> DataFrame:
+    """Expected Calibration Error (Naeini et al. AAAI'15) — exact integer
+    form: the reliability diagram + its scalar summary for a keep/drop
+    classifier's claimed probabilities.
+
+    :func:`isotonic_calibrate` FIXES miscalibration; this MEASURES it —
+    the monitoring metric a curation pipeline tracks per model version to
+    decide when recalibration is due (a drifted quality model silently
+    re-weights the whole corpus mixture). Scores arrive as milli-unit
+    probabilities (0..1000); equal-width binning into ``n_bins`` cells::
+
+        ECE = Σ_b (n_b / N) · |acc_b − conf_b|
+
+    Exactness: |acc − conf| per bin = |1000·pos_b − Σp_b| / n_b, so the
+    N-weighted sum telescopes to ``Σ_b |1000·pos_b − Σp_b| · 1000 DIV N``
+    — ONE integer division at the end, no per-bin rounding error
+    compounds, everything BIGINT and bit-stable on any engine.
+
+    Scale shape: one map-side-combinable hash aggregate over the scored
+    corpus (the only data-proportional step), then all arithmetic on the
+    ≤ ``n_bins``-row bin table; the scalar joins back as a broadcast
+    1-row aggregate. No Python, no collect, no window over data.
+
+    Returns one row per non-empty bin: (bin, n, pos, conf_milli,
+    acc_milli, gap_num, ece_micro) — ``conf/acc`` floor-divided milli
+    units for the diagram, ``gap_num = |1000·pos − Σp|`` the exact
+    numerator, ``ece_micro`` the corpus-level scalar repeated per row.
+    """
+    binned = scored.select(
+        F.least(
+            F.expr(f"CAST(({prob_col} * {n_bins}L) DIV 1001 AS INT)"),
+            F.lit(n_bins - 1),
+        ).alias("bin"),
+        F.col(prob_col).cast("long").alias("_p"),
+        F.col(label_col).cast("long").alias("_y"),
+    )
+    bins = binned.groupBy("bin").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("_y").alias("pos"),
+        F.sum("_p").alias("_sp"),
+    )
+    gap = F.abs(F.lit(1000) * F.col("pos") - F.col("_sp"))
+    pre = bins.select(
+        "bin",
+        "n",
+        "pos",
+        F.expr("_sp DIV n").alias("conf_milli"),
+        F.expr("(pos * 1000L) DIV n").alias("acc_milli"),
+        gap.cast("long").alias("gap_num"),
+    )
+    tot = pre.agg(
+        F.sum("n").alias("_nt"), F.sum("gap_num").alias("_gt")
+    )
+    return pre.crossJoin(F.broadcast(tot)).select(
+        "bin",
+        "n",
+        "pos",
+        "conf_milli",
+        "acc_milli",
+        "gap_num",
+        F.expr("(_gt * 1000L) DIV _nt").alias("ece_micro"),
+    )
+
+
 def psi_drift(
     old: DataFrame,
     new: DataFrame,
@@ -684,13 +1037,15 @@ def psi_drift(
     """Population Stability Index between two score snapshots — the
     standard distribution-drift alarm for a deployed quality/keep model
     (PSI < 0.1 stable, 0.1-0.25 moderate, > 0.25 retrain — the credit-
-    scoring rule of thumb the LLM-curation stacks inherited). PSI needs
-    no labels at all — it compares the scored population between
-    crawls, which is why it's the metric that runs every wave.
+    scoring rule of thumb the LLM-curation stacks inherited). ece_calib
+    measures miscalibration against LABELS on one snapshot;
+    isotonic_calibrate FIXES it; PSI needs no labels at all — it
+    compares the scored population between crawls, which is why it's
+    the metric that runs every wave.
 
     Scores arrive as milli units (0..1000, the house classifier
     contract); equal-width binning into ``n_bins`` cells (p = 1000
-    lands in the last bin). Per bin with
+    lands in the last bin, the ece_calibration rule). Per bin with
     +1/+n_bins Laplace smoothing on BOTH sides (a bin empty in one
     snapshot must not blow up the log):
     ``psi_b = (p_b − q_b) · ln(p_b / q_b)``, p/q smoothed shares.
@@ -732,6 +1087,58 @@ def psi_drift(
     total = out.agg(F.sum("psi_term_micro").cast("long").alias("psi_total_micro"))
     return out.crossJoin(F.broadcast(total)).select(
         "bin", "n_old", "n_new", "psi_term_micro", "psi_total_micro"
+    )
+
+
+def mixture_plan(
+    strata: DataFrame,
+    total_tokens: int,
+    source_col: str = "source",
+    tokens_col: str = "n_tokens",
+    weight_col: str = "weight_milli",
+) -> DataFrame:
+    """Token-budget mixture plan — the arithmetic that turns a published
+    mixture spec ("15% code, 4.5% books, ...") plus per-source
+    inventories into per-source sampling rates and EPOCH counts, the
+    numbers a training run is actually configured with. The flag that
+    matters is oversampling: a source whose target exceeds its
+    inventory repeats (epochs > 1), and small high-weight sources
+    repeating many epochs is the classic memorization/contamination
+    amplifier a data card must disclose.
+
+    Exact integer arithmetic throughout: weights renormalize against
+    their own sum (a spec that sums to 997 milli still plans the full
+    budget), ``target_tokens = total·w DIV Σw``,
+    ``sample_rate_ppm = target·1e6 DIV inventory`` (> 1e6 ⇔
+    oversampling), ``n_epochs_milli = target·1000 DIV inventory``.
+
+    Scale shape: runs on the strata table (dozens of rows — sources,
+    not documents); the one aggregate is the weight-sum broadcast back
+    via a 1-row cross join. Inventories come from upstream map-side
+    counts (corpus_stats / temperature_weights territory). Returns
+    (source, n_tokens, weight_milli, target_tokens, sample_rate_ppm,
+    n_epochs_milli, oversampled)."""
+    tot = strata.agg(F.sum(weight_col).alias("_wsum"))
+    return (
+        strata.crossJoin(F.broadcast(tot))
+        .select(
+            F.col(source_col).alias("source"),
+            F.col(tokens_col).cast("long").alias("n_tokens"),
+            F.col(weight_col).cast("long").alias("weight_milli"),
+            F.expr(f"(CAST({total_tokens} AS BIGINT) * {weight_col}) DIV _wsum")
+            .alias("target_tokens"),
+        )
+        .select(
+            "*",
+            F.expr(f"(target_tokens * 1000000) DIV greatest({tokens_col}, 1)")
+            .alias("sample_rate_ppm"),
+            F.expr(f"(target_tokens * 1000) DIV greatest({tokens_col}, 1)")
+            .alias("n_epochs_milli"),
+        )
+        .select(
+            "*",
+            (F.col("sample_rate_ppm") > 1_000_000).alias("oversampled"),
+        )
     )
 
 

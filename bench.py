@@ -81,6 +81,9 @@ BENCH_QUERIES = (
     # one leg, so the "evaluation is itself a distributed join" claim is
     # timed against the indexes it measures
     "ann_recall",
+    # r5 session 11: per-epoch shuffle manifest — shard windows + broadcast
+    # offsets standing in for the global sort an epoch reshuffle never runs
+    "epoch_shuffle",
     # r5 session 11: degree-oriented triangle counting — the wedge join's
     # √m out-degree bound is the claim; timing it keeps the number honest
     "triangle_count",

@@ -75,6 +75,11 @@ CHECKS = {
     # rank delta: both windows are partitioned (day / event_type) — the
     # date-over-date diff never needs a global sort (NEG_CHECKS)
     "rank_delta": ["Window", "HashAggregate", "[codegen id :"],
+    # mixture resampling: broadcast weight table + explode — the corpus
+    # itself is never shuffled (no Exchange on the big side would be ideal
+    # to assert, but the broadcast build shows as its own exchange; the
+    # Generate & BHJ are the plan signature)
+    "mixture_sample": ["BroadcastHashJoin", "Generate", "[codegen id :"],
     # in-batch negatives: bucket windows + ONE equi self-join
     "negative_pairs": ["Window", "HashJoin", "[codegen id :"],
     # CDC diff: digests joined, not payloads; full outer on the id
@@ -152,6 +157,12 @@ CHECKS = {
     # literal hyperplane dots defeat codegen), positively asserted;
     # row-at-a-time Python stays forbidden (NEG)
     "ann_recall": ["ArrowEvalPython", "HashAggregate", "[codegen id :"],
+    # epoch shuffle: SHARD-partitioned row_number windows + broadcast
+    # offsets — never a global sort (NEG forbids SinglePartition), no
+    # Python (triangle_count has no entry: its output is eagerly
+    # localCheckpointed inside the operator, the hits/minhash discipline,
+    # so the formatted plan is an RDD scan)
+    "epoch_shuffle": ["Window", "BroadcastHashJoin", "[codegen id :"],
     # BM25: df_t and dl arrive as BROADCAST equi-joins on the query-filtered
     # tf stream; N and avgdl as 1-row broadcast crossJoins (the accepted
     # BNLJ-Cross idiom); every aggregate map-side-combinable; no Python
@@ -260,6 +271,10 @@ CHECKS = {
     # RFC 3986 resolution: the whole case tree + §5.2.4 segment fold is ONE
     # codegen projection over the scan — no shuffle, no join, no Python
     "resolve_refs": ["[codegen id :", "ReadSchema: struct<o_orderkey:bigint>"],
+    # isotonic calibration: the corpus reduces through ONE map-side-
+    # combinable bucket aggregate before anything quadratic; the score
+    # range broadcasts; no Python (NEG_CHECKS)
+    "isotonic_calib": ["HashAggregate", "partial_count", "BroadcastNestedLoopJoin"],
     # UCB1: one map-side host aggregate + the broadcast 1-row total —
     # no window, no data-side join, no Python (NEG_CHECKS)
     "ucb_schedule": ["HashAggregate", "partial_count", "BroadcastNestedLoopJoin"],
@@ -279,13 +294,13 @@ NO_AQE = {
     "dedup_simhash", "hamming_neardup", "dedup_incremental",
     "trap_detect",
     "asof_join", "range_join", "skew_join_salted", "rollup_metrics", "rank_delta",
-    "negative_pairs", "snapshot_diff", "sketch_distinct",
+    "mixture_sample", "negative_pairs", "snapshot_diff", "sketch_distinct",
     "expectations", "winsorize", "ema_score",
     "gopher_signals", "recrawl_priority", "substring_dedup",
     "robots_rfc", "adaptive_backoff",
     "etld1_domain", "anchor_rollup", "template_detect", "canonical_group",
     "capture_novelty", "budget_allocate", "param_policy", "param_apply",
-    "ann_recall",
+    "ann_recall", "epoch_shuffle",
     "bm25_rank", "heavy_hitters", "postings_build", "ann_pq",
     "compaction_plan", "phrase_match",
     "c4_clean", "gram_novelty", "mirror_detect",
@@ -305,6 +320,7 @@ NEG_CHECKS = {
     "resolve_refs": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join",
     ],
+    "isotonic_calib": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "ucb_schedule": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Window"],
     "percent_norm": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join",
@@ -333,6 +349,7 @@ NEG_CHECKS = {
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "Exchange SinglePartition", "Join",
     ],
+    "mixture_sample": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "negative_pairs": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "NestedLoop", "Cartesian",
@@ -407,6 +424,10 @@ NEG_CHECKS = {
     # broadcast-queries crossJoin renders as BroadcastNestedLoopJoin (the
     # accepted broadcast-small-side idiom), so only Cartesian is forbidden
     "ann_recall": ["BatchEvalPython", "MapInPandas", "Cartesian"],
+    "epoch_shuffle": [
+        "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+        "Exchange SinglePartition", "NestedLoop", "Cartesian",
+    ],
     # bm25: the 1-row totals (N, avgdl) broadcast as BNLJ Cross and their
     # global aggregates are bounded 1-row SinglePartition exchanges (the
     # budget_allocate-accepted shapes), so neither is forbidden here

@@ -141,6 +141,56 @@ class TestCorpusStats:
         assert (fr.avg_chars_micro, fr.median_chars_x2) == (11_500_000, 23)
 
 
+class TestMixtureSample:
+    def _docs(self, spark, n=200):
+        from pyspark.sql import functions as F
+
+        return spark.range(n).select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("s"), (F.col("id") % 4).cast("string")).alias("source"),
+        )
+
+    def test_integer_rate_is_exact_copies(self, spark):
+        from amazonwebcrawler_spark.operators.corpus import mixture_sample
+
+        d = self._docs(spark)
+        out = mixture_sample(d, "source", "doc_id", {"s0": 3.0})
+        per_doc = {r["doc_id"]: r["n"] for r in out.groupBy("doc_id").count()
+                   .withColumnRenamed("count", "n").collect()}
+        assert set(per_doc.values()) == {3}
+        assert len(per_doc) == 50  # only s0 rows survive; s1-s3 dropped
+        copies = {r["copy"] for r in out.collect()}
+        assert copies == {1, 2, 3}
+
+    def test_zero_rate_drops_source(self, spark):
+        from amazonwebcrawler_spark.operators.corpus import mixture_sample
+
+        d = self._docs(spark)
+        out = mixture_sample(d, "source", "doc_id", {"s0": 0.0, "s1": 1.0})
+        assert {r["source"] for r in out.collect()} == {"s1"}
+
+    def test_fractional_rates_monotone(self, spark):
+        """A doc kept at rate 0.25 must also be kept at 0.5 (same salt) —
+        the hash-gate threshold grows, the bucket doesn't move."""
+        from amazonwebcrawler_spark.operators.corpus import mixture_sample
+
+        d = self._docs(spark)
+        keep = lambda rate: {  # noqa: E731
+            r["doc_id"] for r in mixture_sample(d, "source", "doc_id", {"s0": rate}).collect()
+        }
+        lo, hi = keep(0.25), keep(0.5)
+        assert lo and lo < hi
+
+    def test_deterministic_under_repartition(self, spark):
+        from amazonwebcrawler_spark.operators.corpus import mixture_sample
+
+        d = self._docs(spark)
+        w = {"s0": 1.5, "s1": 0.5}
+        a = sorted(map(tuple, mixture_sample(d, "source", "doc_id", w).collect()))
+        b = sorted(map(tuple, mixture_sample(d.repartition(7), "source", "doc_id", w).collect()))
+        assert a == b and len(a) > 0
+
+
 class TestSnapshotDiff:
     def test_all_statuses(self, spark):
         from amazonwebcrawler_spark.operators.corpus import snapshot_diff
@@ -326,6 +376,57 @@ class TestWeightedSample:
         assert got == [1]
 
 
+class TestEpochShuffle:
+    def _ids(self, spark, n, parts=4):
+        return spark.range(0, n, numPartitions=parts).withColumnRenamed("id", "doc_id")
+
+    def test_bijection_and_key_order(self, spark):
+        """global_pos is a bijection onto [0, n) and equals the rank of the
+        md5 shuffle key — the permutation contract."""
+        import hashlib
+
+        from amazonwebcrawler_spark.operators.corpus import epoch_shuffle
+
+        n = 200
+        out = epoch_shuffle(self._ids(spark, n), "doc_id", seed=7, n_shards=8).collect()
+        assert sorted(r.global_pos for r in out) == list(range(n))
+        key = lambda i: hashlib.md5(f"epoch:7:{i}".encode()).hexdigest()  # noqa: E731
+        want = {i: p for p, i in enumerate(sorted(range(n), key=lambda i: (key(i), i)))}
+        assert {r.doc_id: r.global_pos for r in out} == want
+
+    def test_partition_invariance(self, spark):
+        """The manifest is a pure function of the data: 1-partition and
+        13-partition inputs produce identical rows."""
+        from amazonwebcrawler_spark.operators.corpus import epoch_shuffle
+
+        rows = lambda parts: sorted(  # noqa: E731
+            (r.doc_id, r.shard, r.pos_in_shard, r.global_pos)
+            for r in epoch_shuffle(self._ids(spark, 150, parts), "doc_id", 3, 8).collect()
+        )
+        assert rows(1) == rows(13)
+
+    def test_seed_changes_permutation(self, spark):
+        """Different epochs genuinely reshuffle: the seed-3 and seed-4
+        permutations of 100 docs differ (P[identical] ~ 1/100!)."""
+        from amazonwebcrawler_spark.operators.corpus import epoch_shuffle
+
+        d = self._ids(spark, 100)
+        p3 = {r.doc_id: r.global_pos for r in epoch_shuffle(d, "doc_id", 3).collect()}
+        p4 = {r.doc_id: r.global_pos for r in epoch_shuffle(d, "doc_id", 4).collect()}
+        assert p3 != p4
+        assert sorted(p3.values()) == sorted(p4.values()) == list(range(100))
+
+    def test_shard_prefix_consistency(self, spark):
+        """Shards tile the key order: every key in shard s sorts before
+        every key in shard s+1 — the no-global-sort correctness condition."""
+        from amazonwebcrawler_spark.operators.corpus import epoch_shuffle
+
+        out = epoch_shuffle(self._ids(spark, 300), "doc_id", seed=9, n_shards=8)
+        rows = sorted((r.global_pos, r.shard) for r in out.collect())
+        shards = [s for _, s in rows]
+        assert shards == sorted(shards)
+
+
 class TestCountminCertify:
     def _run(self, spark, keys, **kw):
         df = spark.createDataFrame([(k,) for k in keys], "key string")
@@ -454,6 +555,163 @@ class TestHistQuantiles:
             hist_quantiles(df, "grp", "v", (0,))
 
 
+class TestIsotonicCalibrate:
+    """operators/corpus.isotonic_calibrate — the minimax form must equal
+    classic sequential PAV pooling exactly (integer micro means)."""
+
+    @staticmethod
+    def _pav_blocks(ws, ys):
+        blocks = []
+        for w, y in zip(ws, ys):
+            blocks.append([w, y])
+            while len(blocks) > 1 and blocks[-2][1] * blocks[-1][0] >= blocks[-1][1] * blocks[-2][0]:
+                w2, y2 = blocks.pop()
+                blocks[-1][0] += w2
+                blocks[-1][1] += y2
+        fit = []
+        i = 0
+        for w, y in blocks:
+            cw = 0
+            while cw < w:
+                cw += ws[i]
+                fit.append(y * 1_000_000 // w)
+                i += 1
+        return fit
+
+    def _run(self, spark, rows, n_buckets):
+        from amazonwebcrawler_spark.operators.corpus import isotonic_calibrate
+
+        df = spark.createDataFrame(rows, "score long, label int")
+        out = isotonic_calibrate(df, "score", "label", n_buckets=n_buckets).collect()
+        return sorted(out, key=lambda r: r["bucket"])
+
+    def test_matches_sequential_pav(self, spark):
+        import random
+
+        rng = random.Random(11)
+        rows = []
+        for _ in range(1500):
+            s = rng.randint(0, 99)
+            rows.append((s, 1 if rng.random() < s / 100 else 0))
+        out = self._run(spark, rows, 12)
+        fit = [r["fitted_micro"] for r in out]
+        assert fit == self._pav_blocks([r["n"] for r in out], [r["pos"] for r in out])
+        assert all(a <= b for a, b in zip(fit, fit[1:]))
+
+    def test_monotone_input_is_fixed_point(self, spark):
+        # perfectly increasing rates: fitted == raw rate per bucket
+        rows = []
+        for s in range(10):
+            for i in range(20):
+                rows.append((s, 1 if i < 2 * s else 0))
+        out = self._run(spark, rows, 10)
+        for r in out:
+            assert r["fitted_micro"] == r["rate_micro"]
+
+    def test_antitone_input_pools_to_global_mean(self, spark):
+        # perfectly DECREASING rates: PAV pools everything to one block
+        rows = []
+        for s in range(10):
+            for i in range(20):
+                rows.append((s, 1 if i < 2 * (9 - s) else 0))
+        out = self._run(spark, rows, 10)
+        total_n = sum(r["n"] for r in out)
+        total_pos = sum(r["pos"] for r in out)
+        want = total_pos * 1_000_000 // total_n
+        for r in out:
+            assert r["fitted_micro"] == want
+
+
+class TestLeakageSafeSplit:
+    """operators/corpus.leakage_safe_split — the no-pair-crosses-splits
+    guarantee, singleton handling, cut fractions, and determinism."""
+
+    def _run(self, spark, n_docs, pair_list, cuts=(("train", 98), ("val", 1), ("test", 1))):
+        from amazonwebcrawler_spark.operators.corpus import leakage_safe_split
+
+        docs = spark.createDataFrame([(i,) for i in range(n_docs)], "doc_id long")
+        pairs = spark.createDataFrame(pair_list, "id_a long, id_b long")
+        return {
+            r["doc_id"]: (r["group_id"], r["split"])
+            for r in leakage_safe_split(docs, pairs).collect()
+        }
+
+    def test_no_pair_crosses_split(self, spark):
+        import random
+
+        rng = random.Random(3)
+        pair_list = [(a, a + rng.randint(1, 5)) for a in rng.sample(range(195), 60)]
+        out = self._run(spark, 200, pair_list)
+        assert len(out) == 200
+        for a, b in pair_list:
+            assert out[a][1] == out[b][1], (a, b)
+            assert out[a][0] == out[b][0]
+
+    def test_transitive_chain_shares_split(self, spark):
+        # a~b, b~c, c~d: the whole chain is ONE unit even though a,d never pair
+        out = self._run(spark, 10, [(1, 2), (2, 3), (3, 4)])
+        assert len({out[i] for i in (1, 2, 3, 4)}) == 1
+        assert out[1][0] == 1
+
+    def test_singletons_split_independently(self, spark):
+        out = self._run(spark, 400, [])
+        assert all(g == d for d, (g, _) in out.items())
+        from collections import Counter
+
+        c = Counter(s for _, s in out.values())
+        assert set(c) <= {"train", "val", "test"}
+        assert c["train"] > 300  # ~98%
+
+    def test_cuts_must_sum_to_100(self, spark):
+        import pytest as _pytest
+
+        from amazonwebcrawler_spark.operators.corpus import leakage_safe_split
+
+        docs = spark.createDataFrame([(1,)], "doc_id long")
+        pairs = spark.createDataFrame([], "id_a long, id_b long")
+        with _pytest.raises(ValueError):
+            leakage_safe_split(docs, pairs, cuts=(("train", 90), ("val", 5)))
+
+
+class TestTemperatureWeights:
+    """operators/corpus.temperature_weights — α-regime behavior and a
+    Python replay."""
+
+    def _run(self, spark, counts, alpha_milli):
+        from amazonwebcrawler_spark.operators.corpus import temperature_weights
+
+        rows = [(lang, i) for lang, n in counts.items() for i in range(n)]
+        df = spark.createDataFrame(rows, "lang string, x long")
+        return {
+            r["stratum"]: r
+            for r in temperature_weights(df, "lang", alpha_milli=alpha_milli).collect()
+        }
+
+    def test_matches_python_replay(self, spark):
+        counts = {"en": 700, "de": 200, "fr": 80, "sw": 20}
+        out = self._run(spark, counts, 700)
+        N = sum(counts.values())
+        qraw = {l: (n / N) ** 0.7 for l, n in counts.items()}
+        z = sum(qraw[l] for l in out)  # engine sums in its own order; tol ±1
+        for l, n in counts.items():
+            r = out[l]
+            assert r["p_micro"] == n * 1_000_000 // N
+            assert abs(r["q_micro"] - round(qraw[l] / z * 1e6)) <= 1
+            assert abs(r["boost_milli"] - round((qraw[l] / z) / (n / N) * 1000)) <= 1
+
+    def test_alpha_one_is_proportional_alpha_zero_uniform(self, spark):
+        counts = {"a": 600, "b": 300, "c": 100}
+        prop = self._run(spark, counts, 1000)
+        for l in counts:
+            assert abs(prop[l]["boost_milli"] - 1000) <= 1  # q == p
+        uni = self._run(spark, counts, 0)
+        qs = {l: uni[l]["q_micro"] for l in counts}
+        assert max(qs.values()) - min(qs.values()) <= 2  # uniform q
+        # tail boosted, head suppressed at alpha<1
+        mid = self._run(spark, counts, 500)
+        assert mid["c"]["boost_milli"] > 1000 > mid["a"]["boost_milli"]
+
+
 class TestPsiDrift:
     """operators/corpus.psi_drift — identical snapshots ≈ 0, planted
     shift detected, empty-bin smoothing, Python replay."""
@@ -500,6 +758,43 @@ class TestPsiDrift:
         # low bins emptied in new (min new score 300 → bin 2) → smoothing
         # kept every term finite
         assert all(out[b]["n_new"] == 0 for b in range(2))
+
+
+class TestMixturePlan:
+    """operators/corpus.mixture_plan — renormalization, oversampling
+    flags, exact arithmetic."""
+
+    def test_plan_arithmetic(self, spark):
+        from amazonwebcrawler_spark.operators.corpus import mixture_plan
+
+        strata = spark.createDataFrame(
+            [
+                ("web", 1_000_000, 500),
+                ("code", 100_000, 300),  # small + high weight → oversampled
+                ("books", 500_000, 200),
+            ],
+            "source string, n_tokens long, weight_milli long",
+        )
+        out = {r["source"]: r for r in mixture_plan(strata, 1_000_000).collect()}
+        # weights sum to 1000 exactly here
+        assert out["web"]["target_tokens"] == 500_000
+        assert out["code"]["target_tokens"] == 300_000
+        assert out["books"]["target_tokens"] == 200_000
+        assert out["code"]["oversampled"] and out["code"]["n_epochs_milli"] == 3000
+        assert not out["web"]["oversampled"]
+        assert out["web"]["sample_rate_ppm"] == 500_000
+
+    def test_renormalizes_partial_weights(self, spark):
+        from amazonwebcrawler_spark.operators.corpus import mixture_plan
+
+        strata = spark.createDataFrame(
+            [("a", 10_000, 300), ("b", 10_000, 100)],  # sums to 400
+            "source string, n_tokens long, weight_milli long",
+        )
+        out = {r["source"]: r for r in mixture_plan(strata, 40_000).collect()}
+        assert out["a"]["target_tokens"] == 30_000  # 300/400 of budget
+        assert out["b"]["target_tokens"] == 10_000
+        assert out["a"]["n_epochs_milli"] == 3000
 
 
 class TestDropReasons:

@@ -365,6 +365,53 @@ class TestRrfFusion:
         assert a == b
 
 
+class TestEceCalibration:
+    def _ece(self, spark, rows, **kw):
+        from amazonwebcrawler_spark.operators.corpus import ece_calibration
+
+        df = spark.createDataFrame(rows, "p_milli long, label int")
+        return ece_calibration(df, "p_milli", "label", **kw)
+
+    def test_perfectly_calibrated_bins_zero_gap(self, spark):
+        # bin [100,200): 10 rows at p=150, exactly 1.5 positives impossible →
+        # use p=200*? choose p=500, 10 rows, 5 positive → gap 0
+        rows = [(500, 1 if i < 5 else 0) for i in range(10)]
+        out = self._ece(spark, rows).collect()
+        assert len(out) == 1
+        r = out[0]
+        assert r["gap_num"] == 0 and r["ece_micro"] == 0
+        assert r["conf_milli"] == 500 and r["acc_milli"] == 500
+
+    def test_ece_telescopes_exactly(self, spark):
+        # two bins: bin0 (p=100,n=4,pos=0 → gap |0-400|=400),
+        # bin9 (p=950,n=4,pos=2 → gap |2000-3800|=1800)
+        rows = [(100, 0)] * 4 + [(950, 1), (950, 1), (950, 0), (950, 0)]
+        out = {r["bin"]: r for r in self._ece(spark, rows).collect()}
+        assert out[0]["gap_num"] == 400 and out[9]["gap_num"] == 1800
+        assert out[0]["ece_micro"] == (400 + 1800) * 1000 // 8
+        assert out[9]["conf_milli"] == 950 and out[9]["acc_milli"] == 500
+
+    def test_matches_float_formula(self, spark):
+        import random
+
+        rnd = random.Random(7)
+        rows = [(rnd.randrange(0, 1001), rnd.randrange(0, 2)) for _ in range(500)]
+        out = self._ece(spark, rows, n_bins=10).collect()
+        ece = out[0]["ece_micro"]
+        # float reference (tolerate the single floor at the end)
+        from collections import defaultdict
+
+        bins = defaultdict(list)
+        for p, y in rows:
+            bins[min(p * 10 // 1001, 9)].append((p, y))
+        ref = sum(
+            abs(sum(y for _, y in v) / len(v) - sum(p for p, _ in v) / len(v) / 1000)
+            * len(v) / 500
+            for v in bins.values()
+        )
+        assert abs(ece - ref * 1_000_000) <= 1.0
+
+
 class TestMojibakeStats:
     def test_planted_artifacts_flagged(self, spark):
         from amazonwebcrawler_spark.functions.text import mojibake_stats

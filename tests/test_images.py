@@ -8,7 +8,6 @@ import numpy as np
 import pytest
 
 from amazonwebcrawler_spark.functions.images import (
-    RESIZED_SCHEMA,
     decode_image,
     decode_jpeg,
     decode_png,
@@ -17,8 +16,6 @@ from amazonwebcrawler_spark.functions.images import (
     hamming64,
     phash64,
     psnr,
-    resize_images_kernel,
-    resize_pixels,
 )
 from amazonwebcrawler_spark.sources import synthetic_world as world
 
@@ -53,27 +50,6 @@ class TestJpegStandin:
     def test_deterministic(self):
         px = _pixels(4)
         assert encode_jpeg(px) == encode_jpeg(px)
-
-
-class TestResize:
-    def test_resize_shapes(self):
-        px = np.arange(32 * 24 * 3, dtype=np.uint8).reshape(24, 32, 3)
-        out = resize_pixels(px, 8, 8)
-        assert out.shape == (8, 8, 3)
-        assert np.array_equal(out[0, 0], px[0, 0])  # corner preserved (NN)
-
-    def test_resize_images(self, spark):
-        px = np.arange(32 * 32 * 3, dtype=np.uint8).reshape(32, 32, 3)
-        df = spark.createDataFrame(
-            [(f"img-{i}", bytearray(encode_png(px))) for i in range(10)],
-            "image_id string, bytes binary",
-        )
-        out = df.repartition(4).mapInPandas(resize_images_kernel(8, 8), RESIZED_SCHEMA)
-        rows = out.collect()
-        assert len(rows) == 10
-        for r in rows:
-            assert (r.w, r.h) == (8, 8)
-            assert decode_image(bytes(r.bytes)).shape == (8, 8, 3)
 
 
 class TestPhash:

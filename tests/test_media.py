@@ -1,37 +1,25 @@
-"""Multimodal kernels: resize / frame-sample / audio features through real
-Spark mapInPandas plumbing over deterministic stand-in codecs."""
+"""Image resize: the pure nearest-neighbour kernel and its real Spark
+mapInPandas plumbing over the deterministic stand-in PNG codec."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from amazonwebcrawler_spark.functions import media
-from amazonwebcrawler_spark.functions.images import decode_image, encode_png
+from amazonwebcrawler_spark.functions.images import (
+    RESIZED_SCHEMA,
+    decode_image,
+    encode_png,
+    resize_images_kernel,
+    resize_pixels,
+)
 
 
 class TestPureKernels:
     def test_resize_shapes(self):
         px = np.arange(32 * 24 * 3, dtype=np.uint8).reshape(24, 32, 3)
-        out = media.resize_pixels(px, 8, 8)
+        out = resize_pixels(px, 8, 8)
         assert out.shape == (8, 8, 3)
         assert np.array_equal(out[0, 0], px[0, 0])  # corner preserved (NN)
-
-    def test_video_roundtrip(self):
-        data = media.synth_video(7, n_frames=10)
-        n, w, h, fps = media.video_info(data)
-        assert (n, w, h, fps) == (10, 32, 24, 8)
-        frames = list(media.iter_frames(data))
-        assert len(frames) == 10 and frames[0].shape == (24, 32, 3)
-
-    def test_audio_roundtrip_and_unknown_container(self):
-        data = media.synth_audio(3)
-        samples, rate = media.decode_audio(data)
-        assert rate == 16000 and len(samples) == 16000
-        try:
-            media.decode_audio(b"MP3\x00junk")
-            raise AssertionError("should have raised")
-        except NotImplementedError:
-            pass
 
 
 class TestSparkPlumbing:
@@ -41,249 +29,9 @@ class TestSparkPlumbing:
             [(f"img-{i}", bytearray(encode_png(px))) for i in range(10)],
             "image_id string, bytes binary",
         )
-        out = df.repartition(4).mapInPandas(
-            media.resize_images_kernel(8, 8), media.RESIZED_SCHEMA
-        )
+        out = df.repartition(4).mapInPandas(resize_images_kernel(8, 8), RESIZED_SCHEMA)
         rows = out.collect()
         assert len(rows) == 10
         for r in rows:
             assert (r.w, r.h) == (8, 8)
             assert decode_image(bytes(r.bytes)).shape == (8, 8, 3)
-
-    def test_frame_sampling(self, spark):
-        df = spark.createDataFrame(
-            [(f"vid-{i}", bytearray(media.synth_video(i, n_frames=12))) for i in range(4)],
-            "video_id string, bytes binary",
-        )
-        out = df.repartition(2).mapInPandas(media.frame_sample_kernel(4), media.FRAMES_SCHEMA)
-        rows = out.collect()
-        # 12 frames sampled every 4th → frames 0,4,8 per video
-        assert len(rows) == 4 * 3
-        assert {r.frame_idx for r in rows} == {0, 4, 8}
-        assert all(decode_image(bytes(r.frame_bytes)).shape == (24, 32, 3) for r in rows[:3])
-
-    def test_audio_features(self, spark):
-        df = spark.createDataFrame(
-            [(f"aud-{i}", bytearray(media.synth_audio(i))) for i in range(6)],
-            "audio_id string, bytes binary",
-        )
-        out = df.repartition(3).mapInPandas(
-            media.audio_features_kernel(), media.AUDIO_FEATURES_SCHEMA
-        )
-        rows = {r.audio_id: r for r in out.collect()}
-        assert len(rows) == 6
-        for r in rows.values():
-            assert r.duration_us == 1_000_000
-            assert 200_000 < r.rms_micro < 600_000  # sine at 0.5 amplitude + noise
-            assert 0 < r.zcr_micro < 500_000
-
-
-class TestShotBoundaries:
-    """functions/media.shot_boundaries — cuts at planted scene changes,
-    nothing inside scenes, shot_count arithmetic."""
-
-    def test_planted_cuts_detected_exactly(self, spark):
-        from amazonwebcrawler_spark.functions import media
-
-        rows = [
-            ("two-scene", bytearray(media.synth_video_scenes(7, (6, 6)))),
-            ("three-scene", bytearray(media.synth_video_scenes(8, (5, 4, 3)))),
-            ("one-scene", bytearray(media.synth_video_scenes(9, (8,)))),
-        ]
-        df = spark.createDataFrame(rows, "video_id string, bytes binary")
-        frames = df.mapInPandas(media.frame_sample_kernel(1), media.FRAMES_SCHEMA)
-        out = media.shot_boundaries(frames, threshold=12).collect()
-        cuts = {
-            vid: sorted(r["frame_idx"] for r in out if r["video_id"] == vid and r["is_boundary"])
-            for vid in ("two-scene", "three-scene", "one-scene")
-        }
-        assert cuts == {"two-scene": [6], "three-scene": [5, 9], "one-scene": []}
-        firsts = [r for r in out if r["frame_idx"] == 0]
-        assert all(r["hamming_prev"] == -1 and not r["is_boundary"] for r in firsts)
-
-
-class TestVideoNeardup:
-    """functions/media.video_keyframes / video_neardup_pairs — the
-    hamming boundary and containment math on hand-built frame tables
-    (no decode: the pipeline takes the frames table directly)."""
-
-    def _frames(self, spark, rows):
-        return spark.createDataFrame(
-            [(v, i, bytearray(b""), p) for v, i, p in rows],
-            "video_id string, frame_idx int, frame_bytes binary, phash long",
-        )
-
-    def test_keyframes_are_shot_firsts(self, spark):
-        from amazonwebcrawler_spark.functions.media import video_keyframes
-
-        # one video: frames 0,1 same shot; frame 2 jumps 20 bits
-        rows = [("v", 0, 0), ("v", 1, 1), ("v", 2, (1 << 20) - 1)]
-        kf = sorted(
-            (r["frame_idx"], r["phash"])
-            for r in video_keyframes(self._frames(spark, rows), threshold=12).collect()
-        )
-        assert kf == [(0, 0), (2, (1 << 20) - 1)]
-
-    def test_hamming_boundary_and_containment(self, spark):
-        from amazonwebcrawler_spark.functions.media import video_neardup_pairs
-
-        # a: keyframes {0, X}; b: {2-bit-off 0, far}; c: {3-bit-off 0}
-        X = 0x7FFF000000000000
-        far = 0x0F0F0F0F0F0F0F0F
-        rows = [("a", 0, 0), ("a", 5, X), ("b", 0, 3), ("b", 5, far), ("c", 0, 7)]
-        out = {
-            (r["video_a"], r["video_b"]): (r["n_matched"], r["containment_milli"], r["is_dup"])
-            for r in video_neardup_pairs(
-                self._frames(spark, rows), threshold=12, max_hamming=2
-            ).collect()
-        }
-        assert out[("a", "b")] == (1, 500, False)  # 1 of 2 keyframes matched
-        assert out[("b", "a")] == (1, 500, False)
-        assert ("a", "c") not in out and ("c", "a") not in out  # 3 bits > t
-
-
-class TestKeyframeSelect:
-    """functions/media.keyframe_select + frame_quality_kernel — sharpest-
-    frame-per-shot argmax on hand-built quality tables (shot math, ties,
-    NULL quarantine) and the fused kernel's corrupt/tiny-frame paths."""
-
-    def _fq(self, spark, rows):
-        return spark.createDataFrame(
-            rows, "video_id string, frame_idx int, phash long, lap_var long"
-        )
-
-    def test_sharpest_per_shot_with_ties_and_nulls(self, spark):
-        from amazonwebcrawler_spark.functions.media import keyframe_select
-
-        far = (1 << 20) - 1  # 20 bits from 0 → cut at threshold 12
-        rows = [
-            # shot 0: max lap_var at frame 1; tie (7) broken to earlier idx
-            ("v", 0, 0, 7), ("v", 1, 1, 9), ("v", 2, 0, 7),
-            # shot 1: NULL ranks below 0; winner is the lap_var=0 frame
-            ("v", 3, far, None), ("v", 4, far ^ 1, 0),
-            # all-NULL video: earliest frame wins, lap_var stays NULL
-            ("w", 0, 0, None), ("w", 1, 1, None),
-        ]
-        out = {
-            (r["video_id"], r["shot_id"]): (r["n_frames"], r["frame_idx"], r["lap_var"])
-            for r in keyframe_select(self._fq(spark, rows), threshold=12).collect()
-        }
-        assert out == {
-            ("v", 0): (3, 1, 9),
-            ("v", 1): (2, 4, 0),
-            ("w", 0): (2, 0, None),
-        }
-
-    def test_tie_breaks_to_earlier_frame(self, spark):
-        from amazonwebcrawler_spark.functions.media import keyframe_select
-
-        rows = [("v", 0, 0, 5), ("v", 1, 0, 5), ("v", 2, 0, 5)]
-        [r] = keyframe_select(self._fq(spark, rows), threshold=12).collect()
-        assert (r["shot_id"], r["frame_idx"], r["n_frames"]) == (0, 0, 3)
-
-    def test_kernel_corrupt_and_tiny_frames(self, spark):
-        from amazonwebcrawler_spark.functions import media
-
-        tiny = np.full((2, 2, 3), 100, np.uint8)  # no 3×3 interior → NULL
-        rows = [
-            ("ok", bytearray(media.synth_video(3, n_frames=4))),
-            ("tiny", bytearray(media.encode_video([tiny, tiny]))),
-            ("corrupt", bytearray(b"NOTAVIDEO")),
-        ]
-        df = spark.createDataFrame(rows, "video_id string, bytes binary")
-        out = df.repartition(2).mapInPandas(
-            media.frame_quality_kernel(1), media.FRAME_QUALITY_SCHEMA
-        ).collect()
-        by_vid = {}
-        for r in out:
-            by_vid.setdefault(r["video_id"], []).append(r)
-        assert "corrupt" not in by_vid  # undecodable → zero rows
-        assert len(by_vid["ok"]) == 4
-        assert all(r["lap_var"] is not None for r in by_vid["ok"])
-        assert [r["lap_var"] for r in by_vid["tiny"]] == [None, None]
-
-
-class TestAudioGate:
-    """functions/media.audio_gate_kernel + audio_gate — run arithmetic,
-    threshold boundaries, empty/corrupt paths."""
-
-    def test_longest_run(self):
-        from amazonwebcrawler_spark.functions.media import _longest_run
-
-        assert _longest_run(np.array([], dtype=bool)) == 0
-        assert _longest_run(np.array([False, False])) == 0
-        assert _longest_run(np.array([True, True, False, True])) == 2
-        assert _longest_run(np.array([True] * 5)) == 5
-
-    def test_verdicts_and_quarantine(self, spark):
-        from amazonwebcrawler_spark.functions import media
-
-        t = np.arange(16000)
-        sine = np.sin(2 * np.pi * 220 * t / 16000)
-
-        def pcm(x):
-            return bytearray(
-                media.encode_audio((np.clip(x, -1, 1) * 32767).astype(np.int16))
-            )
-
-        dropout = 0.5 * sine.copy()
-        dropout[0:8000] = 0.0  # run at the START — boundary handling
-        rows = [
-            ("clean", pcm(0.5 * sine)),
-            ("clipped", pcm(3.0 * sine)),
-            ("dropout", pcm(dropout)),
-            ("empty", bytearray(media.encode_audio(np.array([], np.int16)))),
-            ("corrupt", bytearray(b"OGGjunk")),
-        ]
-        df = spark.createDataFrame(rows, "audio_id string, bytes binary")
-        stats = df.repartition(2).mapInPandas(
-            media.audio_gate_kernel(), media.AUDIO_GATE_SCHEMA
-        )
-        out = {r["audio_id"]: r for r in media.audio_gate(stats).collect()}
-        assert "corrupt" not in out and len(out) == 4
-        assert out["clean"]["keep"] and not out["clean"]["is_clipped"]
-        assert out["clipped"]["is_clipped"] and not out["clipped"]["keep"]
-        assert out["dropout"]["has_dropout"] and out["dropout"]["longest_silence_ms"] >= 500
-        assert out["empty"]["is_silent"] and out["empty"]["duration_us"] == 0
-
-
-class TestFreezeDetect:
-    """functions/media.freeze_detect — island arithmetic on hand-built
-    frame tables and the planted world's verdicts."""
-
-    def test_island_math(self, spark):
-        from amazonwebcrawler_spark.functions.media import freeze_detect
-
-        rows = [
-            # healthy: 1,2,3 distinct
-            ("ok", 0, 1), ("ok", 1, 2), ("ok", 2, 3),
-            # freeze at start, run of 3 at min_run=3
-            ("start", 0, 9), ("start", 1, 9), ("start", 2, 9), ("start", 3, 1),
-            # two separate runs of 2 — longest is 2, not 4
-            ("split", 0, 5), ("split", 1, 5), ("split", 2, 6), ("split", 3, 7),
-            ("split", 4, 7),
-            ("single", 0, 42),
-        ]
-        df = spark.createDataFrame(rows, "video_id string, frame_idx int, phash long")
-        out = {r["video_id"]: r for r in freeze_detect(df, min_run=3).collect()}
-        assert (out["ok"]["n_frozen"], out["ok"]["longest_run"], out["ok"]["is_frozen"]) == (0, 1, False)
-        assert (out["start"]["n_frozen"], out["start"]["longest_run"], out["start"]["is_frozen"]) == (2, 3, True)
-        assert (out["split"]["n_frozen"], out["split"]["longest_run"], out["split"]["is_frozen"]) == (2, 2, False)
-        assert out["split"]["frozen_ppm"] == 400000
-        assert (out["single"]["n_frames"], out["single"]["longest_run"]) == (1, 1)
-
-    def test_planted_world(self, spark):
-        import __spark_entry__ as entrymod
-        from amazonwebcrawler_spark.functions.media import freeze_detect
-
-        df = spark.createDataFrame(
-            entrymod._freeze_world_rows(), "video_id string, frame_idx int, phash long"
-        )
-        out = {r["video_id"]: r for r in freeze_detect(df, min_run=8).collect()}
-        assert all(not out[f"fv-{v}"]["is_frozen"] for v in range(8))
-        st = out["fv-stutter"]
-        assert (st["frozen_ppm"], st["longest_run"], st["is_frozen"]) == (500000, 2, False)
-        fm = out["fv-frozen-mid"]
-        assert (fm["longest_run"], fm["n_frozen"], fm["is_frozen"]) == (16, 15, True)
-        assert out["fv-slate"]["frozen_ppm"] == 916666 and out["fv-slate"]["is_frozen"]
-        assert not out["fv-single"]["is_frozen"]

@@ -21,25 +21,27 @@ FLAGSHIP_SLOTS = ("crawl_rank_wave", "robots_filter")
 #: key a slot would evict an equally-never-checked key — zero-sum for
 #: external coverage and churn for the documented layout. These stay at
 #: position 51+ on the local gate + pytest. Deleting the LM-training and
-#: audio/video queries freed five window slots; the five post-freeze keys
-#: that slid into them (scc, ann_recall, triangle_count, label_prop,
-#: trust_rank) left this list, since a window slot is theirs now.
+#: audio/video queries freed four window slots; the four post-freeze keys
+#: that slid into them (scc, ann_recall, epoch_shuffle, triangle_count)
+#: left this list, since a window slot is theirs now.
 POST_FREEZE = (
-    "bm25_rank", "heavy_hitters", "kcore", "random_walks", "crop_dedup",
-    "opic_priority", "containment_dedup", "border_crop", "postings_build",
-    "flip_dedup", "ann_pq", "compaction_plan", "phrase_match", "c4_clean",
-    "gram_novelty", "mirror_detect", "blur_detect", "channel_stats",
-    "lsh_eval", "novelty_budget", "smart_crop", "shard_rebalance",
-    "caption_filter", "aimd_rate", "contam_spans", "hist_quantiles",
-    "ndcg_eval", "color_stats", "sitemap_coverage", "hll_distinct",
-    "hyperball", "cdc_chunks", "frontier_size", "resolve_refs",
-    "ucb_schedule", "percent_norm", "link_audit", "politeness_audit",
-    "mmr_topk", "rrf_fusion", "mojibake_detect", "tile_detect",
-    "upscale_detect", "caption_conflicts", "url_spam",
-    "dedup_cluster_stats", "host_fairness", "phash_bit_stats", "wds_shards",
-    "boilerplate_strip", "psi_drift", "robots_delta", "hard_negatives",
-    "drain_plan", "hamming_certify", "image_probe", "drop_reasons",
-    "bloom_plan", "data_card",
+    "label_prop", "trust_rank", "bm25_rank", "heavy_hitters", "kcore",
+    "random_walks", "crop_dedup", "opic_priority", "containment_dedup",
+    "border_crop", "postings_build", "flip_dedup", "ann_pq",
+    "compaction_plan", "phrase_match", "c4_clean", "gram_novelty",
+    "mirror_detect", "blur_detect", "channel_stats", "lsh_eval",
+    "novelty_budget", "smart_crop", "shard_rebalance", "caption_filter",
+    "aimd_rate", "contam_spans", "hist_quantiles", "ndcg_eval",
+    "color_stats", "sitemap_coverage", "hll_distinct", "hyperball",
+    "cdc_chunks", "frontier_size", "resolve_refs", "isotonic_calib",
+    "leakage_split", "ucb_schedule", "percent_norm", "link_audit",
+    "politeness_audit", "mmr_topk", "temperature_mix", "rrf_fusion",
+    "ece_calib", "mojibake_detect", "tile_detect", "upscale_detect",
+    "caption_conflicts", "url_spam", "dedup_cluster_stats", "host_fairness",
+    "phash_bit_stats", "wds_shards", "boilerplate_strip", "psi_drift",
+    "robots_delta", "mix_plan", "hard_negatives", "drain_plan",
+    "hamming_certify", "image_probe", "drop_reasons", "bloom_plan",
+    "data_card",
 )
 
 
