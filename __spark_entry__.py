@@ -881,21 +881,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "doc_id", "lang", "sample_rank"
         )
 
-    # ----------------------------------------------------- epoch shuffle order
-    def q_epoch_shuffle(spark, sf):
-        """Deterministic per-epoch global shuffle manifest
-        (operators/corpus.epoch_shuffle): the training-loader permutation
-        as a pure function of (seed, doc_id) — md5 lexicographic order
-        realized via key-prefix shards + per-shard windows + broadcast
-        offsets, never a global sort. The twin re-derives the SAME key,
-        shard arithmetic and both positions with one global row_number
-        (affordable at oracle scale; the operator exists precisely so the
-        engine never runs that window)."""
-        from amazonwebcrawler_spark.operators import corpus
-
-        d = _t(spark, sf, "documents")
-        return corpus.epoch_shuffle(d, "doc_id", seed=7, n_shards=32)
-
     # ----------------------------------------------------- corpus shape rollup
     def q_corpus_stats(spark, sf):
         """Per-language corpus shape (docs, total tokens, mean + exact
@@ -1497,22 +1482,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .select("day", "event_type", "n", "rnk", "delta")
         )
 
-    # ----------------------------------------------------- mixture resampling
-    def q_mixture_sample(spark, sf):
-        """Training-mixture resampling (operators/corpus.mixture_sample):
-        per-source sampling weights à la Pile/RedPajama — rate<1
-        downsamples via the md5 hash gate, rate>1 duplicates with a
-        fractional extra copy; broadcast weight table + explode, zero
-        corpus shuffles. Rates are binary-exact so the twin reproduces the
-        truncation arithmetic bit-for-bit."""
-        from amazonwebcrawler_spark.operators.corpus import mixture_sample
-
-        d = _t(spark, sf, "documents")
-        weights = {"src0": 2.5, "src1": 1.5, "src2": 1.0, "src3": 0.5, "src4": 0.25}
-        return mixture_sample(d, "source", "doc_id", weights, salt="mix").select(
-            "doc_id", "source", "copy"
-        )
-
     # ----------------------------------------------------- contrastive negatives
     def q_negative_pairs(spark, sf):
         """Deterministic in-batch negative sampling for contrastive
@@ -1817,27 +1786,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return robots_match(urls, rules)
 
-    def q_adaptive_backoff(spark, sf):
-        """Adaptive per-host fetch backoff (operators/politeness.
-        adaptive_backoff): next-fetch delay = base after a success, base ·
-        2^min(consecutive_errors, 6) after an error — gaps-and-islands
-        over each host's outcome timeline, both windows HOST-partitioned
-        and ordered by (ts, event_id) so equal timestamps can't diverge
-        across engines. Exact integer arithmetic (shiftleft); the twin
-        mirrors both windows."""
-        from amazonwebcrawler_spark.operators.politeness import adaptive_backoff
-
-        e = _t(spark, sf, "events")
-        ev = e.select(
-            "event_id",
-            "ts",
-            F.concat(F.lit("host-"), (F.col("user_id") % 50).cast("string")).alias("host"),
-            (F.col("event_type") != "error").cast("int").alias("ok"),
-        )
-        return adaptive_backoff(ev).select(
-            "event_id", "host", "ok", "consec_errors", "next_delay_ms"
-        )
-
     def q_param_policy(spark, sf):
         """DUST-style URL-parameter significance mining (functions/urls.
         param_policy, Bar-Yossef et al. WWW 2007): learn per-(host,param)
@@ -1991,31 +1939,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             canonicalize_url(F.col("e.loc")).alias("canonical_url"),
             F.when(lm == "", F.lit(None).cast("string")).otherwise(lm).alias("lastmod"),
             ((lm == "") | (lm >= "1995-01-01")).alias("needs_fetch"),
-        )
-
-    def q_recrawl_priority(spark, sf):
-        """Change-rate-driven revisit scheduling (operators/politeness.
-        recrawl_priority, Cho & Garcia-Molina 2003): per-URL change rate
-        from a fetch-observation log → proportional revisit interval with
-        a politeness floor → per-shard priority order. ONE
-        map-side-combinable aggregate + one SHARD-partitioned window
-        (never global); exact integer micro arithmetic end to end.
-        Observations derive from events on both engine sides (change =
-        purchase/signup), so rate, interval, and priority all
-        value-check."""
-        from amazonwebcrawler_spark.operators.politeness import recrawl_priority
-
-        e = _t(spark, sf, "events")
-        obs = e.select(
-            F.col("user_id").alias("url_id"),
-            "ts",
-            F.col("event_type").isin("purchase", "signup").alias("changed"),
-        )
-        out = recrawl_priority(obs)
-        return out.select(
-            "url_id", "n_fetches", "n_changes", "change_rate_micro",
-            "revisit_interval_s", "shard", "priority",
-            F.date_format("last_fetch_ts", "yyyy-MM-dd HH:mm:ss").alias("last_fetch"),
         )
 
     def q_image_patches(spark, sf):
@@ -2667,23 +2590,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "digest", "prev_digest", "is_novel",
         )
 
-    def q_budget_allocate(spark, sf):
-        """Largest-remainder (Hamilton) crawl-budget apportionment
-        (operators/politeness.allocate_budget): a 10 000-fetch epoch
-        budget split across domains proportional to frontier demand —
-        floor quotas + one extra for the largest remainders, ties to
-        domain ascending, Σquota == budget by construction. The global
-        remainder rank is computed WITHOUT a single-partition window
-        (value-range shards + per-shard totals, the
-        assign_discovery_seq idiom); the twin is a plain SQL window rank."""
-        from amazonwebcrawler_spark.operators.politeness import allocate_budget
-
-        o = _t(spark, sf, "orders")
-        demand = o.groupBy(
-            F.concat(F.lit("d"), (F.col("o_orderkey") % 37).cast("string")).alias("domain")
-        ).agg(F.count("*").alias("demand"))
-        return allocate_budget(demand, total_budget=10_000)
-
     # ----------------------------------------------------- C4 line cleaning
     def q_c4_clean(spark, sf):
         """C4-style line-level boilerplate cleaning (functions/text.
@@ -2761,36 +2667,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "fp",
             min_shared=3,
             min_containment_micro=500_000,
-        )
-
-    # ----------------------------------------------------- novelty-steered budget
-    def q_novelty_budget(spark, sf):
-        """Focused-crawl composition (Chakrabarti et al. 1999 shape):
-        next wave's fetch budget apportioned by CONTENT NOVELTY per host —
-        corpus.gram_novelty's per-doc first-occurrence counts roll up to a
-        host demand signal, and politeness.allocate_budget Hamilton-splits
-        the global budget over it. Hosts whose pages stopped contributing
-        new n-grams (mirrors, templates, crawler traps) decay to zero
-        demand and drop out of the next wave's allocation entirely — the
-        adaptive answer to 'which of 10^7 hosts deserve the next 10^4
-        fetches'. Proves the two operators COMPOSE; the twin recomposes
-        both CTE chains."""
-        from amazonwebcrawler_spark.operators.corpus import gram_novelty
-        from amazonwebcrawler_spark.operators.politeness import allocate_budget
-
-        d = _t(spark, sf, "documents")
-        nov = gram_novelty(d, "text", "doc_id", n=3)
-        hosts = d.select(
-            "doc_id",
-            F.concat(F.lit("h"), (F.col("doc_id") % 16).cast("string")).alias("host"),
-        )
-        demand = (
-            nov.join(hosts, "doc_id")
-            .groupBy("host")
-            .agg(F.sum("n_new_grams").alias("demand"))
-        )
-        return allocate_budget(
-            demand, total_budget=10_000, key_col="host", demand_col="demand"
         )
 
     # ----------------------------------------------------- LSH banding eval
@@ -3289,25 +3165,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         d = _t(spark, sf, "documents")
         return cdc_chunks(d, "text", "doc_id", window=8, modulus=16)
 
-    def q_frontier_size(spark, sf):
-        """Capture-recapture frontier sizing (operators/politeness.
-        frontier_size_chao1): per-host Chao1 unseen-URL estimate +
-        Good–Turing coverage from a discovery log — the data-driven
-        "is this host exhausted?" signal the reference's fixed page budget
-        (8 result pages, getRank.py:472) cannot express. Captures derive
-        from events
-        (user_id = URL key, host = user_id mod 8) identically on both
-        engine sides; every output column is exact integer arithmetic
-        (floor-div DIV), so the row is driver-hash-stable."""
-        from amazonwebcrawler_spark.operators.politeness import frontier_size_chao1
-
-        e = _t(spark, sf, "events")
-        caps = e.select(
-            F.concat(F.lit("h"), (F.col("user_id") % 8).cast("string")).alias("host"),
-            F.col("user_id").alias("url"),
-        )
-        return frontier_size_chao1(caps)
-
     def q_resolve_refs(spark, sf):
         """Full RFC 3986 reference resolution (functions/urls.
         resolve_reference): ../-relative, ./-relative, query-only,
@@ -3342,66 +3199,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return o.select(
             "o_orderkey", resolve_reference(href, base).alias("resolved_url")
         )
-
-    def q_isotonic_calib(spark, sf):
-        """Isotonic (PAV) score calibration (operators/corpus.
-        isotonic_calibrate): the minimax form fitted(i) = max_{j<=i}
-        min_{k>=i} mean(label | [j,k]) over a 16-cell bucket table —
-        classifier scores become monotone keep-PROBABILITIES. Scores and
-        labels derive from documents (md5 score, doc_id-mod label with
-        P(label|s) ~ s/100) identically on both engines; interval means
-        are integer micro DIV, so the whole fit is exact integer
-        arithmetic — driver-hash-stable and monotone by theorem."""
-        from amazonwebcrawler_spark.operators.corpus import isotonic_calibrate
-
-        d = _t(spark, sf, "documents")
-        h = (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-            .cast("long")
-            % 100
-        )
-        scored = d.select(
-            h.alias("score"), (F.col("doc_id") % 100 < h).cast("int").alias("label")
-        )
-        return isotonic_calibrate(scored, "score", "label", n_buckets=16)
-
-    def q_leakage_split(spark, sf):
-        """Leakage-safe train/val/test split (operators/corpus.
-        leakage_safe_split): the split UNIT is the near-dup COMPONENT
-        (min-label CC over the same MinHash pairs as dedup_groups;
-        unpaired docs are singleton groups), so no near-dup pair can
-        cross a split boundary — by construction, not by audit. Group →
-        split is md5 mod 100 (98/1/1), exact integers + strings only;
-        the twin recomputes the closure as a recursive CTE and the same
-        md5 cut."""
-        from amazonwebcrawler_spark.operators.corpus import leakage_safe_split
-
-        d = _t(spark, sf, "documents")
-        pairs = dedup.minhash_lsh_pairs(
-            d, "text", "doc_id", k=16, n_bands=4, threshold=0.5, shingle_n=3, max_bucket=200
-        )
-        return leakage_safe_split(d, pairs)
-
-    def q_ucb_schedule(spark, sf):
-        """UCB1 explore/exploit host scheduling (operators/politeness.
-        ucb_host_schedule): mean new-URL yield + sqrt(2 ln N / n)
-        confidence radius per host — under-probed hosts win budget until
-        their estimate tightens; the principled form of hand-tuned
-        minimum-probe heuristics, beside frontier_size's exhaustion
-        estimate. Wave log derives from events identically on both
-        engines; mean is exact integer DIV, the radius micro-rounds the
-        one irrational term under the repo's ln discipline."""
-        from amazonwebcrawler_spark.operators.politeness import ucb_host_schedule
-
-        e = _t(spark, sf, "events")
-        log = e.select(
-            F.concat(F.lit("h"), (F.col("user_id") % 12).cast("string")).alias("host"),
-            F.when(F.col("event_type") == "purchase", F.lit(3))
-            .when(F.col("event_type") == "signup", F.lit(2))
-            .otherwise(F.lit(1))
-            .alias("reward"),
-        )
-        return ucb_host_schedule(log)
 
     def q_percent_norm(spark, sf):
         """RFC 3986 §6.2.2 percent-encoding normalization (functions/
@@ -3491,17 +3288,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         qs = e.filter(F.col("vec_id") < 4)
         return mmr_topk(e, qs, "vec_id", "embedding", k=4, shortlist=8)
 
-    def q_temperature_mix(spark, sf):
-        """Temperature rebalancing (operators/corpus.temperature_weights):
-        q_l ∝ p_l^0.7 over document languages — the multilingual
-        head-vs-tail sampling rule; boost_milli feeds weighted_sample /
-        the epoch mixture. p is exact integer DIV; q/boost micro-round
-        the one pow term."""
-        from amazonwebcrawler_spark.operators.corpus import temperature_weights
-
-        d = _t(spark, sf, "documents")
-        return temperature_weights(d, "lang", alpha_milli=700)
-
     def q_rrf_fusion(spark, sf):
         """Hybrid-retrieval rank fusion (operators/similarity.rrf_fusion,
         Cormack et al. SIGIR'09): RRF = Σ 1000000 DIV (60 + rank) over
@@ -3537,28 +3323,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             tall = part if tall is None else tall.unionByName(part)
         return rrf_fusion(tall, k0=60, per_ranker=40, topk=10)
-
-    def q_ece_calib(spark, sf):
-        """Expected Calibration Error (operators/corpus.ece_calibration,
-        Naeini et al. AAAI'15): reliability diagram + scalar ECE for the
-        same md5-score / doc_id-mod-label world as isotonic_calib (bin
-        centers p_milli = 10·s + 5). Per-bin |acc−conf| numerators are
-        exact BIGINTs and the N-weighted sum telescopes to ONE integer
-        division — isotonic FIXES miscalibration, this MEASURES it, and
-        the pair shares one fixture so the two stay comparable."""
-        from amazonwebcrawler_spark.operators.corpus import ece_calibration
-
-        d = _t(spark, sf, "documents")
-        h = (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-            .cast("long")
-            % 100
-        )
-        scored = d.select(
-            (h * 10 + 5).alias("p_milli"),
-            (F.col("doc_id") % 100 < h).cast("int").alias("label"),
-        )
-        return ece_calibration(scored, "p_milli", "label", n_bins=10)
 
     def q_mojibake_detect(spark, sf):
         """Encoding-corruption detection (functions/text.mojibake_stats):
@@ -3908,33 +3672,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return robots_delta(urls, old_rules, new_rules)
 
-    def q_mix_plan(spark, sf):
-        """Token-budget mixture plan (operators/corpus.mixture_plan):
-        published mixture weights + per-source inventories → per-source
-        target tokens, sampling rate and EPOCH count — the numbers a
-        training run is configured with, and the oversampling flag a
-        data card must disclose (small high-weight sources repeating
-        many epochs amplify memorization). Weights renormalize against
-        their own sum (the spec here sums to 997 milli on purpose);
-        all exact integer DIV. Inventories = per-language char counts
-        over documents (one map-side agg); the plan itself runs on the
-        dozens-row strata table with a 1-row broadcast weight sum.
-        Twin replays the arithmetic in SQL — sf-dependent."""
-        from amazonwebcrawler_spark.operators.corpus import mixture_plan
-
-        d = _t(spark, sf, "documents")
-        strata = d.groupBy(F.col("lang").alias("source")).agg(
-            F.sum("n_chars").alias("n_tokens")
-        ).withColumn(
-            "weight_milli",
-            F.when(F.col("source") == "en", 600)
-            .when(F.col("source") == "zh", 120)
-            .when(F.col("source") == "es", 100)
-            .when(F.col("source") == "de", 90)
-            .otherwise(87),
-        )
-        return mixture_plan(strata, total_tokens=150_000)
-
     def q_hard_negatives(spark, sf):
         """ANN-based hard-negative mining (operators/similarity.
         hard_negatives): per anchor, the nearest vectors NOT in its
@@ -4083,32 +3820,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return dedup.hamming_certify(base.unionByName(comp), "id", "fp", max_hamming=4)
 
-    def q_drain_plan(spark, sf):
-        """Frontier drain forecast (operators/politeness.drain_plan):
-        per host ⌈queued/rate⌉ waves under the politeness budget, with
-        the max-wave bottleneck hosts flagged — the number that
-        justifies raising a budget, splitting a shard or truncating a
-        queue BEFORE the crawl runs. One frontier count agg + broadcast
-        rate table + 1-row broadcast max. World: the three-tier skewed
-        host mix with a rate table that covers only some hosts
-        (default-rate path exercised); twin replays count, ceil-DIV
-        and the max flag in SQL — sf-dependent."""
-        from amazonwebcrawler_spark.operators.politeness import drain_plan
-
-        o = _t(spark, sf, "orders")
-        k = F.col("o_orderkey")
-        host = (
-            F.when(k % 5 < 3, F.concat(F.lit("h"), (k % 20).cast("string")))
-            .when(k % 5 == 3, F.concat(F.lit("h"), (k % 400 + 100).cast("string")))
-            .otherwise(F.concat(F.lit("h"), (k % 4000 + 1000).cast("string")))
-        )
-        frontier = o.select(host.alias("host"))
-        rates = spark.createDataFrame(
-            [(f"h{i}", 64 + 32 * (i % 3)) for i in range(20)],
-            "host string, tokens_per_wave long",
-        )
-        return drain_plan(frontier, rates)
-
     def _warmed(fn):
         def wrapper(spark, sf):
             _ensure_warm(spark)
@@ -4134,12 +3845,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "template_detect": q_template_detect,
         "canonical_group": q_canonical_group,
         "capture_novelty": q_capture_novelty,
-        "budget_allocate": q_budget_allocate,
         "gopher_signals": q_gopher_signals,
         "selfdedup_clean": q_selfdedup_clean,
         "link_extract": q_link_extract,
         "sitemap_extract": q_sitemap_extract,
-        "recrawl_priority": q_recrawl_priority,
         "image_patches": q_image_patches,
         "crawl_shard_sets": q_crawl_shard_sets,
         "host_rank": q_host_rank,
@@ -4150,7 +3859,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rollup_metrics": q_rollup_metrics,
         "zorder_layout": q_zorder_layout,
         "rank_delta": q_rank_delta,
-        "mixture_sample": q_mixture_sample,
         "negative_pairs": q_negative_pairs,
         "snapshot_diff": q_snapshot_diff,
         "sketch_distinct": q_sketch_distinct,
@@ -4159,12 +3867,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ema_score": q_ema_score,
         "embed_quantize": q_embed_quantize,
         "weighted_sample": q_weighted_sample,
-        # positions 35-44: the session-6/7/8 operators — never driver-
+        # positions 32-40: the round-5 operators the external gate never
         # checked, so they take the window slots of the r3-green media/
         # report rows.
         "substring_dedup": q_substring_dedup,
         "robots_rfc": q_robots_rfc,
-        "adaptive_backoff": q_adaptive_backoff,
         "pair_dedup": q_pair_dedup,
         "param_policy": q_param_policy,
         "param_apply": q_param_apply,
@@ -4172,28 +3879,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_stats": q_corpus_stats,
         "image_quality": q_image_quality,
         "semantic_dedup": q_semantic_dedup,
-        # positions 45-46: VERDICT r4 asked for the flagship + crawl-core
+        # positions 41-42: VERDICT r4 asked for the flagship + crawl-core
         # rows to get an r5 driver record (r3-green, absent from r4's
         # window); dead_letter yields its slot to a never-checked key.
         "crawl_rank_wave": q_crawl_rank_wave,
         "robots_filter": q_robots_filter,
-        # positions 47-50: the first four post-freeze operators, never
-        # driver-checked. They slid into the window when the LM-training
-        # and audio/video queries were deleted and freed four slots
-        # (tests/test_registry.py POST_FREEZE no longer lists them).
+        # positions 43-50: the first eight post-freeze operators, never
+        # checked by the external gate. They slid into the window as
+        # deleted queries freed slots: scc, ann_recall and triangle_count
+        # when the LM-training and audio/video families went, the next
+        # five when the corpus-mixing/calibration and scheduling-audit
+        # queries went (tests/test_registry.py POST_FREEZE no longer
+        # lists them).
         "scc": q_scc,
         "ann_recall": q_ann_recall,
-        "epoch_shuffle": q_epoch_shuffle,
         "triangle_count": q_triangle_count,
-        # --- position 51+: no driver row this round. These keys are
-        # either driver-green in r3 (media/report rows) or r4 (the bulk
-        # family), or post-freeze additions (tests/test_registry.py
-        # POST_FREEZE); all stay covered by the local gate + pytest.
         "label_prop": q_label_prop,
         "trust_rank": q_trust_rank,
         "bm25_rank": q_bm25_rank,
         "heavy_hitters": q_heavy_hitters,
         "kcore": q_kcore,
+        # --- position 51+: no external-gate row this round. These keys
+        # were either green there in r3 (media/report rows) or r4 (the
+        # bulk family), or are post-freeze additions (tests/test_registry.py
+        # POST_FREEZE); all stay covered by the local gate + pytest.
         "random_walks": q_random_walks,
         "crop_dedup": q_crop_dedup,
         "opic_priority": q_opic,
@@ -4210,7 +3919,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "blur_detect": q_blur_detect,
         "channel_stats": q_channel_stats,
         "lsh_eval": q_lsh_eval,
-        "novelty_budget": q_novelty_budget,
         "smart_crop": q_smart_crop,
         "shard_rebalance": q_shard_rebalance,
         "caption_filter": q_caption_filter,
@@ -4276,18 +3984,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hll_distinct": q_hll_distinct,
         "hyperball": q_hyperball,
         "cdc_chunks": q_cdc_chunks,
-        "frontier_size": q_frontier_size,
         "resolve_refs": q_resolve_refs,
-        "isotonic_calib": q_isotonic_calib,
-        "leakage_split": q_leakage_split,
-        "ucb_schedule": q_ucb_schedule,
         "percent_norm": q_percent_norm,
         "link_audit": q_link_audit,
         "politeness_audit": q_politeness_audit,
         "mmr_topk": q_mmr_topk,
-        "temperature_mix": q_temperature_mix,
         "rrf_fusion": q_rrf_fusion,
-        "ece_calib": q_ece_calib,
         "mojibake_detect": q_mojibake_detect,
         "tile_detect": q_tile_detect,
         "upscale_detect": q_upscale_detect,
@@ -4300,9 +4002,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "boilerplate_strip": q_boilerplate_strip,
         "psi_drift": q_psi_drift,
         "robots_delta": q_robots_delta,
-        "mix_plan": q_mix_plan,
         "hard_negatives": q_hard_negatives,
-        "drain_plan": q_drain_plan,
         "hamming_certify": q_hamming_certify,
         "image_probe": q_image_probe,
         "drop_reasons": q_drop_reasons,
@@ -5007,32 +4707,6 @@ SELECT t.doc_id,
   md5(COALESCE(r.clean_text, '')) AS clean_md5
 FROM tok t LEFT JOIN reb r USING (doc_id)
 """,
-        "adaptive_backoff": r"""
-WITH ev AS (
-  SELECT event_id, ts, 'host-' || (user_id % 50)::VARCHAR AS host,
-         CASE WHEN event_type <> 'error' THEN 1 ELSE 0 END AS ok
-  FROM events
-),
-r AS (
-  SELECT *, SUM(ok) OVER (PARTITION BY host ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_ok
-  FROM ev
-),
-g AS (
-  SELECT *, row_number() OVER (PARTITION BY host, cum_ok ORDER BY ts, event_id) AS rn
-  FROM r
-),
-c AS (
-  SELECT event_id, host, ok,
-    CASE WHEN ok = 1 THEN 0
-         ELSE rn - CASE WHEN cum_ok > 0 THEN 1 ELSE 0 END END AS consec
-  FROM g
-)
-SELECT event_id, host, ok, CAST(consec AS INT) AS consec_errors,
-  CAST(CASE WHEN ok = 1 THEN 1000
-       ELSE (CAST(1000 AS BIGINT) << least(consec, 6)) END AS BIGINT) AS next_delay_ms
-FROM c
-""",
         "scc": scc_oracle_sql(
             "SELECT o_orderkey % 11 AS src, (o_orderkey % 11 + 1) % 11 AS dst FROM orders "
             "UNION ALL SELECT o_orderkey % 11, (o_orderkey % 11 + 3) % 11 FROM orders "
@@ -5417,30 +5091,6 @@ SELECT url_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s, digest,
    OR digest <> lag(digest) OVER (PARTITION BY url_id ORDER BY ts, event_id)) AS is_novel
 FROM caps
 """,
-        "budget_allocate": """
-WITH dm AS (
-  SELECT 'd' || (o_orderkey % 37)::VARCHAR AS domain, COUNT(*) AS demand
-  FROM orders GROUP BY 1
-),
-d AS (SELECT domain, demand FROM dm WHERE demand > 0),
-tot AS (SELECT SUM(demand) AS dd FROM d),
-b AS (
-  SELECT domain, demand,
-    CAST((demand * 10000) // dd AS BIGINT) AS base_quota,
-    (demand * 10000) % dd AS rem
-  FROM d, tot
-),
-lo AS (SELECT 10000 - SUM(base_quota) AS leftover FROM b),
-r AS (
-  SELECT domain, demand, base_quota,
-    row_number() OVER (ORDER BY rem DESC, domain ASC) AS rk
-  FROM b
-)
-SELECT domain, demand, base_quota,
-  CAST(CASE WHEN rk <= (SELECT leftover FROM lo) THEN 1 ELSE 0 END AS BIGINT) AS extra,
-  base_quota + CAST(CASE WHEN rk <= (SELECT leftover FROM lo) THEN 1 ELSE 0 END AS BIGINT) AS quota
-FROM r
-""",
         "link_extract": r"""
 WITH raw AS (
   SELECT o_orderkey,
@@ -5539,33 +5189,6 @@ SELECT o_orderkey, sitemap_pos,
   CASE WHEN lm = '' THEN NULL ELSE lm END AS lastmod,
   (lm = '' OR lm >= '1995-01-01') AS needs_fetch
 FROM p
-""",
-        "recrawl_priority": """
-WITH obs AS (
-  SELECT user_id AS url_id, ts,
-    event_type IN ('purchase', 'signup') AS changed
-  FROM events
-),
-agg AS (
-  SELECT url_id, COUNT(*) AS n_fetches,
-    CAST(SUM(CASE WHEN changed THEN 1 ELSE 0 END) AS BIGINT) AS n_changes,
-    MAX(ts) AS last_ts
-  FROM obs GROUP BY url_id
-),
-calc AS (
-  SELECT url_id, n_fetches, n_changes,
-    CAST((n_changes * 1000000) // n_fetches AS BIGINT) AS change_rate_micro,
-    CAST(GREATEST(
-      (86400::BIGINT * 1000000) // (1000000 + 3 * ((n_changes * 1000000) // n_fetches)),
-      21600) AS BIGINT) AS revisit_interval_s,
-    CAST(url_id % 16 AS INT) AS shard,
-    strftime(last_ts, '%Y-%m-%d %H:%M:%S') AS last_fetch
-  FROM agg
-)
-SELECT url_id, n_fetches, n_changes, change_rate_micro, revisit_interval_s, shard,
-  row_number() OVER (PARTITION BY shard ORDER BY revisit_interval_s, url_id) AS priority,
-  last_fetch
-FROM calc
 """,
         "rank_encode": """
 SELECT l_orderkey, l_linenumber,
@@ -5977,39 +5600,6 @@ SELECT doc_id, CAST(n_distinct_grams AS BIGINT) AS n_distinct_grams,
   CAST(n_new_grams AS BIGINT) AS n_new_grams,
   CAST((n_new_grams * 1000000) // n_distinct_grams AS BIGINT) AS novelty_micro
 FROM per
-""",
-        "novelty_budget": rf"""
--- novelty rollup per host → Hamilton apportionment (both twins recomposed)
-WITH {shingle_cte},
-firsts AS (SELECT s, MIN(doc_id) AS first_doc FROM sh GROUP BY s),
-per AS (
-  SELECT sh.doc_id,
-    SUM(CASE WHEN sh.doc_id = f.first_doc THEN 1 ELSE 0 END) AS n_new_grams
-  FROM sh JOIN firsts f USING (s) GROUP BY sh.doc_id
-),
-dm AS (
-  SELECT 'h' || (doc_id % 16)::VARCHAR AS domain, SUM(n_new_grams) AS demand
-  FROM per GROUP BY 1
-),
-d AS (SELECT domain, demand FROM dm WHERE demand > 0),
-tot AS (SELECT SUM(demand) AS dd FROM d),
-b AS (
-  SELECT domain, demand,
-    CAST((demand * 10000) // dd AS BIGINT) AS base_quota,
-    (demand * 10000) % dd AS rem
-  FROM d, tot
-),
-lo AS (SELECT 10000 - SUM(base_quota) AS leftover FROM b),
-r AS (
-  SELECT domain, demand, base_quota,
-    row_number() OVER (ORDER BY rem DESC, domain ASC) AS rk
-  FROM b
-)
-SELECT domain, CAST(demand AS BIGINT) AS demand, base_quota,
-  CAST(CASE WHEN rk <= (SELECT leftover FROM lo) THEN 1 ELSE 0 END AS BIGINT) AS extra,
-  base_quota + CAST(CASE WHEN rk <= (SELECT leftover FROM lo) THEN 1 ELSE 0 END AS BIGINT)
-    AS quota
-FROM r
 """,
         "shard_rebalance": rf"""
 -- rendezvous (HRW) assignment replayed per shard list: weight = top 60
@@ -6873,24 +6463,6 @@ SELECT day, event_type, n, rnk,
   rnk - lag(rnk) OVER (PARTITION BY event_type ORDER BY day) AS delta
 FROM r
 """,
-        "mixture_sample": """
-WITH w(source, rate) AS (
-  VALUES ('src0', 2.5), ('src1', 1.5), ('src2', 1.0), ('src3', 0.5), ('src4', 0.25)
-),
-b AS (
-  SELECT d.doc_id, d.source, w.rate,
-    CAST(CAST(('0x' || substr(md5('mix' || d.doc_id::VARCHAR), 1, 8)) AS UBIGINT) % 10000 AS INT) AS bucket
-  FROM documents d JOIN w USING (source)
-),
-n AS (
-  SELECT doc_id, source,
-    CAST(FLOOR(rate) AS INT)
-      + CASE WHEN bucket < CAST(FLOOR((rate % 1.0) * 10000) AS INT) THEN 1 ELSE 0 END AS n_copies
-  FROM b
-)
-SELECT doc_id, source, UNNEST(generate_series(1, n_copies)) AS copy
-FROM n WHERE n_copies > 0
-""",
         "negative_pairs": """
 WITH b AS (
   SELECT doc_id,
@@ -7018,44 +6590,9 @@ FROM r WHERE sample_rank <= 5
 """,
         "ann_lsh": _ann_lsh_sql(),
         "ann_recall": _ann_recall_sql(),
-        "epoch_shuffle": """
-WITH k AS (
-  SELECT doc_id, md5('epoch:7:' || CAST(doc_id AS VARCHAR)) AS key FROM documents
-),
-s AS (
-  SELECT doc_id, key,
-    CAST((CAST(('0x' || substr(key, 1, 8)) AS UBIGINT) * 32) >> 32 AS INT) AS shard
-  FROM k
-)
-SELECT doc_id, shard,
-  CAST(row_number() OVER (PARTITION BY shard ORDER BY key, doc_id) AS BIGINT) AS pos_in_shard,
-  CAST(row_number() OVER (ORDER BY key, doc_id) - 1 AS BIGINT) AS global_pos
-FROM s
-""",
         "hll_distinct": _hll_distinct_sql(),
         "hyperball": _hyperball_sql(),
         "cdc_chunks": _cdc_chunks_sql(),
-        "frontier_size": """
-WITH caps AS (
-  SELECT 'h' || CAST(user_id % 8 AS VARCHAR) AS host, user_id AS url FROM events
-),
-per_url AS (SELECT host, url, count(*) AS k FROM caps GROUP BY host, url),
-agg AS (
-  SELECT host, SUM(k) AS n_captures, COUNT(*) AS s_obs,
-    SUM(CASE WHEN k = 1 THEN 1 ELSE 0 END) AS f1,
-    SUM(CASE WHEN k = 2 THEN 1 ELSE 0 END) AS f2
-  FROM per_url GROUP BY host
-)
-SELECT host,
-  CAST(n_captures AS BIGINT) AS n_captures,
-  CAST(s_obs AS BIGINT) AS s_obs,
-  CAST(f1 AS BIGINT) AS f1,
-  CAST(f2 AS BIGINT) AS f2,
-  CAST(s_obs + (f1 * (f1 - 1)) // (2 * (f2 + 1)) AS BIGINT) AS chao1_est,
-  CAST((f1 * (f1 - 1)) // (2 * (f2 + 1)) AS BIGINT) AS unseen_est,
-  CAST(((n_captures - f1) * 1000000) // n_captures AS BIGINT) AS coverage_micro
-FROM agg
-""",
         "resolve_refs": r"""
 -- RFC 3986 §5.2.2 reference resolution; §5.2.4 as a recursive segment stack
 WITH RECURSIVE pairs AS (
@@ -7144,85 +6681,6 @@ SELECT s2.id AS o_orderkey,
 FROM walk w JOIN segs s2 ON s2.id = w.id AND w.i = len(s2.sg)
 UNION ALL
 SELECT id AS o_orderkey, NULL AS resolved_url FROM tgt WHERE s IS NULL
-""",
-        "isotonic_calib": """
--- PAV via the minimax characterization, exact integer micro means
-WITH scored AS (
-  SELECT CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) % 100 AS BIGINT) AS s,
-    CASE WHEN doc_id % 100 <
-      CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) % 100
-    THEN 1 ELSE 0 END AS y
-  FROM documents
-),
-rng AS (SELECT MIN(s) AS lo, MAX(s) AS hi FROM scored),
-b AS (SELECT CAST(((s - lo) * 16) // (hi - lo + 1) AS INT) AS bucket, y FROM scored, rng),
-bkt AS (SELECT bucket, COUNT(*) AS n, SUM(y) AS pos FROM b GROUP BY bucket),
-pre AS (
-  SELECT bucket, n, pos,
-    SUM(n) OVER (ORDER BY bucket) AS cw,
-    SUM(pos) OVER (ORDER BY bucket) AS cy
-  FROM bkt
-),
-pairs AS (
-  SELECT l.bucket AS j, h.bucket AS k,
-    ((h.cy - (l.cy - l.pos)) * 1000000) // (h.cw - (l.cw - l.n)) AS a_micro
-  FROM pre l JOIN pre h ON l.bucket <= h.bucket
-),
-mins AS (
-  SELECT p.j, t.bucket AS i, MIN(p.a_micro) AS m
-  FROM pairs p JOIN bkt t ON p.j <= t.bucket AND p.k >= t.bucket
-  GROUP BY p.j, t.bucket
-),
-fitted AS (SELECT i, MAX(m) AS fitted_micro FROM mins GROUP BY i)
-SELECT b2.bucket, CAST(b2.n AS BIGINT) AS n, CAST(b2.pos AS BIGINT) AS pos,
-  CAST((b2.pos * 1000000) // b2.n AS BIGINT) AS rate_micro,
-  CAST(f.fitted_micro AS BIGINT) AS fitted_micro
-FROM bkt b2 JOIN fitted f ON f.i = b2.bucket
-""",
-        "leakage_split": rf"""
--- near-dup components -> md5 split units (98/1/1); closure is exact
-WITH RECURSIVE {minhash_pairs_ctes},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-),
-reach(id, lbl) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id
-),
-grp AS (SELECT id AS doc_id, MIN(lbl) AS group_id FROM reach GROUP BY id),
-base AS (
-  SELECT d.doc_id, COALESCE(g.group_id, d.doc_id) AS group_id
-  FROM documents d LEFT JOIN grp g USING (doc_id)
-)
-SELECT doc_id, group_id,
-  CASE
-    WHEN CAST(('0x' || substr(md5('split' || CAST(group_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 100 < 98
-      THEN 'train'
-    WHEN CAST(('0x' || substr(md5('split' || CAST(group_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 100 < 99
-      THEN 'val'
-    ELSE 'test' END AS split
-FROM base
-""",
-        "ucb_schedule": """
--- UCB1 per host: exact integer mean + micro-rounded confidence radius
-WITH log AS (
-  SELECT 'h' || CAST(user_id % 12 AS VARCHAR) AS host,
-    CASE event_type WHEN 'purchase' THEN 3 WHEN 'signup' THEN 2 ELSE 1 END AS reward
-  FROM events
-),
-ph AS (SELECT host, COUNT(*) AS n_waves, SUM(reward) AS sum_reward FROM log GROUP BY host),
-tot AS (SELECT COUNT(*) AS n_total FROM log)
-SELECT host,
-  CAST(n_waves AS BIGINT) AS n_waves,
-  CAST(sum_reward AS BIGINT) AS sum_reward,
-  CAST((sum_reward * 1000000) // n_waves AS BIGINT) AS mean_micro,
-  CAST(round(sqrt(2.0 * ln(n_total) / n_waves) * 1000000) AS BIGINT) AS explore_micro,
-  CAST((sum_reward * 1000000) // n_waves AS BIGINT)
-    + CAST(round(sqrt(2.0 * ln(n_total) / n_waves) * 1000000) AS BIGINT) AS ucb_micro
-FROM ph CROSS JOIN tot
 """,
         "percent_norm": r"""
 -- RFC 3986 6.2.2: decode unreserved escapes, uppercase the rest
@@ -7383,52 +6841,6 @@ SELECT doc_id,
   n_hits >= 2 AS is_mojibake
 FROM corr
 """,
-        "ece_calib": """
--- ECE = (SUM_b |1000*pos_b - SUM(p)_b| * 1000) // N, one final integer
--- division (no per-bin rounding compounds); same md5/label world as
--- isotonic_calib with bin-center probabilities p_milli = 10*s + 5
-WITH scored AS (
-  SELECT CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) % 100 AS BIGINT) * 10 + 5 AS p,
-    CASE WHEN doc_id % 100 <
-      CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) % 100
-    THEN 1 ELSE 0 END AS y
-  FROM documents
-),
-b AS (SELECT LEAST((p * 10) // 1001, 9) AS bin, p, y FROM scored),
-bins AS (
-  SELECT bin, COUNT(*) AS n, SUM(y) AS pos, SUM(p) AS sp FROM b GROUP BY bin
-),
-pre AS (
-  SELECT bin, n, pos,
-    sp // n AS conf_milli,
-    (pos * 1000) // n AS acc_milli,
-    abs(1000 * pos - sp) AS gap_num
-  FROM bins
-),
-tot AS (SELECT SUM(n) AS nt, SUM(gap_num) AS gt FROM pre)
-SELECT CAST(bin AS INT) AS bin, CAST(n AS BIGINT) AS n, CAST(pos AS BIGINT) AS pos,
-  CAST(conf_milli AS BIGINT) AS conf_milli, CAST(acc_milli AS BIGINT) AS acc_milli,
-  CAST(gap_num AS BIGINT) AS gap_num,
-  CAST((t.gt * 1000) // t.nt AS BIGINT) AS ece_micro
-FROM pre CROSS JOIN tot t
-""",
-        "temperature_mix": """
--- q_l ∝ p_l^0.7 with exact-integer p and micro-rounded pow terms
-WITH counts AS (SELECT lang AS stratum, COUNT(*) AS n_docs FROM documents GROUP BY lang),
-tot AS (SELECT SUM(n_docs) AS n_total FROM counts),
-withp AS (
-  SELECT stratum, n_docs, n_total,
-    pow(n_docs / CAST(n_total AS DOUBLE), 700::DOUBLE / 1000.0) AS qraw
-  FROM counts, tot
-),
-z AS (SELECT SUM(qraw) AS z FROM withp)
-SELECT stratum, CAST(n_docs AS BIGINT) AS n_docs,
-  CAST((n_docs * 1000000) // n_total AS BIGINT) AS p_micro,
-  CAST(round(qraw / z.z * 1000000) AS BIGINT) AS q_micro,
-  CAST(round((qraw / z.z) / (n_docs / CAST(n_total AS DOUBLE)) * 1000) AS BIGINT)
-    AS boost_milli
-FROM withp, z
-""",
         "caption_conflicts": _caption_conflicts_sql(),
         "hamming_certify": r"""
 -- same md5 60-bit world + exact-distance companions; exhaustive n²
@@ -7459,33 +6871,6 @@ SELECT CAST(g.hamming AS INT) AS hamming,
   CAST(COALESCE(th.n, 0) AS BIGINT) AS n_blocked_pairs,
   CAST(1000 AS BIGINT) AS recall_milli
 FROM grid g LEFT JOIN th ON th.hamming = g.hamming
-""",
-        "drain_plan": r"""
--- same skewed frontier + partial rate table; ceil-DIV waves, max flag
-WITH fr AS (
-  SELECT CASE
-    WHEN o_orderkey % 5 < 3 THEN 'h' || (o_orderkey % 20)::VARCHAR
-    WHEN o_orderkey % 5 = 3 THEN 'h' || (o_orderkey % 400 + 100)::VARCHAR
-    ELSE 'h' || (o_orderkey % 4000 + 1000)::VARCHAR
-  END AS host
-  FROM orders
-),
-q AS (SELECT host, COUNT(*) AS n_queued FROM fr GROUP BY host),
-rates AS (
-  SELECT 'h' || i::VARCHAR AS host, CAST(64 + 32 * (i % 3) AS BIGINT) AS tokens_per_wave
-  FROM (SELECT unnest(generate_series(0, 19)) AS i)
-),
-j AS (
-  SELECT q.host, CAST(q.n_queued AS BIGINT) AS n_queued,
-    COALESCE(r.tokens_per_wave, 32) AS tokens_per_wave,
-    (q.n_queued + COALESCE(r.tokens_per_wave, 32) - 1)
-      // COALESCE(r.tokens_per_wave, 32) AS n_waves
-  FROM q LEFT JOIN rates r USING (host)
-),
-mx AS (SELECT MAX(n_waves) AS m FROM j)
-SELECT host, n_queued, tokens_per_wave, CAST(n_waves AS BIGINT) AS n_waves,
-  n_waves = mx.m AS is_bottleneck
-FROM j CROSS JOIN mx
 """,
         "hard_negatives": """
 -- brute-force shortlist (the ann_topk cosine), vec_id%3 source groups,
@@ -7527,28 +6912,6 @@ negs AS (
 SELECT n.query_id, n.neighbor_id, CAST(n.neg_rank AS INT) AS neg_rank,
   n.cos_sim_micro, e.n_excluded
 FROM negs n JOIN excl e USING (query_id)
-""",
-        "mix_plan": r"""
--- same weight spec (sums to 997 — renormalization exercised), same
--- char-count inventories, exact integer plan arithmetic
-WITH strata AS (
-  SELECT lang AS source, SUM(n_chars) AS n_tokens,
-    CASE lang WHEN 'en' THEN 600 WHEN 'zh' THEN 120 WHEN 'es' THEN 100
-              WHEN 'de' THEN 90 ELSE 87 END AS weight_milli
-  FROM documents GROUP BY lang
-),
-ws AS (SELECT SUM(weight_milli) AS wsum FROM strata),
-plan AS (
-  SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens,
-    CAST(weight_milli AS BIGINT) AS weight_milli,
-    CAST((150000 * weight_milli) // ws.wsum AS BIGINT) AS target_tokens
-  FROM strata CROSS JOIN ws
-)
-SELECT *,
-  CAST((target_tokens * 1000000) // greatest(n_tokens, 1) AS BIGINT) AS sample_rate_ppm,
-  CAST((target_tokens * 1000) // greatest(n_tokens, 1) AS BIGINT) AS n_epochs_milli,
-  (target_tokens * 1000000) // greatest(n_tokens, 1) > 1000000 AS oversampled
-FROM plan
 """,
         "robots_delta": r"""
 -- both rule snapshots evaluated with the robots_rfc precedence (longest

@@ -51,20 +51,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 
-def parquet_num_rows(path: str) -> int:
-    """Row count of a parquet directory from file footers — metadata-only,
-    no Spark job (the Iceberg-manifest analogue of snapshot row counts).
-    Recursive: handles both flat and key=value-partitioned layouts."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.ParquetFile(f).metadata.num_rows
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-
-
 def partitioned_counts(path: str) -> dict[tuple[str, ...], int]:
     """Row counts per key=value partition directory, from parquet footers
     only — driver-side, no Spark job. Keys are the ordered partition path
@@ -155,7 +141,9 @@ class StateStore:
             for name, path in pool.map(write, todo):
                 entry["tables"][name] = path
         if "frontier" in entry["tables"]:
-            entry["counters"]["n_frontier"] = parquet_num_rows(entry["tables"]["frontier"])
+            entry["counters"]["n_frontier"] = sum(
+                partitioned_counts(entry["tables"]["frontier"]).values()
+            )
         tmp = os.path.join(self.root, "_manifests", f".manifest-{wave}.tmp")
         final = os.path.join(self.root, "_manifests", f"manifest-{wave}.json")
         entry["committed_at"] = time.time()

@@ -63,11 +63,9 @@ BENCH_QUERIES = (
     "selfdedup_clean",
     "link_extract",
     # r5 session 7: pointer-doubling redirect resolution (5 self-join
-    # rounds over ~14k chains at sf0.01-shape input scaled by SF) and the
-    # Hamilton budget apportionment (shard-ranked remainders) — timed so
-    # the log-rounds / no-global-window scale claims carry numbers
+    # rounds over ~14k chains at sf0.01-shape input scaled by SF) — timed
+    # so the log-rounds scale claim carries a number
     "redirect_resolve",
-    "budget_allocate",
     # r5 session 8: cross-document exact substring dedup (positional gram
     # count + islands window — the distributed ExactSubstr) and RFC 9309
     # robots matching (broadcast rules + higher-order projection, frontier
@@ -81,9 +79,6 @@ BENCH_QUERIES = (
     # one leg, so the "evaluation is itself a distributed join" claim is
     # timed against the indexes it measures
     "ann_recall",
-    # r5 session 11: per-epoch shuffle manifest — shard windows + broadcast
-    # offsets standing in for the global sort an epoch reshuffle never runs
-    "epoch_shuffle",
     # r5 session 11: degree-oriented triangle counting — the wedge join's
     # √m out-degree bound is the claim; timing it keeps the number honest
     "triangle_count",
@@ -139,9 +134,6 @@ BENCH_QUERIES = (
     # LSH banding eval — pipeline candidates vs exact shingle-join truth;
     # timed so the eval-on-a-sample discipline carries a number
     "lsh_eval",
-    # novelty-steered budget — the gram_novelty ∘ allocate_budget
-    # composition; timed so the focused-crawl loop closure carries a number
-    "novelty_budget",
     # content-aware crop — one Arrow decode pass; timed beside the other
     # single-decode image kernels
     "smart_crop",

@@ -8,9 +8,10 @@ Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -76,10 +77,9 @@ def main() -> int:
     # committed goldens captured at a specific scale only hold at that scale
     # — skip them elsewhere instead of failing by construction
     import json
-    import os
 
     pinned: dict[str, str] = {}
-    # derive from the entry module's location — a hardcoded /root/repo path
+    # derive from the entry module's location — a hardcoded checkout path
     # would silently load an empty pin map in any other checkout
     gpath = os.path.join(
         os.path.dirname(os.path.abspath(entrymod.__file__)),

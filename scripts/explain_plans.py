@@ -9,10 +9,13 @@ Usage: python scripts/explain_plans.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
+import shutil
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -75,11 +78,6 @@ CHECKS = {
     # rank delta: both windows are partitioned (day / event_type) — the
     # date-over-date diff never needs a global sort (NEG_CHECKS)
     "rank_delta": ["Window", "HashAggregate", "[codegen id :"],
-    # mixture resampling: broadcast weight table + explode — the corpus
-    # itself is never shuffled (no Exchange on the big side would be ideal
-    # to assert, but the broadcast build shows as its own exchange; the
-    # Generate & BHJ are the plan signature)
-    "mixture_sample": ["BroadcastHashJoin", "Generate", "[codegen id :"],
     # in-batch negatives: bucket windows + ONE equi self-join
     "negative_pairs": ["Window", "HashJoin", "[codegen id :"],
     # CDC diff: digests joined, not payloads; full outer on the id
@@ -105,9 +103,6 @@ CHECKS = {
     "link_extract": ["Generate", "[codegen id :"],
     # sitemap parsing: same codegen-only Generate shape as link_extract
     "sitemap_extract": ["Generate", "[codegen id :"],
-    # revisit scheduling: one map-side-combinable agg + a SHARD-partitioned
-    # window — never a global sort (NEG forbids SinglePartition), no Python
-    "recrawl_priority": ["HashAggregate", "partial_count", "Window", "[codegen id :"],
     # SURT key: canonicalize + label reversal in ONE codegen'd projection —
     # no shuffle, no join, no Python (NEG forbids all three)
     "surt_key": ["[codegen id :", "ReadSchema: struct<o_orderkey:bigint>"],
@@ -126,12 +121,6 @@ CHECKS = {
     "canonical_group": ["Aggregate", "partial_count", "[codegen id :"],
     # CDX revisit dedup: ONE url-partitioned lag window — never global
     "capture_novelty": ["Window", "[codegen id :"],
-    # Hamilton budget apportionment: the global remainder rank arrives via
-    # value-range shards (partitioned window) + broadcast totals — the
-    # NEG check forbids the single-partition window it replaces. r6: the
-    # demand table is checkpointed once for its five consumers, so the
-    # upstream partial_count now lives inside the RDD scan
-    "budget_allocate": ["Window", "HashAggregate", "[codegen id :"],
     # exact substring dedup: positional gram explode + map-side-combinable
     # gram count + gram-keyed equi join + DOC-partitioned islands window —
     # the relational replacement for a suffix array; no Python, no global
@@ -141,9 +130,6 @@ CHECKS = {
     # the decision is a higher-order projection — the frontier side never
     # shuffles and nothing crosses into Python (NEG)
     "robots_rfc": ["BroadcastHashJoin", "[codegen id :"],
-    # adaptive backoff: two HOST-partitioned windows, pure integer math —
-    # never a global sort, no join, no Python (NEG)
-    "adaptive_backoff": ["Window", "[codegen id :"],
     # DUST param-policy mining: one higher-order projection (distinct-key
     # explode Generate) + two map-side-combinable hash aggs — no join, no
     # window, no Python, no single-partition exchange (NEG)
@@ -157,12 +143,9 @@ CHECKS = {
     # literal hyperplane dots defeat codegen), positively asserted;
     # row-at-a-time Python stays forbidden (NEG)
     "ann_recall": ["ArrowEvalPython", "HashAggregate", "[codegen id :"],
-    # epoch shuffle: SHARD-partitioned row_number windows + broadcast
-    # offsets — never a global sort (NEG forbids SinglePartition), no
-    # Python (triangle_count has no entry: its output is eagerly
+    # (triangle_count has no entry: its output is eagerly
     # localCheckpointed inside the operator, the hits/minhash discipline,
     # so the formatted plan is an RDD scan)
-    "epoch_shuffle": ["Window", "BroadcastHashJoin", "[codegen id :"],
     # BM25: df_t and dl arrive as BROADCAST equi-joins on the query-filtered
     # tf stream; N and avgdl as 1-row broadcast crossJoins (the accepted
     # BNLJ-Cross idiom); every aggregate map-side-combinable; no Python
@@ -213,14 +196,6 @@ CHECKS = {
     "blur_detect": ["MapInPandas"],
     # smart crop: same single-decode map-only shape
     "smart_crop": ["MapInPandas"],
-    # novelty budget composition: the gram-novelty rollup feeds the
-    # SHARD-partitioned Hamilton remainder window — no Python anywhere
-    # (NEG; the 1-row D/leftover broadcasts are the accepted
-    # budget_allocate shapes). r6: allocate_budget checkpoints its demand
-    # input (five consumers — the gram_novelty chain used to re-execute
-    # per consumer), so the gram-keyed partial_min now lives inside the
-    # RDD scan rather than the final plan
-    "novelty_budget": ["Window", "HashAggregate", "[codegen id :"],
     # channel normalization: ONE Arrow decode crossing + a 3-group hash
     # aggregate with map-side partials; no join (NEG)
     "channel_stats": ["MapInPandas", "HashAggregate", "partial_sum"],
@@ -264,20 +239,9 @@ CHECKS = {
     # the only exchanges are the two key-partitioned windows — no Python
     # eval node anywhere (NEG_CHECKS)
     "cdc_chunks": ["[codegen id :", "Window"],
-    # Chao1 frontier sizing: TWO hash aggregations, both with map-side
-    # partial combine (partial_count / partial_sum), pure integer column
-    # math — no Python, no window, no join (NEG_CHECKS)
-    "frontier_size": ["HashAggregate", "partial_count", "partial_sum", "[codegen id :"],
     # RFC 3986 resolution: the whole case tree + §5.2.4 segment fold is ONE
     # codegen projection over the scan — no shuffle, no join, no Python
     "resolve_refs": ["[codegen id :", "ReadSchema: struct<o_orderkey:bigint>"],
-    # isotonic calibration: the corpus reduces through ONE map-side-
-    # combinable bucket aggregate before anything quadratic; the score
-    # range broadcasts; no Python (NEG_CHECKS)
-    "isotonic_calib": ["HashAggregate", "partial_count", "BroadcastNestedLoopJoin"],
-    # UCB1: one map-side host aggregate + the broadcast 1-row total —
-    # no window, no data-side join, no Python (NEG_CHECKS)
-    "ucb_schedule": ["HashAggregate", "partial_count", "BroadcastNestedLoopJoin"],
     # percent normalization: tokenize + transform + join is one codegen
     # projection — no shuffle, no Python
     "percent_norm": ["[codegen id :", "ReadSchema: struct<o_orderkey:bigint>"],
@@ -294,18 +258,15 @@ NO_AQE = {
     "dedup_simhash", "hamming_neardup", "dedup_incremental",
     "trap_detect",
     "asof_join", "range_join", "skew_join_salted", "rollup_metrics", "rank_delta",
-    "mixture_sample", "negative_pairs", "snapshot_diff", "sketch_distinct",
+    "negative_pairs", "snapshot_diff", "sketch_distinct",
     "expectations", "winsorize", "ema_score",
-    "gopher_signals", "recrawl_priority", "substring_dedup",
-    "robots_rfc", "adaptive_backoff",
+    "gopher_signals", "substring_dedup", "robots_rfc",
     "etld1_domain", "anchor_rollup", "template_detect", "canonical_group",
-    "capture_novelty", "budget_allocate", "param_policy", "param_apply",
-    "ann_recall", "epoch_shuffle",
+    "capture_novelty", "param_policy", "param_apply", "ann_recall",
     "bm25_rank", "heavy_hitters", "postings_build", "ann_pq",
     "compaction_plan", "phrase_match",
     "c4_clean", "gram_novelty", "mirror_detect",
-    "novelty_budget", "hll_distinct", "cdc_chunks", "frontier_size",
-    "caption_conflicts", "url_spam",
+    "hll_distinct", "cdc_chunks", "caption_conflicts", "url_spam",
 }
 
 NEG_CHECKS = {
@@ -316,12 +277,9 @@ NEG_CHECKS = {
     "hll_distinct": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "hyperball": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "cdc_chunks": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
-    "frontier_size": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Window", "Join"],
     "resolve_refs": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join",
     ],
-    "isotonic_calib": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
-    "ucb_schedule": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Window"],
     "percent_norm": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join",
     ],
@@ -349,7 +307,6 @@ NEG_CHECKS = {
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "Exchange SinglePartition", "Join",
     ],
-    "mixture_sample": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "negative_pairs": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "NestedLoop", "Cartesian",
@@ -369,10 +326,6 @@ NEG_CHECKS = {
     "selfdedup_clean": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join"],
     "link_extract": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join"],
     "sitemap_extract": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join"],
-    "recrawl_priority": [
-        "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-        "Exchange SinglePartition", "Join",
-    ],
     "surt_key": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Exchange", "Join"],
     "etld1_domain": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
@@ -394,12 +347,6 @@ NEG_CHECKS = {
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "Exchange SinglePartition", "Join",
     ],
-    # budget_allocate's 1-row totals (D, leftover) arrive as in-plan
-    # global aggregates + broadcast crossJoins — a 1-row SinglePartition
-    # exchange and a broadcast NLJ are the CORRECT bounded shapes there,
-    # so only Python nodes are forbidden; the data-sized rank window is
-    # shard-partitioned (asserted positively above)
-    "budget_allocate": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
     "substring_dedup": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "Exchange SinglePartition", "NestedLoop", "Cartesian",
@@ -407,10 +354,6 @@ NEG_CHECKS = {
     "robots_rfc": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "Exchange SinglePartition", "NestedLoop", "Cartesian",
-    ],
-    "adaptive_backoff": [
-        "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-        "Exchange SinglePartition", "Join",
     ],
     "param_policy": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
@@ -424,13 +367,9 @@ NEG_CHECKS = {
     # broadcast-queries crossJoin renders as BroadcastNestedLoopJoin (the
     # accepted broadcast-small-side idiom), so only Cartesian is forbidden
     "ann_recall": ["BatchEvalPython", "MapInPandas", "Cartesian"],
-    "epoch_shuffle": [
-        "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-        "Exchange SinglePartition", "NestedLoop", "Cartesian",
-    ],
     # bm25: the 1-row totals (N, avgdl) broadcast as BNLJ Cross and their
     # global aggregates are bounded 1-row SinglePartition exchanges (the
-    # budget_allocate-accepted shapes), so neither is forbidden here
+    # accepted broadcast-total shapes), so neither is forbidden here
     "bm25_rank": [
         "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
         "SortMergeJoin", "Cartesian",
@@ -476,7 +415,6 @@ NEG_CHECKS = {
     ],
     "blur_detect": ["Join", "Cartesian"],
     "channel_stats": ["Join", "Cartesian", "Exchange SinglePartition"],
-    "novelty_budget": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "Cartesian"],
     "smart_crop": ["Join", "Cartesian", "Window", "Exchange SinglePartition"],
     # the 1-row totals broadcast is the accepted crossJoin shape; a
     # NESTED-loop over the key table would be the scale-killer
@@ -580,7 +518,6 @@ def check_no_global_window(spark) -> list[str]:
     driver-side offsets (operators/politeness.py), so every Window in the
     plan must carry a partitionBy."""
     import re
-    import shutil
 
     from amazonwebcrawler_spark.operators import bloom
     from amazonwebcrawler_spark.operators.politeness import assign_discovery_seq
@@ -706,8 +643,6 @@ def check_bucketed_join(spark, sf_dir: str) -> list[str]:
     on the key, then assert the join plan has NO shuffle exchange on either
     side — the pattern the report joins (detail ⋈ cart, J3) use at scale
     instead of exchanging 10^10 rows."""
-    import shutil
-
     spark.sql("CREATE DATABASE IF NOT EXISTS awc_demo")
     for t in ("orders_b", "cust_b"):
         spark.sql(f"DROP TABLE IF EXISTS awc_demo.{t}")
@@ -807,15 +742,19 @@ def check_opic_round(spark) -> list[str]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    # a per-run warehouse (check_bucketed_join writes tables into it), so
+    # two runs never share one; removed on exit
+    with tempfile.TemporaryDirectory(prefix="awc_explain_wh_", ignore_cleanup_errors=True) as wh:
+        return _run_checks(sf_dir, wh)
+
+
+def _run_checks(sf_dir: str, warehouse: str) -> int:
     import __spark_entry__ as entrymod
     from amazonwebcrawler_spark.session import get_spark
 
-    import shutil
-
-    shutil.rmtree("/tmp/awc_explain_wh", ignore_errors=True)
     spark = get_spark(
         app_name="explain", master="local[4]", shuffle_partitions=4,
-        extra_conf={"spark.sql.warehouse.dir": "/tmp/awc_explain_wh"},
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()

@@ -169,40 +169,6 @@ class TestMirrorPairs:
         assert list(out) == [("alpha", "zeta")]
 
 
-class TestNoveltyBudgetComposition:
-    def test_exhausted_hosts_drop_and_budget_conserves(self, spark):
-        """gram_novelty ∘ allocate_budget: a host serving only content
-        first seen elsewhere has zero novelty demand and receives NO
-        quota; the budget still sums exactly to B over the live hosts."""
-        from amazonwebcrawler_spark.operators.corpus import gram_novelty
-        from amazonwebcrawler_spark.operators.politeness import allocate_budget
-
-        rows = []
-        # host 0 (even doc_ids 0..18): unique content — real novelty
-        for i in range(10):
-            rows.append((2 * i, f"fresh u{i} v{i} w{i} x{i} y{i} z{i}"))
-        # host 1 (odd doc_ids 21..39 — all AFTER host 0's ids): byte-exact
-        # mirrors of host 0's pages — zero first occurrences
-        for i in range(10):
-            rows.append((21 + 2 * i, f"fresh u{i} v{i} w{i} x{i} y{i} z{i}"))
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        nov = gram_novelty(df, "text", "doc_id", n=3)
-        from pyspark.sql import functions as F2
-
-        hosts = df.select(
-            "doc_id", (F2.col("doc_id") % 2).cast("string").alias("host")
-        )
-        demand = (
-            nov.join(hosts, "doc_id")
-            .groupBy("host")
-            .agg(F2.sum("n_new_grams").alias("demand"))
-        )
-        out = allocate_budget(demand, total_budget=1000, key_col="host", demand_col="demand")
-        got = {r.domain: r for r in out.collect()}
-        assert set(got) == {"0"}  # the mirror host got nothing
-        assert got["0"].quota == 1000
-
-
 class TestCurationRandomizedMirrors:
     def test_c4_clean_matches_python_mirror_random(self, spark):
         """Seeded random documents (lines drawn from good/bad templates in
@@ -363,53 +329,6 @@ class TestRrfFusion:
         a = sorted(map(tuple, rrf_fusion(df).collect()))
         b = sorted(map(tuple, rrf_fusion(df.repartition(7)).collect()))
         assert a == b
-
-
-class TestEceCalibration:
-    def _ece(self, spark, rows, **kw):
-        from amazonwebcrawler_spark.operators.corpus import ece_calibration
-
-        df = spark.createDataFrame(rows, "p_milli long, label int")
-        return ece_calibration(df, "p_milli", "label", **kw)
-
-    def test_perfectly_calibrated_bins_zero_gap(self, spark):
-        # bin [100,200): 10 rows at p=150, exactly 1.5 positives impossible →
-        # use p=200*? choose p=500, 10 rows, 5 positive → gap 0
-        rows = [(500, 1 if i < 5 else 0) for i in range(10)]
-        out = self._ece(spark, rows).collect()
-        assert len(out) == 1
-        r = out[0]
-        assert r["gap_num"] == 0 and r["ece_micro"] == 0
-        assert r["conf_milli"] == 500 and r["acc_milli"] == 500
-
-    def test_ece_telescopes_exactly(self, spark):
-        # two bins: bin0 (p=100,n=4,pos=0 → gap |0-400|=400),
-        # bin9 (p=950,n=4,pos=2 → gap |2000-3800|=1800)
-        rows = [(100, 0)] * 4 + [(950, 1), (950, 1), (950, 0), (950, 0)]
-        out = {r["bin"]: r for r in self._ece(spark, rows).collect()}
-        assert out[0]["gap_num"] == 400 and out[9]["gap_num"] == 1800
-        assert out[0]["ece_micro"] == (400 + 1800) * 1000 // 8
-        assert out[9]["conf_milli"] == 950 and out[9]["acc_milli"] == 500
-
-    def test_matches_float_formula(self, spark):
-        import random
-
-        rnd = random.Random(7)
-        rows = [(rnd.randrange(0, 1001), rnd.randrange(0, 2)) for _ in range(500)]
-        out = self._ece(spark, rows, n_bins=10).collect()
-        ece = out[0]["ece_micro"]
-        # float reference (tolerate the single floor at the end)
-        from collections import defaultdict
-
-        bins = defaultdict(list)
-        for p, y in rows:
-            bins[min(p * 10 // 1001, 9)].append((p, y))
-        ref = sum(
-            abs(sum(y for _, y in v) / len(v) - sum(p for p, _ in v) / len(v) / 1000)
-            * len(v) / 500
-            for v in bins.values()
-        )
-        assert abs(ece - ref * 1_000_000) <= 1.0
 
 
 class TestMojibakeStats:

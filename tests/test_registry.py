@@ -20,28 +20,28 @@ FLAGSHIP_SLOTS = ("crawl_rank_wave", "robots_filter")
 #: full (48 never-checked keys + the 2 flagship slots), so granting a new
 #: key a slot would evict an equally-never-checked key — zero-sum for
 #: external coverage and churn for the documented layout. These stay at
-#: position 51+ on the local gate + pytest. Deleting the LM-training and
-#: audio/video queries freed four window slots; the four post-freeze keys
-#: that slid into them (scc, ann_recall, epoch_shuffle, triangle_count)
-#: left this list, since a window slot is theirs now.
+#: position 51+ on the local gate + pytest. Each query deletion that
+#: freed window slots moved the next post-freeze keys in registry order
+#: into them, and those keys left this list, since a window slot is
+#: theirs now: scc, ann_recall and triangle_count (LM-training and
+#: audio/video cut), then label_prop, trust_rank, bm25_rank,
+#: heavy_hitters and kcore (corpus-mixing/calibration and
+#: scheduling-audit cut).
 POST_FREEZE = (
-    "label_prop", "trust_rank", "bm25_rank", "heavy_hitters", "kcore",
     "random_walks", "crop_dedup", "opic_priority", "containment_dedup",
     "border_crop", "postings_build", "flip_dedup", "ann_pq",
     "compaction_plan", "phrase_match", "c4_clean", "gram_novelty",
     "mirror_detect", "blur_detect", "channel_stats", "lsh_eval",
-    "novelty_budget", "smart_crop", "shard_rebalance", "caption_filter",
-    "aimd_rate", "contam_spans", "hist_quantiles", "ndcg_eval",
-    "color_stats", "sitemap_coverage", "hll_distinct", "hyperball",
-    "cdc_chunks", "frontier_size", "resolve_refs", "isotonic_calib",
-    "leakage_split", "ucb_schedule", "percent_norm", "link_audit",
-    "politeness_audit", "mmr_topk", "temperature_mix", "rrf_fusion",
-    "ece_calib", "mojibake_detect", "tile_detect", "upscale_detect",
-    "caption_conflicts", "url_spam", "dedup_cluster_stats", "host_fairness",
-    "phash_bit_stats", "wds_shards", "boilerplate_strip", "psi_drift",
-    "robots_delta", "mix_plan", "hard_negatives", "drain_plan",
-    "hamming_certify", "image_probe", "drop_reasons", "bloom_plan",
-    "data_card",
+    "smart_crop", "shard_rebalance", "caption_filter", "aimd_rate",
+    "contam_spans", "hist_quantiles", "ndcg_eval", "color_stats",
+    "sitemap_coverage", "hll_distinct", "hyperball", "cdc_chunks",
+    "resolve_refs", "percent_norm", "link_audit", "politeness_audit",
+    "mmr_topk", "rrf_fusion", "mojibake_detect", "tile_detect",
+    "upscale_detect", "caption_conflicts", "url_spam",
+    "dedup_cluster_stats", "host_fairness", "phash_bit_stats",
+    "wds_shards", "boilerplate_strip", "psi_drift", "robots_delta",
+    "hard_negatives", "hamming_certify", "image_probe", "drop_reasons",
+    "bloom_plan", "data_card",
 )
 
 

@@ -276,9 +276,10 @@ class TestBindOnce:
         1.4 s at sf0.1 when this regressed). Mirrors
         scripts/explain_plans.py's check_no_lambda_capture for the unit
         suite."""
+        import os
         import sys
 
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         from scripts.explain_plans import _lambda_spans
 
         from amazonwebcrawler_spark.functions.text import (
