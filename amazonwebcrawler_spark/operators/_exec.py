@@ -1,22 +1,30 @@
-"""Execution-scope helpers shared by the iterative graph operators.
+"""Execution-scope helpers shared by the crawl loop and the iterative
+graph operators.
 
-``coalesced_stages`` re-enables AQE partition coalescing around an
-operator's INTERNAL materializations. Rationale (guide §2.2): the bench
-session pins ``spark.sql.adaptive.coalescePartitions.enabled=false``
-because byte-based coalescing collapses the CPU-heavy Python fetch stages
-to 1-2 tasks; the iterative graph ops are the opposite regime — dozens of
-sequential exchanges over byte-tiny tables, where every 64-partition
-stage (and every 64-partition checkpointed RDD that later broadcasts or
-counts) is pure scheduling overhead. Coalescing is the scale-ADAPTIVE
-answer: AQE targets ``advisoryPartitionSizeInBytes``, so a 10^10-edge
-graph keeps full parallelism while a host-level graph runs 1-task stages
-— no constant tuned to either size (measured: scc 14.4 s → see
-OPTIMIZATION_r06.md with coalescing scoped this way).
+``_scoped_conf`` sets SQL confs for a ``with`` block and restores the
+previous values on exit, also when the block raises. Conf reads happen at
+ACTION time, so a scope must enclose the actions it is meant to govern.
 
-The conf is restored on exit, so the wave/loop legs and every other query
-see the session default. Conf reads happen at ACTION time, which is why
-the iterative ops materialize their final result eagerly inside this
-scope instead of leaving it to the caller's first action.
+* ``CrawlEngine.run`` runs every crawl wave under
+  ``plans/crawler.WAVE_CONF``: adaptive execution off, because the wave
+  plan is explicitly partitioned and broadcast-hinted, and AQE would only
+  split each of its actions into one Spark job per query stage.
+* ``coalesced_stages`` turns AQE partition coalescing on around an
+  operator's INTERNAL materializations: the iterative graph ops run dozens
+  of sequential exchanges over byte-tiny tables, where every
+  shuffle-partitions-wide stage (and every checkpointed RDD that later
+  broadcasts or counts) is pure scheduling overhead. Coalescing is the
+  scale-ADAPTIVE answer: AQE targets ``advisoryPartitionSizeInBytes``, so
+  a 10^10-edge graph keeps full parallelism while a host-level graph runs
+  1-task stages (measured: scc 14.4 s → see OPTIMIZATION_r06.md). The
+  session factory (``session.get_spark``) already sets
+  ``spark.sql.adaptive.coalescePartitions.enabled=true``, and perfbench
+  and the tests use that default, so there the scope changes nothing; it
+  matters only under ``bench.py``, whose session pins it ``false`` so that
+  byte-based coalescing does not collapse the CPU-heavy Python fetch
+  stages to 1-2 tasks. That is also why the iterative ops materialize
+  their final result eagerly inside the scope instead of leaving it to the
+  caller's first action.
 """
 
 from __future__ import annotations
@@ -45,9 +53,11 @@ def _scoped_conf(spark, overrides: dict):
 
 @contextmanager
 def coalesced_stages(spark):
-    # (an AQE-off variant of this scope was prototyped and REJECTED —
-    # static planning loses the tiny-side broadcasts and pays
-    # 64-partition sort-merge exchanges; measured in OPTIMIZATION_r06.md)
+    # (an AQE-off variant of this scope was prototyped for the query legs
+    # and REJECTED there — static planning loses their unhinted tiny-side
+    # broadcasts and pays 64-partition sort-merge exchanges; measured in
+    # OPTIMIZATION_r06.md. The crawl wave hints every broadcast, so it
+    # runs AQE-off: plans/crawler.WAVE_CONF)
     with _scoped_conf(
         spark, {"spark.sql.adaptive.coalescePartitions.enabled": "true"}
     ):

@@ -103,9 +103,13 @@ def assign_discovery_seq(expanded: DataFrame, base_seq: int):
     parent_seq order and rows rank in (parent_pos, canonical_url) order
     within each parent.
 
-    The ONE job here (the sizes aggregate) doubles as the wave's new-URL
-    count — callers need it for next_seq anyway, so seq assignment adds
-    zero extra Spark jobs to the wave. Returns (DataFrame, n_rows).
+    The one action here (the sizes ``collect``) doubles as the wave's
+    new-URL count — callers need it for next_seq anyway, so seq assignment
+    adds no action to the wave. That action runs the whole expansion DAG
+    above it: under adaptive execution each query stage is its own Spark
+    job (15 in perfbench's traced resumed wave); the crawl loop plans it
+    statically (plans/crawler.WAVE_CONF), where it is 4. Returns
+    (DataFrame, n_rows).
     """
     sizes = {
         r["parent_seq"]: r["n"]

@@ -50,10 +50,21 @@ from amazonwebcrawler_spark.functions.rank import (
 from amazonwebcrawler_spark.functions.robots import compile_rules, keep_allowed
 from amazonwebcrawler_spark.functions.urls import canonicalize_url, url_host
 from amazonwebcrawler_spark.operators import bloom
+from amazonwebcrawler_spark.operators._exec import _scoped_conf
 from amazonwebcrawler_spark.operators.politeness import assign_discovery_seq, select_wave_batch
 from amazonwebcrawler_spark.sources import synthetic_world as world
 from amazonwebcrawler_spark.sources.seeds import dims_df, seeds_df
 from amazonwebcrawler_spark.sources.state_store import PARTITIONING, StateStore, partitioned_counts
+
+#: the conf every crawl wave runs under (``CrawlEngine.run``). The wave
+#: plan is partitioned explicitly (the ``host_shard`` repartition, the
+#: per-bucket cogroup) and every join in it carries a broadcast hint, so
+#: adaptive execution has nothing left to decide; with it on, each query
+#: stage of the expansion ``collect`` and of each commit write is its own
+#: Spark job with a re-plan between them. Statically planned, perfbench's
+#: traced resumed wave runs 16 jobs, 4 of them in the expansion, where AQE
+#: ran 33 and 15 (scripts/explain_plans.py::check_wave_plan guards the plan).
+WAVE_CONF = {"spark.sql.adaptive.enabled": "false"}
 
 # ---------------------------------------------------------------- schemas
 FRONTIER_SCHEMA = T.StructType(
@@ -302,6 +313,35 @@ def fetch_lineage(fetched: DataFrame, wave: int, max_retries: int) -> DataFrame:
     ).drop("_p")
 
 
+def early_stop_flags(results: DataFrame, prior: DataFrame | None) -> DataFrame:
+    """Per-seed cumulative early-stop flags (A3/L2), the ``seed_flags``
+    snapshot (≤1 row per seed): ``has_ad``/``has_nat`` are 1 once the seed
+    has a sponsored/natural own hit. This wave's own-hit ``results`` rows
+    union the previous snapshot and ONE aggregate folds them (one
+    Exchange), so the check never rescans the growing results history."""
+    hits = results.filter(F.col("is_own")).select(
+        "seed_id",
+        F.col("is_ad").cast("int").alias("has_ad"),
+        (~F.col("is_ad")).cast("int").alias("has_nat"),
+    )
+    return (
+        (hits if prior is None else prior.unionByName(hits))
+        .groupBy("seed_id")
+        .agg(F.max("has_ad").alias("has_ad"), F.max("has_nat").alias("has_nat"))
+    )
+
+
+def drop_satisfied_serp(df: DataFrame, done: DataFrame) -> DataFrame:
+    """The early-stop kill (L2): drop ``df``'s SERP rows (``kind`` =
+    'serp') of the seeds in ``done`` (one ``seed_id`` column), by a
+    broadcast left-anti join, so ``df`` never shuffles for it."""
+    return df.join(
+        F.broadcast(done.select(F.col("seed_id").alias("_done_seed"))),
+        (F.col("seed_id") == F.col("_done_seed")) & (F.col("kind") == "serp"),
+        "left_anti",
+    )
+
+
 def _classify_kind(url: F.Column) -> F.Column:
     return (
         F.when(url.startswith(f"{world.HOST}/s?"), "serp")
@@ -414,13 +454,16 @@ class CrawlEngine:
         shards = store.load_shard_state()
 
         last_wave = wave0 - 1
-        for wave in range(wave0, cfg.max_waves):
-            if n_frontier == 0:
-                break
-            frontier, cold, shards, next_seq, n_frontier = self._run_wave(
-                wave, frontier, cold, shards, next_seq
-            )
-            last_wave = wave
+        # one scope for every wave; it restores the session's setting on
+        # exit, a raising wave included, so reports and queries keep it
+        with _scoped_conf(spark, WAVE_CONF):
+            for wave in range(wave0, cfg.max_waves):
+                if n_frontier == 0:
+                    break
+                frontier, cold, shards, next_seq, n_frontier = self._run_wave(
+                    wave, frontier, cold, shards, next_seq
+                )
+                last_wave = wave
         return {"last_wave": last_wave, "store": store}
 
     # ---------------------------------------------------- retries (C3)
@@ -533,31 +576,15 @@ class CrawlEngine:
         if cfg.early_stop:
             # A3/L2: a seed with ≥1 sponsored and ≥1 natural own hit stops
             # paging — the reference's core loop exits once both are found
-            # (getRank.py:208-209, 468-469). Per-seed cumulative flags are
-            # the tiny seed_flags snapshot (≤1 row per seed): this wave's
-            # hits fold into the previous snapshot, so the check never
-            # rescans the growing results history.
-            wave_flags = (
-                results.filter(F.col("is_own"))
-                .groupBy("seed_id")
-                .agg(
-                    F.max(F.col("is_ad").cast("int")).alias("has_ad"),
-                    F.max((~F.col("is_ad")).cast("int")).alias("has_nat"),
-                )
-            )
-            prior_flags = store.load_snapshot("seed_flags")
+            # (getRank.py:208-209, 468-469); the flags are the seed_flags
+            # snapshot (early_stop_flags).
             # persisted: the pagination kill, the frontier kill and the
             # snapshot write all read it
-            seed_flags = (
-                (wave_flags if prior_flags is None else prior_flags.unionByName(wave_flags))
-                .groupBy("seed_id")
-                .agg(F.max("has_ad").alias("has_ad"), F.max("has_nat").alias("has_nat"))
-                .persist()
-            )
+            seed_flags = early_stop_flags(results, store.load_snapshot("seed_flags")).persist()
             done = seed_flags.filter((F.col("has_ad") == 1) & (F.col("has_nat") == 1)).select(
                 "seed_id"
             )
-            nxt = nxt.join(F.broadcast(done), "seed_id", "left_anti")
+            nxt = drop_satisfied_serp(nxt, done)
         expansions.append(
             nxt.select(
                 "seed_id",
@@ -690,12 +717,7 @@ class CrawlEngine:
         if cfg.early_stop:
             # kill pending pagination (deferred/retry/new serp rows) of
             # satisfied seeds as well (L2)
-            nf = new_frontier.alias("nf")
-            new_frontier = nf.join(
-                F.broadcast(done.withColumnRenamed("seed_id", "_done_seed")),
-                (F.col("nf.seed_id") == F.col("_done_seed")) & (F.col("nf.kind") == "serp"),
-                "left_anti",
-            )
+            new_frontier = drop_satisfied_serp(new_frontier, done)
         # the loop's stop condition needs |new_frontier|, but a pre-commit
         # count() is a whole extra pass over the union DAG (measured
         # 1.8-5.7 s/wave). The count instead comes from the written

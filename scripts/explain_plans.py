@@ -603,6 +603,69 @@ def check_admission_chain(spark) -> list[str]:
     return []
 
 
+def check_wave_plan(spark) -> list[str]:
+    """The wave's core, built inside the scope every crawl wave runs in
+    (plans/crawler.WAVE_CONF, opened by CrawlEngine.run): admit_candidates
+    → split_admission → assign_discovery_seq, then the early-stop fold
+    (early_stop_flags) and kill (drop_satisfied_serp). Statically planned,
+    nothing re-plans a join at run time, so the plan must hold no
+    AdaptiveSparkPlan node and no SortMergeJoin, every join (robots rules,
+    seq offsets, satisfied seeds) must be a BroadcastHashJoin, and the
+    seed_flags fold must be one Exchange. A lost broadcast turns into a
+    sort-merge exchange pair here, which is what made AQE-off lose on the
+    query legs (_exec.coalesced_stages)."""
+    import re
+
+    from amazonwebcrawler_spark.operators import bloom
+    from amazonwebcrawler_spark.operators._exec import _scoped_conf
+    from amazonwebcrawler_spark.operators.politeness import assign_discovery_seq
+    from amazonwebcrawler_spark.plans.crawler import (
+        WAVE_CONF, CrawlConfig, _robots_rules, _with_host_shard, admit_candidates,
+        drop_satisfied_serp, early_stop_flags,
+    )
+
+    cfg = CrawlConfig(checkpoint_dir="unused")  # nothing here reads or writes a store
+    serp = F.col("id") % 3 == 0
+    path = F.when(F.col("id") % 4 == 0, F.lit("/gp/private/p")).otherwise(F.lit("/dp/B"))
+    cand = spark.range(0, 1000).select(
+        (F.col("id") % 13).alias("seed_id"),
+        F.when(serp, F.lit("serp")).otherwise(F.lit("detail")).alias("kind"),
+        F.concat(F.lit("https://www.amazon.com"), path, F.col("id").cast("string")).alias("canonical_url"),
+        (F.col("id") % 37).alias("parent_seq"),
+        (F.col("id") % 11).cast("int").alias("parent_pos"),
+    )
+    results = spark.range(0, 200).select(
+        (F.col("id") % 13).alias("seed_id"),
+        (F.col("id") % 5 != 0).alias("is_own"),
+        (F.col("id") % 2 == 0).alias("is_ad"),
+    )
+    prior = spark.createDataFrame([(1, 1, 0), (2, 0, 1)], "seed_id long, has_ad int, has_nat int")
+    with _scoped_conf(spark, WAVE_CONF):
+        admitted = admit_candidates(
+            _with_host_shard(cand, cfg), _robots_rules(spark),
+            bloom.empty_shards(spark, cfg.bloom), cfg.bloom,
+        )
+        pre, _shards = bloom.split_admission(admitted)
+        seq, _n = assign_discovery_seq(pre, 1000)
+        flags = early_stop_flags(results, prior)
+        done = flags.filter((F.col("has_ad") == 1) & (F.col("has_nat") == 1)).select("seed_id")
+        txt = plan_text(drop_satisfied_serp(seq, done))
+        flags_txt = plan_text(flags)
+    bad = [node for node in ("AdaptiveSparkPlan", "SortMergeJoin") if node in txt + flags_txt]
+    joins = re.findall(r"^\(\d+\) (\w*Join)", txt, re.M)
+    if len(joins) < 3 or set(joins) != {"BroadcastHashJoin"}:
+        bad.append(f"joins {joins} (want robots, offsets and done: BroadcastHashJoin each)")
+    n_ex = len(re.findall(r"^\(\d+\) Exchange", flags_txt, re.M))
+    if n_ex != 1:
+        bad.append(f"seed_flags fold has {n_ex} Exchanges (want 1)")
+    if bad:
+        print("FAIL wave_plan:", bad)
+        print(txt[:2500])
+        return ["wave_plan"]
+    print("ok   wave_plan: static plan, every join broadcast, seed_flags one Exchange")
+    return []
+
+
 def check_fetch_lineage(spark) -> list[str]:
     """The wave's per-fetch record (plans/crawler.fetch_lineage) over
     synthetic fetched rows must stay a projection of the fetch: no
@@ -761,6 +824,7 @@ def _run_checks(sf_dir: str, warehouse: str) -> int:
     bad = []
     bad += check_no_global_window(spark)
     bad += check_admission_chain(spark)
+    bad += check_wave_plan(spark)
     bad += check_fetch_lineage(spark)
     bad += check_no_lambda_capture(spark, sf_dir, qs)
     bad += check_bucketed_join(spark, sf_dir)

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from amazonwebcrawler_spark.operators import bloom
-from amazonwebcrawler_spark.plans import reports
+from amazonwebcrawler_spark.plans import crawler, reports
 from amazonwebcrawler_spark.plans.crawler import CrawlConfig, CrawlEngine
 from amazonwebcrawler_spark.sources import synthetic_world as world
 from amazonwebcrawler_spark.sources.seeds import seeds_df
@@ -29,6 +29,12 @@ def _cfg(tmp: str, **kw) -> CrawlConfig:
     )
     base.update(kw)
     return CrawlConfig(**base)
+
+
+def _max_job_id(spark) -> int:
+    """The newest Spark job's id (-1 before any): the difference across a
+    call is the number of jobs it submitted."""
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [-1])
 
 
 @pytest.fixture(scope="module")
@@ -240,6 +246,60 @@ class TestEarlyStop:
             assert got == sorted(o.fetch_order), f"early_stop={flag}"
         assert counts[True] < counts[False]
         assert counts[True] == 1  # both hits on page 1 → exactly one fetch
+
+
+class TestWaveScope:
+    """Every crawl wave is planned statically (``crawler.WAVE_CONF``) in
+    one scope that ``CrawlEngine.run`` opens around its waves and closes
+    however the waves end, so reports and queries keep the session's
+    setting."""
+
+    AQE = "spark.sql.adaptive.enabled"
+
+    def test_waves_run_static_and_the_setting_is_restored(self, spark, monkeypatch, tmp_path):
+        during = []
+        real = crawler.assign_discovery_seq
+
+        def spy(expanded, base_seq):
+            during.append(spark.conf.get(self.AQE))
+            return real(expanded, base_seq)
+
+        monkeypatch.setattr(crawler, "assign_discovery_seq", spy)
+        before = spark.conf.get(self.AQE)
+        CrawlEngine(spark, _cfg(str(tmp_path), max_waves=2), seeds=seeds_df(spark, SEED_ROWS)).run()
+        assert during == ["false", "false"]
+        assert spark.conf.get(self.AQE) == before
+
+    def test_setting_restored_when_a_wave_raises(self, spark, monkeypatch, tmp_path):
+        def boom(expanded, base_seq):
+            raise RuntimeError("wave failed")
+
+        monkeypatch.setattr(crawler, "assign_discovery_seq", boom)
+        before = spark.conf.get(self.AQE)
+        with pytest.raises(RuntimeError, match="wave failed"):
+            CrawlEngine(spark, _cfg(str(tmp_path), max_waves=1), seeds=seeds_df(spark, SEED_ROWS)).run()
+        assert spark.conf.get(self.AQE) == before
+
+    def test_resumed_expansion_job_count(self, spark, monkeypatch, tmp_path):
+        """The seq assignment's sizes ``collect`` runs a resumed wave's
+        whole expansion (dequeue → fetch → parse → expand → admission).
+        Statically planned it is a few jobs; with adaptive execution every
+        query stage was its own job (15 in perfbench's traced wave)."""
+        tmp = str(tmp_path)
+        seeds = seeds_df(spark, SEED_ROWS)
+        CrawlEngine(spark, _cfg(tmp, max_waves=1), seeds=seeds).run()
+        jobs = []
+        real = crawler.assign_discovery_seq
+
+        def counted(expanded, base_seq):
+            before = _max_job_id(spark)
+            out = real(expanded, base_seq)
+            jobs.append(_max_job_id(spark) - before)
+            return out
+
+        monkeypatch.setattr(crawler, "assign_discovery_seq", counted)
+        CrawlEngine(spark, _cfg(tmp, max_waves=2), seeds=seeds).run(resume=True)
+        assert len(jobs) == 1 and 0 < jobs[0] <= 12, jobs
 
 
 class TestResume:
@@ -889,19 +949,14 @@ class TestSchemaReads:
         without a schema-inference job."""
         from amazonwebcrawler_spark.sources.state_store import DELTA_TABLES, SNAPSHOT_TABLES
 
-        tracker = spark.sparkContext.statusTracker()
-
-        def max_job_id():
-            return max(tracker.getJobIdsForGroup(None) or [-1])
-
-        before = max_job_id()
+        before = _max_job_id(spark)
         loaded = []
         for as_of in (None, crawl.committed_waves()[1]):
             loaded += [crawl.load_snapshot(n, as_of_wave=as_of) for n in SNAPSHOT_TABLES]
             loaded += [crawl.load_deltas(n, as_of_wave=as_of) for n in DELTA_TABLES]
             loaded.append(crawl.load_shard_state(as_of_wave=as_of))
         assert all(df is not None for df in loaded)
-        assert max_job_id() == before
+        assert _max_job_id(spark) == before
 
 
 class TestOrphans:
